@@ -12,7 +12,7 @@ from pyspark.sql.window import Window
 
 from rlink_rs_spark.queries.base import register
 from rlink_rs_spark.tables import load_table
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.runner import drain
 
 # --- funnel ------------------------------------------------------------------
 
@@ -793,12 +793,7 @@ def streaming_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         work_dir=work_dir,
         checkpoint=tempfile.mkdtemp(prefix="rlink_rollup_ck_"),
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_daily_rollup did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, what="streaming_daily_rollup")
     return read_rollup_view(spark, work_dir)
 
 

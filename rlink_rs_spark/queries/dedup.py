@@ -549,11 +549,8 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_sets_df=shingle_sets(docs),
     )
     try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_incremental_dedup did not drain in {drain_timeout():g}s")
+        drain(q, what="streaming_incremental_dedup")
     finally:
-        if q.isActive:
-            q.stop()
         for f in statics:
             f.unpersist()
     return read_verdicts(spark, work_dir)
@@ -565,7 +562,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 import dataclasses as _dc  # noqa: E402
 
 from rlink_rs_spark.queries.base import REGISTRY as _REG  # noqa: E402
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.runner import drain
 
 _REG["streaming_incremental_dedup"] = _dc.replace(
     _REG["streaming_incremental_dedup"], oracle=_REG["incremental_batch_dedup"].oracle

@@ -224,7 +224,6 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch twin's explode+join+SUM, so the DuckDB oracle hash-matches;
       * exactly-once via the parquet sink's _spark_metadata manifest."""
     import os
-    import tempfile
 
     from rlink_rs_spark.operators.lm import (
         load_or_train_lm_lut,
@@ -232,6 +231,7 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         score_stream_columns,
     )
     from rlink_rs_spark.queries.dedup import _documents_fingerprint
+    from rlink_rs_spark.streaming.runner import run_to_parquet
     from rlink_rs_spark.streaming.sources import file_stream
 
     docs = load_table(spark, sf_dir, "documents")
@@ -262,22 +262,7 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((-sum_lp) / (n_bigrams * float(LM_SCALE))).alias("nll_per_char"),
         ((-sum_lp) * 100 <= n_bigrams * (_QG_THR_CENTI * LM_SCALE)).alias("passes"),
     )
-    out_dir = tempfile.mkdtemp(prefix="rlink_qgate_out_")
-    q = (
-        gated.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="rlink_qgate_ck_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_quality_gate did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.read.parquet(out_dir)
+    return run_to_parquet(gated)
 
 
 # --- full streaming intake pipeline (quality gate + incremental dedup) --------
@@ -285,7 +270,7 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 import dataclasses as _dc  # noqa: E402
 
 from rlink_rs_spark.queries.base import REGISTRY as _LM_REG  # noqa: E402
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.runner import drain
 
 
 @register(
@@ -382,11 +367,8 @@ def streaming_intake_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus_sets_df=shingle_sets(docs),
     )
     try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_intake_pipeline did not drain in {drain_timeout():g}s")
+        drain(q, what="streaming_intake_pipeline")
     finally:
-        if q.isActive:
-            q.stop()
         for f in statics:
             f.unpersist()
     return read_verdicts(spark, work_dir, with_quality=True)

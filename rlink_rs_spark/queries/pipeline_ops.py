@@ -21,7 +21,7 @@ from rlink_rs_spark.operators.dedup import (
 )
 from rlink_rs_spark.queries.base import register
 from rlink_rs_spark.tables import load_table
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.runner import drain
 
 # --- benchmark decontamination ----------------------------------------------
 
@@ -1013,12 +1013,7 @@ def streaming_intake_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
         work_dir=work_dir,
         checkpoint=tempfile.mkdtemp(prefix="rlink_dlq_ck_"),
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_intake_dlq did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, what="streaming_intake_dlq")
     return read_clean(spark, work_dir).unionByName(read_dlq(spark, work_dir))
 
 
@@ -1073,12 +1068,7 @@ def streaming_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_dir=state_dir,
         checkpoint=tempfile.mkdtemp(prefix="rlink_decon_ck_"),
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_decontamination did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, what="streaming_decontamination")
     return read_deltas(
         spark, state_dir, "corpus_id bigint, eval_id bigint, shared_ngrams bigint"
     )
@@ -1118,10 +1108,5 @@ def streaming_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint=tempfile.mkdtemp(prefix="rlink_pack_ck_"),
         ctx_len=_CTX_LEN,
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_pack_sequences did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, what="streaming_pack_sequences")
     return read_packed_bins(spark, work_dir)

@@ -21,7 +21,7 @@ from rlink_rs_spark.operators.aggregations import sum_exact
 from rlink_rs_spark.operators.joins import broadcast_enrich, union_aligned
 from rlink_rs_spark.queries.base import SUM_EXACT_SQL, register
 from rlink_rs_spark.tables import load_table
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.runner import drain
 
 
 # --- flat_map / filter (row transforms) ------------------------------------
@@ -538,7 +538,7 @@ def streaming_enrichment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum(F.round(F.col("value") * 100).cast("long")) / 100.0).alias("sum_value"),
         F.count("*").alias("cnt"),
     )
-    return run_to_memory(agg, output_mode="complete", shuffle_partitions=8)
+    return run_to_memory(agg, output_mode="complete")
 
 
 @register(
@@ -1019,7 +1019,7 @@ def kafka_loopback_seek(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p.user_id").alias("p_user_id"),
         F.col("p.value").alias("p_value"),
     )
-    return run_to_memory(parsed, shuffle_partitions=8)
+    return run_to_memory(parsed)
 
 
 _PYDS_SEEK = {0: 10, 1: 0, 2: 150, 3: 75}
@@ -1103,7 +1103,7 @@ def kafka_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p.user_id").alias("p_user_id"),
         F.col("p.value").alias("p_value"),
     )
-    return run_to_memory(parsed, shuffle_partitions=8)
+    return run_to_memory(parsed)
 
 
 @register(
@@ -1135,7 +1135,6 @@ def kafka_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from rlink_rs_spark.sources.kafka_datasource import register_kafka_source
     from rlink_rs_spark.sources.loopback import to_envelope
-    from rlink_rs_spark.streaming.runner import drain_timeout
     from rlink_rs_spark.streaming.sources import stage_stream_dir, stream_from_staged
 
     staged = stage_stream_dir(sf_dir, "events", chunks=4, order_col="ts")
@@ -1159,13 +1158,7 @@ def kafka_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        finished = q.awaitTermination(drain_timeout(300.0))
-    finally:
-        if q.isActive:
-            q.stop()
-    if not finished:
-        raise TimeoutError("rlink_kafka producer did not drain in time")
+    drain(q, what="rlink_kafka producer")
 
     payload_schema = T.StructType(
         [
@@ -1654,12 +1647,7 @@ def streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         # change keys (streaming/cdc.py, r16 guide §8)
         contiguous_keys=True,
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_cdc_merge did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, what="streaming_cdc_merge")
     return read_merged_snapshot(spark, work_dir)
 
 
@@ -1720,12 +1708,7 @@ def _cdc_snapshot_artifact(
         retain=retain,
         contiguous_keys=True,
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"cdc snapshot artifact build did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, what="cdc snapshot artifact build")
     with open(os.path.join(work_dir, "_STREAM_DONE"), "w"):
         pass
     return work_dir
@@ -2343,12 +2326,7 @@ def cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         evolve_rev_from=2,
         contiguous_keys=True,
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"cdc_schema_evolution did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, what="cdc_schema_evolution")
     return read_snapshot(spark, work_dir, 1 << 62, schema=_SNAP_SCHEMA_V2)
 
 
@@ -2555,12 +2533,7 @@ def streaming_constraint_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         state,
         tempfile.mkdtemp(prefix="rlink_cmon_ck_"),
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_constraint_monitor did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, what="streaming_constraint_monitor")
     rep = (
         read_deltas(
             spark, state, "table_name string, constraint_name string, violations bigint"

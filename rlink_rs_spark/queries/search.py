@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 
 from rlink_rs_spark.queries.base import register
 from rlink_rs_spark.tables import load_table
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.runner import drain
 
 # Fixed benchmark query set (vocabulary drawn from the synthetic corpus).
 BM25_QUERIES: list[tuple[str, list[str]]] = [
@@ -338,12 +338,7 @@ def streaming_bm25_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
         state_dir=state_dir,
         checkpoint=tempfile.mkdtemp(prefix="rlink_bm25_idx_ck_"),
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_bm25_index_add did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, what="streaming_bm25_index_add")
     tf = read_posting_table(spark, state_dir).cache()
     return bm25_score_tf(spark, tf)
 
@@ -639,13 +634,7 @@ def streaming_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint=tempfile.mkdtemp(prefix="rlink_hyb_ivf_ck_"),
         dims=_DIMS,
     )
-    for q, leg in ((q_bm, "bm25"), (q_ivf, "ivf")):
-        try:
-            if not q.awaitTermination(drain_timeout()):
-                raise TimeoutError(f"streaming_hybrid_search {leg} leg did not drain")
-        finally:
-            if q.isActive:
-                q.stop()
+    drain(q_bm, q_ivf, what="streaming_hybrid_search")
 
     return serve_hybrid(
         spark,

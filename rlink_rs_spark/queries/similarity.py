@@ -979,21 +979,14 @@ def streaming_outlier_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         dims=_DIMS,
         threshold=_OUTLIER_THR,
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(
-                f"streaming_outlier_monitor did not drain in {drain_timeout():g}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, what="streaming_outlier_monitor")
     return read_outlier_results(spark, out_dir)
 
 
 # --- ANN evaluation: recall vs exact -----------------------------------------
 
 from rlink_rs_spark.queries.base import REGISTRY as _SIM_REG  # noqa: E402
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.runner import drain
 
 # The recall oracle composes the two registered oracles verbatim as
 # subqueries (both are deterministic SELECTs of (query_id, neighbor_id,
@@ -1173,12 +1166,7 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_cells=_IVF_CELLS,
         n_probe=_IVF_PROBE,
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_ann_probe did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, what="streaming_ann_probe")
     return read_probe_results(spark, out_dir)
 
 
@@ -1244,12 +1232,7 @@ def streaming_ivf_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint=tempfile.mkdtemp(prefix="rlink_ivf_add_ck_"),
         dims=_DIMS,
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_ivf_index_add did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, what="streaming_ivf_index_add")
     return read_inverted_file(spark, state_dir)
 
 

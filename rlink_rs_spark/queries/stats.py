@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from rlink_rs_spark.queries.base import register
 from rlink_rs_spark.tables import load_table
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.runner import drain
 
 # shared double-precision tail (identical text in Spark SQL and DuckDB):
 # inputs sc = SUM(cents) :: BIGINT, sq = SUM(cents^2) :: BIGINT, n :: BIGINT.
@@ -226,12 +226,7 @@ def streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint=tempfile.mkdtemp(prefix="rlink_kmv_ck_"),
         k=_KMV_K,
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_kmv_distinct did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, what="streaming_kmv_distinct")
     return read_kmv_estimate(spark, work_dir, k=_KMV_K)
 
 
@@ -510,12 +505,7 @@ def streaming_cms_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
         work_dir=work_dir,
         checkpoint=tempfile.mkdtemp(prefix="rlink_cms_ck_"),
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_cms_counters did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, what="streaming_cms_counters")
     return read_cms_counters(spark, work_dir)
 
 

@@ -70,7 +70,7 @@ def streaming_flagship_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
         )
     )
-    return run_to_memory(agg, shuffle_partitions=8)
+    return run_to_memory(agg)
 
 
 _PCT_WIN_MS = 3_600_000  # 1h tumbling, same as the batch pct query
@@ -133,7 +133,7 @@ def streaming_pct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "__c",
         )
     )
-    emitted = run_to_memory(counts, shuffle_partitions=8)
+    emitted = run_to_memory(counts)
     return histogram_percentile_from_counts(
         emitted, ["window_start", "window_end", "event_type"], [99, 90]
     )
@@ -204,7 +204,7 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # parquet sink, not memory: the raw join output is O(matches) and must
     # never be collected to the driver (VERDICT r11 #2)
-    return run_to_parquet(out, shuffle_partitions=8)
+    return run_to_parquet(out)
 
 
 @register(
@@ -283,7 +283,7 @@ def stream_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis("purchase_ts").alias("purchase_ts_ms"),
     )
     # parquet sink, not memory: O(matches) output stays on executors
-    return run_to_parquet(out, shuffle_partitions=8)
+    return run_to_parquet(out)
 
 
 @register(
@@ -347,7 +347,7 @@ def stream_join_then_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.unix_millis("window.start").alias("ws"), "n", "sv")
     )
-    return run_to_memory(agg, shuffle_partitions=8)
+    return run_to_memory(agg)
 
 
 @register(
@@ -418,7 +418,7 @@ def streaming_three_stream_connect(spark: SparkSession, sf_dir: str) -> DataFram
             "sum_value",
         )
     )
-    return run_to_memory(agg, shuffle_partitions=8)
+    return run_to_memory(agg)
 
 
 @register(
@@ -455,7 +455,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    return run_to_memory(out, shuffle_partitions=8)
+    return run_to_memory(out)
 
 
 @register(
@@ -510,7 +510,7 @@ def streaming_session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    return run_to_memory(agg, shuffle_partitions=8)
+    return run_to_memory(agg)
 
 
 @register(
@@ -678,7 +678,7 @@ def streaming_dynamic_gap_sessions(spark: SparkSession, sf_dir: str) -> DataFram
             "sum_value",
         )
     )
-    return run_to_memory(agg, shuffle_partitions=8)
+    return run_to_memory(agg)
 
 
 _TOPK_WIN_MS = 600_000  # 10-minute tumbling windows
@@ -735,7 +735,7 @@ def streaming_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
         )
     )
-    closed = run_to_memory(counts, shuffle_partitions=8)
+    closed = run_to_memory(counts)
     w = Window.partitionBy("window_start").orderBy(F.col("cnt").desc(), F.col("user_id").asc())
     return closed.withColumn("rnk", F.row_number().over(w).cast("long")).where(
         F.col("rnk") <= _TOPK_K
@@ -800,7 +800,7 @@ def streaming_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "events", max_files_per_trigger=1, chunks=2, order_col="ts"
     )
     out = cusum_drift(src, mu0=_CUSUM_MU_C / 100.0, h=_CUSUM_H_C / 100.0)
-    return run_to_memory(out, shuffle_partitions=8, output_mode="append")
+    return run_to_memory(out, output_mode="append")
 
 
 from rlink_rs_spark.queries.relational import _TRANSITION_ORACLE  # noqa: E402
@@ -828,9 +828,7 @@ def streaming_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = file_stream(
         spark, sf_dir, "events", max_files_per_trigger=1, chunks=2, order_col="ts"
     )
-    pairs = run_to_memory(
-        transition_pairs(src), shuffle_partitions=8, output_mode="append"
-    )
+    pairs = run_to_memory(transition_pairs(src), output_mode="append")
     return pairs.groupBy("event_type", "next_type").agg(
         F.count(F.lit(1)).alias("cnt")
     )
@@ -896,7 +894,7 @@ def streaming_window_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
         )
     )
-    return run_to_memory(lvl2, shuffle_partitions=8)
+    return run_to_memory(lvl2)
 
 
 _LATE_MOD = 23  # plant ~4.3% of events as late arrivals (event_id % 23 == 0)
@@ -984,7 +982,7 @@ def streaming_late_data_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     collector = ProgressCollector()
-    emitted = run_to_memory(agg, shuffle_partitions=8, listener=collector)
+    emitted = run_to_memory(agg, listener=collector)
 
     kept = emitted.groupBy("event_type").agg(
         F.sum("cnt").cast("bigint").alias("kept_rows"),
@@ -1110,9 +1108,7 @@ def example_connect_app_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rlink_rs_spark.streaming.sources import file_stream
 
     ev = file_stream(spark, sf_dir, "events")
-    return run_to_memory(
-        example_connect_plan(spark, sf_dir, ev), shuffle_partitions=8
-    )
+    return run_to_memory(example_connect_plan(spark, sf_dir, ev))
 
 
 def example_connect_plan(spark: SparkSession, sf_dir: str, ev: DataFrame) -> DataFrame:
@@ -1296,7 +1292,7 @@ def streaming_idle_source_heartbeat(spark: SparkSession, sf_dir: str) -> DataFra
             F.unix_millis("window.end").alias("window_end"), "event_type", "cnt"
         )
     )
-    emitted = run_to_memory(agg, shuffle_partitions=8)
+    emitted = run_to_memory(agg)
 
     # Engine-behavior witness: without the keep-alive union, min-policy
     # closure stops at A's idle horizon (first window past cutoff).
@@ -1465,7 +1461,7 @@ def example_kafka_app_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         subscribe,
         to_envelope,
     )
-    from rlink_rs_spark.streaming.runner import drain_timeout
+    from rlink_rs_spark.streaming.runner import drain, pinned_state_partitions
 
     # KafkaGenAppStream half (app.rs:40-86): model rows -> JSON payload
     # envelope -> producer. Keyed by event_id (the reference keys with
@@ -1498,19 +1494,8 @@ def example_kafka_app_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_env = example_kafka_plan(spark, src)
     out_dir = tempfile.mkdtemp(prefix="rlink_ekafka_out_")
     ck = tempfile.mkdtemp(prefix="rlink_ekafka_ck_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = publish_stream(out_env, out_dir, ck)
-        try:
-            finished = q.awaitTermination(drain_timeout(300.0))
-        finally:
-            if q.isActive:
-                q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    if not finished:
-        raise TimeoutError("example-kafka replay did not drain in time")
+    with pinned_state_partitions(spark):
+        drain(publish_stream(out_env, out_dir, ck), what="example-kafka replay")
 
     out_payload = T.StructType(
         [

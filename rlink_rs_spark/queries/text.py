@@ -18,7 +18,7 @@ from rlink_rs_spark.operators.text import (
 )
 from rlink_rs_spark.queries.base import register
 from rlink_rs_spark.tables import load_table
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.runner import drain
 
 _TOK_DUCK = "string_split(text, ' ')"
 
@@ -1154,12 +1154,7 @@ def streaming_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint=tempfile.mkdtemp(prefix="rlink_reservoir_ck_"),
         top_k=_WS_TOP_K,
     )
-    try:
-        if not q.awaitTermination(drain_timeout()):
-            raise TimeoutError(f"streaming_weighted_reservoir did not drain in {drain_timeout():g}s")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, what="streaming_weighted_reservoir")
     return read_reservoir(spark, work_dir, top_k=_WS_TOP_K)
 
 

@@ -63,6 +63,7 @@ watermark; state content is identical before and after a fold.
 
 from __future__ import annotations
 
+import logging
 import os
 import threading
 from concurrent.futures import ThreadPoolExecutor
@@ -103,6 +104,17 @@ _OUT_SCHEMA_Q = (
     "doc_id bigint, passes_quality boolean, exact_dup boolean, "
     "near_dup_of bigint, admit boolean"
 )
+
+_log = logging.getLogger(__name__)
+
+
+def _thread_target(spark: SparkSession, fn):
+    """`fn` carrying the session's local properties and tags into a worker
+    thread. With pinned-thread mode off, inheritable_thread_target(spark)
+    returns the session itself rather than a decorator; `fn` then runs
+    as is, which is what pinned-off threads do anyway."""
+    wrap = inheritable_thread_target(spark)
+    return fn if wrap is spark else wrap(fn)
 
 
 # The LSM fold machinery this module pioneered now lives in
@@ -205,15 +217,15 @@ def streaming_incremental_dedup_sink(
     # time between .start() and epoch 0, so two background jobs hide most
     # of their cost. handle() joins these threads before first use, so no
     # job outlives the drain; a failed warm is harmless (the epoch's own
-    # jobs materialize the cache inline exactly as before).
+    # jobs materialize the cache inline exactly as before) but is logged.
     def _warm(df: DataFrame) -> None:
         try:
             df.count()
         except Exception:
-            pass
+            _log.warning("static cache warm-up failed; epoch 0 builds it inline", exc_info=True)
 
     warm_threads = [
-        threading.Thread(target=inheritable_thread_target(spark)(lambda f=f: _warm(f)), daemon=True)
+        threading.Thread(target=_thread_target(spark, lambda f=f: _warm(f)), daemon=True)
         for f in (hist_hashes, corpus_sets)
     ]
 
@@ -337,7 +349,7 @@ def streaming_incremental_dedup_sink(
             ),
         )
         with ThreadPoolExecutor(max_workers=len(commits)) as pool:
-            futures = [pool.submit(inheritable_thread_target(spark)(c)) for c in commits]
+            futures = [pool.submit(_thread_target(spark, c)) for c in commits]
             for fut in futures:
                 fut.result()
         batch.unpersist()

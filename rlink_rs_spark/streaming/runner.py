@@ -1,11 +1,18 @@
-"""Bounded execution of streaming pipelines.
+"""Bounded execution of streaming pipelines: the single point that drains a
+bounded streaming query, stops it, and sizes its state partitions.
 
 The reference ends a stream with StreamStatus{end:true} cascading through
 the DAG (element.rs:361-370, source_runnable.rs:217-245); Spark's
 Trigger.AvailableNow is the same concept: process everything available,
-finalize state, stop. run_to_memory drives a streaming DataFrame to
-completion synchronously and returns the materialized result -- the bridge
-that lets streaming pipelines flow through the batch correctness gate.
+finalize state, stop. Every bounded query in the package ends through
+``drain`` (await with ``drain_timeout()``, stop whatever is still active,
+raise on timeout), and every stateful query started here runs with
+``STATE_PARTITIONS`` state stores via ``pinned_state_partitions``.
+
+run_to_memory and run_to_parquet drive a streaming DataFrame to completion
+synchronously and return the materialized result -- the bridges that let
+streaming pipelines flow through the batch correctness gate. Sinks built
+on foreachBatch start their own query and end it with ``drain``.
 """
 
 from __future__ import annotations
@@ -14,8 +21,17 @@ import os
 import tempfile
 import time
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+
+# Stateful streaming ops create one state store per shuffle partition, and
+# that per-store overhead (commit, snapshot, eviction scan) dominates
+# small/medium state -- measured 10.8s -> 3.1s on the interval join at sf0.1
+# going 32 -> 8. The value is pinned into the checkpoint at first run; size
+# it to expected state volume (at 100 TB: hundreds, here: single digits),
+# not to CPU count.
+STATE_PARTITIONS = 8
 
 
 def _await_listener_drain(listener, query_id: str, timeout: float = 30.0) -> None:
@@ -42,22 +58,66 @@ def _await_listener_drain(listener, query_id: str, timeout: float = 30.0) -> Non
     )
 
 
-def drain_timeout(base: float = 600.0) -> float:
+def drain_timeout() -> float:
     """Bound for draining a finite staged replay (awaitTermination). The
     fixture-scale default is generous at sf<=0.1, but a 100x scale probe
     legitimately needs 100x the wall clock -- SPARK_GRAFT_STREAM_TIMEOUT
     overrides the bound without touching query code (VERDICT r10 #2: the
     streaming/CDC family joins the sf10 probe)."""
-    return float(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", base))
+    return float(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", 600.0))
+
+
+@contextmanager
+def pinned_state_partitions(spark: SparkSession):
+    """Run the block with spark.sql.shuffle.partitions = STATE_PARTITIONS
+    and restore the session's value afterwards, also when the block raises.
+    Queries started inside pin the value into their checkpoint."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def drain(*queries, what: str) -> None:
+    """Wait for each bounded query to terminate, at most drain_timeout()
+    each; raise TimeoutError naming `what` if one does not. A query that
+    failed re-raises its error here. Every query still active afterwards is
+    stopped, including the ones after a query that raised."""
+    timeout = drain_timeout()
+    try:
+        for q in queries:
+            if not q.awaitTermination(timeout):
+                raise TimeoutError(f"{what} did not drain in {timeout:g}s")
+    finally:
+        for q in queries:
+            if q.isActive:
+                q.stop()
+
+
+def _run(writer, spark: SparkSession, listener, what: str) -> None:
+    """Start the configured writer with availableNow into a fresh checkpoint
+    and drain it, with pinned state partitions and the optional listener
+    registered for exactly the lifetime of the run."""
+    with pinned_state_partitions(spark):
+        if listener is not None:
+            spark.streams.addListener(listener)
+        try:
+            q = (
+                writer.option("checkpointLocation", tempfile.mkdtemp(prefix="rlink_ck_"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            drain(q, what=what)
+            _await_listener_drain(listener, str(q.id))
+        finally:
+            if listener is not None:
+                spark.streams.removeListener(listener)
 
 
 def run_to_memory(
-    stream_df: DataFrame,
-    output_mode: str = "append",
-    checkpoint_dir: str | None = None,
-    timeout_seconds: float | None = None,
-    shuffle_partitions: int | None = None,
-    listener=None,
+    stream_df: DataFrame, output_mode: str = "append", listener=None
 ) -> DataFrame:
     """Execute a streaming DataFrame with availableNow into a memory sink;
     block until completion; return the result as a (batch) DataFrame.
@@ -71,61 +131,15 @@ def run_to_memory(
     watermark (window_end <= max_event_ts - delay); still-open windows stay
     in the state store -- that withholding is part of the semantics under
     test, not an artifact.
-
-    shuffle_partitions: stateful streaming ops create one state store per
-    shuffle partition, and that per-store overhead (commit, snapshot,
-    eviction scan) dominates small/medium state -- measured 10.8s -> 3.1s on
-    the interval join at sf0.1 going 32 -> 8. The value is pinned into the
-    checkpoint at first run; size it to expected state volume (at 100 TB:
-    hundreds, here: single digits), not to CPU count.
     """
     spark: SparkSession = stream_df.sparkSession
-    if timeout_seconds is None:
-        timeout_seconds = drain_timeout(300.0)
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    ck = checkpoint_dir or tempfile.mkdtemp(prefix="rlink_ck_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    if listener is not None:
-        spark.streams.addListener(listener)
-    try:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = q.awaitTermination(timeout_seconds)
-        finally:
-            if q.isActive:
-                q.stop()
-        if listener is not None and finished:
-            _await_listener_drain(listener, str(q.id))
-    finally:
-        if listener is not None:
-            spark.streams.removeListener(listener)
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    if not finished:
-        raise TimeoutError(
-            f"streaming query {name!r} did not finish within {timeout_seconds}s; "
-            "refusing to return a truncated memory table"
-        )
+    writer = stream_df.writeStream.outputMode(output_mode).format("memory").queryName(name)
+    _run(writer, spark, listener, what=f"memory sink {name!r}")
     return spark.table(name)
 
 
-def run_to_parquet(
-    stream_df: DataFrame,
-    output_dir: str | None = None,
-    checkpoint_dir: str | None = None,
-    timeout_seconds: float | None = None,
-    shuffle_partitions: int | None = None,
-    listener=None,
-) -> DataFrame:
+def run_to_parquet(stream_df: DataFrame, listener=None) -> DataFrame:
     """Execute an append-mode streaming DataFrame with availableNow into a
     parquet sink; block until completion; return a (batch) reader over the
     written files.
@@ -141,41 +155,9 @@ def run_to_parquet(
     stream-stream joins.
     """
     spark: SparkSession = stream_df.sparkSession
-    if timeout_seconds is None:
-        timeout_seconds = drain_timeout(300.0)
-    out_dir = output_dir or tempfile.mkdtemp(prefix="rlink_pq_out_")
-    ck = checkpoint_dir or tempfile.mkdtemp(prefix="rlink_pq_ck_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    if listener is not None:
-        spark.streams.addListener(listener)
-    try:
-        q = (
-            stream_df.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = q.awaitTermination(timeout_seconds)
-        finally:
-            if q.isActive:
-                q.stop()
-        if listener is not None and finished:
-            _await_listener_drain(listener, str(q.id))
-    finally:
-        if listener is not None:
-            spark.streams.removeListener(listener)
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    if not finished:
-        raise TimeoutError(
-            f"streaming parquet sink did not finish within {timeout_seconds}s; "
-            "refusing to return a truncated directory"
-        )
+    out_dir = tempfile.mkdtemp(prefix="rlink_pq_out_")
+    writer = stream_df.writeStream.outputMode("append").format("parquet").option("path", out_dir)
+    _run(writer, spark, listener, what="parquet sink")
     # explicit schema: a zero-row drain writes only _spark_metadata and an
     # inferring read would fail; the stream's own schema is the contract
     return spark.read.schema(stream_df.schema).parquet(out_dir)

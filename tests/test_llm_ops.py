@@ -1440,10 +1440,8 @@ def test_drain_timeout_env_override(monkeypatch):
 
     monkeypatch.delenv("SPARK_GRAFT_STREAM_TIMEOUT", raising=False)
     assert drain_timeout() == 600.0
-    assert drain_timeout(300.0) == 300.0
     monkeypatch.setenv("SPARK_GRAFT_STREAM_TIMEOUT", "7200")
     assert drain_timeout() == 7200.0
-    assert drain_timeout(300.0) == 7200.0
 
 
 def test_repetition_run_fold_matches_quadratic_mode_count(spark):

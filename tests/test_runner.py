@@ -1,0 +1,138 @@
+"""streaming.runner is the one place that drains a bounded streaming query,
+stops it and pins its state partitions: these tests hold it to that."""
+
+from __future__ import annotations
+
+import tempfile
+from dataclasses import dataclass, field
+
+import pytest
+from pyspark.errors.exceptions.captured import StreamingQueryException
+from pyspark.sql import functions as F
+
+from rlink_rs_spark.operators.joins import interval_join
+from rlink_rs_spark.streaming.metrics import ProgressCollector
+from rlink_rs_spark.streaming.runner import STATE_PARTITIONS, drain, run_to_memory
+from rlink_rs_spark.streaming.sources import file_stream
+
+_PARTS = "spark.sql.shuffle.partitions"
+
+
+def _rate_query(spark, handler):
+    """A never-ending query: rate source, processing-time trigger."""
+    return (
+        spark.readStream.format("rate").option("rowsPerSecond", 10).load()
+        .writeStream.foreachBatch(handler)
+        .option("checkpointLocation", tempfile.mkdtemp(prefix="rlink_rate_ck_"))
+        .trigger(processingTime="200 milliseconds")
+        .start()
+    )
+
+
+def test_drain_stops_every_query_when_one_fails(spark):
+    """A failing query's error propagates out of drain, and the queries
+    after it are stopped rather than left running."""
+
+    def fail(batch_df, epoch_id):
+        raise RuntimeError("injected sink failure")
+
+    failing = _rate_query(spark, fail)
+    running = _rate_query(spark, lambda batch_df, epoch_id: None)
+    with pytest.raises(StreamingQueryException, match="injected sink failure"):
+        drain(failing, running, what="two rate queries")
+    assert not failing.isActive
+    assert not running.isActive
+
+
+@dataclass
+class _PartitionProbe(ProgressCollector):
+    """ProgressCollector that also records each batch's state-store
+    partition count."""
+
+    state_partitions: list[int] = field(default_factory=list)
+
+    def onQueryProgress(self, event):  # noqa: N802 (Spark API names)
+        ops = event.progress.stateOperators
+        if ops:
+            self.state_partitions.append(ops[0].numShufflePartitions)
+        super().onQueryProgress(event)
+
+
+def test_runner_pins_state_partitions_and_restores_conf(spark, sf_dir):
+    """run_to_memory runs stateful queries with STATE_PARTITIONS state
+    stores whatever the session's setting, and gives the session its own
+    setting back afterwards -- also when the query fails to start."""
+    prev = spark.conf.get(_PARTS)
+    spark.conf.set(_PARTS, "3")
+    try:
+        probe = _PartitionProbe()
+        counts = run_to_memory(
+            file_stream(spark, sf_dir, "events").groupBy("event_type").count(),
+            output_mode="complete",
+            listener=probe,
+        )
+        assert counts.count() > 0
+        assert probe.state_partitions and set(probe.state_partitions) == {STATE_PARTITIONS}
+        assert spark.conf.get(_PARTS) == "3"
+
+        # leftOuter join without watermarks: rejected when the query starts
+        clicks = file_stream(spark, sf_dir, "events").select(
+            F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts")
+        )
+        purchases = file_stream(spark, sf_dir, "events").select(
+            F.col("user_id").alias("p_user"), F.col("ts").alias("purchase_ts")
+        )
+        j = interval_join(
+            clicks, purchases, "c_user", "p_user", "click_ts", "purchase_ts", how="leftOuter"
+        )
+        with pytest.raises(Exception):
+            run_to_memory(j)
+        assert spark.conf.get(_PARTS) == "3"
+    finally:
+        spark.conf.set(_PARTS, prev)
+
+
+def test_dedup_sink_runs_with_pinned_thread_mode_off(spark, sf_dir, monkeypatch):
+    """With pinned-thread mode off, inheritable_thread_target(session)
+    returns the session, not a decorator; the dedup sink's warm-up and
+    commit threads must still run."""
+    import os
+
+    import rlink_rs_spark.streaming.dedup as sdedup
+    from rlink_rs_spark.operators.dedup import load_or_build_band_index, with_shingles
+    from rlink_rs_spark.queries.dedup import _BANDS, _INCR_THR, _N_HASHES, _documents_fingerprint
+    from rlink_rs_spark.streaming.sources import stage_stream_dir, stream_from_staged
+    from rlink_rs_spark.tables import load_table
+
+    monkeypatch.setattr(sdedup, "inheritable_thread_target", lambda f=None: f)
+
+    docs = load_table(spark, sf_dir, "documents")
+    history = docs.where(F.col("doc_id") % 4 != 0)
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    hist_banded = load_or_build_band_index(
+        spark,
+        with_shingles(history),
+        cache_dir=os.path.join(repo_root, "artifacts", "lsh_band_index"),
+        fingerprint=_documents_fingerprint(sf_dir),
+        n_hashes=_N_HASHES,
+        bands=_BANDS,
+    )
+    staged = stage_stream_dir(sf_dir, "documents", chunks=2, order_col="doc_id")
+    streamed = stream_from_staged(
+        spark, staged, sf_dir, "documents", max_files_per_trigger=1
+    ).where(F.col("doc_id") % 4 == 0)
+    work_dir = tempfile.mkdtemp(prefix="rlink_sdedup_unpinned_")
+    q = sdedup.streaming_incremental_dedup_sink(
+        streamed,
+        history,
+        hist_banded,
+        with_shingles(docs),
+        work_dir=work_dir,
+        checkpoint=tempfile.mkdtemp(prefix="rlink_sdedup_unpinned_ck_"),
+        threshold=_INCR_THR,
+        n_hashes=_N_HASHES,
+        bands=_BANDS,
+    )
+    drain(q, what="unpinned dedup sink")
+    verdicts = sdedup.read_verdicts(spark, work_dir)
+    assert verdicts.count() == docs.where(F.col("doc_id") % 4 == 0).count() > 0

@@ -429,7 +429,7 @@ def test_outer_interval_join_requires_watermarks(spark, sf_dir):
         clicks, purchases, "c_user", "p_user", "click_ts", "purchase_ts", how="leftOuter"
     )
     with pytest.raises(Exception):
-        run_to_memory(j, timeout_seconds=60)
+        run_to_memory(j)
 
 
 def test_idle_source_watermark_policy(spark, sf_dir):
@@ -816,8 +816,7 @@ def test_kafka_python_source_timestamp_and_latest_seek(spark, sf_dir):
         .option("topicdir", td)
         .option("startingtimestampms", str(seek_ms))
         .load()
-        .select("partition", "offset", "timestamp"),
-        shuffle_partitions=8,
+        .select("partition", "offset", "timestamp")
     )
     rows = got.collect()
     # every streamed row is at/after its partition's resolved begin...
@@ -861,9 +860,7 @@ def test_kafka_python_source_rate_limit_invariance(spark, sf_dir):
 
     want = {
         (r.partition, r.offset)
-        for r in run_to_memory(
-            reader().load().select("partition", "offset"), shuffle_partitions=8
-        ).collect()
+        for r in run_to_memory(reader().load().select("partition", "offset")).collect()
     }
     assert want
 
@@ -941,8 +938,7 @@ def test_kafka_python_source_kill_resume(spark, sf_dir):
             .option("topicdir", td)
             .option("startingoffsets", seek)
             .load()
-            .select("partition", "offset"),
-            shuffle_partitions=8,
+            .select("partition", "offset")
         ).collect()
     }
 

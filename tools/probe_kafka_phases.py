@@ -141,7 +141,7 @@ def main() -> int:
             F.col("p.value").alias("p_value"),
         )
         t0 = time.time()
-        out = run_to_memory(parsed, shuffle_partitions=8)
+        out = run_to_memory(parsed)
         t_drain = time.time() - t0
         t0 = time.time()
         out.write.format("noop").mode("overwrite").save()

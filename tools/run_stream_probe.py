@@ -71,7 +71,7 @@ def interval_join_leg(spark, sf_dir: str, chunks: int) -> dict:
     )
     col = ProgressCollector()
     t0 = time.time()
-    out = run_to_parquet(joined, shuffle_partitions=8, listener=col)
+    out = run_to_parquet(joined, listener=col)
     rows = out.count()
     wall = round(time.time() - t0, 2)
     states = [p.get("stateRows") or 0 for p in col.progress]
@@ -108,7 +108,7 @@ def chained_app_leg(spark, sf_dir: str, chunks: int) -> dict:
     out = example_connect_plan(spark, sf_dir, src)
     col = ProgressCollector()
     t0 = time.time()
-    res = run_to_parquet(out, shuffle_partitions=8, listener=col)
+    res = run_to_parquet(out, listener=col)
     rows = res.count()
     wall = round(time.time() - t0, 2)
     shutil.rmtree(staged, ignore_errors=True)
