@@ -1,18 +1,23 @@
 """Similarity search over embedding columns (array<float>).
 
 Engine extras for training-data pipelines: brute-force cosine top-k as the
-correctness baseline, and a random-hyperplane LSH bucketed variant as the
-scale path (bucket equi-join replaces the full cross product).
+correctness baseline, and LSH, IVF, SQ8, PQ and IVF-PQ variants as the
+scale paths (bucket, cell and code restrictions replace the full cross
+product), plus semantic and near-duplicate detection.
 
-Determinism contract: every dot product is generated as an explicit
-left-to-right sum chain over dimensions with per-element DOUBLE casts, so
-Spark and the DuckDB oracle produce bit-identical doubles (no SIMD/fold
-reordering). Hyperplanes are md5-derived +-1 weights computed driver-side
-(hashlib) and inlined as literals in both engines.
+Determinism contract: every Spark-side score runs through the exact NumPy
+kernel in operators/vector_kernel, which mirrors _balanced_sum's pairwise
+association in float64, so Spark and the DuckDB oracle produce
+bit-identical doubles. The chain generators below (dot_chain_expr,
+cosine_expr, bucket_expr, l2_chain_expr, quantize_expr) are oracle text --
+balanced sum chains with per-element DOUBLE casts, shared verbatim with
+DuckDB -- and the tests' reference; no Spark plan evaluates them.
+Hyperplanes are md5-derived +-1 weights computed driver-side (hashlib),
+inlined as literals in the oracle and passed as a matrix to the kernel.
 
-At 100 TB: the fact side never collects; queries are broadcast; LSH
-bucketing bounds candidates per query; for real deployments swap the
-literal hyperplanes for a broadcast matrix and a pandas_udf GEMM.
+At 100 TB: the fact side never collects; query sets and codebooks are
+broadcast; LSH buckets, IVF cells and attribute predicates bound the
+pairs scored per query.
 """
 
 from __future__ import annotations
@@ -20,9 +25,14 @@ from __future__ import annotations
 import hashlib
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
+
+from rlink_rs_spark.operators import vector_kernel as vk
 
 
 def _balanced_sum(terms: list[str]) -> str:
@@ -80,6 +90,16 @@ def bucket_expr(vec: str, planes: list[list[int]], base: int) -> str:
     return "(" + " + ".join(bits) + ")"
 
 
+def _side(df: DataFrame, id_col: str, vec_col: str, *extra, id_name: str = "id") -> DataFrame:
+    """The kernel's input shape: (id, v, extras...)."""
+    return df.select(F.col(id_col).alias(id_name), F.col(vec_col).alias("v"), *extra)
+
+
+def _scan(vectors, queries, dims, k, id_col, vec_col, **kw) -> DataFrame:
+    q, v = _side(queries, id_col, vec_col), _side(vectors, id_col, vec_col)
+    return vk.topk_scan(v, q, dims, k, **kw)
+
+
 def cosine_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -88,19 +108,10 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Brute-force cosine top-k: broadcast the query set against all vectors,
-    rank per query with deterministic tie-break (cosine desc, id asc)."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    v = vectors.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"))
-    cos = F.expr(cosine_expr("qv", "nv", dims, base=0))
-    scored = (
-        v.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    """Brute-force cosine top-k: every corpus vector is scored against the
+    broadcast query set, ranked per query with deterministic tie-break
+    (cosine desc, id asc)."""
+    return _scan(vectors, queries, dims, k, id_col, vec_col)
 
 
 def ivf_assign(
@@ -111,33 +122,18 @@ def ivf_assign(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Cell assignment (vid, cell_id, ccos): broadcast the codebook, score
-    every vector against every centroid, argmax by max(struct(c, -cell))
-    -- map-side-combined, the corpus never sort-windows. The (c DESC,
+    every vector against every centroid exactly and keep the argmax --
+    map-side, the corpus never shuffles or sort-windows. The (c DESC,
     cell_id ASC) tie-break is shared by every consumer (IVF probe, IVF-PQ
     residuals, SemDeDup priority) and by the oracles' ROW_NUMBER mirror."""
-    cos_vc = F.expr(cosine_expr("v", "cv", dims, base=0))
-    scored = (
-        vectors.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
-        .join(F.broadcast(codebook))
-        .select("vid", "cell_id", cos_vc.alias("c"))
-    )
-    return (
-        scored.groupBy("vid")
-        .agg(F.max(F.struct(F.col("c"), (-F.col("cell_id")).alias("negc"))).alias("m"))
-        .select(
-            "vid",
-            (-F.col("m.negc")).cast("long").alias("cell_id"),
-            F.col("m.c").alias("ccos"),
-        )
-    )
+    v = _side(vectors, id_col, vec_col, id_name="vid")
+    return vk.assign(v, codebook, dims).withColumnRenamed("score", "ccos")
 
 
-# Above this many centroids, argmax assignment switches from codegen sum
-# chains to the Arrow/numpy GEMM path: chain cost is O(n * cells * dims)
-# of generated-expression work and becomes the dominant super-linear term
-# once cells scale with the corpus (SemDeDup's occupancy contract). The
-# r10 100x probe measured semantic_dedup at 2.22x vs linear on the chain
-# path (1600 cells, 200k vectors); GEMM runs the same FLOPs at BLAS speed.
+# Above this many centroids, argmax assignment switches from the exact
+# tree sums (log2(dims) temporaries per pair) to one BLAS GEMM per Arrow
+# batch: cells scale with the corpus under SemDeDup's occupancy contract
+# (the r10 100x probe: 1600 cells, 200k vectors).
 GEMM_ASSIGN_MIN_CELLS = 64
 
 
@@ -148,50 +144,33 @@ def gemm_assign(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Cell assignment (vid, cell_id, ccos) by one numpy GEMM per Arrow
-    batch -- the scale path of ivf_assign, same argmax and the same
-    (cosine DESC, cell_id ASC) tie-break: centroid rows are sorted by
-    cell_id and np.argmax returns the FIRST maximum. Scores differ from
-    the chain path only by float summation order (~1e-15); callers that
-    need bit-equality to the SQL oracles keep the chain path (the gate
-    scales do -- their codebooks stay under GEMM_ASSIGN_MIN_CELLS).
+    batch -- the scale path of ivf_assign: same body, same argmax and the
+    same (cosine DESC, cell_id ASC) tie-break. Scores differ from the
+    exact path only by float summation order (~1e-15); callers that need
+    bit-equality to the SQL oracles keep the exact path (the gate scales
+    do -- their codebooks stay under GEMM_ASSIGN_MIN_CELLS).
 
     SIZE CONTRACT: the codebook is collected and broadcast ((cells x d)
     float64s -- 1M cells x 64 dims = 512 MB is the practical ceiling; far
     past that, real deployments route assignment through a coarse
     quantizer first, the FAISS IVF-HNSW shape). All-zero vectors score
     0.0 everywhere (norms clamped to 1), matching cosine_topk_gemm."""
-    import numpy as np
-    import pandas as pd
+    v = _side(vectors, id_col, vec_col, id_name="vid")
+    return vk.assign(v, codebook, None, vk.GEMM).withColumnRenamed("score", "ccos")
 
-    rows = codebook.select("cell_id", "cv").collect()  # bounded: cells rows
-    rows.sort(key=lambda r: r[0])
-    cell_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    cm = np.array([r[1] for r in rows], dtype=np.float64)
-    cn = np.linalg.norm(cm, axis=1, keepdims=True)
-    cn[cn == 0] = 1.0
-    bc = vectors.sparkSession.sparkContext.broadcast((cell_ids, cm / cn))
 
-    def assign_batches(batches):
-        cids, cmn = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["vid"].to_numpy(dtype=np.int64)
-            vm = np.array(list(pdf["v"]), dtype=np.float64)
-            vn = np.linalg.norm(vm, axis=1, keepdims=True)
-            vn[vn == 0] = 1.0
-            scores = (vm / vn) @ cmn.T  # (batch x cells)
-            best = np.argmax(scores, axis=1)
-            yield pd.DataFrame(
-                {
-                    "vid": ids,
-                    "cell_id": cids[best],
-                    "ccos": scores[np.arange(len(ids)), best],
-                }
-            )
+def _cell_assign(vectors, codebook, dims, n_cells, id_col, vec_col) -> DataFrame:
+    """GEMM_ASSIGN_MIN_CELLS is the one selector between the two paths."""
+    if n_cells is not None and n_cells > GEMM_ASSIGN_MIN_CELLS:
+        return gemm_assign(vectors, codebook, id_col=id_col, vec_col=vec_col)
+    return ivf_assign(vectors, codebook, dims, id_col=id_col, vec_col=vec_col)
 
-    v = vectors.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
-    return v.mapInPandas(assign_batches, "vid long, cell_id long, ccos double")
+
+def _inverted_file(assignment, vectors, codebook, dims, id_col, vec_col) -> DataFrame:
+    """The caller's persisted inverted file (load_or_build_ivf_assignment),
+    else a fresh ivf_assign."""
+    fresh = assignment is None
+    return ivf_assign(vectors, codebook, dims, id_col, vec_col) if fresh else assignment
 
 
 def load_or_build_ivf_assignment(
@@ -211,22 +190,14 @@ def load_or_build_ivf_assignment(
     against the centroids. The caller's key must encode the codebook's
     config (n_cells, iters) plus the data fingerprint. Passing ``n_cells``
     above GEMM_ASSIGN_MIN_CELLS routes the build through gemm_assign
-    (the occupancy-scaled large-codebook case, where the chain cost is
-    the dominant super-linear term -- r10 100x probe).
+    (the occupancy-scaled large-codebook case -- r10 100x probe).
 
     At 100 TB this is the difference between an index SCAN per query batch
     and an index BUILD per query batch; production would additionally
     partition the parquet by cell_id so probes prune to probed cells."""
-    spark = vectors.sparkSession
-    path = os.path.join(cache_dir, key)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):  # committed write only
-        return spark.read.parquet(path)
-    if n_cells is not None and n_cells > GEMM_ASSIGN_MIN_CELLS:
-        assign = gemm_assign(vectors, codebook, id_col=id_col, vec_col=vec_col)
-    else:
-        assign = ivf_assign(vectors, codebook, dims, id_col=id_col, vec_col=vec_col)
-    assign.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return _persisted(vectors.sparkSession, os.path.join(cache_dir, key), lambda: _cell_assign(
+        vectors, codebook, dims, n_cells, id_col, vec_col
+    ))
 
 
 def semantic_dedup(
@@ -249,59 +220,41 @@ def semantic_dedup(
     Output: (id, cell_id, centroid_cosine, keep).
 
     Scale: the codebook broadcasts and assignment is one map-side
-    argmax (map-side-combined max(struct)); the pairwise stage is an
-    equi-join ON cell_id only -- quadratic within a cluster but SemDeDup's
+    argmax; the pairwise stage groups ON cell_id only and scores every
+    pair inside the cell exactly -- quadratic within a cluster but SemDeDup's
     deployment contract is #clusters grows with the corpus so cluster
     occupancy stays bounded (the paper uses 50k clusters for LAION);
     all-pairs across clusters is never formed."""
-    # same argmax assignment (and tie-break) as cosine_topk_ivf; callers may
-    # pass the persisted inverted file (load_or_build_ivf_assignment)
-    assign = (
-        assignment
-        if assignment is not None
-        else ivf_assign(vectors, codebook, dims, id_col=id_col, vec_col=vec_col)
+    # same argmax assignment (and tie-break) as cosine_topk_ivf
+    assign = _inverted_file(assignment, vectors, codebook, dims, id_col, vec_col)
+    # one exact pair pass per cell (vector_kernel.group_pairs): norms once
+    # per vector, dot / (na * nb) -- the oracle's arithmetic bit for bit
+    def keep_flags(t, i, j, cos):
+        ids, c = t.column("id").to_numpy(), t.column("ccos").to_numpy()
+        i_first = (c[i] < c[j]) | ((c[i] == c[j]) & (ids[i] < ids[j]))
+        j_first = (c[j] < c[i]) | ((c[i] == c[j]) & (ids[j] < ids[i]))
+        keep = np.ones(len(ids), dtype=bool)
+        keep[np.concatenate([j[i_first], i[j_first]])] = False
+        cols = [t.column("id"), t.column("cell_id"), t.column("ccos"), pa.array(keep)]
+        return pa.table(cols, names=[id_col, "cell_id", "centroid_cosine", "keep"])
+
+    cells = assign.join(_side(vectors, id_col, vec_col, id_name="vid"), "vid")
+    return vk.group_pairs(
+        cells.select("cell_id", F.col("vid").alias("id"), "v", "ccos"),
+        ["cell_id"], dims, threshold, keep_flags,
+        f"{id_col} long, cell_id long, centroid_cosine double, keep boolean",
     )
-    # Norms precomputed ONCE per vector (r16, guide §1.2): the inline
-    # cosine_expr evaluated THREE 64-term chains per candidate pair (dot +
-    # both norms); dot/(na*nb) with per-vector SQRT(chain) is the identical
-    # IEEE arithmetic (same sqrt of the same chain, same division), so the
-    # DuckDB oracle still matches bit-for-bit -- the same trick
-    # cosine_near_dup_pairs has carried since r6. The joined frame is
-    # cached because BOTH pair sides consume it (within-query intermediate).
-    withv = assign.join(
-        vectors.select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).alias("v"),
-            F.expr(norm_expr(vec_col, dims, base=0)).alias("nrm"),
-        ),
-        "vid",
-    ).cache()
-    a = withv.select(
-        F.col("vid").alias("id_a"), "cell_id", F.col("ccos").alias("ca"),
-        F.col("v").alias("va"), F.col("nrm").alias("na"),
-    )
-    b = withv.select(
-        F.col("vid").alias("id_b"), "cell_id", F.col("ccos").alias("cb"),
-        F.col("v").alias("vb"), F.col("nrm").alias("nb"),
-    )
-    higher_priority = (F.col("ca") < F.col("cb")) | (
-        (F.col("ca") == F.col("cb")) & (F.col("id_a") < F.col("id_b"))
-    )
-    pair_cos = F.expr(f"({dot_chain_expr('va', 'vb', dims, base=0)}) / (na * nb)")
-    dropped = (
-        a.join(b, "cell_id")
-        .where((F.col("id_a") != F.col("id_b")) & higher_priority)
-        .where(pair_cos >= threshold)
-        .select(F.col("id_b").alias("vid"))
-        .distinct()
-        .withColumn("__drop", F.lit(True))
-    )
-    return assign.join(dropped, "vid", "left").select(
-        F.col("vid").alias(id_col),
-        "cell_id",
-        F.col("ccos").alias("centroid_cosine"),
-        F.coalesce(~F.col("__drop"), F.lit(True)).alias("keep"),
-    )
+
+
+def label_centroid_cosine(vectors: DataFrame, cents: DataFrame, dims: int) -> DataFrame:
+    """(vec_id, label, centroid_cos): each (vec_id, label, embedding) row's
+    exact cosine to its own label's centroid in ``cents`` (label, cent) --
+    the assignment body with one codebook row per label. Rows whose label
+    has no centroid drop out."""
+    v = vectors.select("vec_id", "label", F.col("embedding").alias("v"))
+    c = cents.select(F.lit(0).cast("long").alias("cell_id"), "label", F.col("cent").alias("cv"))
+    scored = vk.assign(v, c, dims, by="label")
+    return scored.select("vec_id", "label", F.col("score").alias("centroid_cos"))
 
 
 _RECALL_CONTRACT_COS = 0.9  # the documented near-dup recall point
@@ -346,105 +299,37 @@ def cosine_near_dup_pairs(
     LSH: per band, bucket = sign bits of that band's planes; candidates =
     pairs sharing ANY band's bucket (OR over bands raises recall the way
     MinHash banding does); exact cosine verifies >= threshold. All-pairs is
-    never formed -- per band one equi-join, the 100 TB shape. For true
-    near-dups (cosine >= 0.9) 4x6 banding recalls ~86%; recall degrades for
-    lower thresholds by the LSH collision curve (1 - theta/pi)^planes.
-    Norms are precomputed once per vector (3x fewer chain evals per pair);
-    the DuckDB twin precomputes identically, so bits still match."""
-    all_planes = hyperplanes(bands * planes_per_band, dims)
-    # Sum chains stay OUT of the explode either way: inlining them there
-    # blew the JVM's 64KB generated-consume limit and fell back to
-    # interpreted eval.
-    if bands * planes_per_band <= 63:
-        # One wide projection computes the full (bands*ppb)-bit sketch in a
-        # single BIGINT; per-band buckets are tiny bit-shift expressions.
-        mask = (1 << planes_per_band) - 1
-        sketched = vectors.select(
-            F.col(id_col),
-            F.expr(bucket_expr(vec_col, all_planes, base=0)).alias("__sketch"),
-        )
-        band_structs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright("__sketch", b * planes_per_band)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("bucket"),
-                )
-                for b in range(bands)
-            ]
-        )
-    else:
-        # Occupancy-scaled configs overflow one BIGINT sketch, and a
-        # hundred-odd 64-term codegen chains cost more to compile and
-        # evaluate than the buckets are worth -- the projection is exactly
-        # a GEMM, so compute all band buckets in one Arrow-batched numpy
-        # matmul (same planes, same bit order; sign-of-float64-dot can
-        # differ from the balanced chain only on exact-zero knife edges,
-        # which this approximate scale path tolerates by design).
-        import numpy as np
-        import pandas as pd
+    never formed -- the pairs of each (band, bucket) are scored inside one
+    group, the 100 TB shape, and one exact sketch path serves every band
+    count. For true near-dups (cosine >= 0.9) 4x6 banding recalls ~86%;
+    recall degrades for lower thresholds by the LSH collision curve
+    (1 - theta/pi)^planes. Norms are computed once per vector; the DuckDB
+    twin precomputes identically, so bits still match."""
+    planes = hyperplanes(bands * planes_per_band, dims)
 
-        planes_mat = np.array(all_planes, dtype=np.float64)
-        pows = (1 << np.arange(planes_per_band)).astype(np.int64)
-        n_bands, ppb = bands, planes_per_band
-        id_type = vectors.schema[id_col].dataType.simpleString()
+    def sketch(batches):  # per-band buckets; a null row reads as all-zero bits
+        for batch in batches:
+            m, null = vk.matrix(batch.column("v"), dims)
+            bits = vk.sign_bits(m, planes) & ~null.any(axis=1, keepdims=True)
+            bk = vk.pack(bits.reshape(len(m), bands, planes_per_band))
+            yield batch.append_column("bk", pa.array(list(bk), pa.list_(pa.int64())))
 
-        def sketch_batches(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                m = np.array(list(pdf["__v"]), dtype=np.float64)
-                bits = (m @ planes_mat.T) > 0
-                buckets = np.stack(
-                    [bits[:, b * ppb : (b + 1) * ppb] @ pows for b in range(n_bands)],
-                    axis=1,
-                )
-                yield pd.DataFrame({id_col: pdf["__id"], "__bk": list(buckets)})
+    def first_band_pairs(t, i, j, cos):
+        # a pair colliding in several bands is kept by its lowest band only
+        band, ids = t.column("band")[0].as_py(), t.column("id").to_numpy()
+        bk = t.column("bk").combine_chunks().flatten().to_numpy().reshape(-1, bands)
+        first = ~(bk[i, :band] == bk[j, :band]).any(axis=1)
+        a, b = ids[i[first]], ids[j[first]]
+        return pa.table({"id_a": np.minimum(a, b), "id_b": np.maximum(a, b), "cosine": cos[first]})
 
-        sketched = vectors.select(
-            F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
-        ).mapInPandas(sketch_batches, f"{id_col} {id_type}, __bk array<bigint>")
-        band_structs = F.transform(
-            F.col("__bk"),
-            lambda bucket, i: F.struct(i.alias("band"), bucket.alias("bucket")),
-        )
-    # r16 (guide §2.4): both self-join sides consume the banded table;
-    # uncached, each side re-runs the full sketch projection (24+ 64-term
-    # sign chains per vector, the most expensive map work in the plan, the
-    # r6 profile put it at ~0.8 s per evaluation) from the scan. Caching
-    # the (vectors x bands)-row table computes it once.
-    banded = (
-        sketched.select(F.col(id_col), F.explode(band_structs).alias("bb"))
-        .select(id_col, "bb.band", "bb.bucket")
-        .cache()
-    )
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
-    cands = (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # cached for the same two-sided-consumer reason as `banded`: the norm
-    # chain is 64 multiply-adds + SQRT per vector, paid once instead of
-    # once per verify-join side
-    normed = vectors.select(
-        F.col(id_col), F.col(vec_col), F.expr(norm_expr(vec_col, dims, base=0)).alias("__nrm")
-    ).cache()
-    va = normed.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), F.col("__nrm").alias("na")
-    )
-    vb = normed.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), F.col("__nrm").alias("nb")
-    )
-    cos = F.expr(f"({dot_chain_expr('va', 'vb', dims, base=0)}) / (na * nb)")
-    return (
-        cands.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", cos.alias("cosine"))
-        .where(F.col("cosine") >= threshold)
+    v = _side(vectors, id_col, vec_col)
+    bk_field = T.StructField("bk", T.ArrayType(T.LongType()))
+    sketched = v.mapInArrow(sketch, T.StructType(v.schema.fields + [bk_field]))
+    banded = sketched.select("id", "v", "bk", F.posexplode("bk").alias("band", "bucket"))
+    id_type = v.schema["id"].dataType.simpleString()
+    return vk.group_pairs(
+        banded, ["band", "bucket"], dims, threshold, first_band_pairs,
+        f"id_a {id_type}, id_b {id_type}, cosine double",
     )
 
 
@@ -453,6 +338,32 @@ def mean_expr(sum_alias: str) -> str:
     with the DuckDB oracle (1e6 is a DOUBLE literal in both engines --
     a bare decimal literal would be DECIMAL arithmetic in Spark ANSI)."""
     return f"CAST({sum_alias} AS DOUBLE) / (1e6 * CAST(cnt AS DOUBLE))"
+
+
+def _centroids(assign: DataFrame, vecs: DataFrame, on: list[str], dims: int) -> DataFrame:
+    """(keys..., cv) with keys = ``on`` minus "vid" plus cell_id: each
+    assigned group's mean of ``vecs``' v as an EXACT integer power sum.
+    The ROUND/CAST quantization happens ONCE in a plain projection (one
+    array column); the dims-wide aggregate then sums simple array
+    elements, keeping its generated consume method small (inlining the
+    quantizer chains into the agg blows up janino compile time)."""
+    iv = ", ".join(f"CAST(ROUND(CAST(v[{d}] AS DOUBLE) * 1e6) AS BIGINT)" for d in range(dims))
+    keys = [c for c in on if c != "vid"] + ["cell_id"]
+    sums = (
+        assign.select(*on, "cell_id")
+        .join(vecs.select(*on, F.expr(f"array({iv})").alias("iv")), on)
+        .groupBy(*keys)
+        .agg(F.count("*").alias("cnt"), *[F.sum(F.col("iv")[d]).alias(f"s{d}") for d in range(dims)])
+    )
+    return sums.select(*keys, F.array(*[F.expr(mean_expr(f"s{d}")) for d in range(dims)]).alias("cv"))
+
+
+def _persisted(spark: SparkSession, path: str, build) -> DataFrame:
+    """The artifact at ``path``: read if committed, else built, written and
+    read back."""
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):  # committed write only
+        build().write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
 
 
 def train_ivf_codebook(
@@ -467,9 +378,9 @@ def train_ivf_codebook(
     returns (cell_id, cv) -- the trained IVF coarse quantizer.
 
     Init = first n_cells vectors by id (seeded, engine-neutral). Each
-    iteration: (1) assign every vector to its argmax-cosine centroid via a
-    broadcast of the codebook and a map-side max(struct) partial agg --
-    never a per-key sort window on the big side; (2) recompute each
+    iteration: (1) assign every vector to its argmax-cosine centroid
+    (ivf_assign: the collected codebook broadcast into one map-side pass,
+    never a per-key sort window on the big side); (2) recompute each
     centroid coordinate as an EXACT integer power sum,
     SUM(CAST(ROUND(v[d]*1e6) AS BIGINT)) / (1e6 * cnt) -- BIGINT addition
     is order-independent, so centroids are bit-identical across engines,
@@ -481,59 +392,18 @@ def train_ivf_codebook(
     broadcast the finished codebook -- each iteration here is one broadcast
     join + one map-side-combined shuffle over n_cells groups.
 
-    Above GEMM_ASSIGN_MIN_CELLS the per-iteration argmax runs through
-    gemm_assign instead of the codegen chains: with occupancy-scaled
-    codebooks (cells ~ n/125, the SemDeDup contract) the chain work is
-    O(n * cells * dims) of generated expressions per iteration -- the
-    super-linear term the r10 100x probe caught (semantic_dedup 2.22x vs
-    linear). Centroid recomputation stays the exact integer power sum
-    either way, so the trained codebook differs from the chain path only
-    where a ~1e-15 scoring tie flips a boundary vector -- and the gate
-    scales (16 cells) never take this branch, keeping the unrolled SQL
-    oracles bit-exact."""
-    use_gemm = n_cells > GEMM_ASSIGN_MIN_CELLS
+    Above GEMM_ASSIGN_MIN_CELLS (occupancy-scaled codebooks, cells ~
+    n/125) the per-iteration argmax runs through gemm_assign. Centroids
+    stay exact integer power sums either way, so the codebook differs
+    from the exact path only where a ~1e-15 scoring tie flips a boundary
+    vector; the gate scales (16 cells) never take this branch."""
     cents = vectors.where(F.col(id_col) < n_cells).select(
         F.col(id_col).cast("long").alias("cell_id"), F.col(vec_col).alias("cv")
     )
-    cos_vc = F.expr(cosine_expr("v", "cv", dims, base=0))
-    # the ROUND/CAST quantization happens ONCE in a plain projection (one
-    # array column); the 64-wide aggregate then sums simple array elements,
-    # keeping its generated consume method small (inlining the quantizer
-    # chains into the agg blows up janino compile time)
-    iv = F.expr(
-        "array("
-        + ", ".join(f"CAST(ROUND(CAST(v[{d}] AS DOUBLE) * 1e6) AS BIGINT)" for d in range(dims))
-        + ")"
-    )
-    vecs = vectors.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
-    quantized = vecs.select("vid", iv.alias("iv"))
-    sum_aliases = [f"s{d}" for d in range(dims)]
+    vecs = _side(vectors, id_col, vec_col, id_name="vid")
     for _ in range(iters):
-        if use_gemm:
-            assign = gemm_assign(
-                vectors, cents, id_col=id_col, vec_col=vec_col
-            ).select("vid", "cell_id")
-        else:
-            scored = vecs.join(F.broadcast(cents)).select(
-                "vid", "cell_id", cos_vc.alias("c")
-            )
-            assign = (
-                scored.groupBy("vid")
-                .agg(F.max(F.struct(F.col("c"), (-F.col("cell_id")).alias("negc"))).alias("m"))
-                .select("vid", (-F.col("m.negc")).cast("long").alias("cell_id"))
-            )
-        sums = (
-            assign.join(quantized, "vid")
-            .groupBy("cell_id")
-            .agg(
-                F.count("*").alias("cnt"),
-                *[F.sum(F.col("iv")[d]).alias(sum_aliases[d]) for d in range(dims)],
-            )
-        )
-        cents = sums.select(
-            "cell_id",
-            F.array(*[F.expr(mean_expr(a)) for a in sum_aliases]).alias("cv"),
-        )
+        assign = _cell_assign(vectors, cents, dims, n_cells, id_col, vec_col)
+        cents = _centroids(assign, vecs, ["vid"], dims)
     # the finished codebook is <= n_cells rows but its lineage holds
     # 2*iters full-table scans -- cache it so downstream assignment and
     # probing (2+ consumers) train exactly once (production would persist
@@ -570,13 +440,9 @@ def load_or_train_ivf_codebook(
     FileSystem API (``jvm.org.apache.hadoop.fs.FileSystem``) so the check
     matches the write path's filesystem. Local FS is the contract here."""
     path = os.path.join(cache_dir, f"ivf_codebook_c{n_cells}_i{iters}_{fingerprint}")
-    if os.path.exists(os.path.join(path, "_SUCCESS")):  # committed write only
-        return spark.read.parquet(path)
-    cents = train_ivf_codebook(
+    return _persisted(spark, path, lambda: train_ivf_codebook(
         vectors, dims, n_cells=n_cells, iters=iters, id_col=id_col, vec_col=vec_col
-    )
-    cents.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    ))
 
 
 def cosine_topk_ivf(
@@ -600,66 +466,34 @@ def cosine_topk_ivf(
     Lloyd's, bit-identical to the oracle's unrolled-CTE mirror) or from a
     pre-trained ``codebook`` (load_or_train_ivf_codebook -- training and
     probing are separate stages in deployment). At 100 TB: centroid table
-    is broadcast, cell assignment is map-side, candidate scan shuffles on
-    cell_id only.
+    and probe lists are broadcast, cell assignment is map-side, and the
+    corpus scan scores only rows of probed cells.
 
     match_col: filtered vector search (the production ANN shape: restrict
     neighbors to the query's tenant/language/label). Candidates are probed
     exactly as in the unfiltered path and the attribute equality is applied
     DURING the candidate scan, before the top-k window -- post-filtering at
     the scan, so k survivors are the k best MATCHING neighbors among the
-    probed cells. Zero extra shuffles: the attribute rides the qv/nv score
-    joins the unfiltered plan already does."""
+    probed cells. Zero extra shuffles: the attribute rides the candidate
+    predicate of the unfiltered scan."""
     cents = codebook if codebook is not None else train_ivf_codebook(
         vectors, dims, n_cells=n_cells, iters=train_iters, id_col=id_col, vec_col=vec_col
     )
-    cos_vc = F.expr(cosine_expr("v", "cv", dims, base=0))
+    base_assign = _inverted_file(assignment, vectors, cents, dims, id_col, vec_col)
+    # each query's n_probe best cells: the assignment body with best=n_probe
+    probes = vk.assign(_side(queries, id_col, vec_col), cents, dims, best=n_probe)
+    probes = probes.groupBy("id").agg(F.collect_list("cell_id").alias("cell"))
+    m = [F.col(match_col).alias("_m")] if match_col is not None else []
+    q = _side(queries, id_col, vec_col, *m).join(probes, "id")
+    nv = _side(vectors, id_col, vec_col, *m).join(
+        base_assign.select(F.col("vid").alias("id"), F.col("cell_id").alias("cell")), "id"
+    )
 
-    def scored_cells(df: DataFrame) -> DataFrame:
-        return (
-            df.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
-            .join(F.broadcast(cents))
-            .select("vid", "cell_id", cos_vc.alias("c"))
-        )
+    def in_probed_cells(v, q):
+        cand = np.stack([np.isin(v["cell"], cells) for cells in q["cell"]], axis=1)
+        return cand & (v["_m"][:, None] == q["_m"][None, :]) if "_m" in q else cand
 
-    # cell assignment = argmax by (cosine desc, cell_id asc) via max(struct):
-    # map-side partial aggregation combines before the shuffle, so the
-    # full-vector-set side never pays a per-key sort window. Same tie-break
-    # as ROW_NUMBER over (c DESC, cell_id ASC) = 1. Callers may pass the
-    # persisted inverted file (load_or_build_ivf_assignment) instead.
-    base_assign = (
-        assignment
-        if assignment is not None
-        else ivf_assign(vectors, cents, dims, id_col=id_col, vec_col=vec_col)
-    )
-    assign = base_assign.select(
-        F.col("vid").alias("neighbor_id"), "cell_id"
-    )
-    # probes (queries x n_probe) keep the rank window -- the query set is small
-    w_probe = Window.partitionBy("vid").orderBy(F.col("c").desc(), F.col("cell_id").asc())
-    probes = (
-        scored_cells(queries)
-        .withColumn("rn", F.row_number().over(w_probe))
-        .where(F.col("rn") <= n_probe)
-        .select(F.col("vid").alias("query_id"), "cell_id")
-    )
-    cands = F.broadcast(probes).join(assign, "cell_id").where(
-        F.col("query_id") != F.col("neighbor_id")
-    ).select("query_id", "neighbor_id").distinct()
-    qcols = [F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")]
-    ncols = [F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv")]
-    if match_col is not None:
-        qcols.append(F.col(match_col).alias("_qm"))
-        ncols.append(F.col(match_col).alias("_nm"))
-    qv = queries.select(*qcols)
-    nv = vectors.select(*ncols)
-    cos = F.expr(cosine_expr("qv", "nv", dims, base=0))
-    scored = cands.join(F.broadcast(qv), "query_id").join(nv, "neighbor_id")
-    if match_col is not None:
-        scored = scored.where(F.col("_qm") == F.col("_nm"))
-    scored = scored.select("query_id", "neighbor_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return vk.topk_scan(nv, q, dims, k, where=in_probed_cells)
 
 
 def quantize_expr(vec: str, dims: int, base: int, scale: int) -> list[str]:
@@ -687,36 +521,20 @@ def cosine_topk_sq(
     storage 4x vs float32 / 8x vs float64 -- at 100 TB that is the working-
     set win that keeps the candidate scan memory-bound instead of IO-bound.
 
-    Plan: each side is projected ONCE to (id, int8 code array, integer
-    squared norm, LSH bucket); candidates come from the bucket equi-join
-    (never all pairs); scoring folds the code arrays with
-    aggregate(zip_with(...)) in exact BIGINT arithmetic (|term| <= 127^2,
-    order-independent -- no summation-order contract needed). Only the final
-    cosine ratio is floating point, on bit-identical integer operands, so
-    the query stays value-hash comparable to the DuckDB oracle. Quantization
-    shifts scores ~1e-3; the recall pytest pins ranking quality vs exact."""
+    Plan: one topk_scan; each side is coded ONCE per batch to (int8
+    codes with Spark's HALF_UP ROUND, integer squared norm, LSH bucket of
+    the float vector); candidates share the query's bucket (never all
+    pairs); code dot products are exact int64 sums (|term| <= 127^2,
+    order-independent -- no summation-order contract needed). Only the
+    final cosine ratio is floating point, on bit-identical integer
+    operands, so the query stays value-hash comparable to the DuckDB
+    oracle. Quantization shifts scores ~1e-3; the recall pytest pins
+    ranking quality vs exact."""
     planes = hyperplanes(n_planes, dims)
-    bucket = F.expr(bucket_expr(vec_col, planes, base=0))
-    qarr = F.expr("array(" + ", ".join(quantize_expr(vec_col, dims, 0, scale)) + ")")
-    sqnorm = "aggregate(transform({q}, x -> x * x), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-
-    def side(df: DataFrame, idn: str, qn: str) -> DataFrame:
-        staged = df.select(F.col(id_col).alias(idn), qarr.alias(qn), bucket.alias("bucket"))
-        return staged.withColumn(f"{qn}_nrm", F.expr(sqnorm.format(q=qn)))
-
-    q = side(queries, "query_id", "qa")
-    v = side(vectors, "neighbor_id", "qb")
-    dot = "aggregate(zip_with(qa, qb, (x, y) -> x * y), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    cos = F.expr(
-        f"CAST({dot} AS DOUBLE) / (SQRT(CAST(qa_nrm AS DOUBLE)) * SQRT(CAST(qb_nrm AS DOUBLE)))"
+    return _scan(
+        vectors, queries, dims, k, id_col, vec_col,
+        metric=vk.SQ8(scale), planes=planes, score_col="cosine_q",
     )
-    scored = (
-        v.join(F.broadcast(q), "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("cosine_q"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine_q").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def cosine_topk_gemm(
@@ -728,81 +546,25 @@ def cosine_topk_gemm(
     vec_col: str = "embedding",
     max_queries: int = 65536,
 ) -> DataFrame:
-    """Production-form cosine top-k: the Arrow-batched GEMM path that
-    SCALING.md prescribes for real dimensionality, where the bit-parity sum
-    chains (an oracle-determinism contract, not a deployment choice) give
-    way to one numpy float64 matrix multiply per Arrow batch.
+    """Production-form cosine top-k: the exact variants' topk_scan with a
+    BLAS score -- one float64 GEMM of each row-normalized corpus block
+    against the query matrix, where the others mirror _balanced_sum (an
+    oracle-determinism contract, not a deployment choice). Scores differ
+    from theirs only by float summation order (~1e-15); all-zero vectors
+    score 0.0 (norm clamped to 1), never NaN.
 
-    The query set is collected once, row-normalized into a (q x d) matrix,
-    and shipped via SparkContext.broadcast (torrent distribution, one copy
-    per executor -- not serialized into every task closure). SIZE
-    CONTRACT: the query set must fit on the driver and every executor
-    ((q x d) float64s, e.g. 65k queries x 128 dims = 64 MB); ``max_queries``
-    enforces it and raising it is an explicit opt-in. Each Arrow batch of
-    corpus vectors then does a single (n x d)(d x q) GEMM and keeps only
-    its per-batch top-k rows per query (argpartition, no sort of the
-    batch), so the Python stage emits at most batches*q*k rows; a final
-    per-query rank window over that small candidate set picks the global
-    top-k. At 100 TB: map-side GEMM + bounded emission, one tiny final
-    shuffle on query_id; the corpus never leaves the executors.
-
-    All-zero vectors score 0.0 against everything (norm clamped to 1),
-    never NaN -- NaN would poison both argpartition and the DESC rank
-    window with engine-specific orderings.
-
-    Scores differ from the chain/oracle variants only by float summation
-    order (~1e-15); use the chain variants when bit-equality to an external
-    engine matters."""
-    import numpy as np
-    import pandas as pd
-
-    q_rows = queries.select(F.col(id_col), F.col(vec_col)).limit(max_queries + 1).collect()
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"cosine_topk_gemm query set exceeds max_queries={max_queries}; "
-            "the broadcast (q x d) matrix must fit on every executor -- "
-            "raise max_queries explicitly if it does"
-        )
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qm = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_norms = np.linalg.norm(qm, axis=1, keepdims=True)
-    q_norms[q_norms == 0] = 1.0
-    qm /= q_norms
-    bq = vectors.sparkSession.sparkContext.broadcast((q_ids, qm))
-
-    out_schema = "query_id long, neighbor_id long, cosine double"
-
-    def gemm_topk(batches):
-        q_ids, qm = bq.value
-        for pdf in batches:
-            ids = pdf["nid"].to_numpy(dtype=np.int64)
-            vm = np.array(list(pdf["v"]), dtype=np.float64)
-            v_norms = np.linalg.norm(vm, axis=1, keepdims=True)
-            v_norms[v_norms == 0] = 1.0
-            vm /= v_norms
-            scores = vm @ qm.T  # (n x q)
-            # per-batch, per-query top-k (exclude self-matches) without
-            # sorting the whole batch
-            for j, qid in enumerate(q_ids):
-                col = scores[:, j]
-                mask = ids != qid
-                cand_idx = np.nonzero(mask)[0]
-                if cand_idx.size == 0:
-                    continue
-                kk = min(k, cand_idx.size)
-                top = cand_idx[np.argpartition(-col[cand_idx], kk - 1)[:kk]]
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.full(kk, qid, dtype=np.int64),
-                        "neighbor_id": ids[top],
-                        "cosine": col[top],
-                    }
-                )
-
-    v = vectors.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("v"))
-    partial = v.mapInPandas(gemm_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return partial.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    The query set is collected once, row-normalized and broadcast (one
+    copy per executor). SIZE CONTRACT: it must fit on the driver and
+    every executor ((q x d) float64s, e.g. 65k queries x 128 dims = 64
+    MB); ``max_queries`` enforces it and raising it is an explicit opt-in.
+    Each task emits only its running top-k per query in the total order
+    (cosine desc, id asc) -- tied lower ids are never dropped -- and a
+    final per-query rank window picks the global top-k. At 100 TB:
+    map-side GEMM + bounded emission, one tiny final shuffle on query_id;
+    the corpus never leaves the executors."""
+    return _scan(
+        vectors, queries, dims, k, id_col, vec_col, metric=vk.GEMM, max_queries=max_queries
+    )
 
 
 def cosine_topk_lsh(
@@ -814,26 +576,12 @@ def cosine_topk_lsh(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """ANN variant: candidates restricted to the query's LSH bucket
-    (equi-join on bucket id), then exact cosine + rank. Recall < 1 by
+    """ANN variant: candidates restricted to the query's LSH bucket,
+    then exact cosine + rank. Recall < 1 by
     design; determinism is preserved because both engines use identical
     literal hyperplanes."""
     planes = hyperplanes(n_planes, dims)
-    bucket = F.expr(bucket_expr(vec_col, planes, base=0))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), bucket.alias("bucket")
-    )
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nv"), bucket.alias("bucket")
-    )
-    cos = F.expr(cosine_expr("qv", "nv", dims, base=0))
-    scored = (
-        v.join(F.broadcast(q), "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _scan(vectors, queries, dims, k, id_col, vec_col, planes=planes)
 
 
 def l2_chain_expr(a: str, b: str, dims: int, base: int) -> str:
@@ -846,53 +594,65 @@ def l2_chain_expr(a: str, b: str, dims: int, base: int) -> str:
     return _balanced_sum(terms)
 
 
+def _subvectors(df: DataFrame, vec: str, m_sub: int, dsub: int, *keep: str) -> DataFrame:
+    """(keep..., m, sv): one row per subspace slice of ``vec``."""
+    sl = [F.expr(f"slice({vec}, {m * dsub + 1}, {dsub})").alias("sv") for m in range(m_sub)]
+    parts = F.array(*[F.struct(F.lit(m).alias("m"), sl[m]) for m in range(m_sub)])
+    return df.select(*keep, F.explode(parts).alias("x")).select(*keep, "x.m", "x.sv")
+
+
+def _pq_codebook(sv, dsub, ksub, iters, pq_cache, key) -> DataFrame:
+    """Trained PQ codebook, reused by codes AND the LUT: persisted under
+    ``pq_cache`` = (cache_dir, fingerprint) when given, else cached."""
+    if pq_cache is None:
+        return train_pq_codebook(sv, dsub, ksub=ksub, iters=iters).cache()
+    cache_dir, fingerprint = pq_cache
+    return load_or_train_pq_codebook(
+        sv, dsub, cache_dir, f"{key}_k{ksub}_i{iters}_{fingerprint}", ksub=ksub, iters=iters
+    )
+
+
+def _adc_topk(dist: DataFrame, k: int) -> DataFrame:
+    """Rank (query_id, neighbor_id, di) by integer ADC distance, id asc."""
+    w = Window.partitionBy("query_id").orderBy(F.col("di").asc(), F.col("neighbor_id").asc())
+    ranked = dist.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    adc = (F.col("di").cast("double") / 1e9).alias("adc_dist")
+    return ranked.select("query_id", "neighbor_id", adc, "rank")
+
+
+def _pq_codes(sv: DataFrame, cents: DataFrame, dsub: int) -> DataFrame:
+    """(vid, m, code): each subvector's nearest codebook row of its own
+    subspace, (d2 asc, cell_id asc) -- the min(struct) argmin."""
+    codes = vk.assign(sv.withColumnRenamed("sv", "v"), cents, dsub, vk.L2_SQ, by="m")
+    return codes.select("vid", "m", F.col("cell_id").alias("code"))
+
+
+def _pq_lut(qsv: DataFrame, cents: DataFrame, dsub: int, ksub: int) -> DataFrame:
+    """ADC lookup table: every query subvector's exact L2 to every
+    codebook row of its subspace, rounded to a 1e-9-scale BIGINT (d2i)."""
+    lut = vk.assign(qsv.withColumnRenamed("sv", "v"), cents, dsub, vk.L2_SQ, best=ksub, by="m")
+    return lut.withColumn("d2i", F.round(F.col("score") * 1e9).cast("long"))
+
+
 def train_pq_codebook(
     sv: DataFrame, dsub: int, ksub: int = 16, iters: int = 1
 ) -> DataFrame:
     """Product-quantization codebook over an exploded (vid, m, sv) subvector
     frame -- ALL subspaces train in one dataflow per step (one broadcast
-    join + min-struct argmin + integer-power-sum means; bit-identical
+    argmin pass + integer-power-sum means; bit-identical
     across engines, same contract as train_ivf_codebook). Init = the
     subvectors of the first ksub vids. Returns (m, cell_id, cv).
 
     Shared by pq_adc_topk (subvectors of raw vectors) and ivfpq_adc_topk
     (subvectors of residuals); deterministic, so persistable via
     load_or_train_pq_codebook."""
-    l2 = F.expr(l2_chain_expr("sv", "cv", dsub, 0))
     cents = sv.where(F.col("vid") < ksub).select(
         "m", F.col("vid").cast("long").alias("cell_id"), F.col("sv").alias("cv")
     )
-    ivq = F.expr(
-        "array("
-        + ", ".join(
-            f"CAST(ROUND(CAST(sv[{d}] AS DOUBLE) * 1e6) AS BIGINT)" for d in range(dsub)
-        )
-        + ")"
-    )
-    svq = sv.select("vid", "m", ivq.alias("iv"))
-    sum_aliases = [f"s{d}" for d in range(dsub)]
+    vecs = sv.withColumnRenamed("sv", "v")
     for _ in range(iters):
-        scored = sv.join(F.broadcast(cents), "m").select(
-            "vid", "m", "cell_id", l2.alias("d2")
-        )
-        assign = (
-            scored.groupBy("vid", "m")
-            .agg(F.min(F.struct(F.col("d2"), F.col("cell_id"))).alias("mn"))
-            .select("vid", "m", F.col("mn.cell_id").alias("cell_id"))
-        )
-        sums = (
-            assign.join(svq, ["vid", "m"])
-            .groupBy("m", "cell_id")
-            .agg(
-                F.count("*").alias("cnt"),
-                *[F.sum(F.col("iv")[d]).alias(sum_aliases[d]) for d in range(dsub)],
-            )
-        )
-        cents = sums.select(
-            "m",
-            "cell_id",
-            F.array(*[F.expr(mean_expr(a)) for a in sum_aliases]).alias("cv"),
-        )
+        codes = _pq_codes(sv, cents, dsub).withColumnRenamed("code", "cell_id")
+        cents = _centroids(codes, vecs, ["vid", "m"], dsub)
     return cents
 
 
@@ -911,13 +671,9 @@ def load_or_train_pq_codebook(
     to encoding + ADC. The caller's key must encode every training input
     (source fingerprint, m/ksub/iters, and -- for residual PQ -- the coarse
     quantizer's params)."""
-    spark = sv.sparkSession
-    path = os.path.join(cache_dir, key)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):  # committed write only
-        return spark.read.parquet(path)
-    cents = train_pq_codebook(sv, dsub, ksub=ksub, iters=iters)
-    cents.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return _persisted(sv.sparkSession, os.path.join(cache_dir, key), lambda: train_pq_codebook(
+        sv, dsub, ksub=ksub, iters=iters
+    ))
 
 
 def pq_adc_topk(
@@ -944,10 +700,10 @@ def pq_adc_topk(
 
     Dataflow (all subspaces train in ONE shuffle per step, not m_sub
     loops): explode each vector into (id, m, subvector); k-means init =
-    first ksub ids' subvectors; per iteration one broadcast-codebook join
-    + min(struct) argmin + integer-power-sum centroid means (bit-identical
-    across engines, same contract as train_ivf_codebook). Codes and the
-    query LUT come from the same argmin join; per-(query, m, cell) LUT
+    first ksub ids' subvectors; per iteration one broadcast-codebook
+    argmin pass + integer-power-sum centroid means (bit-identical across
+    engines, same contract as train_ivf_codebook). Codes and the query
+    LUT come from the same exact L2 assignment; per-(query, m, cell) LUT
     distances are rounded to 1e-9-scale BIGINTs BEFORE the per-pair sum,
     so the ADC total is order-independent exact integer arithmetic and
     the DuckDB oracle value-hash matches.
@@ -957,64 +713,18 @@ def pq_adc_topk(
     the corpus never shuffles; train the codebook on a hash-sample and
     persist like the IVF artifact."""
     dsub = dims // m_sub
-
-    def subvecs(df: DataFrame, idn: str) -> DataFrame:
-        structs = F.array(
-            *[
-                F.struct(
-                    F.lit(m).alias("m"),
-                    F.expr(f"slice({vec_col}, {m * dsub + 1}, {dsub})").alias("sv"),
-                )
-                for m in range(m_sub)
-            ]
-        )
-        return df.select(F.col(id_col).alias(idn), F.explode(structs).alias("x")).select(
-            idn, F.col("x.m").alias("m"), F.col("x.sv").alias("sv")
-        )
-
-    sv = subvecs(vectors, "vid")
-    l2 = F.expr(l2_chain_expr("sv", "cv", dsub, 0))
-    if pq_cache is not None:
-        cache_dir, fingerprint = pq_cache
-        cents = load_or_train_pq_codebook(
-            sv,
-            dsub,
-            cache_dir,
-            f"pq_m{m_sub}_k{ksub}_i{iters}_{fingerprint}",
-            ksub=ksub,
-            iters=iters,
-        )
-    else:
-        # trained codebook: reused by codes AND the LUT
-        cents = train_pq_codebook(sv, dsub, ksub=ksub, iters=iters).cache()
-    coded = sv.join(F.broadcast(cents), "m").select("vid", "m", "cell_id", l2.alias("d2"))
-    codes = (
-        coded.groupBy("vid", "m")
-        .agg(F.min(F.struct(F.col("d2"), F.col("cell_id"))).alias("mn"))
-        .select("vid", "m", F.col("mn.cell_id").alias("code"))
-    )
-    qsv = subvecs(queries, "query_id")
-    lut = qsv.join(F.broadcast(cents), "m").select(
-        "query_id", "m", "cell_id", F.round(l2 * 1e9).cast("long").alias("d2i")
-    )
+    sv = _subvectors(vectors.withColumnRenamed(id_col, "vid"), vec_col, m_sub, dsub, "vid")
+    cents = _pq_codebook(sv, dsub, ksub, iters, pq_cache, f"pq_m{m_sub}")
+    codes = _pq_codes(sv, cents, dsub)
+    qsv = _subvectors(queries.withColumnRenamed(id_col, "query_id"), vec_col, m_sub, dsub, "query_id")
+    lut = _pq_lut(qsv, cents, dsub, ksub)
     pairs = codes.join(
         F.broadcast(lut), (codes.m == lut.m) & (codes.code == lut.cell_id)
     )
     dist = pairs.groupBy("query_id", F.col("vid").alias("neighbor_id")).agg(
         F.sum("d2i").alias("di")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("di").asc(), F.col("neighbor_id").asc())
-    return (
-        dist.where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.col("di").cast("double") / 1e9).alias("adc_dist"),
-            "rank",
-        )
-    )
+    return _adc_topk(dist.where(F.col("query_id") != F.col("neighbor_id")), k)
 
 
 def ivfpq_adc_topk(
@@ -1040,114 +750,53 @@ def ivfpq_adc_topk(
     makes PQ accurate at scale (residuals are centered, so the shared
     subspace codebooks spend their 16 centroids on a much smaller ball).
 
-    Dataflow:
-      1. cell assignment: broadcast codebook, argmax-cosine max(struct)
-         partial agg (map-side combinable; the corpus never sort-windows);
-      2. residuals: one broadcast join with the centroid table -- exact
-         IEEE double subtraction, deterministic across engines;
-      3. PQ training on residuals pooled over cells (the FAISS default):
-         same one-exploded-dataflow k-means as pq_adc_topk, integer-power-
-         sum centroid means;
-      4. per-query, per-PROBED-CELL residual LUT (n_q x n_probe x m_sub x
-         ksub rows -- broadcast material at any scale), entries rounded to
-         1e-9-scale BIGINTs before the per-pair sum (order-independent);
-      5. ADC: codes equi-join LUT on (cell, m, code) -- restricting
-         neighbors to probed cells and scoring in one join; one combinable
-         per-pair sum; rank window over the tiny scored set.
+    Dataflow: (1) map-side argmax-cosine cell assignment (ivf_assign);
+    (2) residuals by one broadcast join with the centroid table -- exact
+    IEEE double subtraction; (3) PQ training on residuals pooled over
+    cells (the FAISS default), as in pq_adc_topk; (4) per-query,
+    per-PROBED-CELL residual LUT (n_q x n_probe x m_sub x ksub rows --
+    broadcast material at any scale), entries rounded to 1e-9-scale
+    BIGINTs before the per-pair sum (order-independent); (5) ADC: codes
+    equi-join the LUT on (cell, m, code) -- restricting neighbors to
+    probed cells and scoring in one join; one combinable per-pair sum;
+    rank window over the tiny scored set.
 
-    At 100 TB: storage is m_sub bytes + one cell id per vector; the only
-    corpus-wide exchanges are the assignment agg and the codes groupBy,
-    both map-side combinable; scoring shuffles candidates of probed cells
-    only. Train both codebooks on a hash-sample and persist (the IVF one
-    already ships via load_or_train_ivf_codebook).
+    At 100 TB: storage is m_sub bytes + one cell id per vector; assignment
+    and codes are map-side, and scoring shuffles candidates of probed
+    cells only. Train both codebooks on a hash-sample and persist (the IVF
+    one already ships via load_or_train_ivf_codebook).
 
     Reference parity: no ANN in the reference; LLM-pipeline extension
     surface ("similarity search ... IVF or LSH-bucketed variant as the
     scale path")."""
     dsub = dims // m_sub
     cents = codebook  # (cell_id, cv)
-    cos_vc = F.expr(cosine_expr("v", "cv", dims, base=0))
+    diffs = ", ".join(f"CAST(v[{d}] AS DOUBLE) - CAST(cv[{d}] AS DOUBLE)" for d in range(dims))
 
-    vecs = vectors.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
-    # callers may pass the persisted inverted file (load_or_build_ivf_assignment)
-    assign = (
-        assignment
-        if assignment is not None
-        else ivf_assign(vectors, cents, dims, id_col=id_col, vec_col=vec_col)
-    ).select("vid", "cell_id")
-    rv = F.expr(
-        "array("
-        + ", ".join(
-            f"CAST(v[{d}] AS DOUBLE) - CAST(cv[{d}] AS DOUBLE)" for d in range(dims)
-        )
-        + ")"
-    )
-    resid = (
-        assign.join(vecs, "vid")
-        .join(F.broadcast(cents), "cell_id")
-        .select("vid", "cell_id", rv.alias("rv"))
-    )
+    def residuals(df: DataFrame, key: str) -> DataFrame:  # (key, cell_id, v) -> rv
+        joined = df.join(F.broadcast(cents), "cell_id")
+        return joined.select(key, "cell_id", F.expr(f"array({diffs})").alias("rv"))
+
+    assign = _inverted_file(assignment, vectors, cents, dims, id_col, vec_col)
+    vecs = _side(vectors, id_col, vec_col, id_name="vid")
     # residuals feed PQ training, codes, AND (via assign) candidate gen --
-    # cache so the assignment agg runs once
-    resid = resid.cache()
+    # cache so the assignment runs once
+    resid = residuals(assign.select("vid", "cell_id").join(vecs, "vid"), "vid").cache()
 
-    sub_structs = F.array(
-        *[
-            F.struct(
-                F.lit(m).alias("m"),
-                F.expr(f"slice(rv, {m * dsub + 1}, {dsub})").alias("sv"),
-            )
-            for m in range(m_sub)
-        ]
-    )
-    rsv = resid.select("vid", F.explode(sub_structs).alias("x")).select(
-        "vid", F.col("x.m").alias("m"), F.col("x.sv").alias("sv")
-    )
-    l2 = F.expr(l2_chain_expr("sv", "cv", dsub, 0))
-    if pq_cache is not None:
-        # caller's fingerprint MUST encode the coarse quantizer's config too:
-        # residuals are a function of the IVF codebook, so a different IVF
-        # setup has to miss this cache
-        cache_dir, fingerprint = pq_cache
-        pqc = load_or_train_pq_codebook(
-            rsv,
-            dsub,
-            cache_dir,
-            f"ivfpq_m{m_sub}_k{ksub}_i{iters}_{fingerprint}",
-            ksub=ksub,
-            iters=iters,
-        )
-    else:
-        # trained PQ codebook: reused by codes AND the LUT
-        pqc = train_pq_codebook(rsv, dsub, ksub=ksub, iters=iters).cache()
-    codes = (
-        rsv.join(F.broadcast(pqc), "m")
-        .select("vid", "m", "cell_id", l2.alias("d2"))
-        .groupBy("vid", "m")
-        .agg(F.min(F.struct(F.col("d2"), F.col("cell_id"))).alias("mn"))
-        .select("vid", "m", F.col("mn.cell_id").alias("code"))
-    )
+    rsv = _subvectors(resid, "rv", m_sub, dsub, "vid")
+    # a pq_cache fingerprint MUST encode the coarse quantizer's config too:
+    # residuals are a function of the IVF codebook, so a different IVF
+    # setup has to miss this cache
+    pqc = _pq_codebook(rsv, dsub, ksub, iters, pq_cache, f"ivfpq_m{m_sub}")
+    codes = _pq_codes(rsv, pqc, dsub)
 
     # query side: probe the n_probe argmax-cosine cells, residual per cell
-    qvecs = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("v"))
-    w_probe = Window.partitionBy("qid").orderBy(F.col("c").desc(), F.col("cell_id").asc())
-    probes = (
-        qvecs.join(F.broadcast(cents))
-        .select("qid", "cell_id", cos_vc.alias("c"))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .where(F.col("rn") <= n_probe)
-        .select("qid", "cell_id")
-    )
-    qresid = (
-        probes.join(qvecs, "qid")
-        .join(F.broadcast(cents), "cell_id")
-        .select("qid", "cell_id", rv.alias("rv"))
-    )
-    qrsv = qresid.select("qid", "cell_id", F.explode(sub_structs).alias("x")).select(
-        "qid", "cell_id", F.col("x.m").alias("m"), F.col("x.sv").alias("sv")
-    )
-    lut = qrsv.join(F.broadcast(pqc.withColumnRenamed("cell_id", "pq_cell")), "m").select(
-        "qid", "cell_id", "m", "pq_cell", F.round(l2 * 1e9).cast("long").alias("d2i")
+    qvecs = _side(queries, id_col, vec_col, id_name="qid")
+    probes = vk.assign(qvecs, cents, dims, best=n_probe).select("qid", "cell_id")
+    qresid = residuals(probes.join(qvecs, "qid"), "qid").withColumnRenamed("cell_id", "coarse")
+    lut = _pq_lut(_subvectors(qresid, "rv", m_sub, dsub, "qid", "coarse"), pqc, dsub, ksub)
+    lut = lut.select(
+        "qid", F.col("coarse").alias("cell_id"), "m", F.col("cell_id").alias("pq_cell"), "d2i"
     )
     # one equi-join scores AND restricts to probed cells
     coded = codes.join(resid.select("vid", "cell_id"), "vid")
@@ -1155,19 +804,7 @@ def ivfpq_adc_topk(
         F.broadcast(lut),
         (coded.cell_id == lut.cell_id) & (coded.m == lut.m) & (coded.code == lut.pq_cell),
     )
-    dist = (
-        pairs.where(F.col("qid") != F.col("vid"))
-        .groupBy(F.col("qid").alias("query_id"), F.col("vid").alias("neighbor_id"))
-        .agg(F.sum("d2i").alias("di"))
+    dist = pairs.where(F.col("qid") != F.col("vid")).groupBy(
+        F.col("qid").alias("query_id"), F.col("vid").alias("neighbor_id")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("di").asc(), F.col("neighbor_id").asc())
-    return (
-        dist.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            (F.col("di").cast("double") / 1e9).alias("adc_dist"),
-            "rank",
-        )
-    )
+    return _adc_topk(dist.agg(F.sum("d2i").alias("di")), k)

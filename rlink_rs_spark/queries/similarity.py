@@ -424,7 +424,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from rlink_rs_spark.operators.repartition import fan_out
 
-    # assignment chains + within-cell pair verify are CPU-bound; a
+    # assignment + within-cell pair scoring are CPU-bound; a
     # one-row-group scan caps them at ~2 tasks (no-op on multi-file layouts)
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
     # Row count from parquet footer metadata (driver-local, no eager Spark
@@ -470,14 +470,15 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "cosine_topk_gemm",
-    None,  # rows-only gate: float64 GEMM sums in a different order than the
-    # bit-parity chains the SQL oracle mirrors (~1e-15 score drift); pytest
-    # pins id/rank equality + 1e-9 score closeness against the brute oracle
+    None,  # rows-only gate: BLAS GEMM sums in a different order than the
+    # balanced sums the SQL oracle and the exact kernel share (~1e-15 score
+    # drift); pytest pins id/rank equality + 1e-9 score closeness against
+    # the brute oracle
     "Production-form cosine top-5: Arrow-batched numpy GEMM per corpus "
-    "batch against the (broadcast) normalized query matrix, per-batch "
-    "argpartition top-k so the Python stage emits batches*q*k rows, final "
-    "rank window on the small candidate set. The deployment fast path "
-    "next to the chain-based oracle twins.",
+    "batch against the (broadcast) normalized query matrix, per-task "
+    "top-k in (cosine desc, id asc) so the Python stage emits tasks*q*k "
+    "rows, final rank window on the small candidate set. The deployment "
+    "fast path next to the exact-kernel oracle twins.",
 )
 def cosine_topk_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
@@ -893,19 +894,15 @@ SELECT vec_id, label, centroid_cos FROM scored WHERE centroid_cos < {_OUTLIER_TH
     "fixture's ~p5). Centroids come from the same micro-scaled integer "
     "sums as label_embedding_centroids (bit-identical across engines); "
     "each label's 64 means fold into ONE broadcast array row, so the "
-    "corpus pays a single scan + broadcast hash join -- no shuffle of the "
-    "vectors at any scale. The per-vector cosine uses the explicit "
-    "balanced sum chain, so the double agrees bit-for-bit with DuckDB.",
+    "corpus pays a single map-side scoring scan -- no shuffle of the "
+    "vectors at any scale. The per-vector cosine mirrors the balanced "
+    "sum chain in NumPy, so the double agrees bit-for-bit with DuckDB.",
 )
 def embedding_outlier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     cents = _label_centroid_frame(emb)
-    cos = F.expr(cosine_expr("v.embedding", "c.cent", _DIMS, base=0))
-    return (
-        emb.alias("v")
-        .join(F.broadcast(cents.alias("c")), "label")
-        .select("vec_id", "label", cos.alias("centroid_cos"))
-        .where(F.col("centroid_cos") < _OUTLIER_THR)
+    return sim_ops.label_centroid_cosine(emb, cents, _DIMS).where(
+        F.col("centroid_cos") < _OUTLIER_THR
     )
 
 
@@ -1077,35 +1074,8 @@ GROUP BY b.query_id
 def filtered_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composition like ann_recall_report: the approximate side IS the
     registered filtered query (persisted artifacts included); the exact
-    side is a broadcast-query NLJ bounded by the 10-row query set."""
-    from pyspark.sql.window import Window
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < _N_QUERIES)
-    qv = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("label").alias("ql"),
-    )
-    nv = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("nv"),
-        F.col("label").alias("nl"),
-    )
-    cos = F.expr(cosine_expr("qv", "nv", _DIMS, base=0))
-    scored = (
-        F.broadcast(qv)
-        .join(nv, (F.col("ql") == F.col("nl")) & (F.col("query_id") != F.col("neighbor_id")))
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    exact = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= _K)
-        .select("query_id", "neighbor_id")
-    )
+    side is a broadcast-query scan bounded by the 10-row query set."""
+    exact = _label_topk(spark, sf_dir, same_label=True).select("query_id", "neighbor_id")
     appr = (
         cosine_topk_ivf_filtered(spark, sf_dir)
         .select("query_id", "neighbor_id")
@@ -1265,35 +1235,37 @@ FROM ranked WHERE rank <= {_K}
 )
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same broadcast-queries x corpus-scan shape as cosine_topk_bruteforce
-    (the by-design NLJ baseline) with the label-mismatch predicate fused
-    into the join condition, so same-label rows never reach the scorer.
+    (the exact baseline) with the label-mismatch predicate fused into the
+    candidate mask, so same-label rows never reach the scorer.
     At 100 TB the exact scan is the audit path; production mines from the
     IVF/PQ candidate sets (cosine_topk_ivf and friends) with the same
     label-exclusion predicate applied to the probed cells -- the rank
     window stays per-query (bounded by the query batch, never corpus-
     partitioned)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("embedding").alias("qv"),
+    labels = load_table(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").alias("query_id"), F.col("label").alias("query_label")
     )
-    v = emb.select(
-        F.col("vec_id").alias("negative_id"),
-        F.col("label").alias("nlabel"),
-        F.col("embedding").alias("nv"),
+    negatives = _label_topk(spark, sf_dir, same_label=False).join(
+        F.broadcast(labels.where(F.col("query_id") < _N_QUERIES)), "query_id"
     )
-    from pyspark.sql import Window
+    return negatives.select(
+        "query_id", "query_label", F.col("neighbor_id").alias("negative_id"), "cosine", "rank"
+    )
 
-    cos = F.expr(cosine_expr("qv", "nv", _DIMS, base=0))
-    scored = v.join(
-        F.broadcast(q),
-        (F.col("query_id") != F.col("negative_id"))
-        & (F.col("query_label") != F.col("nlabel")),
-    ).select("query_id", "query_label", "negative_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("negative_id").asc()
+
+def _label_topk(spark: SparkSession, sf_dir: str, same_label: bool) -> DataFrame:
+    """Exact top-k of the 10 queries restricted to neighbours of the same
+    (or a different) label: one topk_scan with the label predicate fused
+    into the candidate mask, so other-label rows are never scored."""
+    from rlink_rs_spark.operators import vector_kernel as vk
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("v"), "label"
     )
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= _K
-    )
+
+    def label_match(v, q):
+        same = v["label"][:, None] == q["label"][None, :]
+        return same if same_label else ~same
+
+    queries = emb.where(F.col("id") < _N_QUERIES)
+    return vk.topk_scan(emb, queries, _DIMS, _K, where=label_match)

@@ -50,7 +50,7 @@ def get_spark(
         # via SPARK_GRAFT_DRIVER_MEM for genuinely larger local datasets.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # generated methods from wide expressions (minhash aggs, simhash bit
-        # sums, unrolled dot products) overflow the default 240m code cache;
+        # sums) overflow the default 240m code cache;
         # once full, HotSpot disables the JIT and every later query runs
         # interpreted (measured 100x slowdowns). Reserve enough to never hit it.
         .config(

@@ -148,18 +148,13 @@ def streaming_outlier_sink(
     rescanned; per-epoch overwrite commits make replays exactly-once.
     Same shape as streaming_ann_probe_sink: fixed artifact, batch-only
     work, epoch-dir output."""
-    from rlink_rs_spark.operators.similarity import cosine_expr
-
-    cos = F.expr(cosine_expr("v.embedding", "c.cent", dims, base=0))
+    from rlink_rs_spark.operators.similarity import label_centroid_cosine
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        res = (
-            batch_df.alias("v")
-            .join(F.broadcast(cents.alias("c")), "label")
-            .select("vec_id", "label", cos.alias("centroid_cos"))
-            .where(F.col("centroid_cos") < threshold)
+        res = label_centroid_cosine(batch_df, cents, dims).where(
+            F.col("centroid_cos") < threshold
         )
         res.write.mode("overwrite").parquet(
             os.path.join(out_dir, f"batch_id={epoch_id}")

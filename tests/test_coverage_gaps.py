@@ -707,20 +707,23 @@ def test_fan_out_uses_file_metadata_and_noops_on_parallel_layouts(spark, tmp_pat
 
 
 def test_gemm_assign_matches_chain_assignment(spark, sf_dir, monkeypatch):
-    """The GEMM scale path for cell assignment (r10 100x probe fix: chain
-    argmax is O(n*cells*dims) of codegen work and was semantic_dedup's
-    2.22x-vs-linear term) must agree with the bit-parity chain path:
-    identical (vid, cell_id) on real data (no exact score ties) and ccos
-    within float-reassociation distance; and a large-codebook k-means
-    train must produce the same codebook through either per-iteration
-    assignment (centroid sums are exact integer arithmetic given equal
-    assignments)."""
+    """The GEMM scale path for cell assignment (r10 100x probe fix: exact
+    argmax is O(n*cells*dims) and was semantic_dedup's 2.22x-vs-linear
+    term) must agree with the exact assign path, whose scores are the
+    chain's bits (checked here against the kernel's chain mirror, so the
+    two sides are different scorers): identical (vid, cell_id) on real
+    data (no exact score ties) and ccos within float-reassociation
+    distance; and a large-codebook k-means train must produce the same
+    codebook through either per-iteration assignment (centroid sums are
+    exact integer arithmetic given equal assignments)."""
+    import numpy as np
+
     from rlink_rs_spark.operators import similarity as sim_ops
-    from rlink_rs_spark.queries.similarity import _DIMS, _IVF_CELLS, _IVF_ITERS, _ivf_artifacts
-    from rlink_rs_spark.tables import load_table
+    from rlink_rs_spark.operators import vector_kernel as vk
+    from rlink_rs_spark.queries.similarity import _DIMS, _ivf_artifacts
 
     emb, codebook, _ = _ivf_artifacts(spark, sf_dir)
-    chain = {
+    exact = {
         r.vid: (r.cell_id, r.ccos)
         for r in sim_ops.ivf_assign(emb, codebook, _DIMS).collect()
     }
@@ -728,22 +731,31 @@ def test_gemm_assign_matches_chain_assignment(spark, sf_dir, monkeypatch):
         r.vid: (r.cell_id, r.ccos)
         for r in sim_ops.gemm_assign(emb, codebook).collect()
     }
-    assert set(chain) == set(gemm)
-    assert all(chain[v][0] == gemm[v][0] for v in chain)  # same argmax cell
-    assert max(abs(chain[v][1] - gemm[v][1]) for v in chain) < 1e-9
+    assert set(exact) == set(gemm)
+    assert all(exact[v][0] == gemm[v][0] for v in exact)  # same argmax cell
+    assert max(abs(exact[v][1] - gemm[v][1]) for v in exact) < 1e-9
 
-    # large-codebook train: gemm iterations vs chain iterations, same result
+    vecs = {r.vec_id: r.embedding for r in emb.collect()}
+    cents = {r.cell_id: r.cv for r in codebook.collect()}
+    ids = sorted(exact)
+    chain = vk.cosine(
+        np.array([vecs[v] for v in ids], dtype=np.float64),
+        np.array([cents[exact[v][0]] for v in ids], dtype=np.float64),
+    )
+    assert [exact[v][1] for v in ids] == chain.tolist()
+
+    # large-codebook train: gemm iterations vs exact iterations, same result
     n_cells = sim_ops.GEMM_ASSIGN_MIN_CELLS + 8
     cb_gemm = {
         r.cell_id: tuple(r.cv)
         for r in sim_ops.train_ivf_codebook(emb, _DIMS, n_cells=n_cells, iters=1).collect()
     }
-    monkeypatch.setattr(sim_ops, "GEMM_ASSIGN_MIN_CELLS", 1 << 30)  # force chain
-    cb_chain = {
+    monkeypatch.setattr(sim_ops, "GEMM_ASSIGN_MIN_CELLS", 1 << 30)  # force exact
+    cb_exact = {
         r.cell_id: tuple(r.cv)
         for r in sim_ops.train_ivf_codebook(emb, _DIMS, n_cells=n_cells, iters=1).collect()
     }
-    assert cb_gemm == cb_chain
+    assert cb_gemm == cb_exact
 
 
 def test_docs_registry_count_matches_live_registry():

@@ -507,7 +507,7 @@ def test_auto_salt_heuristic(spark):
 
 
 def test_embedding_near_dup_no_cartesian(spark, sf_dir):
-    """Banded-LSH near-dup must be equi-join shaped, never all-pairs."""
+    """Banded-LSH near-dup must be key-partitioned, never all-pairs."""
     from rlink_rs_spark.queries import REGISTRY
 
     plan = (
@@ -518,9 +518,9 @@ def test_embedding_near_dup_no_cartesian(spark, sf_dir):
         .toString()
     )
     assert "CartesianProduct" not in plan
-    # candidate pairs come from the banded equi-join; only the broadcast of
-    # verified candidate ids back onto vectors may nest loops
-    assert plan.count("SortMergeJoin") + plan.count("BroadcastHashJoin") >= 1
+    assert "BroadcastNestedLoopJoin" not in plan
+    # candidate pairs are formed only inside one (band, bucket) group
+    assert "FlatMapGroupsInArrow [band" in plan
 
 
 def test_shingles_short_docs(spark):

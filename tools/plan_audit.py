@@ -37,15 +37,8 @@ STREAMING = {
 # By-design nested-loop/cross shapes: name -> one-line justification
 # (VERDICT r10 #8: the reason lives ON the row, not in a header paragraph).
 # Every entry is a broadcast of a CONSTANT-BOUNDED side (1-row scalar
-# aggregate, <=16-row codebook, <=784-row LUT) -- never corpus-sized.
+# aggregate, <=784-row LUT) -- never corpus-sized.
 NLJ_ALLOWED = {
-    "cosine_topk_bruteforce": "exact-NN baseline IS a broadcast NLJ (query side <=10 rows)",
-    "hard_negative_mining": "same <=10-row broadcast-query NLJ with label-mismatch fused into the join",
-    "cosine_topk_ivf": "16-row centroid codebook broadcast cross (assignment)",
-    "cosine_topk_ivf_filtered": "16-row centroid codebook broadcast cross (assignment)",
-    "filtered_ann_recall_report": "composition of the filtered-IVF plan + a <=10-row broadcast-query exact baseline NLJ",
-    "cosine_topk_ivfpq": "16-row IVF codebook broadcast cross, assignment + probing",
-    "semantic_dedup": "16-row (occupancy-scaled) centroid codebook broadcast cross",
     "range_window_filter": "single-row window-bounds frame joined without keys",
     "q22_dormant_customers": "1-row avg-balance scalar-subquery broadcast cross",
     "q11_important_stock": "1-row (total,count) threshold broadcast cross (> filter)",
@@ -63,9 +56,8 @@ NLJ_ALLOWED = {
     "equi_depth_histogram": "1-row ranking-total broadcast cross (exact NTILE)",
     "curriculum_stages": "1-row ranking-total broadcast cross (exact NTILE)",
     "cms_heavy_hitters": "4-row sketch-row-index replication cross (d=4 counters)",
-    "ann_recall_report": "composition of cosine_topk_{bruteforce,ivf}, both listed",
     "quality_ensemble_gate": "composition: inherits lm/dsir/repetition 1-row crosses",
-    "hybrid_search_rrf": "3-row exemplar query broadcast NLJ + 1-row bm25 totals cross",
+    "hybrid_search_rrf": "1-row bm25 corpus-totals cross onto the small candidate side",
 }
 
 # By-design UNPARTITIONED windows (single-partition WindowExec): name ->
@@ -84,10 +76,7 @@ GLOBAL_SORT_ALLOWED = {
 # Streaming by-design entries (same contract; plans come from the hook
 # captures, which include setup/read-back batch work fn() performs).
 STREAMING_NLJ_ALLOWED = {
-    "streaming_hybrid_search": "3-row exemplar query broadcast NLJ (hybrid_search_rrf read-back shape)",
-    "streaming_ann_probe": "<=10-row query-batch broadcast NLJ onto probed cells + 16-row codebook cross (cosine_topk_ivf shape)",
     "streaming_cms_counters": "d=4 sketch-row-index replication cross (cms_heavy_hitters shape)",
-    "streaming_ivf_index_add": "16-row IVF codebook broadcast cross per epoch (cosine_topk_ivf assignment shape)",
 }
 STREAMING_GLOBAL_SORT_ALLOWED: dict[str, str] = {}
 
