@@ -1778,9 +1778,9 @@ def cdc_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rlink_rs_spark.streaming.cdc import changed_buckets, read_snapshot
 
     work_dir = _cdc_snapshot_artifact(spark, sf_dir, retain=8)
-    pruned = changed_buckets(work_dir, 2, 1 << 62)
+    pruned = changed_buckets(work_dir, 2, None)
     old = read_snapshot(spark, work_dir, before_epoch=2, buckets=pruned)
-    new = read_snapshot(spark, work_dir, before_epoch=1 << 62, buckets=pruned)
+    new = read_snapshot(spark, work_dir, before_epoch=None, buckets=pruned)
     o = old.select(
         F.col("doc_id").alias("o_id"),
         F.col("content_md5").alias("old_md5"),
@@ -2327,7 +2327,7 @@ def cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         contiguous_keys=True,
     )
     drain(q, what="cdc_schema_evolution")
-    return read_snapshot(spark, work_dir, 1 << 62, schema=_SNAP_SCHEMA_V2)
+    return read_snapshot(spark, work_dir, None, schema=_SNAP_SCHEMA_V2)
 
 
 # --- declarative data-quality constraint suite ------------------------------

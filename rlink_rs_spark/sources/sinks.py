@@ -26,6 +26,8 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
+from rlink_rs_spark.streaming.epochs import start
+
 
 def console_sink(stream_df: DataFrame, checkpoint: str, num_rows: int = 20) -> StreamingQuery:
     """print_sink analogue; window struct columns render their bounds like
@@ -84,13 +86,7 @@ def foreach_batch_sink(
 
         batch_df.foreachPartition(write_partition)
 
-    return (
-        stream_df.writeStream.outputMode(output_mode)
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(stream_df, handle, checkpoint, output_mode)
 
 
 def kafka_sink_options(topic: str, brokers: str) -> dict[str, str]:

@@ -10,9 +10,8 @@ per-query top-k. A query's result depends only on that query and the
 standing index, so the drained union across epochs is row-identical to
 the batch probe over the same query set and SHARES its DuckDB oracle.
 
-Epoch protocol: results for epoch N commit to `<out>/batch_id=N` with
-overwrite semantics -- a crash-replayed epoch rewrites byte-identical
-rows (the probe is deterministic), so the drained union is exactly-once.
+Epoch protocol: streaming/epochs.py; each epoch's results are a
+self-contained output dir, and the drain is the union of committed ones.
 
 Reference parity: a stream of lookups against broadcast/persisted state
 is the reference's ConfigInputFormat dimension-stream pattern
@@ -22,10 +21,13 @@ big side stands and the small side streams.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from rlink_rs_spark.streaming.epochs import committed, path, read, start
+
+_PROBE_SCHEMA = "query_id bigint, neighbor_id bigint, cosine double, rank int"
+_OUTLIER_SCHEMA = "vec_id bigint, label int, centroid_cos double"
 
 
 def streaming_ann_probe_sink(
@@ -57,31 +59,15 @@ def streaming_ann_probe_sink(
             codebook=codebook,
             assignment=assignment,
         ).select("query_id", "neighbor_id", "cosine", "rank")
-        res.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={epoch_id}")
-        )
+        res.write.mode("overwrite").parquet(path(out_dir, epoch_id))
 
-    return (
-        query_stream.writeStream.outputMode("append")
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(query_stream, handle, checkpoint, "append")
 
 
 def read_probe_results(spark: SparkSession, out_dir: str) -> DataFrame:
     """Union of all committed epochs (queries are disjoint across epochs;
     replayed epochs overwrote in place)."""
-    if not os.path.isdir(out_dir) or not any(
-        d.startswith("batch_id=") for d in os.listdir(out_dir)
-    ):
-        return spark.createDataFrame(
-            [], "query_id bigint, neighbor_id bigint, cosine double, rank int"
-        )
-    return spark.read.parquet(os.path.join(out_dir, "batch_id=*")).select(
-        "query_id", "neighbor_id", "cosine", "rank"
-    )
+    return read(spark, [path(out_dir, e) for e in committed(out_dir)], _PROBE_SCHEMA)
 
 
 # --- streaming index maintenance --------------------------------------------
@@ -156,27 +142,11 @@ def streaming_outlier_sink(
         res = label_centroid_cosine(batch_df, cents, dims).where(
             F.col("centroid_cos") < threshold
         )
-        res.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={epoch_id}")
-        )
+        res.write.mode("overwrite").parquet(path(out_dir, epoch_id))
 
-    return (
-        vec_stream.writeStream.outputMode("append")
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(vec_stream, handle, checkpoint, "append")
 
 
 def read_outlier_results(spark: SparkSession, out_dir: str) -> DataFrame:
     """Union of all committed epochs (vectors are disjoint across epochs)."""
-    if not os.path.isdir(out_dir) or not any(
-        d.startswith("batch_id=") for d in os.listdir(out_dir)
-    ):
-        return spark.createDataFrame(
-            [], "vec_id bigint, label int, centroid_cos double"
-        )
-    return spark.read.parquet(os.path.join(out_dir, "batch_id=*")).select(
-        "vec_id", "label", "centroid_cos"
-    )
+    return read(spark, [path(out_dir, e) for e in committed(out_dir)], _OUTLIER_SCHEMA)

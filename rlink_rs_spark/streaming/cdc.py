@@ -24,10 +24,8 @@ buckets silently resolve to their stale pre-delete version (deleted-row
 resurrection, ADVICE r9). With the sentinel, a torn epoch is invisible
 as a unit and checkpoint replay rewrites it byte-identically.
 
-Epoch protocol (same as streaming/dedup.py / rollup.py / sketches.py):
-epoch N reads per-bucket state from committed epochs with id < N and
-overwrites ``batch_id=N`` -- change derivation is deterministic, so a
-crash-replayed epoch rewrites byte-identical buckets: exactly-once.
+Epoch protocol: streaming/epochs.py with the ``_COMMITTED`` marker in
+place of ``_SUCCESS``; the base snapshot is epoch -1.
 
 At 100 TB: the snapshot NEVER fully rewrites. A change batch touching k
 of NB buckets costs one broadcast anti-join over k buckets' rows plus a
@@ -55,6 +53,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rlink_rs_spark.streaming.epochs import committed, ids, path, read, start
+
 N_BUCKETS = 8
 
 # Epoch commit sentinel: present only once the epoch dir is COMPLETE
@@ -65,6 +65,11 @@ COMMIT_MARKER = "_COMMITTED"
 def _mark_committed(epoch_dir: str) -> None:
     with open(os.path.join(epoch_dir, COMMIT_MARKER), "w"):
         pass
+
+
+def _committed(snap_dir: str, before_epoch: int | None) -> list[int]:
+    return committed(snap_dir, before_epoch, marker=COMMIT_MARKER)
+
 
 _SNAP_SCHEMA = (
     "doc_id bigint, content_md5 string, lang string, source string, "
@@ -120,37 +125,29 @@ def write_base_snapshot(docs: DataFrame, work_dir: str) -> None:
         "lang", "source", "n_chars",
         F.lit(0).cast("int").alias("version"),
     ).withColumn("bucket", _bucket(F.col("doc_id")))
-    base_dir = os.path.join(work_dir, "snap", "batch_id=-1")
+    base_dir = path(os.path.join(work_dir, "snap"), -1)
     snap.write.mode("overwrite").partitionBy("bucket").parquet(base_dir)
     _mark_committed(base_dir)
 
 
-def _bucket_versions(snap_dir: str, before_epoch: int) -> dict[int, str]:
+def _bucket_versions(snap_dir: str, before_epoch: int | None) -> dict[int, str]:
     """{bucket: path of its newest committed version among epochs < N}.
     Committed = the epoch dir carries OUR _COMMITTED sentinel (written
     after parquet AND empty-bucket placeholders; Spark's _SUCCESS alone
     is a torn epoch); a crash-epoch is invisible to both replaying
     writers and readers as a unit."""
     out: dict[int, str] = {}
-    if not os.path.isdir(snap_dir):
-        return out
-    epochs = []
-    for d in os.listdir(snap_dir):
-        if d.startswith("batch_id="):
-            i = int(d.split("=", 1)[1])
-            if i < before_epoch and os.path.exists(
-                os.path.join(snap_dir, d, COMMIT_MARKER)
-            ):
-                epochs.append(i)
-    for eid in sorted(epochs, reverse=True):
-        edir = os.path.join(snap_dir, f"batch_id={eid}")
+    for eid in reversed(_committed(snap_dir, before_epoch)):
+        edir = path(snap_dir, eid)
         for sub in os.listdir(edir):
             if sub.startswith("bucket="):
                 out.setdefault(int(sub.split("=", 1)[1]), os.path.join(edir, sub))
     return out
 
 
-def changed_buckets(work_dir: str, from_epoch: int, to_epoch: int) -> set[int]:
+def changed_buckets(
+    work_dir: str, from_epoch: int | None, to_epoch: int | None
+) -> set[int]:
     """Buckets whose resolved newest committed version differs between two
     as-of bounds -- the file-level pruning set for a version diff: a bucket
     resolving to the SAME committed file at both bounds cannot contain
@@ -164,7 +161,7 @@ def changed_buckets(work_dir: str, from_epoch: int, to_epoch: int) -> set[int]:
 def read_snapshot(
     spark: SparkSession,
     work_dir: str,
-    before_epoch: int,
+    before_epoch: int | None,
     buckets: set[int] | None = None,
     schema: str = _SNAP_SCHEMA,
 ) -> DataFrame:
@@ -175,9 +172,7 @@ def read_snapshot(
     evolution read path -- missing columns surface as NULL."""
     vers = _bucket_versions(os.path.join(work_dir, "snap"), before_epoch)
     paths = [p for b, p in vers.items() if buckets is None or b in buckets]
-    if not paths:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*paths)
+    return read(spark, paths, schema)
 
 
 def _gc_superseded(snap_dir: str, before_epoch: int) -> None:
@@ -189,17 +184,11 @@ def _gc_superseded(snap_dir: str, before_epoch: int) -> None:
     epochs < N. Deletion is idempotent -- a crash mid-GC replays it."""
     import shutil
 
-    newest = _bucket_versions(snap_dir, before_epoch)
-    keep = set(newest.values())
-    if not os.path.isdir(snap_dir):
-        return
-    for d in os.listdir(snap_dir):
-        if not d.startswith("batch_id="):
-            continue
-        if int(d.split("=", 1)[1]) >= before_epoch:
-            continue
-        edir = os.path.join(snap_dir, d)
-        if not os.path.exists(os.path.join(edir, COMMIT_MARKER)):
+    keep = set(_bucket_versions(snap_dir, before_epoch).values())
+    live = set(_committed(snap_dir, before_epoch))
+    for eid in ids(snap_dir, before_epoch):
+        edir = path(snap_dir, eid)
+        if eid not in live:
             # torn crash-epoch (even if Spark's _SUCCESS landed, the
             # placeholder loop didn't): nothing can read it, drop it
             shutil.rmtree(edir, ignore_errors=True)
@@ -298,7 +287,7 @@ def apply_merge_epoch(
     merged = untouched.unionByName(upserts).withColumn(
         "bucket", _bucket(F.col("doc_id"))
     )
-    edir = os.path.join(work_dir, "snap", f"batch_id={epoch_id}")
+    edir = path(os.path.join(work_dir, "snap"), epoch_id)
     merged.write.mode("overwrite").partitionBy("bucket").parquet(edir)
     for b in touched:
         os.makedirs(os.path.join(edir, f"bucket={b}"), exist_ok=True)
@@ -343,25 +332,19 @@ def streaming_merge_sink(
             contiguous_keys=contiguous_keys,
         )
 
-    return (
-        doc_stream.writeStream.outputMode("update")
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(doc_stream, handle, checkpoint, "update")
 
 
 def read_merged_snapshot(spark: SparkSession, work_dir: str) -> DataFrame:
     """Drain: the per-bucket newest committed versions across all epochs."""
-    return read_snapshot(spark, work_dir, 1 << 62)
+    return read_snapshot(spark, work_dir, None)
 
 
 def _live_file_counts(work_dir: str) -> dict[int, int]:
     """{bucket: parquet part-file count of its CURRENT resolved version}.
     A bounded listdir over <= N_BUCKETS dirs -- the same metadata scan a
     transaction log would answer from its manifest."""
-    vers = _bucket_versions(os.path.join(work_dir, "snap"), 1 << 62)
+    vers = _bucket_versions(os.path.join(work_dir, "snap"), None)
     return {
         b: sum(1 for f in os.listdir(p) if f.endswith(".parquet"))
         for b, p in vers.items()
@@ -418,19 +401,13 @@ def optimize_snapshot(
     if not fat:
         return {"compacted_buckets": 0, "files_before": before, "files_after": before}
     snap_dir = os.path.join(work_dir, "snap")
-    committed = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(snap_dir)
-        if d.startswith("batch_id=")
-        and os.path.exists(os.path.join(snap_dir, d, COMMIT_MARKER))
-    ]
-    opt_id = max(committed) + 1
-    rows = read_snapshot(spark, work_dir, 1 << 62, buckets=fat, schema=schema)
+    opt_id = _committed(snap_dir, None)[-1] + 1
+    rows = read_snapshot(spark, work_dir, None, buckets=fat, schema=schema)
     # one shuffle partition per fat bucket -> exactly one output file each
     compacted = rows.withColumn("bucket", _bucket(F.col("doc_id"))).repartition(
         len(fat), "bucket"
     )
-    edir = os.path.join(snap_dir, f"batch_id={opt_id}")
+    edir = path(snap_dir, opt_id)
     compacted.write.mode("overwrite").partitionBy("bucket").parquet(edir)
     for b in fat:  # a fat bucket is never empty, but keep the invariant total
         os.makedirs(os.path.join(edir, f"bucket={b}"), exist_ok=True)

@@ -79,6 +79,9 @@ from rlink_rs_spark.operators.dedup import (
     verify_jaccard,
     with_shingles,
 )
+from rlink_rs_spark.streaming.deltas import compact, gc_folded, read_state
+from rlink_rs_spark.streaming.epochs import committed, crash_once, path, read, start
+
 
 def dedup_stream(
     df: DataFrame,
@@ -115,20 +118,6 @@ def _thread_target(spark: SparkSession, fn):
     as is, which is what pinned-off threads do anyway."""
     wrap = inheritable_thread_target(spark)
     return fn if wrap is spark else wrap(fn)
-
-
-# The LSM fold machinery this module pioneered now lives in
-# streaming/deltas.py (shared by every append-only delta sink); the
-# private aliases keep this module's protocol vocabulary and existing
-# test imports stable.
-from rlink_rs_spark.streaming.deltas import (  # noqa: E402
-    compact as _compact,
-    epoch_dirs as _epoch_dirs,
-    gc_folded as _gc_folded,
-    newest_base as _newest_base,
-    read_state as _read_state,
-    state_inputs as _state_inputs,
-)
 
 
 def streaming_incremental_dedup_sink(
@@ -173,8 +162,6 @@ def streaming_incremental_dedup_sink(
     out_dir = os.path.join(work_dir, "out")
     hash_dir = os.path.join(work_dir, "state_hashes")
     band_dir = os.path.join(work_dir, "state_bands")
-    crash_marker = os.path.join(work_dir, "crashed_once")
-    compact_crash_marker = os.path.join(work_dir, "crashed_in_compaction")
 
     # Static frames every epoch re-reads: materialize ONCE before the
     # stream starts instead of re-aggregating the standing corpus per
@@ -232,25 +219,15 @@ def streaming_incremental_dedup_sink(
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         for w_t in warm_threads:
             w_t.join()
-        if crash_at_epoch is not None and epoch_id == crash_at_epoch and not os.path.exists(crash_marker):
-            with open(crash_marker, "w") as f:
-                f.write(str(epoch_id))
-            raise RuntimeError(f"injected crash at epoch {epoch_id}")
+        crash_once(work_dir, "crashed_once", epoch_id, crash_at_epoch)
 
         # deferred GC of dirs a PRIOR epoch's fold superseded, then this
         # epoch's fold if the committed-delta count reached the trigger
-        _gc_folded(hash_dir)
-        _gc_folded(band_dir)
-        _compact(spark, hash_dir, _HASH_SCHEMA, epoch_id, compact_every)
-        if (
-            crash_in_compaction_at is not None
-            and epoch_id == crash_in_compaction_at
-            and not os.path.exists(compact_crash_marker)
-        ):
-            with open(compact_crash_marker, "w") as f:
-                f.write(str(epoch_id))
-            raise RuntimeError(f"injected mid-compaction crash at epoch {epoch_id}")
-        _compact(spark, band_dir, _BAND_SCHEMA, epoch_id, compact_every)
+        gc_folded(hash_dir)
+        gc_folded(band_dir)
+        compact(spark, hash_dir, _HASH_SCHEMA, epoch_id, compact_every)
+        crash_once(work_dir, "mid-compaction", epoch_id, crash_in_compaction_at)
+        compact(spark, band_dir, _BAND_SCHEMA, epoch_id, compact_every)
 
         # fan_out the micro-batch before caching: the per-epoch MinHash
         # signature map (8 md5s per posting) otherwise runs at the file
@@ -258,7 +235,7 @@ def streaming_incremental_dedup_sink(
         batch = fan_out(batch_df.select("doc_id", "text")).cache()
 
         # --- exact stage
-        prior_hashes = _read_state(spark, hash_dir, _HASH_SCHEMA, epoch_id).select("h").distinct()
+        prior_hashes = read_state(spark, hash_dir, _HASH_SCHEMA, epoch_id).select("h").distinct()
         known = hist_hashes.unionByName(prior_hashes).distinct()
         w = Window.partitionBy("h")
         bh = batch.select("doc_id", F.md5("text").alias("h")).withColumn(
@@ -278,7 +255,7 @@ def streaming_incremental_dedup_sink(
             n_hashes=n_hashes,
             bands=bands,
         ).cache()
-        prior_bands = _read_state(spark, band_dir, _BAND_SCHEMA, epoch_id)
+        prior_bands = read_state(spark, band_dir, _BAND_SCHEMA, epoch_id)
         bb = batch_banded.select(F.col("doc_id").alias("id_a"), "band", "sig")
         earlier = hist_banded.unionByName(prior_bands).select(
             F.col("doc_id").alias("id_b"), "band", "sig"
@@ -338,15 +315,9 @@ def streaming_incremental_dedup_sink(
         # just to throw the verdict column away. bh reads the cached batch.
         hash_frame = bh.select("doc_id", "h")
         commits = (
-            lambda: verdict.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"batch_id={epoch_id}")
-            ),
-            lambda: hash_frame.write.mode("overwrite").parquet(
-                os.path.join(hash_dir, f"batch_id={epoch_id}")
-            ),
-            lambda: batch_banded.write.mode("overwrite").parquet(
-                os.path.join(band_dir, f"batch_id={epoch_id}")
-            ),
+            lambda: verdict.write.mode("overwrite").parquet(path(out_dir, epoch_id)),
+            lambda: hash_frame.write.mode("overwrite").parquet(path(hash_dir, epoch_id)),
+            lambda: batch_banded.write.mode("overwrite").parquet(path(band_dir, epoch_id)),
         )
         with ThreadPoolExecutor(max_workers=len(commits)) as pool:
             futures = [pool.submit(_thread_target(spark, c)) for c in commits]
@@ -357,20 +328,11 @@ def streaming_incremental_dedup_sink(
 
     for w_t in warm_threads:
         w_t.start()
-    return (
-        doc_stream.writeStream.outputMode("update")
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(doc_stream, handle, checkpoint, "update")
 
 
 def read_verdicts(spark: SparkSession, work_dir: str, with_quality: bool = False) -> DataFrame:
     """All committed verdict rows (one per streamed doc)."""
     schema = _OUT_SCHEMA_Q if with_quality else _OUT_SCHEMA
     out_dir = os.path.join(work_dir, "out")
-    dirs = _epoch_dirs(out_dir, 1 << 62)
-    if not dirs:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*dirs)
+    return read(spark, [path(out_dir, e) for e in committed(out_dir)], schema)

@@ -3,10 +3,9 @@ streaming index/screen in this repo (inverted-file adds in streaming/
 ann.py, posting-table adds in streaming/search_index.py, and the
 decontamination screen registered in queries/pipeline_ops.py): each
 micro-batch's rows are transformed ON THEIR OWN (no read of prior
-state, O(batch) per epoch) and the result commits as
-`<state>/batch_id=N` with overwrite semantics; when batches are
-key-disjoint the union of committed deltas IS the final state, and a
-crash-replayed epoch rewrites byte-identical rows -- exactly-once.
+state, O(batch) per epoch) and the result commits as the epoch's dir
+(streaming/epochs.py); when batches are key-disjoint the union of
+committed deltas IS the final state.
 
 LSM level-0 compaction (shared with streaming/dedup.py, which pioneered
 the protocol; exercised by tests/test_streaming.py::
@@ -32,62 +31,36 @@ amortizes to O(state / compact_every) per epoch.
 
 from __future__ import annotations
 
-import os
+import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rlink_rs_spark.streaming.epochs import committed, crash_once, ids, path, read, start
 
-def epoch_dirs(root: str, before_epoch: int, after_epoch: int = -1) -> list[str]:
-    """COMMITTED (_SUCCESS present) delta dirs for epochs in
-    (after_epoch, before_epoch) -- a retried epoch must not see its own
-    partial writes, and readers must skip dirs a crash left torn."""
-    if not os.path.isdir(root):
-        return []
-    out = []
-    for d in sorted(os.listdir(root)):
-        if not d.startswith("batch_id="):
-            continue
-        i = int(d.split("=", 1)[1])
-        if after_epoch < i < before_epoch and os.path.exists(
-            os.path.join(root, d, "_SUCCESS")
-        ):
-            out.append(os.path.join(root, d))
-    return out
+_BASE = "base_upto"
 
 
 def newest_base(root: str) -> tuple[str | None, int]:
     """Newest committed compaction base under `root` as (path, upto);
     (None, -1) when no fold has happened yet."""
-    if not os.path.isdir(root):
-        return None, -1
-    best, best_upto = None, -1
-    for d in os.listdir(root):
-        if d.startswith("base_upto=") and os.path.exists(
-            os.path.join(root, d, "_SUCCESS")
-        ):
-            upto = int(d.split("=", 1)[1])
-            if upto > best_upto:
-                best, best_upto = os.path.join(root, d), upto
-    return best, best_upto
+    bases = committed(root, prefix=_BASE)
+    return (path(root, bases[-1], _BASE), bases[-1]) if bases else (None, -1)
 
 
-def state_inputs(root: str, before_epoch: int) -> list[str]:
-    """Newest committed base (if any) + committed deltas above its
-    watermark and below `before_epoch` -- together exactly the state of
+def _state(root: str, before_epoch: int | None) -> tuple[list[str], list[int]]:
+    """(newest committed base, if any; committed delta ids above its
+    watermark and below `before_epoch`) -- together exactly the state of
     all committed epochs < before_epoch, fold or no fold."""
     base, upto = newest_base(root)
-    dirs = epoch_dirs(root, before_epoch, after_epoch=upto)
-    return ([base] if base is not None else []) + dirs
+    return [base] if base is not None else [], committed(root, before_epoch, after=upto)
 
 
 def read_state(
-    spark: SparkSession, root: str, schema: str, before_epoch: int
+    spark: SparkSession, root: str, schema: str, before_epoch: int | None
 ) -> DataFrame:
-    dirs = state_inputs(root, before_epoch)
-    if not dirs:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*dirs)
+    base, deltas = _state(root, before_epoch)
+    return read(spark, base + [path(root, e) for e in deltas], schema)
 
 
 def gc_folded(root: str) -> None:
@@ -95,17 +68,14 @@ def gc_folded(root: str) -> None:
     superseded bases -- the deferred half of a fold, run at the START of
     a later epoch so the folding epoch's crash window never deletes the
     only copy of any state."""
-    import shutil
-
     base, upto = newest_base(root)
     if base is None:
         return
-    for d in os.listdir(root):
-        p = os.path.join(root, d)
-        if d.startswith("batch_id=") and int(d.split("=", 1)[1]) <= upto:
-            shutil.rmtree(p, ignore_errors=True)
-        elif d.startswith("base_upto=") and p != base:
-            shutil.rmtree(p, ignore_errors=True)
+    for e in ids(root, before=upto + 1):
+        shutil.rmtree(path(root, e), ignore_errors=True)
+    for u in ids(root, prefix=_BASE):
+        if u != upto:
+            shutil.rmtree(path(root, u, _BASE), ignore_errors=True)
 
 
 def compact(
@@ -117,15 +87,12 @@ def compact(
     epoch and its content is the union of all state <= that epoch, so a
     replayed fold overwrites byte-identical data. Old dirs are NOT removed
     here (see gc_folded)."""
-    deltas = epoch_dirs(root, before_epoch, after_epoch=newest_base(root)[1])
+    base, deltas = _state(root, before_epoch)
     if len(deltas) < compact_every:
         return
-    upto = max(int(os.path.basename(d).split("=", 1)[1]) for d in deltas)
-    base, _ = newest_base(root)
-    inputs = ([base] if base is not None else []) + deltas
-    spark.read.schema(schema).parquet(*inputs).write.mode("overwrite").parquet(
-        os.path.join(root, f"base_upto={upto}")
-    )
+    read(spark, base + [path(root, e) for e in deltas], schema).write.mode(
+        "overwrite"
+    ).parquet(path(root, deltas[-1], _BASE))
 
 
 def delta_sink(
@@ -152,29 +119,18 @@ def delta_sink(
     if compact_every is not None and schema is None:
         raise ValueError("compact_every requires schema")
     spark = stream.sparkSession
-    crash_marker = os.path.join(state_dir, "_crashed_once")
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         if compact_every is not None:
             gc_folded(state_dir)
         if batch_df.isEmpty():
             return
-        transform(batch_df).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"batch_id={epoch_id}")
-        )
+        transform(batch_df).write.mode("overwrite").parquet(path(state_dir, epoch_id))
         if compact_every is not None:
             compact(spark, state_dir, schema, epoch_id + 1, compact_every)
-            if crash_after_fold_at == epoch_id and not os.path.exists(crash_marker):
-                open(crash_marker, "w").close()
-                raise RuntimeError(f"injected crash after fold at epoch {epoch_id}")
+            crash_once(state_dir, "_crashed_once", epoch_id, crash_after_fold_at)
 
-    return (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(stream, handle, checkpoint, "append")
 
 
 def read_deltas(spark: SparkSession, state_dir: str, schema: str) -> DataFrame:
@@ -182,4 +138,4 @@ def read_deltas(spark: SparkSession, state_dir: str, schema: str) -> DataFrame:
     all committed (_SUCCESS) epoch deltas above its watermark, schema
     pinned. Identical to the plain all-deltas union when no fold has
     happened."""
-    return read_state(spark, state_dir, schema, 1 << 62)
+    return read_state(spark, state_dir, schema, None)

@@ -3,18 +3,15 @@ production ingest runs: each micro-batch's rows are classified once and
 routed to EITHER the clean sink or the quarantine (DLQ) sink with a
 reason code, never both, never neither.
 
-Both sinks commit per epoch (`<sink>/batch_id=N`, overwrite semantics)
-inside ONE foreachBatch handler, and the epoch becomes VISIBLE only via
-a single shared commit marker (`commits/epoch=N`) touched after the
-SECOND write -- so a drain reader can never observe a mid-epoch state
-where the DLQ rows landed but the clean rows didn't (ADVICE r9: the
-per-sink _SUCCESS markers commit independently, violating the
-disjoint-and-complete invariant in the window between the writes or
-after an unresumed crash). A crash anywhere before the marker leaves
-the whole epoch invisible; replay overwrites both dirs byte-identically
-(classification is deterministic) and re-marks -- exactly-once across a
-MULTI-sink epoch, one step past the single-sink epoch protocol the
-other streaming modules use.
+Epoch protocol: streaming/epochs.py, over TWO roots. Both sinks commit
+epoch N inside ONE foreachBatch handler, and the epoch is VISIBLE only
+while it is committed in both `dlq` and `clean` -- so a drain reader can
+never observe a state where the DLQ rows landed but the clean rows
+didn't (ADVICE r9: the disjoint-and-complete invariant), whether the
+drain falls between the writes, after an unresumed crash, or while a
+replay's overwrite has torn one of the dirs. Replay rewrites both dirs
+byte-identically (classification is deterministic) -- exactly-once
+across a MULTI-sink epoch.
 
 At 100 TB: classification is row-local expressions plus one broadcast
 of the (tiny, config-sized) source blocklist -- the corpus never
@@ -32,6 +29,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from rlink_rs_spark.streaming.epochs import committed, path, read, start
 
 MIN_CHARS = 100
 ALLOWED_LANGS = ("en", "de", "fr", "es")
@@ -73,53 +72,33 @@ def classify_intake(docs: DataFrame) -> DataFrame:
 
 def streaming_dlq_sink(doc_stream: DataFrame, work_dir: str, checkpoint: str):
     """foreachBatch handler writing the epoch's clean rows and DLQ rows to
-    their own per-epoch dirs, made visible ATOMICALLY by one shared
-    commit marker after the second write. Returns the StreamingQuery."""
+    their own per-epoch dirs; the epoch is visible once both are
+    committed. Returns the StreamingQuery."""
+    dlq_dir, clean_dir = os.path.join(work_dir, "dlq"), os.path.join(work_dir, "clean")
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         routed = classify_intake(batch_df)
         routed.where(F.col("quarantined")).write.mode("overwrite").parquet(
-            os.path.join(work_dir, "dlq", f"batch_id={epoch_id}")
+            path(dlq_dir, epoch_id)
         )
         routed.where(~F.col("quarantined")).write.mode("overwrite").parquet(
-            os.path.join(work_dir, "clean", f"batch_id={epoch_id}")
+            path(clean_dir, epoch_id)
         )
-        # The epoch's single commit point: only now may a reader see
-        # EITHER sink's batch_id=N. Crash before this -> both invisible.
-        os.makedirs(os.path.join(work_dir, "commits"), exist_ok=True)
-        with open(os.path.join(work_dir, "commits", f"epoch={epoch_id}"), "w"):
-            pass
 
-    return (
-        doc_stream.writeStream.outputMode("append")
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(doc_stream, handle, checkpoint, "append")
 
 
-def _read_epochs(spark: SparkSession, work_dir: str, sink: str) -> DataFrame:
-    """Read one sink's committed epochs. Committed = the SHARED per-epoch
-    marker exists (both sinks' writes finished), not the sink's own
-    _SUCCESS -- a torn epoch is invisible from both sinks at once."""
+def _read_sink(spark: SparkSession, work_dir: str, sink: str) -> DataFrame:
+    """One sink's rows of the epochs committed in BOTH sinks."""
+    roots = [os.path.join(work_dir, s) for s in ("dlq", "clean")]
+    visible = set(committed(roots[0])).intersection(committed(roots[1]))
     root = os.path.join(work_dir, sink)
-    commits = os.path.join(work_dir, "commits")
-    paths = []
-    if os.path.isdir(root):
-        for d in sorted(os.listdir(root)):
-            if d.startswith("batch_id=") and os.path.exists(
-                os.path.join(commits, f"epoch={d.split('=', 1)[1]}")
-            ):
-                paths.append(os.path.join(root, d))
-    if not paths:
-        return spark.createDataFrame([], _ROUTED_SCHEMA)
-    return spark.read.schema(_ROUTED_SCHEMA).parquet(*paths)
+    return read(spark, [path(root, e) for e in sorted(visible)], _ROUTED_SCHEMA)
 
 
 def read_clean(spark: SparkSession, work_dir: str) -> DataFrame:
-    return _read_epochs(spark, work_dir, "clean")
+    return _read_sink(spark, work_dir, "clean")
 
 
 def read_dlq(spark: SparkSession, work_dir: str) -> DataFrame:
-    return _read_epochs(spark, work_dir, "dlq")
+    return _read_sink(spark, work_dir, "dlq")

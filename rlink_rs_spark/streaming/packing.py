@@ -12,11 +12,11 @@ epoch's state. Chunks replay in doc_id order, so carried-total +
 within-batch prefix equals the global per-lang cumsum and the drained
 (lang, bin) aggregate hash-matches the batch oracle.
 
-Epoch protocol: deltas first, state (the commit record, _SUCCESS-gated
-like every carrier in this repo) last -- epoch N+1 only fires after N's
-handler returned, so it always reads N's committed totals; a crash
-anywhere in N replays both writes byte-identically. State is O(#langs),
-constant in stream length.
+Epoch protocol: streaming/epochs.py, with deltas written first and the
+state (the commit record) last -- epoch N+1 only fires after N's handler
+returned, so it always reads N's committed totals; a crash anywhere in N
+replays both writes byte-identically. State is O(#langs), constant in
+stream length.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rlink_rs_spark.streaming.sampling import _latest_epoch_dir
+from rlink_rs_spark.streaming.epochs import latest, path, read, start
 
 _STATE_SCHEMA = "lang string, total bigint"
 _DELTA_SCHEMA = "doc_id bigint, lang string, n bigint, bin bigint"
@@ -50,11 +50,9 @@ def streaming_pack_sink(
         )
         if sized.isEmpty():
             return
-        prev = _latest_epoch_dir(state_dir, epoch_id)
-        carried = (
-            spark.read.schema(_STATE_SCHEMA).parquet(prev)
-            if prev is not None
-            else spark.createDataFrame([], _STATE_SCHEMA)
+        prev = latest(state_dir, before=epoch_id)
+        carried = read(
+            spark, [] if prev is None else [path(state_dir, prev)], _STATE_SCHEMA
         )
         cum = with_group_prefix_sum(sized, ["lang"], [F.col("doc_id")], "n")
         offset = cum.join(F.broadcast(carried), "lang", "left").fillna(
@@ -66,9 +64,7 @@ def streaming_pack_sink(
                 (F.col("total") + F.col("_gcum") - F.col("n")) / float(ctx_len)
             ).cast("bigint").alias("bin"),
         )
-        assigned.write.mode("overwrite").parquet(
-            os.path.join(delta_dir, f"batch_id={epoch_id}")
-        )
+        assigned.write.mode("overwrite").parquet(path(delta_dir, epoch_id))
         new_state = (
             carried.unionByName(
                 sized.groupBy("lang").agg(F.sum("n").cast("bigint").alias("total"))
@@ -76,17 +72,9 @@ def streaming_pack_sink(
             .groupBy("lang")
             .agg(F.sum("total").cast("bigint").alias("total"))
         )
-        new_state.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"batch_id={epoch_id}")
-        )
+        new_state.write.mode("overwrite").parquet(path(state_dir, epoch_id))
 
-    return (
-        doc_stream.writeStream.outputMode("update")
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(doc_stream, handle, checkpoint, "update")
 
 
 def read_packed_bins(spark: SparkSession, work_dir: str) -> DataFrame:

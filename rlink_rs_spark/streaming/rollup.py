@@ -9,10 +9,8 @@ table. State is the view itself -- bounded by the key space, constant in
 stream length -- and the drained view equals the batch rollup over the
 same rows, so it shares that DuckDB oracle.
 
-Epoch protocol (same as streaming/dedup.py / sampling.py / sketches.py):
-the view AFTER epoch N commits to `<state>/batch_id=N` with overwrite
-semantics; epoch N reads the newest committed view with id < N, so a
-crash-replayed epoch rewrites byte-identical state -- exactly-once.
+Epoch protocol: streaming/epochs.py; epoch N carries the newest committed
+view forward as its own state dir.
 
 Reference parity: this is the reference's incremental window reduce
 (window_base_reduce.rs:84-101) generalized to a persistent, queryable
@@ -26,7 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rlink_rs_spark.streaming.sampling import _latest_epoch_dir
+from rlink_rs_spark.streaming.epochs import latest, path, start
 
 _VIEW_SCHEMA = "day bigint, event_type string, n bigint, sc bigint, mx double, mn double"
 _DAY_MS = 86_400_000
@@ -52,38 +50,33 @@ def streaming_rollup_sink(stream: DataFrame, work_dir: str, checkpoint: str):
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         delta = _batch_rollup(batch_df)
-        prev = _latest_epoch_dir(view_dir, epoch_id)
+        prev = latest(view_dir, before=epoch_id)
         if prev is not None:
-            delta = delta.unionByName(spark.read.schema(_VIEW_SCHEMA).parquet(prev))
+            delta = delta.unionByName(
+                spark.read.schema(_VIEW_SCHEMA).parquet(path(view_dir, prev))
+            )
         merged = delta.groupBy("day", "event_type").agg(
             F.sum("n").cast("bigint").alias("n"),
             F.sum("sc").cast("bigint").alias("sc"),
             F.max("mx").alias("mx"),
             F.min("mn").alias("mn"),
         )
-        merged.write.mode("overwrite").parquet(
-            os.path.join(view_dir, f"batch_id={epoch_id}")
-        )
+        merged.write.mode("overwrite").parquet(path(view_dir, epoch_id))
 
-    return (
-        stream.writeStream.outputMode("update")
-        .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(stream, handle, checkpoint, "update")
 
 
 def read_rollup_view(spark: SparkSession, work_dir: str) -> DataFrame:
     """Drain the newest committed view into the batch twin's output shape."""
-    last = _latest_epoch_dir(os.path.join(work_dir, "view"), 1 << 62)
+    view_dir = os.path.join(work_dir, "view")
+    last = latest(view_dir)
     if last is None:
         return spark.createDataFrame(
             [],
             "day_start_ms bigint, event_type string, cnt bigint, "
             "sum_value double, max_value double, min_value double",
         )
-    view = spark.read.schema(_VIEW_SCHEMA).parquet(last)
+    view = spark.read.schema(_VIEW_SCHEMA).parquet(path(view_dir, last))
     return view.select(
         (F.col("day") * _DAY_MS).alias("day_start_ms"),
         "event_type",

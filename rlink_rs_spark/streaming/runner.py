@@ -12,7 +12,8 @@ raise on timeout), and every stateful query started here runs with
 run_to_memory and run_to_parquet drive a streaming DataFrame to completion
 synchronously and return the materialized result -- the bridges that let
 streaming pipelines flow through the batch correctness gate. Sinks built
-on foreachBatch start their own query and end it with ``drain``.
+on foreachBatch start their query with ``streaming.epochs.start`` and end
+it with ``drain``.
 """
 
 from __future__ import annotations

@@ -413,6 +413,60 @@ def test_cdc_bucket_resolution_and_gc_safety(tmp_path_factory, commits, before_e
         shutil.rmtree(snap, ignore_errors=True)
 
 
+@settings(max_examples=80, deadline=None)
+@given(
+    history=st.lists(
+        st.tuples(
+            st.sampled_from(["a", "b"]),                     # root
+            st.integers(min_value=0, max_value=30),          # epoch id
+            st.booleans(),                                   # committed (_SUCCESS)?
+        ),
+        max_size=24,
+        unique_by=lambda t: (t[0], t[1]),
+    ),
+    before=st.one_of(st.none(), st.integers(min_value=0, max_value=32)),
+    after=st.one_of(st.none(), st.integers(min_value=-1, max_value=30)),
+)
+def test_epoch_resolver_numeric_order_and_torn_dirs(tmp_path_factory, history, before, after):
+    """streaming/epochs.py, pure filesystem: `committed` returns exactly the
+    marked ids in (after, before) in NUMERIC order (ids up to 30, so a
+    lexicographic listing -- batch_id=10 before batch_id=2 -- is caught),
+    `latest(a, b, before=N)` is the newest id committed in BOTH roots
+    below N, and a torn dir (no marker) is never returned."""
+    import os
+    import shutil
+
+    from rlink_rs_spark.streaming.epochs import committed, ids, latest, path
+
+    work = str(tmp_path_factory.mktemp("epochs"))
+    roots = {r: os.path.join(work, r) for r in ("a", "b")}
+    try:
+        for r, eid, is_committed in history:
+            os.makedirs(path(roots[r], eid))
+            if is_committed:
+                open(os.path.join(path(roots[r], eid), "_SUCCESS"), "w").close()
+
+        def marked(r, lo=None, hi=None):
+            return {
+                eid for root, eid, c in history
+                if root == r and c and (lo is None or lo < eid) and (hi is None or eid < hi)
+            }
+
+        for r in roots:
+            got = committed(roots[r], before=before, after=after)
+            assert got == sorted(marked(r, after, before))
+            assert ids(roots[r], before=before, after=after) == sorted(
+                eid for root, eid, _ in history
+                if root == r and (after is None or after < eid) and (before is None or eid < before)
+            )
+            assert latest(roots[r], before=before) == max(marked(r, hi=before), default=None)
+        both = marked("a", hi=before) & marked("b", hi=before)
+        assert latest(roots["a"], roots["b"], before=before) == max(both, default=None)
+        assert latest(roots["b"], roots["a"], before=before) == max(both, default=None)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def test_shingle_sets_match_grouped_collect_set(spark, edge_tables):
     """r16: the map-side per-doc shingle array builders must reproduce the
     grouped twins exactly -- shingle_sets == with_shingles+collect_set as

@@ -1674,8 +1674,8 @@ def test_streaming_dedup_compaction_crash_resume(spark, sf_dir):
         _N_HASHES,
         _documents_fingerprint,
     )
+    from rlink_rs_spark.streaming.deltas import newest_base as _newest_base
     from rlink_rs_spark.streaming.dedup import (
-        _newest_base,
         read_verdicts,
         streaming_incremental_dedup_sink,
     )
@@ -1944,8 +1944,8 @@ def test_streaming_intake_dlq_crash_resume_two_sink_invariants(spark, sf_dir):
 def test_dlq_epoch_atomic_across_both_sinks_and_null_lang_policy(spark):
     """ADVICE r9: (a) a drain between the two sink writes (or after an
     unresumed crash that tore the clean write) must NOT show an epoch's
-    DLQ rows without its clean rows -- both sinks become visible only via
-    the shared commit marker; (b) lang IS NULL quarantines explicitly as
+    DLQ rows without its clean rows -- an epoch is visible in either sink
+    only once it is committed in both; (b) lang IS NULL quarantines explicitly as
     'lang_missing' instead of falling through NOT-IN to the clean sink."""
     import shutil
 
@@ -1965,8 +1965,8 @@ def test_dlq_epoch_atomic_across_both_sinks_and_null_lang_policy(spark):
     assert routed == {(1, "lang_missing"), (2, None), (3, "lang_unsupported")}
 
     # (a) drive one epoch through the real sink, then simulate the torn
-    # mid-epoch state: keep the DLQ dir, delete the clean dir AND the
-    # commit marker (the crash happened between the writes)
+    # mid-epoch state: keep the DLQ dir, delete the clean dir (the crash
+    # happened between the writes)
     src_dir = tempfile.mkdtemp(prefix="rlink_dlq_atomic_src_")
     docs.write.mode("overwrite").parquet(src_dir)
     stream = spark.readStream.schema(
@@ -1985,12 +1985,67 @@ def test_dlq_epoch_atomic_across_both_sinks_and_null_lang_policy(spark):
     assert read_dlq(spark, work_dir).count() == 2
 
     shutil.rmtree(os.path.join(work_dir, "clean"))
-    commits = os.path.join(work_dir, "commits")
-    for f in os.listdir(commits):
-        os.remove(os.path.join(commits, f))
     # torn epoch: BOTH sinks read empty -- never quarantined-without-clean
     assert read_dlq(spark, work_dir).count() == 0
     assert read_clean(spark, work_dir).count() == 0
+
+
+def test_dlq_replay_torn_dlq_dir_hides_epoch_from_both_sinks(spark):
+    """A replayed epoch's overwrite tears `dlq/batch_id=N` while the clean
+    dir is still committed from the first attempt: the epoch must read
+    empty from BOTH sinks, not as clean rows without their DLQ twins."""
+    import shutil
+
+    from rlink_rs_spark.streaming.dlq import read_clean, read_dlq, streaming_dlq_sink
+
+    src_dir = tempfile.mkdtemp(prefix="rlink_dlq_torn_src_")
+    spark.createDataFrame(
+        [(1, None, "src1", 500), (2, "en", "src1", 500), (3, "xx", "src1", 500)],
+        "doc_id bigint, lang string, source string, n_chars bigint",
+    ).write.mode("overwrite").parquet(src_dir)
+    stream = spark.readStream.schema(
+        "doc_id bigint, lang string, source string, n_chars bigint"
+    ).parquet(src_dir)
+    work_dir = tempfile.mkdtemp(prefix="rlink_dlq_torn_")
+    q = streaming_dlq_sink(stream, work_dir, tempfile.mkdtemp(prefix="rlink_dlq_torn_ck_"))
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        if q.isActive:
+            q.stop()
+    assert read_clean(spark, work_dir).count() == 1
+    assert read_dlq(spark, work_dir).count() == 2
+
+    shutil.rmtree(os.path.join(work_dir, "dlq", "batch_id=0"))
+    assert read_clean(spark, work_dir).count() == 0
+    assert read_dlq(spark, work_dir).count() == 0
+
+
+@pytest.mark.parametrize("reader", ["read_probe_results", "read_outlier_results"])
+def test_ann_readers_skip_torn_epochs(spark, reader):
+    """The ANN probe and outlier drains read only committed epochs: an
+    epoch dir whose `_SUCCESS` is missing (a crash mid-write) is torn and
+    must not contribute rows."""
+    from rlink_rs_spark.streaming import ann
+
+    schema = {
+        "read_probe_results": "query_id bigint, neighbor_id bigint, cosine double, rank int",
+        "read_outlier_results": "vec_id bigint, label int, centroid_cos double",
+    }[reader]
+    rows = {
+        "read_probe_results": [(1, 2, 0.5, 1), (9, 9, 0.1, 1)],
+        "read_outlier_results": [(1, 0, -0.5), (9, 1, -0.9)],
+    }[reader]
+    out_dir = tempfile.mkdtemp(prefix="rlink_ann_torn_")
+    read = getattr(ann, reader)
+    assert read(spark, out_dir).count() == 0
+    for epoch, row in enumerate(rows):
+        spark.createDataFrame([row], schema).write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"batch_id={epoch}")
+        )
+    assert read(spark, out_dir).count() == 2
+    os.remove(os.path.join(out_dir, "batch_id=1", "_SUCCESS"))
+    assert [tuple(r) for r in read(spark, out_dir).collect()] == [rows[0]]
 
 
 def test_streaming_bm25_index_add_equals_batch(spark, sf_dir):

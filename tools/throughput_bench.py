@@ -154,7 +154,7 @@ def main() -> None:
     spark = get_spark("throughput-bench")
     # one state store per shuffle partition; size to state volume (the
     # flagship keys are 3 event types x open windows), not CPU count --
-    # same sizing note as streaming/runner.run_to_memory
+    # same sizing note as streaming/runner.STATE_PARTITIONS
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", str(chunks + 16))
 
