@@ -183,7 +183,8 @@ def run_prewarm(names: list[str], sf_dir: str) -> None:
 
 def run_chunk(names: list[str], sf_dir: str, warm_dir: str, out_path: str) -> None:
     """Child-process body: warm then time the given queries in this fresh
-    JVM, writing {"timings", "warmup_failures"} JSON to out_path."""
+    JVM, writing {"timings", "warmup_failures", "cpus", "master"} JSON to
+    out_path."""
     spark = get_spark("bench")
     load_table(spark, sf_dir, "events").count()
     warmup_failures: list[str] = []
@@ -207,8 +208,17 @@ def run_chunk(names: list[str], sf_dir: str, warm_dir: str, out_path: str) -> No
         t0 = time.time()
         REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         timings[name] = round(time.time() - t0, 3)
+    sc = spark.sparkContext
     with open(out_path, "w") as f:
-        json.dump({"timings": timings, "warmup_failures": warmup_failures}, f)
+        json.dump(
+            {
+                "timings": timings,
+                "warmup_failures": warmup_failures,
+                "cpus": sc.defaultParallelism,
+                "master": sc.master,
+            },
+            f,
+        )
 
 
 def host_control() -> float:
@@ -286,6 +296,7 @@ def main() -> None:
                 pass
         timings.update(part["timings"])
         warmup_failures.extend(part["warmup_failures"])
+        cpus, master = part["cpus"], part["master"]
 
     if warmup_failures:
         print(
@@ -314,6 +325,10 @@ def main() -> None:
         # or declared incomparable at a glance
         "fixture_md5": fixture_fingerprint(sf_dir),
         "loadavg": [round(x, 2) for x in os.getloadavg()],
+        # the timing JVMs' resolved master and sc.defaultParallelism: a
+        # board is read against the cores it actually ran on
+        "cpus": cpus,
+        "master": master,
         # fixed single-core host control (r15, after the unattributable
         # r13->r14 ~4% board drift): a constant pure-Python workload timed
         # in-process. Two boards whose host_control_sec differ by ~X% have

@@ -1494,7 +1494,7 @@ def example_kafka_app_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_env = example_kafka_plan(spark, src)
     out_dir = tempfile.mkdtemp(prefix="rlink_ekafka_out_")
     ck = tempfile.mkdtemp(prefix="rlink_ekafka_ck_")
-    with pinned_state_partitions(spark):
+    with pinned_state_partitions(out_env):
         drain(publish_stream(out_env, out_dir, ck), what="example-kafka replay")
 
     out_payload = T.StructType(

@@ -81,6 +81,7 @@ from rlink_rs_spark.operators.dedup import (
 )
 from rlink_rs_spark.streaming.deltas import compact, gc_folded, read_state
 from rlink_rs_spark.streaming.epochs import committed, crash_once, path, read, start
+from rlink_rs_spark.streaming.runner import drain_timeout
 
 
 def dedup_stream(
@@ -118,6 +119,14 @@ def _thread_target(spark: SparkSession, fn):
     as is, which is what pinned-off threads do anyway."""
     wrap = inheritable_thread_target(spark)
     return fn if wrap is spark else wrap(fn)
+
+
+def _warm(df: DataFrame, what: str) -> None:
+    """Materialize a standing static's cache off the epoch thread."""
+    try:
+        df.count()
+    except Exception:
+        _log.warning("%s cache warm-up failed; epoch 0 builds it inline", what, exc_info=True)
 
 
 def streaming_incremental_dedup_sink(
@@ -202,23 +211,26 @@ def streaming_incremental_dedup_sink(
     # (guide §2.6 -- overlap independent jobs): the two cache builds are
     # independent of each other AND of the checkpoint/batch-planning dead
     # time between .start() and epoch 0, so two background jobs hide most
-    # of their cost. handle() joins these threads before first use, so no
-    # job outlives the drain; a failed warm is harmless (the epoch's own
-    # jobs materialize the cache inline exactly as before) but is logged.
-    def _warm(df: DataFrame) -> None:
-        try:
-            df.count()
-        except Exception:
-            _log.warning("static cache warm-up failed; epoch 0 builds it inline", exc_info=True)
-
+    # of their cost. handle() joins these threads, at most drain_timeout()
+    # each, before first use; a failed or still-running warm is harmless
+    # (the epoch's own jobs materialize the cache inline exactly as before)
+    # but is logged.
     warm_threads = [
-        threading.Thread(target=_thread_target(spark, lambda f=f: _warm(f)), daemon=True)
-        for f in (hist_hashes, corpus_sets)
+        (what, threading.Thread(target=_thread_target(spark, lambda f=f, w=what: _warm(f, w)),
+                                daemon=True))
+        for what, f in (("history hashes", hist_hashes), ("corpus shingle sets", corpus_sets))
     ]
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        for w_t in warm_threads:
-            w_t.join()
+        while warm_threads:
+            what, w_t = warm_threads.pop()
+            timeout = drain_timeout()
+            w_t.join(timeout)
+            if w_t.is_alive():
+                _log.warning(
+                    "%s cache warm-up still running after %gs; epoch %d builds it inline",
+                    what, timeout, epoch_id,
+                )
         crash_once(work_dir, "crashed_once", epoch_id, crash_at_epoch)
 
         # deferred GC of dirs a PRIOR epoch's fold superseded, then this
@@ -326,7 +338,7 @@ def streaming_incremental_dedup_sink(
         batch.unpersist()
         batch_banded.unpersist()
 
-    for w_t in warm_threads:
+    for _, w_t in warm_threads:
         w_t.start()
     return start(doc_stream, handle, checkpoint, "update")
 

@@ -7,7 +7,31 @@ Trigger.AvailableNow is the same concept: process everything available,
 finalize state, stop. Every bounded query in the package ends through
 ``drain`` (await with ``drain_timeout()``, stop whatever is still active,
 raise on timeout), and every stateful query started here runs with
-``STATE_PARTITIONS`` state stores via ``pinned_state_partitions``.
+``state_partitions(stream_df)`` state stores via ``pinned_state_partitions``.
+
+Sizing. A stateful operator opens one state store per shuffle partition,
+and each store pays a fixed commit/snapshot cost every micro-batch, so at
+small inputs the store count, not the data, sets the batch time. The
+reference makes reduce parallelism a property of the job
+(schema_reduce.rs:490-598); here it is derived from the input: one store
+per started 512 KiB of the largest streaming source, clamped to
+[1, spark.sql.shuffle.partitions] (the session's deployment setting is the
+ceiling). A query with a source whose bytes cannot be seen locally (rate,
+a real Kafka broker) runs at the ceiling. Measured on a 4-core host,
+seconds, min of 3-4 warm runs in one JVM, identical row counts in every
+cell; the policy's pick is starred:
+
+    fixture (events bytes)  query                        1      2      4      8
+    sf0.001 (27 KB)         streaming_flagship_agg      0.87*  0.95   1.21   1.52
+                            stream_stream_interval_join 1.86*  2.05   2.64   3.38
+    sf0.01 (221 KB)         streaming_flagship_agg      1.07*  1.15   1.13   1.34
+                            stream_stream_interval_join 1.75*  1.83   2.17   3.10
+    sf0.1 (2.0 MB)          streaming_flagship_agg      3.58   3.22   2.61*  2.65
+                            stream_stream_interval_join 2.25   2.24   2.36*  3.32
+
+A flat 1 would cost the sf0.1 flagship 1.35x, so the count must follow the
+input. A resumed query keeps the count its checkpoint's offset log pinned
+at first run, whatever the policy says later.
 
 run_to_memory and run_to_parquet drive a streaming DataFrame to completion
 synchronously and return the materialized result -- the bridges that let
@@ -18,6 +42,7 @@ it with ``drain``.
 
 from __future__ import annotations
 
+import math
 import os
 import tempfile
 import time
@@ -26,13 +51,46 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Stateful streaming ops create one state store per shuffle partition, and
-# that per-store overhead (commit, snapshot, eviction scan) dominates
-# small/medium state -- measured 10.8s -> 3.1s on the interval join at sf0.1
-# going 32 -> 8. The value is pinned into the checkpoint at first run; size
-# it to expected state volume (at 100 TB: hundreds, here: single digits),
-# not to CPU count.
-STATE_PARTITIONS = 8
+_PARTS = "spark.sql.shuffle.partitions"
+_BYTES_PER_STORE = 512 * 1024
+
+
+def _leaf_bytes(leaf) -> int | None:
+    """Bytes under the local path a streaming leaf reads -- a file source's
+    ``path``, the loopback rlink_kafka source's ``topicdir`` -- following
+    symlinks (a single-chunk staged dir links the fixture file); None when
+    the leaf names no local directory."""
+    kind = leaf.getClass().getSimpleName()
+    path = None
+    if kind == "StreamingRelation":
+        opts = leaf.dataSource().options()
+        path = opts.apply("path") if opts.contains("path") else None
+    elif kind == "StreamingRelationV2":
+        path = leaf.extraOptions().get("topicdir")
+    if path is None or not os.path.isdir(path):
+        return None
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(path, followlinks=True)
+        for f in files
+    )
+
+
+def state_partitions(stream_df: DataFrame) -> int:
+    """State stores for a stateful query over `stream_df`: one per started
+    512 KiB of its largest streaming source, clamped to [1, the session's
+    spark.sql.shuffle.partitions]; the ceiling itself when any streaming
+    source has no local bytes to size (see the module docstring)."""
+    ceiling = int(stream_df.sparkSession.conf.get(_PARTS))
+    sizes = []
+    leaves = stream_df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.isStreaming():
+            sizes.append(_leaf_bytes(leaf))
+    if not sizes or None in sizes:
+        return ceiling
+    return max(1, min(ceiling, math.ceil(max(sizes) / _BYTES_PER_STORE)))
 
 
 def _await_listener_drain(listener, query_id: str, timeout: float = 30.0) -> None:
@@ -69,16 +127,19 @@ def drain_timeout() -> float:
 
 
 @contextmanager
-def pinned_state_partitions(spark: SparkSession):
-    """Run the block with spark.sql.shuffle.partitions = STATE_PARTITIONS
-    and restore the session's value afterwards, also when the block raises.
-    Queries started inside pin the value into their checkpoint."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+def pinned_state_partitions(stream_df: DataFrame):
+    """Run the block with spark.sql.shuffle.partitions set to
+    ``state_partitions(stream_df)`` and restore the session's value
+    afterwards, also when the block raises. A query over `stream_df`
+    started inside pins that count into its checkpoint's offset log at its
+    first batch, and a resume reuses the pinned count."""
+    spark = stream_df.sparkSession
+    prev = spark.conf.get(_PARTS)
+    spark.conf.set(_PARTS, str(state_partitions(stream_df)))
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set(_PARTS, prev)
 
 
 def drain(*queries, what: str) -> None:
@@ -97,11 +158,12 @@ def drain(*queries, what: str) -> None:
                 q.stop()
 
 
-def _run(writer, spark: SparkSession, listener, what: str) -> None:
-    """Start the configured writer with availableNow into a fresh checkpoint
-    and drain it, with pinned state partitions and the optional listener
-    registered for exactly the lifetime of the run."""
-    with pinned_state_partitions(spark):
+def _run(stream_df: DataFrame, writer, listener, what: str) -> None:
+    """Start the configured writer over `stream_df` with availableNow into a
+    fresh checkpoint and drain it, with pinned state partitions and the
+    optional listener registered for exactly the lifetime of the run."""
+    spark: SparkSession = stream_df.sparkSession
+    with pinned_state_partitions(stream_df):
         if listener is not None:
             spark.streams.addListener(listener)
         try:
@@ -136,7 +198,7 @@ def run_to_memory(
     spark: SparkSession = stream_df.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
     writer = stream_df.writeStream.outputMode(output_mode).format("memory").queryName(name)
-    _run(writer, spark, listener, what=f"memory sink {name!r}")
+    _run(stream_df, writer, listener, what=f"memory sink {name!r}")
     return spark.table(name)
 
 
@@ -158,7 +220,7 @@ def run_to_parquet(stream_df: DataFrame, listener=None) -> DataFrame:
     spark: SparkSession = stream_df.sparkSession
     out_dir = tempfile.mkdtemp(prefix="rlink_pq_out_")
     writer = stream_df.writeStream.outputMode("append").format("parquet").option("path", out_dir)
-    _run(writer, spark, listener, what="parquet sink")
+    _run(stream_df, writer, listener, what="parquet sink")
     # explicit schema: a zero-row drain writes only _spark_metadata and an
     # inferring read would fail; the stream's own schema is the contract
     return spark.read.schema(stream_df.schema).parquet(out_dir)

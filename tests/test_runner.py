@@ -1,8 +1,9 @@
 """streaming.runner is the one place that drains a bounded streaming query,
-stops it and pins its state partitions: these tests hold it to that."""
+stops it and sizes its state partitions: these tests hold it to that."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 from dataclasses import dataclass, field
 
@@ -12,7 +13,7 @@ from pyspark.sql import functions as F
 
 from rlink_rs_spark.operators.joins import interval_join
 from rlink_rs_spark.streaming.metrics import ProgressCollector
-from rlink_rs_spark.streaming.runner import STATE_PARTITIONS, drain, run_to_memory
+from rlink_rs_spark.streaming.runner import drain, run_to_memory, state_partitions
 from rlink_rs_spark.streaming.sources import file_stream
 
 _PARTS = "spark.sql.shuffle.partitions"
@@ -59,20 +60,19 @@ class _PartitionProbe(ProgressCollector):
 
 
 def test_runner_pins_state_partitions_and_restores_conf(spark, sf_dir):
-    """run_to_memory runs stateful queries with STATE_PARTITIONS state
-    stores whatever the session's setting, and gives the session its own
-    setting back afterwards -- also when the query fails to start."""
+    """run_to_memory runs stateful queries with state_partitions(stream)
+    state stores whatever the session's setting -- 1 for the 27 KB sf0.001
+    events, also under a session ceiling of 3 -- and gives the session its
+    own setting back afterwards, also when the query fails to start."""
     prev = spark.conf.get(_PARTS)
     spark.conf.set(_PARTS, "3")
     try:
         probe = _PartitionProbe()
-        counts = run_to_memory(
-            file_stream(spark, sf_dir, "events").groupBy("event_type").count(),
-            output_mode="complete",
-            listener=probe,
-        )
+        stream = file_stream(spark, sf_dir, "events").groupBy("event_type").count()
+        assert state_partitions(stream) == 1
+        counts = run_to_memory(stream, output_mode="complete", listener=probe)
         assert counts.count() > 0
-        assert probe.state_partitions and set(probe.state_partitions) == {STATE_PARTITIONS}
+        assert probe.state_partitions and set(probe.state_partitions) == {1}
         assert spark.conf.get(_PARTS) == "3"
 
         # leftOuter join without watermarks: rejected when the query starts
@@ -92,19 +92,51 @@ def test_runner_pins_state_partitions_and_restores_conf(spark, sf_dir):
         spark.conf.set(_PARTS, prev)
 
 
-def test_dedup_sink_runs_with_pinned_thread_mode_off(spark, sf_dir, monkeypatch):
-    """With pinned-thread mode off, inheritable_thread_target(session)
-    returns the session, not a decorator; the dedup sink's warm-up and
-    commit threads must still run."""
-    import os
+def _sized_stream(spark, n_bytes: int | None):
+    """A file stream over a dir holding one n_bytes file, or a rate stream
+    for None. The policy sizes the plan without running it, so the file
+    is a sparse placeholder that is never read."""
+    if n_bytes is None:
+        return spark.readStream.format("rate").load().select("value")
+    d = tempfile.mkdtemp(prefix="rlink_sized_")
+    with open(os.path.join(d, "part-0.parquet"), "wb") as f:
+        f.truncate(n_bytes)
+    return spark.readStream.schema("value long").parquet(d)
 
+
+@pytest.mark.parametrize(
+    "source_bytes, ceiling, want",
+    [
+        ([27_156], 8, 1),  # sf0.001 events
+        ([221_075], 8, 1),  # sf0.01 events
+        ([2_045_762], 8, 4),  # sf0.1 events
+        ([2_045_762], 3, 3),  # clamped to the session's ceiling
+        ([400_000, 300_000], 8, 1),  # a join sizes by its largest source (sum: 2)
+        ([None], 3, 3),  # rate: nothing to size, the ceiling
+    ],
+    ids=["sf0.001", "sf0.01", "sf0.1", "ceiling", "join-largest", "rate"],
+)
+def test_state_partitions_policy(spark, source_bytes, ceiling, want):
+    prev = spark.conf.get(_PARTS)
+    spark.conf.set(_PARTS, str(ceiling))
+    try:
+        frames = [_sized_stream(spark, n) for n in source_bytes]
+        stream = frames[0]
+        for other in frames[1:]:
+            stream = stream.join(other, "value")
+        assert state_partitions(stream.groupBy("value").count()) == want
+    finally:
+        spark.conf.set(_PARTS, prev)
+
+
+def _run_dedup_sink(spark, sf_dir, tag: str):
+    """Drain the incremental dedup sink over a two-chunk sf documents replay
+    and check every streamed doc got one verdict."""
     import rlink_rs_spark.streaming.dedup as sdedup
     from rlink_rs_spark.operators.dedup import load_or_build_band_index, with_shingles
     from rlink_rs_spark.queries.dedup import _BANDS, _INCR_THR, _N_HASHES, _documents_fingerprint
     from rlink_rs_spark.streaming.sources import stage_stream_dir, stream_from_staged
     from rlink_rs_spark.tables import load_table
-
-    monkeypatch.setattr(sdedup, "inheritable_thread_target", lambda f=None: f)
 
     docs = load_table(spark, sf_dir, "documents")
     history = docs.where(F.col("doc_id") % 4 != 0)
@@ -121,18 +153,51 @@ def test_dedup_sink_runs_with_pinned_thread_mode_off(spark, sf_dir, monkeypatch)
     streamed = stream_from_staged(
         spark, staged, sf_dir, "documents", max_files_per_trigger=1
     ).where(F.col("doc_id") % 4 == 0)
-    work_dir = tempfile.mkdtemp(prefix="rlink_sdedup_unpinned_")
+    work_dir = tempfile.mkdtemp(prefix=f"rlink_sdedup_{tag}_")
     q = sdedup.streaming_incremental_dedup_sink(
         streamed,
         history,
         hist_banded,
         with_shingles(docs),
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_sdedup_unpinned_ck_"),
+        checkpoint=tempfile.mkdtemp(prefix=f"rlink_sdedup_{tag}_ck_"),
         threshold=_INCR_THR,
         n_hashes=_N_HASHES,
         bands=_BANDS,
     )
-    drain(q, what="unpinned dedup sink")
+    drain(q, what=f"{tag} dedup sink")
     verdicts = sdedup.read_verdicts(spark, work_dir)
     assert verdicts.count() == docs.where(F.col("doc_id") % 4 == 0).count() > 0
+
+
+def test_dedup_sink_runs_with_pinned_thread_mode_off(spark, sf_dir, monkeypatch):
+    """With pinned-thread mode off, inheritable_thread_target(session)
+    returns the session, not a decorator; the dedup sink's warm-up and
+    commit threads must still run."""
+    import rlink_rs_spark.streaming.dedup as sdedup
+
+    monkeypatch.setattr(sdedup, "inheritable_thread_target", lambda f=None: f)
+    _run_dedup_sink(spark, sf_dir, "unpinned")
+
+
+def test_dedup_sink_epoch_survives_a_hung_warm_up(spark, sf_dir, monkeypatch, caplog):
+    """A static warm-up that never finishes costs epoch 0 at most
+    drain_timeout() per static: the epoch builds the cache inline, the sink
+    drains, and the stuck warm-up is logged by name."""
+    import threading
+
+    import rlink_rs_spark.streaming.dedup as sdedup
+
+    gate = threading.Event()
+    monkeypatch.setattr(sdedup, "_warm", lambda df, what: gate.wait(120))
+    monkeypatch.setattr(sdedup, "drain_timeout", lambda: 0.5)
+    try:
+        with caplog.at_level("WARNING", logger=sdedup.__name__):
+            _run_dedup_sink(spark, sf_dir, "hung_warm")
+    finally:
+        gate.set()
+    stuck = [r.getMessage() for r in caplog.records if "still running" in r.getMessage()]
+    assert sorted(m.split(" cache warm-up")[0] for m in stuck) == [
+        "corpus shingle sets",
+        "history hashes",
+    ]

@@ -32,6 +32,7 @@ _PROVIDER_PKG = "org.apache.spark.sql.execution.streaming.state"
 _ROCKSDB_WITNESSES = {
     "test_pipeline_stream_equals_batch_closed_windows",
     "test_checkpoint_kill_resume_exactly_once",
+    "test_state_partitions_pinned_across_resume",
     "test_streaming_dedup_kill_resume_no_dupes",
     "test_stateful_threshold_alerts_matches_batch",
     "test_transform_with_state_matches_batch",
@@ -152,6 +153,81 @@ def test_checkpoint_kill_resume_exactly_once(spark, sf_dir):
     got = {tuple(r) for r in spark.read.parquet(out_dir).collect()}
     want = {tuple(r) for r in _closed_windows(p.build(events), events).collect()}
     assert got == want and got
+
+
+def test_state_partitions_pinned_across_resume(spark, sf_dir):
+    """The state-store count a query starts with is pinned in its
+    checkpoint: after the input grows past what the policy sized the first
+    run for, a resume keeps the first run's count and its output still
+    equals the batch twin over everything staged."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from rlink_rs_spark.streaming.runner import drain, pinned_state_partitions, state_partitions
+    from rlink_rs_spark.streaming.sources import stage_stream_dir, stream_from_staged
+
+    staged = stage_stream_dir(sf_dir, "events", chunks=2, order_col="ts")
+    held = tempfile.mkdtemp(prefix="rlink_held_")
+    shutil.move(os.path.join(staged, "chunk_00001.parquet"), held)  # one batch
+    ck = tempfile.mkdtemp(prefix="rlink_ck_pinned_")
+
+    def agg_over_staged():
+        src = stream_from_staged(spark, staged, sf_dir, "events", max_files_per_trigger=1)
+        return src.groupBy("event_type").agg(
+            F.count("*").alias("n"), F.sum("event_id").alias("ids")
+        )
+
+    def run(agg, tag: str):
+        with pinned_state_partitions(agg):
+            q = (
+                agg.writeStream.outputMode("complete")
+                .format("memory")
+                .queryName(f"pinned_{tag}")
+                .option("checkpointLocation", ck)
+                .trigger(availableNow=True)
+                .start()
+            )
+            drain(q, what=f"pinned-partitions {tag} run")
+        counts = {
+            p.stateOperators[0].numShufflePartitions
+            for p in q.recentProgress
+            if p.stateOperators
+        }
+        return counts, spark.table(f"pinned_{tag}")
+
+    first_agg = agg_over_staged()
+    first = state_partitions(first_agg)
+    counts, _ = run(first_agg, "first")
+    assert counts == {first}
+
+    # the held chunk plus an uncompressed replica file, later mtimes: the
+    # input now sizes to more stores than the checkpoint pinned
+    shutil.move(os.path.join(held, "chunk_00001.parquet"), staged)
+    events = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    base = pc.max(events.column("event_id")).as_py() + 1
+    reps = -(-700_000 // events.nbytes)
+    i = events.schema.get_field_index("event_id")
+    extra = pa.concat_tables(
+        events.set_column(i, "event_id", pc.add(events.column("event_id"), k * base))
+        for k in range(1, reps + 1)
+    )
+    p = os.path.join(staged, "chunk_00002.parquet")
+    pq.write_table(extra, p, compression="none", use_dictionary=False)
+    later = time.time() + 10
+    os.utime(p, (later, later))
+    resumed_agg = agg_over_staged()
+    assert state_partitions(resumed_agg) > first
+
+    counts, got = run(resumed_agg, "resumed")
+    assert counts == {first}
+    twin = spark.read.parquet(staged).groupBy("event_type").agg(
+        F.count("*").alias("n"), F.sum("event_id").alias("ids")
+    )
+    want = {tuple(r) for r in twin.collect()}
+    assert {tuple(r) for r in got.collect()} == want and want
 
 
 def test_stateful_threshold_alerts_matches_batch(spark, sf_dir):

@@ -95,18 +95,20 @@ def run_provider(
     spark, staged: str, sf_dir: str, provider: str, warm_batches: int,
     key_col: str = "event_type",
 ) -> dict:
+    from rlink_rs_spark.streaming.runner import pinned_state_partitions
     from rlink_rs_spark.streaming.sources import stream_from_staged
 
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", PROVIDERS[provider])
     src = stream_from_staged(spark, staged, sf_dir, "events", max_files_per_trigger=1)
-    q = (
-        flagship_agg(src, key_col)
-        .writeStream.outputMode("append")
-        .format("noop")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix=f"rlink_tp_ck_{provider}_"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    agg = flagship_agg(src, key_col)
+    with pinned_state_partitions(agg):
+        q = (
+            agg.writeStream.outputMode("append")
+            .format("noop")
+            .option("checkpointLocation", tempfile.mkdtemp(prefix=f"rlink_tp_ck_{provider}_"))
+            .trigger(availableNow=True)
+            .start()
+        )
     try:
         if not q.awaitTermination(3600):
             raise TimeoutError("throughput run did not drain in 3600s")
@@ -152,10 +154,6 @@ def main() -> None:
     from rlink_rs_spark.session import get_spark
 
     spark = get_spark("throughput-bench")
-    # one state store per shuffle partition; size to state volume (the
-    # flagship keys are 3 event types x open windows), not CPU count --
-    # same sizing note as streaming/runner.STATE_PARTITIONS
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", str(chunks + 16))
 
     staged, n_rows = stage_replicated(sf_dir, replicas, chunks)
