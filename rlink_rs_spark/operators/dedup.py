@@ -5,13 +5,21 @@ are the 100 TB extras mandated by the build brief: exact dedup, n-gram
 Jaccard, MinHash+LSH, and SimHash near-dup detection over a documents table.
 
 Design stance for scale:
-  * All hashing is md5-based and engine-neutral (identical in Spark and
-    DuckDB), so every operator is oracle-checkable bit-for-bit, and no
-    Python UDFs are involved anywhere -- the whole family runs inside
-    whole-stage codegen.
+  * All hashing is md5 over UTF-8 bytes, so every operator is oracle-
+    checkable bit for bit. MinHash bands and SimHash run in one NumPy
+    kernel over the per-doc shingle arrays (``minhash_bands``,
+    ``simhash``: one ``mapInArrow`` each, pickled by value); the DuckDB
+    oracles evaluate the same bits as SQL text. Bit contract, with hi/lo
+    the big-endian 64-bit halves of a digest: MinHash hash 2i is
+    ``hi >> 4`` of md5(f"{i}:{s}") (hex chars 1-15), hash 2i+1 is
+    ``((hi & 0xF) << 56) | (lo >> 8)`` (chars 16-30), each a per-doc
+    minimum; band b is the ","-joined decimals of its rows' hashes, as
+    ``concat_ws`` writes them. SimHash takes ``hi & 0xFFFFFFFF`` of md5(s)
+    (chars 9-16). A doc with no shingles has no row.
   * Exact dedup is one hash-groupBy (map-side partial agg, one shuffle).
-  * MinHash signatures aggregate per-doc minimums of K independent hashes
-    -- shuffle key is doc_id, no K-fold row expansion.
+  * MinHash signatures are per-doc minimums computed where the doc's
+    shingle array already is -- no posting explode, no K-fold row
+    expansion, no exchange before the band join.
   * LSH banding turns all-pairs comparison into an equi-join on
     (band_id, band_signature) -- the scale path; the exact n-gram
     inverted-index join is the small-scale/oracle baseline.
@@ -21,10 +29,19 @@ Design stance for scale:
 
 from __future__ import annotations
 
+import hashlib
+import math
 import os
+import sys
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # --- shingling ---------------------------------------------------------------
 
@@ -54,7 +71,7 @@ def with_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     # the old global .distinct() -- the distinct key was (id, shingle), so
     # deduping within each doc's array yields the IDENTICAL row set while
     # removing a full exchange of the posting rows from every consumer
-    # (minhash signatures, band index build, postings joins); the postings
+    # (postings joins, pair counts); the postings
     # stream stays entirely map-side until each consumer's own keyed agg.
     return (
         df.select(F.col(id_col), tokens_col(text_col).alias(t))
@@ -136,39 +153,92 @@ def exact_dedup_groups(df: DataFrame, id_col: str, content_col: str) -> DataFram
     )
 
 
-# --- md5-based hash family ---------------------------------------------------
+# --- md5 hash kernel: MinHash bands and SimHash -------------------------------
 
-def hash32(col: Column) -> Column:
-    """32-bit hash from md5 chars 9..16 (salt-free; used by SimHash).
-    DuckDB twin: ('0x' || substr(md5(v), 9, 8))::BIGINT."""
-    return F.conv(F.substring(F.md5(col), 9, 8), 16, 10).cast("long")
+_BAND_SCHEMA = "doc_id bigint, band int, sig string"
+_U = np.uint64
+
+
+def _md5_words(blobs: list[bytes], salt: bytes = b"") -> tuple[np.ndarray, np.ndarray]:
+    """md5(salt + blob) of every blob as two big-endian uint64 words: hex
+    chars 1-16 and 17-32 of the digest."""
+    md5 = hashlib.md5
+    w = np.frombuffer(b"".join([md5(salt + b).digest() for b in blobs]), ">u8").astype(np.uint64)
+    return w[0::2], w[1::2]
+
+
+def _doc_batches(batches):
+    """Per Arrow batch of a (doc_id, sh) frame, over its docs with a
+    non-empty set: (ids, UTF-8 bytes of every shingle, index of each doc's
+    first shingle, set sizes). Empty and null sets drop out here, as the
+    grouped chain has no row for a doc without shingles."""
+    for batch in batches:
+        sh = batch.column("sh")
+        n = pc.fill_null(pc.list_value_length(sh), 0).to_numpy()
+        keep = n > 0
+        if keep.any():
+            n = n[keep]
+            blobs = pc.list_flatten(sh).cast(pa.binary()).to_pylist()
+            yield batch.column("doc_id").filter(pa.array(keep)), blobs, np.cumsum(n) - n, n
+
+
+def _sets_input(sets: DataFrame) -> DataFrame:
+    return sets.select(F.col("doc_id").cast("long"), "sh")
+
+
+def minhash_bands(sets: DataFrame, n_hashes: int = 16, bands: int = 4) -> DataFrame:
+    """The LSH band table (doc_id, band, sig) of a shingle_sets frame, in
+    one map-side pass: no posting explode, no per-doc min exchange. Hash
+    j is the per-doc minimum of a 60-bit slice of md5(f"{j // 2}:{s}"):
+    hex chars 1-15 for even j, 16-30 for odd j. Band b joins hashes
+    b*rows .. b*rows+rows-1 as decimals with "," (rows = n_hashes //
+    bands). This IS the persistable LSH index: in production it is written
+    once per corpus and every later batch equi-joins against it (see
+    load_or_build_band_index)."""
+    rows = n_hashes // bands
+
+    def run(batches):
+        for ids, blobs, starts, _ in _doc_batches(batches):
+            h = []
+            for j in range((n_hashes + 1) // 2):
+                hi, lo = _md5_words(blobs, f"{j}:".encode())
+                h += [hi >> _U(4), ((hi & _U(0xF)) << _U(56)) | (lo >> _U(8))]
+            mins = np.minimum.reduceat(np.stack(h[:n_hashes]), starts, axis=1).astype(np.int64)
+            dec = [pa.array(m).cast(pa.string()) for m in mins]
+            join = pc.binary_join_element_wise
+            sigs = [join(*dec[b * rows : b * rows + rows], ",") for b in range(bands)]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.concat_arrays([ids] * bands),
+                    pa.array(np.repeat(np.arange(bands, dtype=np.int32), len(ids))),
+                    pa.concat_arrays(sigs),
+                ],
+                ["doc_id", "band", "sig"],
+            )
+
+    return _sets_input(sets).mapInArrow(run, _BAND_SCHEMA)
+
+
+def simhash(sets: DataFrame, n_bits: int = 32) -> DataFrame:
+    """Per-doc SimHash (doc_id, simhash) of a shingle_sets frame: bit j is
+    set iff sum over shingles of (2*bit_j(h) - 1) > 0, h = md5(s) hex
+    chars 9-16."""
+    shifts = np.arange(n_bits, dtype=np.uint64)
+
+    def run(batches):
+        for ids, blobs, starts, n in _doc_batches(batches):
+            hi, _ = _md5_words(blobs)
+            bits = ((hi & _U(0xFFFFFFFF))[:, None] >> shifts) & _U(1)
+            ones = np.add.reduceat(bits, starts).astype(np.int64)
+            word = ((2 * ones > n[:, None]).astype(np.uint64) << shifts).sum(axis=1)
+            yield pa.RecordBatch.from_arrays(
+                [ids, pa.array(word.astype(np.int64))], ["doc_id", "simhash"]
+            )
+
+    return _sets_input(sets).mapInArrow(run, "doc_id bigint, simhash bigint")
 
 
 # --- MinHash + LSH -----------------------------------------------------------
-
-def minhash_signatures(shingled: DataFrame, id_col: str = "doc_id", n_hashes: int = 16) -> DataFrame:
-    """Per-doc MinHash signature: one aggregation, no row expansion by
-    n_hashes. Each salted md5 digest (32 hex chars) yields TWO independent
-    60-bit hashes (chars 1-15 and 16-30), so n_hashes costs n_hashes/2 md5
-    evaluations; the digests are projected once explicitly rather than
-    relying on subexpression elimination inside the aggregate.
-    DuckDB twin: ('0x' || substr(md5('{j}:' || s), {1|16}, 15))::BIGINT."""
-    n_digests = (n_hashes + 1) // 2
-    digests = shingled.select(
-        F.col(id_col),
-        *[
-            F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle"))).alias(f"__m{j}")
-            for j in range(n_digests)
-        ],
-    )
-    aggs = [
-        F.min(
-            F.conv(F.substring(f"__m{i // 2}", 1 if i % 2 == 0 else 16, 15), 16, 10).cast("long")
-        ).alias(f"h{i}")
-        for i in range(n_hashes)
-    ]
-    return digests.groupBy(id_col).agg(*aggs)
-
 
 def _salt(col: Column, buckets: int) -> Column:
     """Deterministic salt in [0, buckets): content-independent, stable
@@ -177,67 +247,41 @@ def _salt(col: Column, buckets: int) -> Column:
 
 
 def auto_salt_buckets(
-    banded: DataFrame,
+    keyed: DataFrame,
+    keys: tuple[str, ...] = ("band", "sig"),
     hot_threshold: int = 1024,
     target_cell: int = 1024,
     max_s: int = 16,
 ) -> int:
-    """Skew guard (VERDICT r3 item 6): pick the grid-blocking factor from the
-    HOTTEST band bucket, so the 100 TB user never discovers the salting lever
-    post-OOM. One map-side-combined count over the banded signature table
-    (bytes per doc, not the corpus) and a 1-row scalar collect -- the same
-    driver-side-scalar class as the CC convergence check. Buckets at or under
-    hot_threshold stay on the unsalted plan (PLANS.md unchanged); above it,
-    S = ceil(max_bucket / target_cell) capped at max_s bounds the worst join
-    cell near target_cell^2 pairs."""
-    row = banded.groupBy("band", "sig").count().agg(F.max("count")).collect()[0]
+    """Skew guard (VERDICT r3 item 6), the one salting rule of the LSH
+    joins: pick the grid-blocking factor from the HOTTEST ``keys`` group,
+    so the 100 TB user never discovers the salting lever post-OOM. One
+    map-side-combined count over the keyed table (the banded signatures,
+    or verify_jaccard's pair endpoints -- bytes per doc, not the corpus)
+    and a 1-row scalar collect -- the same driver-side-scalar class as the
+    CC convergence check. Groups at or under hot_threshold stay on the
+    unsalted plan (PLANS.md unchanged); above it, S = ceil(hottest /
+    target_cell) capped at max_s bounds the worst join cell near
+    target_cell^2 pairs."""
+    row = keyed.groupBy(*keys).count().agg(F.max("count")).collect()[0]
     hottest = row[0] or 0
     if hottest <= hot_threshold:
         return 1
-    import math
-
     return max(2, min(max_s, math.ceil(hottest / target_cell)))
-
-
-def band_signatures(
-    signatures: DataFrame, id_col: str = "doc_id", n_hashes: int = 16, bands: int = 4
-) -> DataFrame:
-    """(id, band, sig) band table from MinHash signatures -- a single scan
-    that builds every band signature as an array of structs and explodes
-    once (vs unionByName re-scanning `signatures` per band). This IS the
-    persistable LSH index: in production it is written once per corpus and
-    every later batch equi-joins against it (see load_or_build_band_index)."""
-    rows = n_hashes // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    ",",
-                    *[F.col(f"h{b * rows + r}").cast("string") for r in range(rows)],
-                ).alias("sig"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return signatures.select(F.col(id_col), F.explode(band_structs).alias("bs")).select(
-        id_col, "bs.band", "bs.sig"
-    )
 
 
 def load_or_build_band_index(
     spark: SparkSession,
-    history_shingled: DataFrame,
+    history_sets: DataFrame,
     cache_dir: str,
     fingerprint: str,
-    id_col: str = "doc_id",
     n_hashes: int = 16,
     bands: int = 4,
 ) -> DataFrame:
     """Build-once / probe-many LSH band index over the EXISTING corpus --
     the deployment shape of incremental dedup: the historical index is an
     artifact on disk (like the IVF codebook), and each incoming batch only
-    computes its own signatures and equi-joins the index, so history is
+    computes its own band table and equi-joins the index, so history is
     never re-shingled per batch. MinHash here is md5-derived and therefore
     a pure function of content, making the artifact safe to persist and
     reload; the cache key carries a caller-supplied content fingerprint so
@@ -249,27 +293,18 @@ def load_or_build_band_index(
     path = os.path.join(cache_dir, f"lsh_bands_h{n_hashes}_b{bands}_{fingerprint}")
     if os.path.exists(os.path.join(path, "_SUCCESS")):  # committed write only
         return spark.read.parquet(path)
-    banded = band_signatures(
-        minhash_signatures(history_shingled, id_col=id_col, n_hashes=n_hashes),
-        id_col=id_col,
-        n_hashes=n_hashes,
-        bands=bands,
-    )
-    banded.write.mode("overwrite").parquet(path)
+    minhash_bands(history_sets, n_hashes, bands).write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
 
 
 def lsh_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    n_hashes: int = 16,
-    bands: int = 4,
+    banded: DataFrame,
     salt_buckets: int | str = 1,
     salt_out: dict | None = None,
 ) -> DataFrame:
-    """Band the signature (bands x rows_per_band) and equi-join docs sharing
-    any band -- the O(n^2) -> O(candidates) reduction that makes near-dup
-    feasible at 100 TB. Returns distinct (id_a, id_b), id_a < id_b.
+    """Equi-join the docs of a band table (minhash_bands) sharing any band
+    -- the O(n^2) -> O(candidates) reduction that makes near-dup feasible
+    at 100 TB. Returns distinct (id_a, id_b), id_a < id_b.
 
     salt_buckets > 1 grid-blocks the self-join for hot band buckets (many
     near-identical docs share one band signature, so that bucket's m^2 pair
@@ -285,16 +320,11 @@ def lsh_candidate_pairs(
     scalar agg) at plan-CONSTRUCTION time, inside this otherwise-lazy
     builder; pass ``salt_out={}`` to receive the chosen factor as
     ``salt_out["salt_buckets"]`` (returned per call -- no shared state)."""
-    # r16 (guide §2.4): the banded table feeds BOTH sides of the self-join;
-    # without a cache each side re-evaluates the whole signature subtree
-    # (shingle explode + n_hashes/2 md5s per shingle + the per-doc min-agg
-    # exchange) from the corpus scan -- the most expensive map work in the
-    # plan, paid twice. Caching the (docs x bands)-row band table computes
-    # it once; at 100 TB this tiny-rows table is exactly what
-    # load_or_build_band_index persists as the on-disk artifact.
-    banded = band_signatures(
-        signatures, id_col=id_col, n_hashes=n_hashes, bands=bands
-    ).cache()
+    # the band table feeds BOTH sides of the self-join; without a cache each
+    # side re-runs the hash kernel from the corpus scan. Caching the
+    # (docs x bands)-row table computes it once; at 100 TB this tiny-rows
+    # table is exactly what load_or_build_band_index persists.
+    banded = banded.cache()
     if salt_buckets == "auto":
         salt_buckets = auto_salt_buckets(banded)
     if salt_out is not None:
@@ -303,16 +333,10 @@ def lsh_candidate_pairs(
         S = salt_buckets
         grid = F.explode(F.expr(f"sequence(0, {S - 1})"))
         a = banded.select(
-            F.col(id_col).alias("id_a"),
-            "band",
-            "sig",
-            _salt(F.col(id_col), S).alias("cell_a"),
+            F.col("doc_id").alias("id_a"), "band", "sig", _salt(F.col("doc_id"), S).alias("cell_a")
         ).withColumn("cell_b", grid)
         b = banded.select(
-            F.col(id_col).alias("id_b"),
-            "band",
-            "sig",
-            _salt(F.col(id_col), S).alias("cell_b"),
+            F.col("doc_id").alias("id_b"), "band", "sig", _salt(F.col("doc_id"), S).alias("cell_b")
         ).withColumn("cell_a", grid)
         return (
             a.join(b, ["band", "sig", "cell_a", "cell_b"])
@@ -327,90 +351,62 @@ def lsh_candidate_pairs(
             right,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
 
 
 def verify_jaccard(
     candidates: DataFrame,
-    shingled: DataFrame,
-    id_col: str = "doc_id",
+    sets: DataFrame,
     threshold: float = 0.7,
     salt_buckets: int | str = 1,
     salt_out: dict | None = None,
-    sets: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact Jaccard over candidate pairs via per-doc shingle arrays;
-    integer intersection/union counts, so the ratio is bit-identical across
-    engines. Returns (id_a, id_b, jaccard >= threshold).
-
-    ``sets`` short-circuits the per-doc set aggregation with a precomputed
-    (id_col, sh: array<string>) frame -- pass a cached/persisted one when
-    verifying many candidate batches against the same static corpus (the
-    streaming intake sink does), so each batch only pays the candidate
-    join, not a corpus re-aggregation.
+    """Exact Jaccard over candidate pairs via the per-doc shingle arrays of
+    a (doc_id, sh) sets frame (shingle_sets); integer intersection/union
+    counts, so the ratio is bit-identical across engines. Returns
+    (id_a, id_b, jaccard >= threshold). Pass a cached/persisted sets frame
+    when verifying many candidate batches against the same static corpus
+    (the streaming intake sink does), so each batch only pays the
+    candidate join, not a corpus re-scan.
 
     salt_buckets > 1 salts each lookup join: a doc appearing in many
     candidate pairs is a hot join key, so the candidate side is salted by
     the OTHER pair member's id and the (one-row-per-doc) sets side is
     replicated S ways -- the hot doc's pairs spread over S tasks.
     salt_buckets="auto" measures the hottest doc's candidate degree first
-    (one scalar agg over the pair list) and salts only when it exceeds a
-    task-sized threshold.
+    (auto_salt_buckets over the pair endpoints) and salts only when it
+    exceeds a task-sized threshold.
 
     NOTE: salt_buckets="auto" runs ONE EAGER Spark job (the max-degree
     scalar agg over the candidate list) at plan-CONSTRUCTION time; pass
     ``salt_out={}`` to receive the chosen factor as
     ``salt_out["salt_buckets"]`` (returned per call -- no shared state)."""
     if salt_buckets == "auto":
-        row = (
-            candidates.select(F.explode(F.array("id_a", "id_b")).alias("d"))
-            .groupBy("d")
-            .count()
-            .agg(F.max("count"))
-            .collect()[0]
-        )
-        degree = row[0] or 0
-        if degree <= 1024:
-            salt_buckets = 1
-        else:
-            import math
-
-            salt_buckets = max(2, min(16, math.ceil(degree / 1024)))
+        ends = candidates.select(F.explode(F.array("id_a", "id_b")).alias("d"))
+        salt_buckets = auto_salt_buckets(ends, ("d",))
     if salt_out is not None:
         salt_out["salt_buckets"] = salt_buckets
-    if sets is None:
-        sets = shingled.groupBy(id_col).agg(F.collect_set("shingle").alias("sh"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
+    a = sets.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
+    b = sets.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
     if salt_buckets > 1:
         S = salt_buckets
         rep = F.explode(F.expr(f"sequence(0, {S - 1})"))
-        a = sets.select(
-            F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")
-        ).withColumn("__salt_a", rep)
-        b = sets.select(
-            F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")
-        ).withColumn("__salt_b", rep)
+        a = a.withColumn("__salt_a", rep)
+        b = b.withColumn("__salt_b", rep)
         salted = candidates.withColumn("__salt_a", _salt(F.col("id_b"), S)).withColumn(
             "__salt_b", _salt(F.col("id_a"), S)
         )
-        return (
-            salted.join(a, ["id_a", "__salt_a"])
-            .join(b, ["id_b", "__salt_b"])
-            .select("id_a", "id_b", (inter / union).alias("jaccard"))
-            .where(F.col("jaccard") >= threshold)
-        )
-    a = sets.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sets.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        candidates.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", (inter / union).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
+        joined = salted.join(a, ["id_a", "__salt_a"]).join(b, ["id_b", "__salt_b"])
+    else:
+        joined = candidates.join(a, "id_a").join(b, "id_b")
+    return joined.select("id_a", "id_b", (inter / union).alias("jaccard")).where(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -706,25 +702,6 @@ def connected_components(
 
 # --- SimHash -----------------------------------------------------------------
 
-def simhash(shingled: DataFrame, id_col: str = "doc_id", n_bits: int = 32) -> DataFrame:
-    """Per-doc SimHash: bit j is set iff sum over shingles of
-    (2*bit_j(hash32(s)) - 1) > 0. Pure aggregation -- n_bits sums per doc."""
-    h = hash32(F.col("shingle"))
-    sums = shingled.groupBy(id_col).agg(
-        *[
-            F.sum(F.shiftright(h, j).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"s{j}")
-            for j in range(n_bits)
-        ]
-    )
-    bit_terms = [
-        F.when(F.col(f"s{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0)) for j in range(n_bits)
-    ]
-    acc = bit_terms[0]
-    for t in bit_terms[1:]:
-        acc = acc + t
-    return sums.select(F.col(id_col), acc.cast("long").alias("simhash"))
-
-
 def simhash_pairs(
     sims: DataFrame, id_col: str = "doc_id", max_hamming: int = 3, n_bits: int = 32
 ) -> DataFrame:
@@ -747,9 +724,9 @@ def simhash_pairs(
         ]
     )
     # r16 (guide §2.4): both self-join sides consume this subtree; without
-    # a cache each side re-runs the 32-bit-sum SimHash aggregation (32
-    # conditional sums over every shingle) from the corpus scan. Cache the
-    # (docs x n_blocks)-row block table so the sketch computes once.
+    # a cache each side re-runs the SimHash kernel from the corpus scan.
+    # Cache the (docs x n_blocks)-row block table so the sketch computes
+    # once.
     exploded = (
         sims.select(F.col(id_col), F.col("simhash"), F.explode(blocks).alias("b"))
         .select(id_col, "simhash", "b.blk", "b.val")

@@ -4,14 +4,17 @@ oracle (all hashing is md5-based and engine-neutral -- see operators/dedup).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rlink_rs_spark.operators.dedup import (
     connected_components,
     exact_dedup_groups,
+    load_or_build_band_index,
     lsh_candidate_pairs,
-    minhash_signatures,
+    minhash_bands,
     ngram_jaccard_pairs,
     sets_to_postings,
     shingle_sets,
@@ -41,33 +44,36 @@ _MAX_DF = 10_000
 _N_HASHES, _BANDS, _ROWS = 16, 4, 4
 
 
-def _shared_shingle_frames(docs: DataFrame, k: int = 3):
-    """(sets, postings, sizes) all derived from ONE cached map-side
-    shingle_sets scan (r16, guide §2.4/§5): queries that consume the
-    shingle stream through several subtrees (signatures + verify sets,
-    or pair counts + two size joins) previously re-ran tokenize+shingle
-    once per subtree -- grouped builders were saved by shuffle-stage
-    reuse, map-side builders were not (the first r16 cut measured that
-    as a 2x regression on ngram_jaccard). Caching the per-doc arrays
-    (docs-sized rows, far smaller than the exploded postings) makes
-    every consumer read the one materialized scan. Within-query
-    intermediate only: bench clears the cache between timed queries.
+def _cached_sets(docs: DataFrame) -> DataFrame:
+    """ONE cached map-side shingle_sets scan (r16, guide §2.4/§5) that
+    every shingle consumer of a query reads -- the hash kernel, both
+    verify joins, and any postings or sizes derived from it. Without the
+    cache a map-side builder is recomputed once per consuming subtree
+    (the first r16 cut measured that as a 2x regression on
+    ngram_jaccard). Within-query intermediate only: bench clears the
+    cache between timed queries.
 
     fan_out BEFORE the cache (r16 session 4, guide §2.2): the cache
     inherits the scan's partitioning, and a one-row-group documents
     file pins the scan -- and therefore EVERY cached-downstream map
-    stage (the 8-md5s-per-posting signature digests, the band explode,
-    the verify explode) -- to ONE task. Spreading the docs-sized rows
-    once before caching parallelizes all of it; fan_out's layout guard
-    makes this a no-op on genuinely parallel (100 TB) scans.
-    Interleaved A/B of the full minhash pipeline: 3.87-4.11 s -> 0.88-
-    1.24 s (0.23-0.32x)."""
-    sets = shingle_sets(fan_out(docs), k=k).cache()
-    sizes = sets.select("doc_id", F.size("sh").cast("long").alias("n"))
-    return sets, sets_to_postings(sets), sizes
+    stage (the md5 kernel, the verify joins) -- to ONE task. Spreading
+    the docs-sized rows once before caching parallelizes all of it;
+    fan_out's layout guard makes this a no-op on genuinely parallel
+    (100 TB) scans."""
+    return shingle_sets(fan_out(docs)).cache()
 
-# two 60-bit hashes per salted digest (chars 1-15 / 16-30), mirroring
-# minhash_signatures' md5-halving exactly
+
+def _minhash_pairs(sets: DataFrame, threshold: float = 0.7) -> DataFrame:
+    """The verified MinHash-LSH near-dup pairs (id_a, id_b, jaccard) of a
+    cached sets frame: md5 band table -> band equi-join candidates ->
+    exact Jaccard >= threshold. The one pipeline behind every query
+    whose oracle composes _MINHASH_PAIRS_CTES."""
+    cands = lsh_candidate_pairs(minhash_bands(sets, _N_HASHES, _BANDS))
+    return verify_jaccard(cands, sets, threshold=threshold)
+
+
+# two 60-bit hashes per salted digest (chars 1-15 / 16-30), the bits
+# operators.dedup.minhash_bands computes
 _MINHASH_AGGS_SQL = ", ".join(
     f"MIN(('0x' || substr(md5('{i // 2}:' || shingle), {1 if i % 2 == 0 else 16}, 15))::BIGINT) AS h{i}"
     for i in range(_N_HASHES)
@@ -158,13 +164,7 @@ def ngram_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "replaces all-pairs with an equi-join.",
 )
 def minhash_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    # one cached shingle scan feeds signatures AND both verify-set joins
-    # (r16, _shared_shingle_frames)
-    sets, shingled, _ = _shared_shingle_frames(docs)
-    sigs = minhash_signatures(shingled, n_hashes=_N_HASHES)
-    cands = lsh_candidate_pairs(sigs, n_hashes=_N_HASHES, bands=_BANDS)
-    return verify_jaccard(cands, shingled, threshold=0.7, sets=sets)
+    return _minhash_pairs(_cached_sets(load_table(spark, sf_dir, "documents")))
 
 
 # the verified MinHash-LSH pair set, as reusable CTE text (identical to the
@@ -214,16 +214,8 @@ pairs AS (
     "CTE.",
 )
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     docs = load_table(spark, sf_dir, "documents")
-    sets, shingled, _ = _shared_shingle_frames(docs)
-    sigs = minhash_signatures(shingled, n_hashes=_N_HASHES)
-    cands = lsh_candidate_pairs(sigs, n_hashes=_N_HASHES, bands=_BANDS)
-    pairs = verify_jaccard(cands, shingled, threshold=0.7, sets=sets).select(
-        "id_a", "id_b"
-    )
-    cc = connected_components(pairs)
+    cc = connected_components(_minhash_pairs(_cached_sets(docs)).select("id_a", "id_b"))
     return cc.select(
         "doc_id",
         "cluster_id",
@@ -260,15 +252,8 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=False,  # re-runs the CC iterations; near_dup_clusters already benches them
 )
 def dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     docs = load_table(spark, sf_dir, "documents")
-    sets, shingled, _ = _shared_shingle_frames(docs)
-    sigs = minhash_signatures(shingled, n_hashes=_N_HASHES)
-    cands = lsh_candidate_pairs(sigs, n_hashes=_N_HASHES, bands=_BANDS)
-    pairs = verify_jaccard(cands, shingled, threshold=0.7, sets=sets).select(
-        "id_a", "id_b"
-    )
+    pairs = _minhash_pairs(_cached_sets(docs)).select("id_a", "id_b")
     drop = (
         connected_components(pairs)
         .where(F.col("doc_id") != F.col("cluster_id"))
@@ -277,11 +262,8 @@ def dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.join(F.broadcast(drop), "doc_id", "left_anti").select("doc_id", "lang")
 
 
-@register(
-    "simhash_near_dup",
-    f"""
-    WITH shingled AS ({_SHINGLED_SQL}),
-    sums AS (
+# per-doc SimHash over `shingled`: the bits operators.dedup.simhash computes
+_SIMHASH_CTES = f"""sums AS (
       SELECT doc_id,
              {", ".join(
                  f"SUM(((('0x' || substr(md5(shingle), 9, 8))::BIGINT >> {j}) & 1) * 2 - 1) AS s{j}"
@@ -293,7 +275,14 @@ def dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id,
              ({" + ".join(f"CASE WHEN s{j} > 0 THEN {1 << j} ELSE 0 END" for j in range(32))})::BIGINT AS simhash
       FROM sums
-    )
+    )"""
+
+
+@register(
+    "simhash_near_dup",
+    f"""
+    WITH shingled AS ({_SHINGLED_SQL}),
+    {_SIMHASH_CTES}
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            bit_count(xor(a.simhash, b.simhash)) AS hamming
     FROM sims a JOIN sims b ON a.doc_id < b.doc_id
@@ -304,11 +293,10 @@ def dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # fan_out: the per-posting md5 + 32 conditional sums run before the
-    # SimHash agg exchange, i.e. at scan parallelism (r16 session 4,
-    # guide §2.2; interleaved A/B 2.54 -> 2.26 s min-of-3)
-    sims = simhash(with_shingles(fan_out(docs)))
-    return simhash_pairs(sims, max_hamming=3)
+    # fan_out: the md5 kernel runs map-side, at the scan's parallelism
+    # unless the one-row-group file is spread first (r16 session 4,
+    # guide §2.2)
+    return simhash_pairs(simhash(shingle_sets(fan_out(docs))), max_hamming=3)
 
 
 # --- incremental batch dedup vs a persisted corpus index ----------------------
@@ -316,13 +304,25 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _INCR_THR = 0.7
 
 
+def _history_band_index(spark: SparkSession, sf_dir: str, history: DataFrame) -> DataFrame:
+    """The persisted LSH band index of the fixture's history docs
+    (artifacts/lsh_band_index, keyed by the documents fingerprint)."""
+    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    return load_or_build_band_index(
+        spark,
+        shingle_sets(history),
+        cache_dir=os.path.join(repo_root, "artifacts", "lsh_band_index"),
+        fingerprint=_documents_fingerprint(sf_dir),
+        n_hashes=_N_HASHES,
+        bands=_BANDS,
+    )
+
+
 def _documents_fingerprint(sf_dir: str) -> str:
     """Cache key for the persisted band index: md5 of the documents parquet
     bytes (content-based, same contract as the IVF codebook fingerprint --
     a regenerated-but-identical fixture reuses the artifact, any content
     change rebuilds it)."""
-    import os
-
     from rlink_rs_spark.tables import content_fingerprint
 
     return content_fingerprint(os.path.join(sf_dir, "documents.parquet"))
@@ -378,7 +378,7 @@ def incremental_batch_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
          history hash set (at scale: a broadcast of hashes, or a shuffle
          anti-join above broadcast size), plus a first-in-batch window so
          in-batch exact dups keep one winner.
-      2. NEAR: the batch computes MinHash signatures for ITS OWN rows only
+      2. NEAR: the batch computes MinHash bands for ITS OWN rows only
          and equi-joins the persisted band index of history
          (load_or_build_band_index artifact) union a within-batch band
          self-join; candidates verify at exact Jaccard >= 0.7.
@@ -386,15 +386,9 @@ def incremental_batch_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: per batch, history contributes only index reads (band-pruned
     equi-join) + shingle-set lookups for verified candidates; the full
     corpus is never re-scanned. Output: one verdict row per batch doc."""
-    import os
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from rlink_rs_spark.operators.dedup import (
-        band_signatures,
-        load_or_build_band_index,
-    )
     docs = load_table(spark, sf_dir, "documents")
     history = docs.where(F.col("doc_id") % 4 != 0)
     batch = docs.where(F.col("doc_id") % 4 == 0)
@@ -416,27 +410,13 @@ def incremental_batch_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # near stage: persisted history index + in-batch self join
-    shingled_all = with_shingles(docs)
-    hist_sh = with_shingles(history)
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    hist_banded = load_or_build_band_index(
-        spark,
-        hist_sh,
-        cache_dir=os.path.join(repo_root, "artifacts", "lsh_band_index"),
-        fingerprint=_documents_fingerprint(sf_dir),
-        n_hashes=_N_HASHES,
-        bands=_BANDS,
-    )
-    # batch signatures compute ONCE (shingle + md5 over the batch is the
-    # expensive map side) and feed BOTH candidate joins; cache() because the
-    # banded table is consumed by two joins in one action. fan_out first
+    hist_banded = _history_band_index(spark, sf_dir, history)
+    # the batch band table computes ONCE (shingle + md5 over the batch is
+    # the expensive map side) and feeds BOTH candidate joins; cache()
+    # because it is consumed by two joins in one action. fan_out first
     # (r16 session 4, guide §2.2): the one-row-group scan otherwise pins
-    # the whole signature map to a single task.
-    batch_banded = band_signatures(
-        minhash_signatures(with_shingles(fan_out(batch)), n_hashes=_N_HASHES),
-        n_hashes=_N_HASHES,
-        bands=_BANDS,
-    ).cache()
+    # the whole hash kernel to a single task.
+    batch_banded = minhash_bands(shingle_sets(fan_out(batch)), _N_HASHES, _BANDS).cache()
     bb = batch_banded.select(
         F.col("doc_id").alias("id_a"), F.col("band").alias("band"), F.col("sig").alias("sig")
     )
@@ -456,14 +436,8 @@ def incremental_batch_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     cands = cands_hist.unionByName(cands_batch).distinct()
-    # cached: the map-side sets frame feeds BOTH verify join sides (r16,
-    # _shared_shingle_frames rationale; fan_out so the cache build is not
-    # a single scan task)
     near = (
-        verify_jaccard(
-            cands, shingled_all, threshold=_INCR_THR,
-            sets=shingle_sets(fan_out(docs)).cache(),
-        )
+        verify_jaccard(cands, _cached_sets(docs), threshold=_INCR_THR)
         .groupBy(F.col("id_a").alias("doc_id"))
         .agg(F.min("id_b").alias("near_dup_of"))
     )
@@ -507,10 +481,8 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id" for ANY doc_id-ordered chunking), so the shared batch-twin
     oracle is untouched. Deeper epoch chains stay exercised by the
     kill/resume and compaction suites."""
-    import os
     import tempfile
 
-    from rlink_rs_spark.operators.dedup import load_or_build_band_index
     from rlink_rs_spark.streaming.dedup import (
         read_verdicts,
         streaming_incremental_dedup_sink,
@@ -519,15 +491,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     history = docs.where(F.col("doc_id") % 4 != 0)
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    hist_banded = load_or_build_band_index(
-        spark,
-        with_shingles(history),
-        cache_dir=os.path.join(repo_root, "artifacts", "lsh_band_index"),
-        fingerprint=_documents_fingerprint(sf_dir),
-        n_hashes=_N_HASHES,
-        bands=_BANDS,
-    )
+    hist_banded = _history_band_index(spark, sf_dir, history)
     src = file_stream(
         spark, sf_dir, "documents", max_files_per_trigger=1, chunks=2, order_col="doc_id"
     ).where(F.col("doc_id") % 4 == 0)
@@ -537,16 +501,13 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         src,
         history,
         hist_banded,
-        with_shingles(docs),
+        shingle_sets(docs),
         work_dir=work_dir,
         checkpoint=tempfile.mkdtemp(prefix="rlink_sdedup_ck_"),
         threshold=_INCR_THR,
         n_hashes=_N_HASHES,
         bands=_BANDS,
         static_frames_out=statics,
-        # map-side static build only (r16): the per-epoch cache variants
-        # that came with this seam in pass 1 measured slower and are gone
-        corpus_sets_df=shingle_sets(docs),
     )
     try:
         drain(q, what="streaming_incremental_dedup")
@@ -696,17 +657,15 @@ def lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     S-curve measures production behavior. At 100 TB only the LSH side
     scales; the exact side is the audit you run on a SAMPLE -- the report
     shape is identical either way."""
-    docs = load_table(spark, sf_dir, "documents")
-    # one cached shingle scan feeds exact pair counts, size joins,
-    # signatures AND verify sets (r16, _shared_shingle_frames)
-    sets, shingled, sizes = _shared_shingle_frames(docs)
+    # one cached shingle scan feeds exact pair counts, size joins, the
+    # hash kernel AND verify sets (r16, _cached_sets)
+    sets = _cached_sets(load_table(spark, sf_dir, "documents"))
+    sizes = sets.select("doc_id", F.size("sh").cast("long").alias("n"))
     exact = ngram_jaccard_pairs(
-        shingled, threshold=_LSH_EVAL_THR, max_df=_MAX_DF, sizes=sizes
+        sets_to_postings(sets), threshold=_LSH_EVAL_THR, max_df=_MAX_DF, sizes=sizes
     )
-    sigs = minhash_signatures(shingled, n_hashes=_N_HASHES)
-    cands = lsh_candidate_pairs(sigs, n_hashes=_N_HASHES, bands=_BANDS)
     lsh = (
-        verify_jaccard(cands, shingled, threshold=_LSH_EVAL_THR, sets=sets)
+        _minhash_pairs(sets, threshold=_LSH_EVAL_THR)
         .select("id_a", "id_b")
         .withColumn("hit", F.lit(1))
     )
@@ -757,12 +716,7 @@ def source_leakage_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair list is orders of magnitude smaller than the corpus, so the
     lookups broadcast the PAIR side, never the corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    sets, shingled, _ = _shared_shingle_frames(docs)
-    sigs = minhash_signatures(shingled, n_hashes=_N_HASHES)
-    cands = lsh_candidate_pairs(sigs, n_hashes=_N_HASHES, bands=_BANDS)
-    pairs = verify_jaccard(cands, shingled, threshold=0.7, sets=sets).select(
-        "id_a", "id_b"
-    )
+    pairs = _minhash_pairs(_cached_sets(docs)).select("id_a", "id_b")
     src = docs.select("doc_id", "source")
     j = (
         pairs.join(src.select(F.col("doc_id").alias("id_a"), F.col("source").alias("sa")), "id_a")

@@ -294,11 +294,7 @@ def streaming_intake_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from rlink_rs_spark.operators.dedup import (
-        load_or_build_band_index,
-        shingle_sets,
-        with_shingles,
-    )
+    from rlink_rs_spark.operators.dedup import shingle_sets
     from rlink_rs_spark.operators.lm import (
         load_or_train_lm_lut,
         normalize_expr,
@@ -309,6 +305,7 @@ def streaming_intake_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         _INCR_THR,
         _N_HASHES,
         _documents_fingerprint,
+        _history_band_index,
     )
     from rlink_rs_spark.streaming.dedup import (
         read_verdicts,
@@ -320,14 +317,7 @@ def streaming_intake_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     history = docs.where(F.col("doc_id") % 4 != 0)
     repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     fp = _documents_fingerprint(sf_dir)
-    hist_banded = load_or_build_band_index(
-        spark,
-        with_shingles(history),
-        cache_dir=os.path.join(repo_root, "artifacts", "lsh_band_index"),
-        fingerprint=fp,
-        n_hashes=_N_HASHES,
-        bands=_BANDS,
-    )
+    hist_banded = _history_band_index(spark, sf_dir, history)
     lut, pre_lut = load_or_train_lm_lut(
         spark,
         bigram_rows(docs.where((F.col("lang") == "en") & (F.col("doc_id") % 4 != 0))),
@@ -356,7 +346,7 @@ def streaming_intake_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         src,
         history,
         hist_banded,
-        with_shingles(docs),
+        shingle_sets(docs),
         work_dir=work_dir,
         checkpoint=tempfile.mkdtemp(prefix="rlink_intake_ck_"),
         threshold=_INCR_THR,
@@ -364,7 +354,6 @@ def streaming_intake_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=_BANDS,
         score_fn=score_fn,
         static_frames_out=statics,
-        corpus_sets_df=shingle_sets(docs),
     )
     try:
         drain(q, what="streaming_intake_pipeline")

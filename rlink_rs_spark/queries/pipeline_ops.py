@@ -663,7 +663,7 @@ _DSIR_BUCKETS = 128
 _DSIR_SCALE = 1_000_000
 
 # Hashed-feature bucket for one normalized character bigram (the repo's
-# engine-neutral md5 hash32 idiom).
+# engine-neutral 32-bit md5 slice, hex chars 9-16).
 _DSIR_BUCKET_SPARK = "CAST(conv(substring(md5(bg), 9, 8), 16, 10) AS BIGINT) % {b}"
 _DSIR_BUCKET_DUCK = "('0x' || substr(md5(bg), 9, 8))::BIGINT % {b}"
 

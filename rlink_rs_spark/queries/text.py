@@ -144,9 +144,10 @@ def token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # 60-bit-safe polynomial rolling hash over whitespace tokens: fold
-# acc = (acc * 31 + hash32(token)) mod 2^31-1. Token hashes are the
-# engine-neutral md5-derived hash32, the fold is exact BIGINT arithmetic
-# (max intermediate ~2^36), so both engines produce identical fingerprints.
+# acc = (acc * 31 + h(token)) mod 2^31-1. Token hashes are the
+# engine-neutral 32-bit md5 slice (hex chars 9-16), the fold is exact
+# BIGINT arithmetic (max intermediate ~2^36), so both engines produce
+# identical fingerprints.
 _RH_MOD = 2_147_483_647
 _RH_HASH32_SPARK = "CAST(conv(substring(md5(t), 9, 8), 16, 10) AS BIGINT)"
 _RH_HASH32_DUCK = "('0x' || substr(md5(t), 9, 8))::BIGINT"
@@ -855,8 +856,8 @@ def clean_normalize_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _WS_TOP_K = 20
 
-# Efraimidis–Spirakis A-ES key pow(u, 1/w): u derived from the salted md5
-# hash32 of the doc id (deterministic across runs/engines/partitionings,
+# Efraimidis–Spirakis A-ES key pow(u, 1/w): u derived from the salted
+# 32-bit md5 slice (hex chars 9-16) of the doc id (deterministic across runs/engines/partitionings,
 # like the other sampling primitives), w = n_chars. Rounded to integer
 # nano-units before ranking so cross-engine POW ulp drift cannot reorder.
 _WS_KEY = (

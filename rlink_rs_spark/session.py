@@ -49,10 +49,13 @@ def get_spark(
         # 8g benchmarked stall-free across the full query registry. Raise
         # via SPARK_GRAFT_DRIVER_MEM for genuinely larger local datasets.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # generated methods from wide expressions (minhash aggs, simhash bit
-        # sums) overflow the default 240m code cache;
-        # once full, HotSpot disables the JIT and every later query runs
-        # interpreted (measured 100x slowdowns). Reserve enough to never hit it.
+        # a long multi-query session (the bench board's chunk JVMs, a full
+        # oracle sweep) compiles tens of thousands of generated methods: the
+        # 197-query sf0.01 sweep in one JVM peaks at 136 MB of the default
+        # 240m code cache (profiled tier 88 of its 117 MB), with no single
+        # wide expression left to blame. Once full, HotSpot disables the JIT
+        # and every later query runs interpreted (measured 100x slowdowns).
+        # Reserve enough to never hit it.
         .config(
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",

@@ -29,7 +29,7 @@ Per micro-batch (foreachBatch, availableNow):
      `load_or_build_band_index` artifact -- history is never re-shingled),
      (b) the band signatures of all previously processed stream docs
      (epoch state), and (c) itself (id_b < id_a). Candidates verify at
-     exact Jaccard >= threshold against the static shingle postings.
+     exact Jaccard >= threshold against the static corpus shingle sets.
   3. Verdicts land in `out_dir/batch_id=N`, and the batch's hashes + band
      signatures land in the state dirs under `batch_id=N` -- OVERWRITE per
      epoch, so a replayed micro-batch after a crash rewrites byte-identical
@@ -74,11 +74,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from rlink_rs_spark.operators.dedup import (
-    band_signatures,
-    minhash_signatures,
+    _BAND_SCHEMA,
+    minhash_bands,
+    shingle_sets,
     verify_jaccard,
-    with_shingles,
 )
+from rlink_rs_spark.operators.repartition import fan_out
 from rlink_rs_spark.streaming.deltas import compact, gc_folded, read_state
 from rlink_rs_spark.streaming.epochs import committed, crash_once, path, read, start
 from rlink_rs_spark.streaming.runner import drain_timeout
@@ -102,7 +103,6 @@ def dedup_stream(
 
 
 _HASH_SCHEMA = "doc_id bigint, h string"
-_BAND_SCHEMA = "doc_id bigint, band int, sig string"
 _OUT_SCHEMA = "doc_id bigint, exact_dup boolean, near_dup_of bigint, admit boolean"
 _OUT_SCHEMA_Q = (
     "doc_id bigint, passes_quality boolean, exact_dup boolean, "
@@ -133,7 +133,7 @@ def streaming_incremental_dedup_sink(
     doc_stream: DataFrame,
     history: DataFrame,
     hist_banded: DataFrame,
-    shingled_all: DataFrame,
+    corpus_sets: DataFrame,
     work_dir: str,
     checkpoint: str,
     threshold: float = 0.7,
@@ -144,14 +144,15 @@ def streaming_incremental_dedup_sink(
     compact_every: int = 8,
     crash_in_compaction_at: int | None = None,
     static_frames_out: list | None = None,
-    corpus_sets_df: DataFrame | None = None,
 ):
     """Wire the admit pipeline as a foreachBatch sink over `doc_stream`
-    (columns doc_id, text, ...). Returns the started StreamingQuery;
-    verdicts accumulate under `<work_dir>/out`. `crash_at_epoch` raises
-    mid-epoch BEFORE any state commit on the FIRST attempt only -- the
-    kill/resume test hook (a marker file records the crash so the resumed
-    run proceeds).
+    (columns doc_id, text, ...). `hist_banded` is the history band index
+    (load_or_build_band_index) and `corpus_sets` the (doc_id, sh) shingle
+    sets (operators.dedup.shingle_sets) of every doc a candidate can name.
+    Returns the started StreamingQuery; verdicts accumulate under
+    `<work_dir>/out`. `crash_at_epoch` raises mid-epoch BEFORE any state
+    commit on the FIRST attempt only -- the kill/resume test hook (a
+    marker file records the crash so the resumed run proceeds).
 
     `score_fn` (optional) turns this into the FULL intake pipeline: a
     callable mapping the raw micro-batch to (doc_id, passes boolean) --
@@ -179,28 +180,12 @@ def streaming_incremental_dedup_sink(
     # dominated fixture-scale wall clock; at 100 TB these are the
     # persisted shingle-set / hash-set artifacts next to the band index).
     hist_hashes = history.select(F.md5("text").alias("h")).distinct().cache()
-    # ``corpus_sets_df`` (r16, guide §2.3): callers holding the docs table
-    # pass operators.dedup.shingle_sets(docs) -- the map-side per-doc
-    # distinct-array projection -- so this static materializes from one
-    # zero-exchange corpus scan instead of explode + posting shuffle +
-    # collect_set (isolated interleaved A/B: 0.62 -> 0.39 s min-of-5; the
-    # per-epoch caches that rode along with this swap in an earlier cut
-    # measured SLOWER and are NOT part of it). Same (doc_id, set) content
-    # -- array order differs, and every consumer is order-insensitive
-    # (verify_jaccard set sizes/intersections). Fallback keeps the
-    # grouped build for callers that only hold the exploded frame.
     # fan_out before the cache (r16 session 4, guide §2.2): the map-side
     # sets projection inherits the docs scan's partitioning, and a one-
     # row-group fixture file would pin the cache build AND every cached-
     # downstream verify join to one task; the layout guard no-ops on
-    # genuinely parallel scans. The grouped fallback already exchanges.
-    from rlink_rs_spark.operators.repartition import fan_out
-
-    corpus_sets = (
-        fan_out(corpus_sets_df)
-        if corpus_sets_df is not None
-        else shingled_all.groupBy("doc_id").agg(F.collect_set("shingle").alias("sh"))
-    ).cache()
+    # genuinely parallel scans.
+    corpus_sets = fan_out(corpus_sets).cache()
     if static_frames_out is not None:
         # hand the cached frames back so the caller can unpersist after the
         # drain (identical re-built plans land on the same cache entries,
@@ -241,9 +226,9 @@ def streaming_incremental_dedup_sink(
         crash_once(work_dir, "mid-compaction", epoch_id, crash_in_compaction_at)
         compact(spark, band_dir, _BAND_SCHEMA, epoch_id, compact_every)
 
-        # fan_out the micro-batch before caching: the per-epoch MinHash
-        # signature map (8 md5s per posting) otherwise runs at the file
-        # chunk's scan parallelism -- one task per trigger file.
+        # fan_out the micro-batch before caching: the per-epoch md5 kernel
+        # otherwise runs at the file chunk's scan parallelism -- one task
+        # per trigger file.
         batch = fan_out(batch_df.select("doc_id", "text")).cache()
 
         # --- exact stage
@@ -262,11 +247,7 @@ def streaming_incremental_dedup_sink(
         )
 
         # --- near stage
-        batch_banded = band_signatures(
-            minhash_signatures(with_shingles(batch), n_hashes=n_hashes),
-            n_hashes=n_hashes,
-            bands=bands,
-        ).cache()
+        batch_banded = minhash_bands(shingle_sets(batch), n_hashes, bands).cache()
         prior_bands = read_state(spark, band_dir, _BAND_SCHEMA, epoch_id)
         bb = batch_banded.select(F.col("doc_id").alias("id_a"), "band", "sig")
         earlier = hist_banded.unionByName(prior_bands).select(
@@ -283,7 +264,7 @@ def streaming_incremental_dedup_sink(
         )
         cands = cands_prior.unionByName(cands_self).distinct()
         near = (
-            verify_jaccard(cands, shingled_all, threshold=threshold, sets=corpus_sets)
+            verify_jaccard(cands, corpus_sets, threshold=threshold)
             .groupBy(F.col("id_a").alias("doc_id"))
             .agg(F.min("id_b").alias("near_dup_of"))
         )

@@ -410,9 +410,9 @@ def test_salted_band_join_handles_hot_bucket(spark):
     from rlink_rs_spark.operators.dedup import (
         _salt,
         lsh_candidate_pairs,
-        minhash_signatures,
+        minhash_bands,
+        shingle_sets,
         verify_jaccard,
-        with_shingles,
     )
 
     hot = [(i, "the same boilerplate legal disclaimer text appears here verbatim")
@@ -420,12 +420,12 @@ def test_salted_band_join_handles_hot_bucket(spark):
     cold = [(100 + i, f"unique document number {i} with distinct words {i * 7} {i * 13}")
             for i in range(100)]
     docs = spark.createDataFrame(hot + cold, "doc_id long, text string")
-    shingled = with_shingles(docs)
-    sigs = minhash_signatures(shingled)
+    sets = shingle_sets(docs)
+    banded = minhash_bands(sets)
 
     S = 4
-    plain = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(sigs).collect()}
-    salted = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(sigs, salt_buckets=S).collect()}
+    plain = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(banded).collect()}
+    salted = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(banded, salt_buckets=S).collect()}
     assert salted == plain and plain  # identical candidates, pairs exist
 
     # mechanism: per-cell pair counts. The hot bucket holds m=100 docs; the
@@ -444,11 +444,11 @@ def test_salted_band_join_handles_hot_bucket(spark):
     assert max_side * max_side < m * (m - 1) / 2  # max cell work << unsalted hot key
 
     # verify join: salted lookup must equal the plain one
-    cands = lsh_candidate_pairs(sigs)
-    v_plain = {(r.id_a, r.id_b) for r in verify_jaccard(cands, shingled, threshold=0.9).collect()}
+    cands = lsh_candidate_pairs(banded)
+    v_plain = {(r.id_a, r.id_b) for r in verify_jaccard(cands, sets, threshold=0.9).collect()}
     v_salted = {
         (r.id_a, r.id_b)
-        for r in verify_jaccard(cands, shingled, threshold=0.9, salt_buckets=S).collect()
+        for r in verify_jaccard(cands, sets, threshold=0.9, salt_buckets=S).collect()
     }
     assert v_salted == v_plain and v_plain  # the 100 identical docs all verify
 
@@ -461,8 +461,8 @@ def test_auto_salt_heuristic(spark):
     from rlink_rs_spark.operators.dedup import (
         auto_salt_buckets,
         lsh_candidate_pairs,
-        minhash_signatures,
-        with_shingles,
+        minhash_bands,
+        shingle_sets,
     )
 
     hot = [(i, "the same boilerplate legal disclaimer text appears here verbatim")
@@ -470,39 +470,21 @@ def test_auto_salt_heuristic(spark):
     cold = [(100 + i, f"unique document number {i} with distinct words {i * 7} {i * 13}")
             for i in range(100)]
     docs = spark.createDataFrame(hot + cold, "doc_id long, text string")
-    sigs = minhash_signatures(with_shingles(docs))
+    banded = minhash_bands(shingle_sets(docs))
 
     # uniform threshold: hottest bucket (100 docs) is under the default 1024
     plain_salt = {}
-    plain = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(sigs, salt_buckets="auto", salt_out=plain_salt).collect()}
+    plain = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(banded, salt_buckets="auto", salt_out=plain_salt).collect()}
     assert plain_salt["salt_buckets"] == 1
 
     # a task-sized threshold below the hot bucket must trigger salting; call
     # the helper directly with a low threshold to avoid building a 2000-doc
     # fixture -- the decision rule, not the corpus size, is under test
-    from pyspark.sql import functions as FF
-
-    banded = sigs.select(
-        "doc_id",
-        FF.explode(
-            FF.array(
-                *[
-                    FF.struct(
-                        FF.lit(b).alias("band"),
-                        FF.concat_ws(
-                            ",", *[FF.col(f"h{b * 4 + r}").cast("string") for r in range(4)]
-                        ).alias("sig"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bs"),
-    ).select("doc_id", "bs.band", "bs.sig")
     s = auto_salt_buckets(banded, hot_threshold=50, target_cell=25)
     assert s > 1
 
     # and salted output at that S matches the unsalted candidates exactly
-    salted = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(sigs, salt_buckets=s).collect()}
+    salted = {(r.id_a, r.id_b) for r in lsh_candidate_pairs(banded, salt_buckets=s).collect()}
     assert salted == plain and plain
 
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from rlink_rs_spark.streaming.stateful import fold_alert_cents
@@ -502,6 +502,55 @@ def test_shingle_sets_match_grouped_collect_set(spark, edge_tables):
         assert {d: n for d, n in sizes.items() if n} == want
         row = shingle_sizes(df, k=k).schema["n"]
         assert row.dataType.typeName() == "long"
+
+
+# few distinct tokens, so docs repeat shingles; multi-byte UTF-8; "" makes
+# a double space (an empty token)
+_HASH_TOKENS = ["a", "b", "é", "日本", "🙂", "Zß", "x1", ""]
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    texts=st.lists(
+        st.one_of(st.none(), st.lists(st.sampled_from(_HASH_TOKENS), max_size=9).map(" ".join)),
+        min_size=1,
+        max_size=8,
+    )
+)
+@example(texts=["é 日本 🙂 a b", None, "", "a b", "a a a a a a", "Zß 日本 Zß 日本 Zß"])
+def test_hash_kernel_bits_equal_oracle_text(spark, texts):
+    """The md5 kernel's MinHash band table and SimHash column equal
+    DuckDB's evaluation of the oracle text over the same rows, bit for
+    bit -- including null and empty text and docs with fewer than k
+    tokens, which have no shingles and so no row on either side."""
+    from rlink_rs_spark.operators.dedup import minhash_bands, shingle_sets, simhash
+    from rlink_rs_spark.queries.dedup import (
+        _BAND_SELECTS_SQL,
+        _MINHASH_AGGS_SQL,
+        _SHINGLED_SQL,
+        _SIMHASH_CTES,
+    )
+
+    import pandas as pd
+
+    rows = list(enumerate(texts))
+    # from pandas: the rows reach the JVM as Arrow, with no Python source
+    # task per job; two partitions give the kernel several docs per batch
+    # and more than one batch
+    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
+    sets = shingle_sets(spark.createDataFrame(pdf, "doc_id long, text string").coalesce(2))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    shingled = f"WITH shingled AS ({_SHINGLED_SQL})"
+    want_bands = con.sql(
+        f"{shingled}, sigs AS (SELECT doc_id, {_MINHASH_AGGS_SQL} FROM shingled GROUP BY doc_id), "
+        f"banded AS ({_BAND_SELECTS_SQL}) SELECT doc_id, band, sig FROM banded"
+    ).fetchall()
+    want_sims = con.sql(f"{shingled}, {_SIMHASH_CTES} SELECT doc_id, simhash FROM sims").fetchall()
+
+    assert sorted(tuple(r) for r in minhash_bands(sets).collect()) == sorted(want_bands)
+    assert sorted(tuple(r) for r in simhash(sets).collect()) == sorted(want_sims)
 
 
 def test_bpe_local_training_matches_distributed(spark, sf_dir, monkeypatch):

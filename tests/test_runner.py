@@ -133,7 +133,7 @@ def _run_dedup_sink(spark, sf_dir, tag: str):
     """Drain the incremental dedup sink over a two-chunk sf documents replay
     and check every streamed doc got one verdict."""
     import rlink_rs_spark.streaming.dedup as sdedup
-    from rlink_rs_spark.operators.dedup import load_or_build_band_index, with_shingles
+    from rlink_rs_spark.operators.dedup import load_or_build_band_index, shingle_sets
     from rlink_rs_spark.queries.dedup import _BANDS, _INCR_THR, _N_HASHES, _documents_fingerprint
     from rlink_rs_spark.streaming.sources import stage_stream_dir, stream_from_staged
     from rlink_rs_spark.tables import load_table
@@ -143,7 +143,7 @@ def _run_dedup_sink(spark, sf_dir, tag: str):
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     hist_banded = load_or_build_band_index(
         spark,
-        with_shingles(history),
+        shingle_sets(history),
         cache_dir=os.path.join(repo_root, "artifacts", "lsh_band_index"),
         fingerprint=_documents_fingerprint(sf_dir),
         n_hashes=_N_HASHES,
@@ -158,7 +158,7 @@ def _run_dedup_sink(spark, sf_dir, tag: str):
         streamed,
         history,
         hist_banded,
-        with_shingles(docs),
+        shingle_sets(docs),
         work_dir=work_dir,
         checkpoint=tempfile.mkdtemp(prefix=f"rlink_sdedup_{tag}_ck_"),
         threshold=_INCR_THR,

@@ -41,7 +41,7 @@ def _epoch_medians(durs: list[float]) -> tuple[float, float]:
 
 
 def test_soak_intake_dedup_100_epochs(spark, sf_dir):
-    from rlink_rs_spark.operators.dedup import load_or_build_band_index, with_shingles
+    from rlink_rs_spark.operators.dedup import load_or_build_band_index, shingle_sets
     from rlink_rs_spark.queries import REGISTRY
     from rlink_rs_spark.queries.dedup import (
         _BANDS,
@@ -61,7 +61,7 @@ def test_soak_intake_dedup_100_epochs(spark, sf_dir):
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     hist_banded = load_or_build_band_index(
         spark,
-        with_shingles(history),
+        shingle_sets(history),
         cache_dir=os.path.join(repo_root, "artifacts", "lsh_band_index"),
         fingerprint=_documents_fingerprint(sf_dir),
         n_hashes=_N_HASHES,
@@ -81,7 +81,7 @@ def test_soak_intake_dedup_100_epochs(spark, sf_dir):
             src,
             history,
             hist_banded,
-            with_shingles(docs),
+            shingle_sets(docs),
             work_dir=work_dir,
             checkpoint=ck,
             threshold=_INCR_THR,

@@ -1372,7 +1372,7 @@ def test_streaming_incremental_dedup_crash_resume_matches_batch_twin(spark, sf_d
     across a restart."""
     import os
 
-    from rlink_rs_spark.operators.dedup import load_or_build_band_index, with_shingles
+    from rlink_rs_spark.operators.dedup import load_or_build_band_index, shingle_sets
     from rlink_rs_spark.queries import REGISTRY
     from rlink_rs_spark.queries.dedup import (
         _BANDS,
@@ -1391,7 +1391,7 @@ def test_streaming_incremental_dedup_crash_resume_matches_batch_twin(spark, sf_d
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     hist_banded = load_or_build_band_index(
         spark,
-        with_shingles(history),
+        shingle_sets(history),
         cache_dir=os.path.join(repo_root, "artifacts", "lsh_band_index"),
         fingerprint=_documents_fingerprint(sf_dir),
         n_hashes=_N_HASHES,
@@ -1409,7 +1409,7 @@ def test_streaming_incremental_dedup_crash_resume_matches_batch_twin(spark, sf_d
             src,
             history,
             hist_banded,
-            with_shingles(docs),
+            shingle_sets(docs),
             work_dir=work_dir,
             checkpoint=ck,
             threshold=_INCR_THR,
@@ -1560,7 +1560,7 @@ def test_streaming_intake_score_seam_crash_resume(spark, sf_dir):
 
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from rlink_rs_spark.operators.dedup import load_or_build_band_index, with_shingles
+    from rlink_rs_spark.operators.dedup import load_or_build_band_index, shingle_sets
     from rlink_rs_spark.queries import REGISTRY
     from rlink_rs_spark.queries.dedup import (
         _BANDS,
@@ -1579,7 +1579,7 @@ def test_streaming_intake_score_seam_crash_resume(spark, sf_dir):
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     hist_banded = load_or_build_band_index(
         spark,
-        with_shingles(history),
+        shingle_sets(history),
         cache_dir=os.path.join(repo_root, "artifacts", "lsh_band_index"),
         fingerprint=_documents_fingerprint(sf_dir),
         n_hashes=_N_HASHES,
@@ -1600,7 +1600,7 @@ def test_streaming_intake_score_seam_crash_resume(spark, sf_dir):
             src,
             history,
             hist_banded,
-            with_shingles(docs),
+            shingle_sets(docs),
             work_dir=work_dir,
             checkpoint=ck,
             threshold=_INCR_THR,
@@ -1742,7 +1742,7 @@ def test_streaming_dedup_compaction_crash_resume(spark, sf_dir):
     a committed base_upto dir present and the covered deltas GC'd."""
     import os
 
-    from rlink_rs_spark.operators.dedup import load_or_build_band_index, with_shingles
+    from rlink_rs_spark.operators.dedup import load_or_build_band_index, shingle_sets
     from rlink_rs_spark.queries import REGISTRY
     from rlink_rs_spark.queries.dedup import (
         _BANDS,
@@ -1762,7 +1762,7 @@ def test_streaming_dedup_compaction_crash_resume(spark, sf_dir):
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     hist_banded = load_or_build_band_index(
         spark,
-        with_shingles(history),
+        shingle_sets(history),
         cache_dir=os.path.join(repo_root, "artifacts", "lsh_band_index"),
         fingerprint=_documents_fingerprint(sf_dir),
         n_hashes=_N_HASHES,
@@ -1780,7 +1780,7 @@ def test_streaming_dedup_compaction_crash_resume(spark, sf_dir):
             src,
             history,
             hist_banded,
-            with_shingles(docs),
+            shingle_sets(docs),
             work_dir=work_dir,
             checkpoint=ck,
             threshold=_INCR_THR,
