@@ -473,8 +473,8 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     its LLM-pipeline extras should stream too. The intake pipeline from
     streaming/dedup.py: history is an on-disk artifact (never re-shingled),
     per-epoch state makes earlier stream docs visible to later ones, and a
-    crash between epochs resumes exactly-once (tests/test_streaming.py
-    kill/resume witness). Replayed in 2 doc_id-ordered chunks so state
+    crash at any write of an epoch resumes exactly-once
+    (tests/test_crash_matrix.py). Replayed in 2 doc_id-ordered chunks so state
     genuinely carries across micro-batches while the fixture-scale run
     pays the per-epoch constant (state reads + 3 commits) only twice;
     verdicts are chunk-count-invariant ("previously processed" == "smaller

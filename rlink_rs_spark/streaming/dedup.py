@@ -46,8 +46,8 @@ admitted batches (bounded by corpus size / 4 bands, not by stream length);
 the static corpus contributes only band-index reads and shingle lookups for
 verified candidates.
 
-Compaction (LSM level-0 fold, exercised by
-tests/test_streaming.py::test_streaming_dedup_compaction_crash_resume):
+Compaction (LSM level-0 fold, crashed at every write of a folding
+epoch by tests/test_crash_matrix.py):
 each epoch reads the union of earlier state dirs, so a long-lived stream
 accumulates O(epochs) small dirs. When the committed delta count reaches
 `compact_every`, the epoch folds base + deltas into a new
@@ -63,9 +63,7 @@ watermark; state content is identical before and after a fold.
 
 from __future__ import annotations
 
-import logging
 import os
-import threading
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
@@ -81,8 +79,7 @@ from rlink_rs_spark.operators.dedup import (
 )
 from rlink_rs_spark.operators.repartition import fan_out
 from rlink_rs_spark.streaming.deltas import compact, gc_folded, read_state
-from rlink_rs_spark.streaming.epochs import committed, crash_once, path, read, start
-from rlink_rs_spark.streaming.runner import drain_timeout
+from rlink_rs_spark.streaming.epochs import committed, path, read, start
 
 
 def dedup_stream(
@@ -109,8 +106,6 @@ _OUT_SCHEMA_Q = (
     "near_dup_of bigint, admit boolean"
 )
 
-_log = logging.getLogger(__name__)
-
 
 def _thread_target(spark: SparkSession, fn):
     """`fn` carrying the session's local properties and tags into a worker
@@ -119,14 +114,6 @@ def _thread_target(spark: SparkSession, fn):
     as is, which is what pinned-off threads do anyway."""
     wrap = inheritable_thread_target(spark)
     return fn if wrap is spark else wrap(fn)
-
-
-def _warm(df: DataFrame, what: str) -> None:
-    """Materialize a standing static's cache off the epoch thread."""
-    try:
-        df.count()
-    except Exception:
-        _log.warning("%s cache warm-up failed; epoch 0 builds it inline", what, exc_info=True)
 
 
 def streaming_incremental_dedup_sink(
@@ -139,10 +126,8 @@ def streaming_incremental_dedup_sink(
     threshold: float = 0.7,
     n_hashes: int = 16,
     bands: int = 4,
-    crash_at_epoch: int | None = None,
     score_fn=None,
     compact_every: int = 8,
-    crash_in_compaction_at: int | None = None,
     static_frames_out: list | None = None,
 ):
     """Wire the admit pipeline as a foreachBatch sink over `doc_stream`
@@ -150,9 +135,7 @@ def streaming_incremental_dedup_sink(
     (load_or_build_band_index) and `corpus_sets` the (doc_id, sh) shingle
     sets (operators.dedup.shingle_sets) of every doc a candidate can name.
     Returns the started StreamingQuery; verdicts accumulate under
-    `<work_dir>/out`. `crash_at_epoch` raises mid-epoch BEFORE any state
-    commit on the FIRST attempt only -- the kill/resume test hook (a
-    marker file records the crash so the resumed run proceeds).
+    `<work_dir>/out`.
 
     `score_fn` (optional) turns this into the FULL intake pipeline: a
     callable mapping the raw micro-batch to (doc_id, passes boolean) --
@@ -165,20 +148,19 @@ def streaming_incremental_dedup_sink(
     `compact_every` is the LSM-style fold trigger: once that many delta
     dirs have committed since the last base, the epoch folds them (plus
     the old base) into a new `base_upto=` dir; folded dirs are GC'd at
-    the start of the NEXT epoch. `crash_in_compaction_at` raises BETWEEN
-    the two state dirs' folds (hashes folded, bands not) on the first
-    attempt only -- the mid-compaction kill/resume test hook."""
+    the start of the NEXT epoch."""
     spark = doc_stream.sparkSession
     out_dir = os.path.join(work_dir, "out")
     hash_dir = os.path.join(work_dir, "state_hashes")
     band_dir = os.path.join(work_dir, "state_bands")
 
-    # Static frames every epoch re-reads: materialize ONCE before the
-    # stream starts instead of re-aggregating the standing corpus per
-    # micro-batch (the r12 plan re-ran the corpus shingle collect_set and
-    # the history md5-distinct in every epoch -- a per-epoch constant that
-    # dominated fixture-scale wall clock; at 100 TB these are the
-    # persisted shingle-set / hash-set artifacts next to the band index).
+    # Static frames every epoch re-reads: cache them ONCE for the stream
+    # (epoch 0 materializes them) instead of re-aggregating the standing
+    # corpus per micro-batch (the r12 plan re-ran the corpus shingle
+    # collect_set and the history md5-distinct in every epoch -- a
+    # per-epoch constant that dominated fixture-scale wall clock; at 100 TB
+    # these are the persisted shingle-set / hash-set artifacts next to the
+    # band index).
     hist_hashes = history.select(F.md5("text").alias("h")).distinct().cache()
     # fan_out before the cache (r16 session 4, guide §2.2): the map-side
     # sets projection inherits the docs scan's partitioning, and a one-
@@ -192,38 +174,12 @@ def streaming_incremental_dedup_sink(
         # so callers that skip this never balloon the cache either)
         static_frames_out.extend((hist_hashes, corpus_sets))
 
-    # Warm the two standing statics CONCURRENTLY with stream startup
-    # (guide §2.6 -- overlap independent jobs): the two cache builds are
-    # independent of each other AND of the checkpoint/batch-planning dead
-    # time between .start() and epoch 0, so two background jobs hide most
-    # of their cost. handle() joins these threads, at most drain_timeout()
-    # each, before first use; a failed or still-running warm is harmless
-    # (the epoch's own jobs materialize the cache inline exactly as before)
-    # but is logged.
-    warm_threads = [
-        (what, threading.Thread(target=_thread_target(spark, lambda f=f, w=what: _warm(f, w)),
-                                daemon=True))
-        for what, f in (("history hashes", hist_hashes), ("corpus shingle sets", corpus_sets))
-    ]
-
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        while warm_threads:
-            what, w_t = warm_threads.pop()
-            timeout = drain_timeout()
-            w_t.join(timeout)
-            if w_t.is_alive():
-                _log.warning(
-                    "%s cache warm-up still running after %gs; epoch %d builds it inline",
-                    what, timeout, epoch_id,
-                )
-        crash_once(work_dir, "crashed_once", epoch_id, crash_at_epoch)
-
         # deferred GC of dirs a PRIOR epoch's fold superseded, then this
         # epoch's fold if the committed-delta count reached the trigger
         gc_folded(hash_dir)
         gc_folded(band_dir)
         compact(spark, hash_dir, _HASH_SCHEMA, epoch_id, compact_every)
-        crash_once(work_dir, "mid-compaction", epoch_id, crash_in_compaction_at)
         compact(spark, band_dir, _BAND_SCHEMA, epoch_id, compact_every)
 
         # fan_out the micro-batch before caching: the per-epoch md5 kernel
@@ -319,8 +275,6 @@ def streaming_incremental_dedup_sink(
         batch.unpersist()
         batch_banded.unpersist()
 
-    for _, w_t in warm_threads:
-        w_t.start()
     return start(doc_stream, handle, checkpoint, "update")
 
 

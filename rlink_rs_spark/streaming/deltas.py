@@ -8,9 +8,8 @@ state, O(batch) per epoch) and the result commits as the epoch's dir
 committed deltas IS the final state.
 
 LSM level-0 compaction (shared with streaming/dedup.py, which pioneered
-the protocol; exercised by tests/test_streaming.py::
-test_streaming_dedup_compaction_crash_resume and
-test_delta_sink_compaction_crash_resume): a long-lived stream
+the protocol; crashed at every write of a folding epoch by
+tests/test_crash_matrix.py): a long-lived stream
 accumulates O(epochs) delta dirs, so once the committed delta count
 since the last base reaches `compact_every` the epoch folds base +
 deltas into a new `base_upto=<max folded epoch>` dir -- a DETERMINISTIC
@@ -36,7 +35,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from rlink_rs_spark.streaming.epochs import committed, crash_once, ids, path, read, start
+from rlink_rs_spark.streaming.epochs import committed, ids, path, read, start
 
 _BASE = "base_upto"
 
@@ -102,7 +101,6 @@ def delta_sink(
     checkpoint: str,
     schema: str | None = None,
     compact_every: int | None = None,
-    crash_after_fold_at: int | None = None,
 ):
     """foreachBatch sink writing transform(batch) as the epoch's delta.
     `transform` must be deterministic and batch-local (it sees only the
@@ -110,12 +108,7 @@ def delta_sink(
 
     With `compact_every` set (requires `schema`), each epoch first GCs
     dirs folded by an earlier epoch's base, writes its delta, then folds
-    once the committed delta count reaches the trigger.
-    `crash_after_fold_at` raises AFTER that epoch's fold committed its
-    base but BEFORE the epoch returns (first attempt only) -- the
-    mid-compaction kill/resume test hook: the resumed run must read
-    base + uncovered deltas without double-counting the folded dirs
-    still on disk."""
+    once the committed delta count reaches the trigger."""
     if compact_every is not None and schema is None:
         raise ValueError("compact_every requires schema")
     spark = stream.sparkSession
@@ -128,7 +121,6 @@ def delta_sink(
         transform(batch_df).write.mode("overwrite").parquet(path(state_dir, epoch_id))
         if compact_every is not None:
             compact(spark, state_dir, schema, epoch_id + 1, compact_every)
-            crash_once(state_dir, "_crashed_once", epoch_id, crash_after_fold_at)
 
     return start(stream, handle, checkpoint, "append")
 

@@ -84,15 +84,3 @@ def start(stream: DataFrame, handle, checkpoint: str, mode: str):
         .trigger(availableNow=True)
         .start()
     )
-
-
-def crash_once(work_dir: str, tag: str, epoch: int, at: int | None) -> None:
-    """Kill/resume test hook: raise when `epoch` == `at` on the first attempt
-    only. The marker file ``<work_dir>/<tag>`` records the crash, so the
-    resumed run passes through."""
-    marker = os.path.join(work_dir, tag)
-    if epoch != at or os.path.exists(marker):
-        return
-    with open(marker, "w") as f:
-        f.write(str(epoch))
-    raise RuntimeError(f"injected crash at epoch {epoch} ({tag})")

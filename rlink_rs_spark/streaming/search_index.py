@@ -35,7 +35,6 @@ def streaming_bm25_index_sink(
     state_dir: str,
     checkpoint: str,
     compact_every: int = 8,
-    crash_after_fold_at: int | None = None,
 ):
     """foreachBatch sink appending per-epoch (doc_id, term, tf) deltas,
     folded into a base every `compact_every` epochs. Returns the started
@@ -49,7 +48,6 @@ def streaming_bm25_index_sink(
         checkpoint,
         schema=_TF_SCHEMA,
         compact_every=compact_every,
-        crash_after_fold_at=crash_after_fold_at,
     )
 
 

@@ -133,71 +133,23 @@ def _run_dedup_sink(spark, sf_dir, tag: str):
     """Drain the incremental dedup sink over a two-chunk sf documents replay
     and check every streamed doc got one verdict."""
     import rlink_rs_spark.streaming.dedup as sdedup
-    from rlink_rs_spark.operators.dedup import load_or_build_band_index, shingle_sets
-    from rlink_rs_spark.queries.dedup import _BANDS, _INCR_THR, _N_HASHES, _documents_fingerprint
-    from rlink_rs_spark.streaming.sources import stage_stream_dir, stream_from_staged
     from rlink_rs_spark.tables import load_table
+    from tests.helpers import incremental_dedup_replay
 
-    docs = load_table(spark, sf_dir, "documents")
-    history = docs.where(F.col("doc_id") % 4 != 0)
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    hist_banded = load_or_build_band_index(
-        spark,
-        shingle_sets(history),
-        cache_dir=os.path.join(repo_root, "artifacts", "lsh_band_index"),
-        fingerprint=_documents_fingerprint(sf_dir),
-        n_hashes=_N_HASHES,
-        bands=_BANDS,
-    )
-    staged = stage_stream_dir(sf_dir, "documents", chunks=2, order_col="doc_id")
-    streamed = stream_from_staged(
-        spark, staged, sf_dir, "documents", max_files_per_trigger=1
-    ).where(F.col("doc_id") % 4 == 0)
+    start, _ = incremental_dedup_replay(spark, sf_dir, chunks=2)
     work_dir = tempfile.mkdtemp(prefix=f"rlink_sdedup_{tag}_")
-    q = sdedup.streaming_incremental_dedup_sink(
-        streamed,
-        history,
-        hist_banded,
-        shingle_sets(docs),
-        work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix=f"rlink_sdedup_{tag}_ck_"),
-        threshold=_INCR_THR,
-        n_hashes=_N_HASHES,
-        bands=_BANDS,
-    )
+    q = start(work_dir, tempfile.mkdtemp(prefix=f"rlink_sdedup_{tag}_ck_"))
     drain(q, what=f"{tag} dedup sink")
     verdicts = sdedup.read_verdicts(spark, work_dir)
+    docs = load_table(spark, sf_dir, "documents")
     assert verdicts.count() == docs.where(F.col("doc_id") % 4 == 0).count() > 0
 
 
 def test_dedup_sink_runs_with_pinned_thread_mode_off(spark, sf_dir, monkeypatch):
     """With pinned-thread mode off, inheritable_thread_target(session)
-    returns the session, not a decorator; the dedup sink's warm-up and
-    commit threads must still run."""
+    returns the session, not a decorator; the dedup sink's commit threads
+    must still run."""
     import rlink_rs_spark.streaming.dedup as sdedup
 
     monkeypatch.setattr(sdedup, "inheritable_thread_target", lambda f=None: f)
     _run_dedup_sink(spark, sf_dir, "unpinned")
-
-
-def test_dedup_sink_epoch_survives_a_hung_warm_up(spark, sf_dir, monkeypatch, caplog):
-    """A static warm-up that never finishes costs epoch 0 at most
-    drain_timeout() per static: the epoch builds the cache inline, the sink
-    drains, and the stuck warm-up is logged by name."""
-    import threading
-
-    import rlink_rs_spark.streaming.dedup as sdedup
-
-    gate = threading.Event()
-    monkeypatch.setattr(sdedup, "_warm", lambda df, what: gate.wait(120))
-    monkeypatch.setattr(sdedup, "drain_timeout", lambda: 0.5)
-    try:
-        with caplog.at_level("WARNING", logger=sdedup.__name__):
-            _run_dedup_sink(spark, sf_dir, "hung_warm")
-    finally:
-        gate.set()
-    stuck = [r.getMessage() for r in caplog.records if "still running" in r.getMessage()]
-    assert sorted(m.split(" cache warm-up")[0] for m in stuck) == [
-        "corpus shingle sets",
-        "history hashes",
-    ]

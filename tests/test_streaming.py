@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from rlink_rs_spark.operators.aggregations import count, max_, min_, sum_
 from rlink_rs_spark.plans.pipeline import Pipeline, SlidingEventTimeWindows
-from rlink_rs_spark.streaming.runner import run_to_memory
+from rlink_rs_spark.streaming.runner import drain, run_to_memory
 from rlink_rs_spark.streaming.sources import file_stream, kafka_source_options
 from rlink_rs_spark.tables import load_table
 
@@ -1365,69 +1365,25 @@ def test_transition_pairs_match_batch_lead(spark, sf_dir):
 
 
 def test_streaming_incremental_dedup_crash_resume_matches_batch_twin(spark, sf_dir):
-    """Inject a crash at epoch 2 of the incremental-dedup intake stream,
-    resume from the checkpoint (same work_dir + staged source), and require
-    the drained verdicts to be row-identical to incremental_batch_dedup --
-    proving the per-epoch idempotent state/output commits are exactly-once
-    across a restart."""
-    import os
-
-    from rlink_rs_spark.operators.dedup import load_or_build_band_index, shingle_sets
-    from rlink_rs_spark.queries import REGISTRY
-    from rlink_rs_spark.queries.dedup import (
-        _BANDS,
-        _INCR_THR,
-        _N_HASHES,
-        _documents_fingerprint,
-    )
-    from rlink_rs_spark.streaming.dedup import (
-        read_verdicts,
-        streaming_incremental_dedup_sink,
-    )
-    from rlink_rs_spark.streaming.sources import stage_stream_dir, stream_from_staged
-
-    docs = load_table(spark, sf_dir, "documents")
-    history = docs.where(F.col("doc_id") % 4 != 0)
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    hist_banded = load_or_build_band_index(
-        spark,
-        shingle_sets(history),
-        cache_dir=os.path.join(repo_root, "artifacts", "lsh_band_index"),
-        fingerprint=_documents_fingerprint(sf_dir),
-        n_hashes=_N_HASHES,
-        bands=_BANDS,
-    )
-    staged = stage_stream_dir(sf_dir, "documents", chunks=4, order_col="doc_id")
-    work_dir = tempfile.mkdtemp(prefix="rlink_sdedup_test_")
-    ck = tempfile.mkdtemp(prefix="rlink_sdedup_test_ck_")
-
-    def start(crash_at):
-        src = stream_from_staged(
-            spark, staged, sf_dir, "documents", max_files_per_trigger=1
-        ).where(F.col("doc_id") % 4 == 0)
-        return streaming_incremental_dedup_sink(
-            src,
-            history,
-            hist_banded,
-            shingle_sets(docs),
-            work_dir=work_dir,
-            checkpoint=ck,
-            threshold=_INCR_THR,
-            n_hashes=_N_HASHES,
-            bands=_BANDS,
-            crash_at_epoch=crash_at,
-        )
-
+    """Crash the incremental-dedup intake stream before epoch 2's first
+    write, resume from the checkpoint (same work_dir + staged source), and
+    require the drained verdicts to be row-identical to
+    incremental_batch_dedup -- the per-epoch idempotent state/output
+    commits are exactly-once across a restart."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    q = start(crash_at=2)
-    with pytest.raises(StreamingQueryException, match="injected crash"):
-        q.awaitTermination(300)
-    assert os.path.exists(os.path.join(work_dir, "crashed_once"))
+    from rlink_rs_spark.queries import REGISTRY
+    from rlink_rs_spark.streaming.dedup import read_verdicts
+    from tests.helpers import CrashInjector, incremental_dedup_replay
 
-    q2 = start(crash_at=2)  # marker file makes the retry proceed
-    assert q2.awaitTermination(300), "resumed intake stream timed out"
-    assert q2.exception() is None
+    start, _ = incremental_dedup_replay(spark, sf_dir, chunks=4)
+    work_dir = tempfile.mkdtemp(prefix="rlink_sdedup_test_")
+    ck = tempfile.mkdtemp(prefix="rlink_sdedup_test_ck_")
+    with CrashInjector(2, ("before", 1)) as inj:
+        with pytest.raises(StreamingQueryException, match="injected crash"):
+            drain(start(work_dir, ck), what="crashing intake stream")
+        assert inj.fired
+        drain(start(work_dir, ck), what="resumed intake stream")
 
     got = {tuple(r) for r in read_verdicts(spark, work_dir).collect()}
     want = {
@@ -1439,8 +1395,9 @@ def test_streaming_incremental_dedup_crash_resume_matches_batch_twin(spark, sf_d
 
 def test_streaming_reservoir_bounded_state_and_crash_resume(spark, sf_dir):
     """The A-ES reservoir's state must stay <= K rows per language at every
-    epoch (constant in stream length), and a crash between epochs must
-    resume to the exact batch draw (overwrite-per-epoch idempotence)."""
+    epoch (constant in stream length), and the drained reservoir must be
+    the exact batch draw. Its crash points are test_crash_matrix.py's
+    reservoir cells."""
     import os
 
     from rlink_rs_spark.queries import REGISTRY
@@ -1449,34 +1406,19 @@ def test_streaming_reservoir_bounded_state_and_crash_resume(spark, sf_dir):
         read_reservoir,
         streaming_weighted_reservoir_sink,
     )
-    from rlink_rs_spark.streaming.sources import stage_stream_dir, stream_from_staged
 
-    staged = stage_stream_dir(sf_dir, "documents", chunks=4, order_col="doc_id")
     work_dir = tempfile.mkdtemp(prefix="rlink_res_test_")
-    ck = tempfile.mkdtemp(prefix="rlink_res_test_ck_")
-
-    def start():
-        src = stream_from_staged(
-            spark, staged, sf_dir, "documents", max_files_per_trigger=1
-        )
-        return streaming_weighted_reservoir_sink(
-            src.select("lang", "doc_id", "n_chars"),
-            key_expr=_WS_KEY.format(h=_WS_H_SPARK),
-            work_dir=work_dir,
-            checkpoint=ck,
-            top_k=_WS_TOP_K,
-        )
-
-    # run two micro-batches then kill mid-stream
-    q = start()
-    deadline = time.time() + 120
-    while time.time() < deadline and len(q.recentProgress) < 2:
-        time.sleep(0.5)
-    q.stop()
-    q.awaitTermination(60)
-
-    q2 = start()
-    assert q2.awaitTermination(240), "resumed reservoir stream timed out"
+    src = file_stream(
+        spark, sf_dir, "documents", max_files_per_trigger=1, chunks=4, order_col="doc_id"
+    )
+    q = streaming_weighted_reservoir_sink(
+        src.select("lang", "doc_id", "n_chars"),
+        key_expr=_WS_KEY.format(h=_WS_H_SPARK),
+        work_dir=work_dir,
+        checkpoint=tempfile.mkdtemp(prefix="rlink_res_test_ck_"),
+        top_k=_WS_TOP_K,
+    )
+    drain(q, what="reservoir stream")
 
     # bounded state: every committed epoch holds <= K rows per language
     state_dir = os.path.join(work_dir, "reservoir")
@@ -1494,43 +1436,29 @@ def test_streaming_reservoir_bounded_state_and_crash_resume(spark, sf_dir):
 
 def test_streaming_kmv_bounded_state_and_crash_resume(spark, sf_dir):
     """The KMV sketch's state must stay <= K hash rows per group at every
-    epoch (constant in stream length), and a kill mid-stream must resume
-    to the exact batch sketch (the KMV merge is exact, so the drained
-    estimate is row-identical to approx_distinct_users over the same rows)."""
+    epoch (constant in stream length), and the drained sketch must be the
+    exact batch sketch (the KMV merge is exact, so the estimate is
+    row-identical to approx_distinct_users over the same rows). Its crash
+    points are test_crash_matrix.py's kmv cells."""
     import os
 
     from rlink_rs_spark.queries import REGISTRY
     from rlink_rs_spark.queries.stats import _KMV_K
     from rlink_rs_spark.streaming.sketches import read_kmv_estimate, streaming_kmv_sink
-    from rlink_rs_spark.streaming.sources import stage_stream_dir, stream_from_staged
 
-    staged = stage_stream_dir(sf_dir, "events", chunks=4, order_col="event_id")
     work_dir = tempfile.mkdtemp(prefix="rlink_kmv_test_")
-    ck = tempfile.mkdtemp(prefix="rlink_kmv_test_ck_")
-
-    def start():
-        src = stream_from_staged(
-            spark, staged, sf_dir, "events", max_files_per_trigger=1
-        )
-        return streaming_kmv_sink(
-            src.select("event_type", "user_id"),
-            group_col="event_type",
-            value_col="user_id",
-            work_dir=work_dir,
-            checkpoint=ck,
-            k=_KMV_K,
-        )
-
-    # run two micro-batches then kill mid-stream
-    q = start()
-    deadline = time.time() + 120
-    while time.time() < deadline and len(q.recentProgress) < 2:
-        time.sleep(0.5)
-    q.stop()
-    q.awaitTermination(60)
-
-    q2 = start()
-    assert q2.awaitTermination(240), "resumed KMV stream timed out"
+    src = file_stream(
+        spark, sf_dir, "events", max_files_per_trigger=1, chunks=4, order_col="event_id"
+    )
+    q = streaming_kmv_sink(
+        src.select("event_type", "user_id"),
+        group_col="event_type",
+        value_col="user_id",
+        work_dir=work_dir,
+        checkpoint=tempfile.mkdtemp(prefix="rlink_kmv_test_ck_"),
+        k=_KMV_K,
+    )
+    drain(q, what="KMV stream")
 
     # bounded state: every committed epoch holds <= K hash rows per group
     events = load_table(spark, sf_dir, "events")
@@ -1555,67 +1483,24 @@ def test_streaming_intake_score_seam_crash_resume(spark, sf_dir):
     """The score_fn seam (streaming_intake_pipeline's quality stage) under
     kill/resume: with a synthetic deterministic gate (doc_id % 2 == 0), the
     drained verdicts must equal the batch dedup twin with admit ANDed by
-    the gate -- across an injected crash at epoch 1."""
-    import os
-
+    the gate -- across a crash before epoch 1's first write."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    from rlink_rs_spark.operators.dedup import load_or_build_band_index, shingle_sets
     from rlink_rs_spark.queries import REGISTRY
-    from rlink_rs_spark.queries.dedup import (
-        _BANDS,
-        _INCR_THR,
-        _N_HASHES,
-        _documents_fingerprint,
-    )
-    from rlink_rs_spark.streaming.dedup import (
-        read_verdicts,
-        streaming_incremental_dedup_sink,
-    )
-    from rlink_rs_spark.streaming.sources import stage_stream_dir, stream_from_staged
-
-    docs = load_table(spark, sf_dir, "documents")
-    history = docs.where(F.col("doc_id") % 4 != 0)
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    hist_banded = load_or_build_band_index(
-        spark,
-        shingle_sets(history),
-        cache_dir=os.path.join(repo_root, "artifacts", "lsh_band_index"),
-        fingerprint=_documents_fingerprint(sf_dir),
-        n_hashes=_N_HASHES,
-        bands=_BANDS,
-    )
-    staged = stage_stream_dir(sf_dir, "documents", chunks=4, order_col="doc_id")
-    work_dir = tempfile.mkdtemp(prefix="rlink_intake_test_")
-    ck = tempfile.mkdtemp(prefix="rlink_intake_test_ck_")
+    from rlink_rs_spark.streaming.dedup import read_verdicts
+    from tests.helpers import CrashInjector, incremental_dedup_replay
 
     def gate(batch_df):
         return batch_df.select("doc_id", (F.col("doc_id") % 2 == 0).alias("passes"))
 
-    def start(crash_at):
-        src = stream_from_staged(
-            spark, staged, sf_dir, "documents", max_files_per_trigger=1
-        ).where(F.col("doc_id") % 4 == 0)
-        return streaming_incremental_dedup_sink(
-            src,
-            history,
-            hist_banded,
-            shingle_sets(docs),
-            work_dir=work_dir,
-            checkpoint=ck,
-            threshold=_INCR_THR,
-            n_hashes=_N_HASHES,
-            bands=_BANDS,
-            crash_at_epoch=1,
-            score_fn=gate,
-        )
-
-    q = start(crash_at=1)
-    with pytest.raises(StreamingQueryException, match="injected crash"):
-        q.awaitTermination(300)
-
-    q2 = start(crash_at=1)
-    assert q2.awaitTermination(300), "resumed intake stream timed out"
+    start, _ = incremental_dedup_replay(spark, sf_dir, chunks=4)
+    work_dir = tempfile.mkdtemp(prefix="rlink_intake_test_")
+    ck = tempfile.mkdtemp(prefix="rlink_intake_test_ck_")
+    with CrashInjector(1, ("before", 1)) as inj:
+        with pytest.raises(StreamingQueryException, match="injected crash"):
+            drain(start(work_dir, ck, score_fn=gate), what="crashing intake stream")
+        assert inj.fired
+        drain(start(work_dir, ck, score_fn=gate), what="resumed intake stream")
 
     got = {
         tuple(r) for r in read_verdicts(spark, work_dir, with_quality=True).collect()
@@ -1630,35 +1515,23 @@ def test_streaming_intake_score_seam_crash_resume(spark, sf_dir):
 
 def test_streaming_rollup_bounded_state_and_crash_resume(spark, sf_dir):
     """The streaming materialized view's state must stay <= days x types
-    rows at every epoch, and a kill mid-stream must resume to exactly the
-    batch rollup (overwrite-per-epoch idempotence)."""
+    rows at every epoch, and the drained view must be exactly the batch
+    rollup. Its crash points are test_crash_matrix.py's rollup cells."""
     import os
 
     from rlink_rs_spark.queries import REGISTRY
     from rlink_rs_spark.streaming.rollup import read_rollup_view, streaming_rollup_sink
-    from rlink_rs_spark.streaming.sources import stage_stream_dir, stream_from_staged
 
-    staged = stage_stream_dir(sf_dir, "events", chunks=4, order_col="ts")
     work_dir = tempfile.mkdtemp(prefix="rlink_rollup_test_")
-    ck = tempfile.mkdtemp(prefix="rlink_rollup_test_ck_")
-
-    def start():
-        src = stream_from_staged(
-            spark, staged, sf_dir, "events", max_files_per_trigger=1
-        )
-        return streaming_rollup_sink(
-            src.select("ts", "event_type", "value"), work_dir=work_dir, checkpoint=ck
-        )
-
-    q = start()
-    deadline = time.time() + 120
-    while time.time() < deadline and len(q.recentProgress) < 2:
-        time.sleep(0.5)
-    q.stop()
-    q.awaitTermination(60)
-
-    q2 = start()
-    assert q2.awaitTermination(240), "resumed rollup stream timed out"
+    src = file_stream(
+        spark, sf_dir, "events", max_files_per_trigger=1, chunks=4, order_col="ts"
+    )
+    q = streaming_rollup_sink(
+        src.select("ts", "event_type", "value"),
+        work_dir=work_dir,
+        checkpoint=tempfile.mkdtemp(prefix="rlink_rollup_test_ck_"),
+    )
+    drain(q, what="rollup stream")
 
     ev = load_table(spark, sf_dir, "events")
     n_days = ev.select(F.expr("unix_millis(ts) div 86400000")).distinct().count()
@@ -1736,74 +1609,32 @@ def test_streaming_cms_counters_equal_batch_fold(spark, sf_dir):
 def test_streaming_dedup_compaction_crash_resume(spark, sf_dir):
     """Epoch-state compaction (VERDICT r8 #3): run the intake stream over 8
     micro-batches with an LSM fold every 3 committed deltas, kill it
-    MID-COMPACTION (after the hashes fold commits, before the bands fold),
-    resume, and require (a) the drained verdicts row-identical to
-    incremental_batch_dedup, and (b) the state dirs actually folded --
-    a committed base_upto dir present and the covered deltas GC'd."""
-    import os
-
-    from rlink_rs_spark.operators.dedup import load_or_build_band_index, shingle_sets
-    from rlink_rs_spark.queries import REGISTRY
-    from rlink_rs_spark.queries.dedup import (
-        _BANDS,
-        _INCR_THR,
-        _N_HASHES,
-        _documents_fingerprint,
-    )
-    from rlink_rs_spark.streaming.deltas import newest_base as _newest_base
-    from rlink_rs_spark.streaming.dedup import (
-        read_verdicts,
-        streaming_incremental_dedup_sink,
-    )
-    from rlink_rs_spark.streaming.sources import stage_stream_dir, stream_from_staged
-
-    docs = load_table(spark, sf_dir, "documents")
-    history = docs.where(F.col("doc_id") % 4 != 0)
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    hist_banded = load_or_build_band_index(
-        spark,
-        shingle_sets(history),
-        cache_dir=os.path.join(repo_root, "artifacts", "lsh_band_index"),
-        fingerprint=_documents_fingerprint(sf_dir),
-        n_hashes=_N_HASHES,
-        bands=_BANDS,
-    )
-    staged = stage_stream_dir(sf_dir, "documents", chunks=8, order_col="doc_id")
-    work_dir = tempfile.mkdtemp(prefix="rlink_sdedup_compact_")
-    ck = tempfile.mkdtemp(prefix="rlink_sdedup_compact_ck_")
-
-    def start():
-        src = stream_from_staged(
-            spark, staged, sf_dir, "documents", max_files_per_trigger=1
-        ).where(F.col("doc_id") % 4 == 0)
-        return streaming_incremental_dedup_sink(
-            src,
-            history,
-            hist_banded,
-            shingle_sets(docs),
-            work_dir=work_dir,
-            checkpoint=ck,
-            threshold=_INCR_THR,
-            n_hashes=_N_HASHES,
-            bands=_BANDS,
-            compact_every=3,          # first fold at epoch 3 (deltas 0,1,2)
-            crash_in_compaction_at=3,  # between the hashes and bands folds
-        )
-
+    MID-COMPACTION (before epoch 3's second write: the hashes fold
+    committed, the bands fold not started), resume, and require (a) the
+    drained verdicts row-identical to incremental_batch_dedup, and (b) the
+    state dirs actually folded -- a committed base_upto dir present and
+    the covered deltas GC'd."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    q = start()
-    with pytest.raises(StreamingQueryException, match="mid-compaction"):
-        q.awaitTermination(300)
+    from rlink_rs_spark.queries import REGISTRY
+    from rlink_rs_spark.streaming.dedup import read_verdicts
+    from rlink_rs_spark.streaming.deltas import newest_base
+    from tests.helpers import CrashInjector, incremental_dedup_replay
+
+    start, _ = incremental_dedup_replay(spark, sf_dir, chunks=8)
+    work_dir = tempfile.mkdtemp(prefix="rlink_sdedup_compact_")
+    ck = tempfile.mkdtemp(prefix="rlink_sdedup_compact_ck_")
     hash_dir = os.path.join(work_dir, "state_hashes")
     band_dir = os.path.join(work_dir, "state_bands")
-    # the crash window's exact state: hashes folded and committed, bands not
-    assert _newest_base(hash_dir) == (os.path.join(hash_dir, "base_upto=2"), 2)
-    assert _newest_base(band_dir) == (None, -1)
-
-    q2 = start()  # marker file makes the retried fold proceed
-    assert q2.awaitTermination(300), "resumed intake stream timed out"
-    assert q2.exception() is None
+    # first fold at epoch 3 (deltas 0,1,2): hashes first, then bands
+    with CrashInjector(3, ("before", 2)) as inj:
+        with pytest.raises(StreamingQueryException, match="injected crash"):
+            drain(start(work_dir, ck, compact_every=3), what="crashing intake stream")
+        assert inj.fired
+        # the crash window's exact state: hashes folded and committed, bands not
+        assert newest_base(hash_dir) == (os.path.join(hash_dir, "base_upto=2"), 2)
+        assert newest_base(band_dir) == (None, -1)
+        drain(start(work_dir, ck, compact_every=3), what="resumed intake stream")
 
     got = {tuple(r) for r in read_verdicts(spark, work_dir).collect()}
     want = {
@@ -1815,7 +1646,7 @@ def test_streaming_dedup_compaction_crash_resume(spark, sf_dir):
     # both state dirs folded (second trigger at epoch 6 covers deltas 3-5)
     # and the GC pass dropped every delta the newest base covers
     for d in (hash_dir, band_dir):
-        base, upto = _newest_base(d)
+        base, upto = newest_base(d)
         assert base is not None and upto == 5, (d, base, upto)
         leftover = [
             x for x in os.listdir(d)
@@ -1825,11 +1656,11 @@ def test_streaming_dedup_compaction_crash_resume(spark, sf_dir):
 
 
 def test_streaming_cdc_merge_crash_resume_and_bucket_pruning(spark, sf_dir):
-    """Kill the CDC merge stream mid-replay and resume: the drained
-    snapshot must equal the batch MERGE row-for-row (per-epoch overwrite
-    idempotence), every committed epoch dir must contain EXACTLY the
+    """The drained CDC merge snapshot must equal the batch MERGE
+    row-for-row, every committed epoch dir must contain EXACTLY the
     buckets its chunk's change keys hash to (the file-level pruning the
-    design rides on), and torn (no-_COMMITTED) epochs must be invisible."""
+    design rides on), and torn (no-_COMMITTED) epochs must be invisible.
+    Its crash points are test_crash_matrix.py's cdc_merge cells."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -1842,33 +1673,19 @@ def test_streaming_cdc_merge_crash_resume_and_bucket_pruning(spark, sf_dir):
         streaming_merge_sink,
         write_base_snapshot,
     )
-    from rlink_rs_spark.streaming.sources import stage_stream_dir, stream_from_staged
     from rlink_rs_spark.tables import load_table
 
-    staged = stage_stream_dir(sf_dir, "documents", chunks=4, order_col="doc_id")
     work_dir = tempfile.mkdtemp(prefix="rlink_cdc_test_")
-    ck = tempfile.mkdtemp(prefix="rlink_cdc_test_ck_")
     write_base_snapshot(load_table(spark, sf_dir, "documents"), work_dir)
-
-    def start():
-        src = stream_from_staged(
-            spark, staged, sf_dir, "documents", max_files_per_trigger=1
-        )
-        return streaming_merge_sink(
-            src.select("doc_id", "text", "lang", "source", "n_chars"),
-            work_dir=work_dir,
-            checkpoint=ck,
-        )
-
-    q = start()
-    deadline = time.time() + 120
-    while time.time() < deadline and len(q.recentProgress) < 2:
-        time.sleep(0.5)
-    q.stop()
-    q.awaitTermination(60)
-
-    q2 = start()
-    assert q2.awaitTermination(240), "resumed CDC merge stream timed out"
+    src = file_stream(
+        spark, sf_dir, "documents", max_files_per_trigger=1, chunks=4, order_col="doc_id"
+    )
+    q = streaming_merge_sink(
+        src.select("doc_id", "text", "lang", "source", "n_chars"),
+        work_dir=work_dir,
+        checkpoint=tempfile.mkdtemp(prefix="rlink_cdc_test_ck_"),
+    )
+    drain(q, what="CDC merge stream")
 
     # bucket pruning: each committed epoch dir only ever held the buckets
     # its chunk's derived change keys hash to (subset after GC; the final
@@ -1967,37 +1784,24 @@ def test_streaming_ivf_index_add_equals_batch_index(spark, sf_dir):
 
 
 def test_streaming_intake_dlq_crash_resume_two_sink_invariants(spark, sf_dir):
-    """Kill the two-sink intake mid-replay and resume: clean and DLQ must
-    end up row-DISJOINT by doc_id, their union COMPLETE and equal to the
-    batch classification -- the invariant the single-handler multi-sink
-    epoch protocol exists to protect across crashes."""
+    """Clean and DLQ must end up row-DISJOINT by doc_id, their union
+    COMPLETE and equal to the batch classification -- the invariant the
+    single-handler multi-sink epoch protocol exists to protect. Its crash
+    points (between and inside the two writes) are test_crash_matrix.py's
+    dlq cells."""
     from rlink_rs_spark.queries import REGISTRY
     from rlink_rs_spark.streaming.dlq import read_clean, read_dlq, streaming_dlq_sink
-    from rlink_rs_spark.streaming.sources import stage_stream_dir, stream_from_staged
 
-    staged = stage_stream_dir(sf_dir, "documents", chunks=4, order_col="doc_id")
     work_dir = tempfile.mkdtemp(prefix="rlink_dlq_test_")
-    ck = tempfile.mkdtemp(prefix="rlink_dlq_test_ck_")
-
-    def start():
-        src = stream_from_staged(
-            spark, staged, sf_dir, "documents", max_files_per_trigger=1
-        )
-        return streaming_dlq_sink(
-            src.select("doc_id", "lang", "source", "n_chars"),
-            work_dir=work_dir,
-            checkpoint=ck,
-        )
-
-    q = start()
-    deadline = time.time() + 120
-    while time.time() < deadline and len(q.recentProgress) < 2:
-        time.sleep(0.5)
-    q.stop()
-    q.awaitTermination(60)
-
-    q2 = start()
-    assert q2.awaitTermination(240), "resumed DLQ stream timed out"
+    src = file_stream(
+        spark, sf_dir, "documents", max_files_per_trigger=1, chunks=4, order_col="doc_id"
+    )
+    q = streaming_dlq_sink(
+        src.select("doc_id", "lang", "source", "n_chars"),
+        work_dir=work_dir,
+        checkpoint=tempfile.mkdtemp(prefix="rlink_dlq_test_ck_"),
+    )
+    drain(q, what="DLQ stream")
 
     clean = read_clean(spark, work_dir)
     dlq = read_dlq(spark, work_dir)
@@ -2212,39 +2016,25 @@ def test_streaming_decontamination_equals_batch(spark, sf_dir):
 
 
 def test_streaming_pack_sequences_crash_resume_and_bounded_state(spark, sf_dir):
-    """Kill the packing stream mid-replay and resume: the drained bins
-    must equal the batch pack row-for-row (bins fill across epoch
-    boundaries exactly as the global cumsum fills them), and the carried
-    state must never exceed one row per language."""
+    """The drained bins must equal the batch pack row-for-row (bins fill
+    across epoch boundaries exactly as the global cumsum fills them), and
+    the carried state must never exceed one row per language. Its crash
+    points are test_crash_matrix.py's packing cells."""
     from rlink_rs_spark.queries import REGISTRY
     from rlink_rs_spark.queries.pipeline_ops import _CTX_LEN
     from rlink_rs_spark.streaming.packing import read_packed_bins, streaming_pack_sink
-    from rlink_rs_spark.streaming.sources import stage_stream_dir, stream_from_staged
 
-    staged = stage_stream_dir(sf_dir, "documents", chunks=4, order_col="doc_id")
     work_dir = tempfile.mkdtemp(prefix="rlink_pack_test_")
-    ck = tempfile.mkdtemp(prefix="rlink_pack_test_ck_")
-
-    def start():
-        src = stream_from_staged(
-            spark, staged, sf_dir, "documents", max_files_per_trigger=1
-        )
-        return streaming_pack_sink(
-            src.select("doc_id", "lang", "text"),
-            work_dir=work_dir,
-            checkpoint=ck,
-            ctx_len=_CTX_LEN,
-        )
-
-    q = start()
-    deadline = time.time() + 120
-    while time.time() < deadline and len(q.recentProgress) < 2:
-        time.sleep(0.5)
-    q.stop()
-    q.awaitTermination(60)
-
-    q2 = start()
-    assert q2.awaitTermination(240), "resumed packing stream timed out"
+    src = file_stream(
+        spark, sf_dir, "documents", max_files_per_trigger=1, chunks=4, order_col="doc_id"
+    )
+    q = streaming_pack_sink(
+        src.select("doc_id", "lang", "text"),
+        work_dir=work_dir,
+        checkpoint=tempfile.mkdtemp(prefix="rlink_pack_test_ck_"),
+        ctx_len=_CTX_LEN,
+    )
+    drain(q, what="packing stream")
 
     n_langs = load_table(spark, sf_dir, "documents").select("lang").distinct().count()
     state_dir = os.path.join(work_dir, "state")
@@ -2407,16 +2197,16 @@ def test_delta_sink_compaction_crash_resume(spark, sf_dir):
     stream, and drain a posting table row-identical to one batch
     corpus_tf pass; the final state dir must hold ONE base plus fewer
     than compact_every deltas -- not O(epochs) dirs."""
-    import os
+    from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from rlink_rs_spark.queries.search import corpus_tf
-    from rlink_rs_spark.streaming.deltas import newest_base
+    from rlink_rs_spark.streaming.deltas import gc_folded, newest_base
     from rlink_rs_spark.streaming.search_index import (
         read_posting_table,
         streaming_bm25_index_sink,
     )
     from rlink_rs_spark.streaming.sources import stage_stream_dir, stream_from_staged
-    from rlink_rs_spark.tables import load_table
+    from tests.helpers import CrashInjector
 
     staged = stage_stream_dir(sf_dir, "documents", chunks=6, order_col="doc_id")
     state_dir = tempfile.mkdtemp(prefix="rlink_delta_compact_")
@@ -2429,19 +2219,17 @@ def test_delta_sink_compaction_crash_resume(spark, sf_dir):
             state_dir=state_dir,
             checkpoint=ckpt,
             compact_every=2,
-            crash_after_fold_at=3,
         )
 
-    q = run()
-    with pytest.raises(Exception):
-        q.awaitTermination(600)
-    # the injected crash left a committed base AND its folded deltas on disk
-    _, upto = newest_base(state_dir)
-    assert upto >= 3
-    assert any(d.startswith("batch_id=") for d in os.listdir(state_dir))
-
-    q2 = run()
-    assert q2.awaitTermination(600)
+    with CrashInjector(3, ("exit", None)) as inj:
+        with pytest.raises(StreamingQueryException, match="injected crash"):
+            drain(run(), what="crashing BM25 index stream")
+        assert inj.fired
+        # the crash left a committed base AND its folded deltas on disk
+        _, upto = newest_base(state_dir)
+        assert upto >= 3
+        assert any(d.startswith("batch_id=") for d in os.listdir(state_dir))
+        drain(run(), what="resumed BM25 index stream")
 
     got = {tuple(r) for r in read_posting_table(spark, state_dir).collect()}
     want = {
@@ -2455,8 +2243,6 @@ def test_delta_sink_compaction_crash_resume(spark, sf_dir):
     # final epoch leaves its covered dirs behind; run the deferred pass the
     # way epoch 6 would, then state must be exactly one base plus fewer
     # than compact_every deltas above it -- not O(epochs) dirs.
-    from rlink_rs_spark.streaming.deltas import gc_folded
-
     gc_folded(state_dir)
     base, upto = newest_base(state_dir)
     assert base is not None
