@@ -61,6 +61,16 @@ def get_spark(
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
         )
         .config("spark.ui.enabled", "false")
+        # Offset, commit and metadata logs and state files are written through
+        # FileSystem, not the default FileContext manager: 11 vs 39 ms per
+        # createAtomic on file: (4 cores). Not weaker: FileContext.rename(NONE)
+        # reaches AbstractFileSystem.renameInternal's check-then-rename, which
+        # ChecksumFs/RawLocalFs keep; .crc siblings are written either way.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():

@@ -18,18 +18,21 @@ per started 512 KiB of the largest streaming source, clamped to
 [1, spark.sql.shuffle.partitions] (the session's deployment setting is the
 ceiling). A query with a source whose bytes cannot be seen locally (rate,
 a real Kafka broker) runs at the ceiling. Measured on a 4-core host,
-seconds, min of 3-4 warm runs in one JVM, identical row counts in every
-cell; the policy's pick is starred:
+seconds, min of 4 warm runs in one JVM with the counts interleaved round
+by round, identical row counts in every cell; the policy's pick is starred:
 
     fixture (events bytes)  query                        1      2      4      8
-    sf0.001 (27 KB)         streaming_flagship_agg      0.87*  0.95   1.21   1.52
-                            stream_stream_interval_join 1.86*  2.05   2.64   3.38
-    sf0.01 (221 KB)         streaming_flagship_agg      1.07*  1.15   1.13   1.34
-                            stream_stream_interval_join 1.75*  1.83   2.17   3.10
-    sf0.1 (2.0 MB)          streaming_flagship_agg      3.58   3.22   2.61*  2.65
-                            stream_stream_interval_join 2.25   2.24   2.36*  3.32
+    sf0.001 (27 KB)         streaming_flagship_agg      0.62*  0.62   0.65   0.82
+                            stream_stream_interval_join 1.21*  1.29   1.48   1.83
+    sf0.01 (221 KB)         streaming_flagship_agg      0.93*  0.78   0.77   0.89
+                            stream_stream_interval_join 1.17*  1.24   1.40   1.67
+    sf0.1 (2.0 MB)          streaming_flagship_agg      4.47   3.33   2.33*  2.29
+                            stream_stream_interval_join 1.78   1.85   1.73*  2.22
 
-A flat 1 would cost the sf0.1 flagship 1.35x, so the count must follow the
+At sf0.01 the flagship gains from a second store and the join loses about
+as much (pair sums 2.10 s at 1 store, 2.02 s at 2; 2.43 vs 2.38 s over 8
+rounds), inside run-to-run spread, so the pick stays at 1.
+A flat 1 would cost the sf0.1 flagship 1.9x, so the count must follow the
 input. A resumed query keeps the count its checkpoint's offset log pinned
 at first run, whatever the policy says later.
 

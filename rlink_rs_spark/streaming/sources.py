@@ -23,6 +23,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rlink_rs_spark.tables import read_fixture
+
 
 def stage_stream_dir(
     sf_dir: str, name: str, chunks: int = 1, order_col: str | None = None
@@ -201,22 +203,11 @@ def stream_from_staged(
     """File stream over an already-staged directory. The checkpoint's source
     log pins the directory path, so a resumed query MUST reuse the same
     staged_dir -- stage once, restart many."""
-    from rlink_rs_spark.tables import _nanos_timestamp_cols
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Match the batch loader: no-timezone parquet timestamps read as
-    # TimestampType (session pinned UTC), never TIMESTAMP_NTZ -- the
-    # captured schema below drives the streaming scan too.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    raw_schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(raw_schema)
+    reader = spark.readStream
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(staged_dir)
-    for c in _nanos_timestamp_cols(path):
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return read_fixture(spark, path, lambda schema: reader.schema(schema).parquet(staged_dir))
 
 
 def file_stream(
