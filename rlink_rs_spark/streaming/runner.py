@@ -1,5 +1,6 @@
 """Bounded execution of streaming pipelines: the single point that drains a
-bounded streaming query, stops it, and sizes its state partitions.
+bounded streaming query, stops it, sizes its state partitions and decides
+whether it runs its trailing no-data batch.
 
 The reference ends a stream with StreamStatus{end:true} cascading through
 the DAG (element.rs:361-370, source_runnable.rs:217-245); Spark's
@@ -7,7 +8,8 @@ Trigger.AvailableNow is the same concept: process everything available,
 finalize state, stop. Every bounded query in the package ends through
 ``drain`` (await with ``drain_timeout()``, stop whatever is still active,
 raise on timeout), and every stateful query started here runs with
-``state_partitions(stream_df)`` state stores via ``pinned_state_partitions``.
+``state_partitions(stream_df)`` state stores (``_run``,
+``pinned_state_partitions``).
 
 Sizing. A stateful operator opens one state store per shuffle partition,
 and each store pays a fixed commit/snapshot cost every micro-batch, so at
@@ -41,12 +43,33 @@ synchronously and return the materialized result -- the bridges that let
 streaming pipelines flow through the batch correctness gate. Sinks built
 on foreachBatch start their query with ``streaming.epochs.start`` and end
 it with ``drain``.
+
+No-data batches. After the last data batch of an availableNow run Spark
+runs one more, watermark-only batch whenever the final watermark passed a
+stateful operator's eviction bound. It emits what that watermark releases
+and evicts state. Inner stream-stream joins and deduplications emit only
+for a new input row, so for them that batch only evicts: the interval
+join's at sf0.001 took 475-525 ms of the query's 1.5-1.6 s (warm, 4 cores)
+and removed 408 of 412 state rows, emitting none. run_to_* start a query with
+spark.sql.streaming.noDataMicroBatches.enabled=false when every stateful
+node of its analyzed plan is an inner stream-stream Join, a Deduplicate or
+a DeduplicateWithinWatermark (an allow-list, read in the same plan walk
+that sizes the state). Every other plan keeps Spark's default:
+aggregations (append-mode windows close on the watermark), outer joins
+(null-padded rows come out on eviction), the flatMapGroupsWithState and
+transformWithState families, any node not named here, and stateless plans
+(which run no no-data batch anyway). Invariant: the skipped batch leaves
+un-evicted state in the checkpoint, so that checkpoint must never be
+resumed -- run_to_* create it and delete it when the run ends, also when
+the query fails. Queries started elsewhere (``streaming.epochs.start``,
+the Kafka replay, resumable tests) keep Spark's default.
 """
 
 from __future__ import annotations
 
 import math
 import os
+import shutil
 import tempfile
 import time
 import uuid
@@ -55,15 +78,22 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 
 _PARTS = "spark.sql.shuffle.partitions"
+_NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
 _BYTES_PER_STORE = 512 * 1024
+# Inner streaming plan nodes that keep no state.
+_STATELESS = frozenset({
+    "Project", "Filter", "Expand", "Generate", "Union", "SubqueryAlias", "EventTimeWatermark",
+})
+# Stateful nodes that emit only for a new input row: in a batch without
+# input rows they only evict state.
+_INPUT_DRIVEN = frozenset({"Join Inner", "Deduplicate", "DeduplicateWithinWatermark"})
 
 
-def _leaf_bytes(leaf) -> int | None:
+def _leaf_bytes(leaf, kind: str) -> int | None:
     """Bytes under the local path a streaming leaf reads -- a file source's
     ``path``, the loopback rlink_kafka source's ``topicdir`` -- following
     symlinks (a single-chunk staged dir links the fixture file); None when
     the leaf names no local directory."""
-    kind = leaf.getClass().getSimpleName()
     path = None
     if kind == "StreamingRelation":
         opts = leaf.dataSource().options()
@@ -79,21 +109,41 @@ def _leaf_bytes(leaf) -> int | None:
     )
 
 
+def _policy(stream_df: DataFrame) -> tuple[int, bool]:
+    """(state stores, whether to skip the no-data batch) for a query over
+    `stream_df`, from one py4j walk of its analyzed plan; see the module
+    docstring for both rules."""
+    ceiling = int(stream_df.sparkSession.conf.get(_PARTS))
+    sizes, stateful = [], set()
+    nodes = [stream_df._jdf.queryExecution().analyzed()]
+    while nodes:
+        node = nodes.pop()
+        if not node.isStreaming():
+            continue  # a static subtree: no streaming source, no state
+        kind = node.getClass().getSimpleName()
+        children, it = [], node.children().iterator()
+        while it.hasNext():
+            children.append(it.next())
+        nodes += children
+        if not children:
+            sizes.append(_leaf_bytes(node, kind))
+        elif kind == "Join":
+            if all(c.isStreaming() for c in children):
+                stateful.add(f"Join {node.joinType()}")
+        elif kind not in _STATELESS:
+            stateful.add(kind)
+    skip_no_data = bool(stateful) and stateful <= _INPUT_DRIVEN
+    if not sizes or None in sizes:
+        return ceiling, skip_no_data
+    return max(1, min(ceiling, math.ceil(max(sizes) / _BYTES_PER_STORE))), skip_no_data
+
+
 def state_partitions(stream_df: DataFrame) -> int:
     """State stores for a stateful query over `stream_df`: one per started
     512 KiB of its largest streaming source, clamped to [1, the session's
     spark.sql.shuffle.partitions]; the ceiling itself when any streaming
     source has no local bytes to size (see the module docstring)."""
-    ceiling = int(stream_df.sparkSession.conf.get(_PARTS))
-    sizes = []
-    leaves = stream_df._jdf.queryExecution().analyzed().collectLeaves().iterator()
-    while leaves.hasNext():
-        leaf = leaves.next()
-        if leaf.isStreaming():
-            sizes.append(_leaf_bytes(leaf))
-    if not sizes or None in sizes:
-        return ceiling
-    return max(1, min(ceiling, math.ceil(max(sizes) / _BYTES_PER_STORE)))
+    return _policy(stream_df)[0]
 
 
 def _await_listener_drain(listener, query_id: str, timeout: float = 30.0) -> None:
@@ -130,19 +180,26 @@ def drain_timeout() -> float:
 
 
 @contextmanager
-def pinned_state_partitions(stream_df: DataFrame):
-    """Run the block with spark.sql.shuffle.partitions set to
-    ``state_partitions(stream_df)`` and restore the session's value
-    afterwards, also when the block raises. A query over `stream_df`
-    started inside pins that count into its checkpoint's offset log at its
-    first batch, and a resume reuses the pinned count."""
-    spark = stream_df.sparkSession
-    prev = spark.conf.get(_PARTS)
-    spark.conf.set(_PARTS, str(state_partitions(stream_df)))
+def _pinned(spark: SparkSession, confs: dict[str, str]):
+    """Run the block with the session confs set to `confs` and give the
+    session its own values back afterwards, also when the block raises."""
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set(_PARTS, prev)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+def pinned_state_partitions(stream_df: DataFrame):
+    """Context manager: run the block with spark.sql.shuffle.partitions set
+    to ``state_partitions(stream_df)``, then restore the session's value. A
+    query over `stream_df` started inside pins that count into its
+    checkpoint's offset log at its first batch, and a resume reuses the
+    pinned count."""
+    return _pinned(stream_df.sparkSession, {_PARTS: str(state_partitions(stream_df))})
 
 
 def drain(*queries, what: str) -> None:
@@ -163,21 +220,28 @@ def drain(*queries, what: str) -> None:
 
 def _run(stream_df: DataFrame, writer, listener, what: str) -> None:
     """Start the configured writer over `stream_df` with availableNow into a
-    fresh checkpoint and drain it, with pinned state partitions and the
-    optional listener registered for exactly the lifetime of the run."""
+    fresh checkpoint and drain it, with the pinned state partitions and
+    no-data setting and the optional listener registered for exactly the
+    lifetime of the run; the checkpoint is deleted when the run ends."""
     spark: SparkSession = stream_df.sparkSession
-    with pinned_state_partitions(stream_df):
+    stores, skip_no_data = _policy(stream_df)
+    confs = {_PARTS: str(stores)}
+    if skip_no_data:
+        confs[_NO_DATA] = "false"
+    with _pinned(spark, confs):
         if listener is not None:
             spark.streams.addListener(listener)
+        checkpoint = tempfile.mkdtemp(prefix="rlink_ck_")
         try:
             q = (
-                writer.option("checkpointLocation", tempfile.mkdtemp(prefix="rlink_ck_"))
+                writer.option("checkpointLocation", checkpoint)
                 .trigger(availableNow=True)
                 .start()
             )
             drain(q, what=what)
             _await_listener_drain(listener, str(q.id))
         finally:
+            shutil.rmtree(checkpoint, ignore_errors=True)
             if listener is not None:
                 spark.streams.removeListener(listener)
 

@@ -6,7 +6,17 @@ Reference semantics mapped (SURVEY.md §2.7):
   * BoundedOutOfOrdernessWatermarks: wm = max_event_ts - delay - 1
     (bounded_out_of_orderness_watermarks.rs:23-39) -> withWatermark(col, delay)
     (Spark: wm = max - delay; the -1ms is emission bookkeeping, not
-    semantics -- both drop rows with ts <= wm at aggregation).
+    semantics). Spark's rule, pinned against a pure-Python model by
+    tests/test_properties.py::test_watermark_model: after each batch every
+    watermark node stands at the max event time it has seen minus its
+    delay (0 until it sees a row), and the global watermark is the minimum
+    over the nodes and never moves back. A batch filters late input with
+    the previous batch's watermark and evicts with its own (SPARK-40925):
+    a stream-stream join drops a row whose event time is <= that
+    watermark; a window aggregation drops a row's copy for each window
+    whose end is <= it (numRowsDroppedByWatermark then counts the batch's
+    dropped (window, key) groups, not rows), and append mode emits a window
+    once its end is <= the watermark.
   * TimePeriodicWatermarks (rate-limited emission, time_periodic_watermarks.rs:39-73):
     behavioral no-op under micro-batching -- the engine advances the
     watermark once per batch, which IS periodic emission.

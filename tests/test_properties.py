@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-from hypothesis import example, given, settings
+from hypothesis import Phase, example, given, settings
 from hypothesis import strategies as st
 
 from rlink_rs_spark.streaming.stateful import fold_alert_cents
@@ -567,3 +567,195 @@ def test_bpe_local_training_matches_distributed(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(T, "_BPE_DRIVER_VOCAB_MAX", 0)  # force distributed
     dist = [tuple(r) for r in T.train_bpe_merges(docs, n_merges=4).collect()]
     assert local == dist and len(local) == 4
+
+
+# -- the watermark model: the flagship window aggregate and the interval
+# join, replayed from random file splits, against a pure-Python model ----
+
+_T0_S = 1_700_000_000  # event times are seconds after this (a multiple of 20)
+_WITHIN_S = 40  # the join's interval bound in these replays
+# Times and delays are multiples of 5 s, so watermarks often land exactly on
+# a window end or a join bound: the tests pin <= against <.
+_EVENT = st.tuples(
+    st.integers(0, 30).map(lambda k: 5 * k),  # ts, seconds after _T0_S
+    st.sampled_from(["click", "purchase", "view"]),  # event_type: the flagship's key
+    st.integers(1, 2),  # user_id: the join's key
+    st.integers(-500, 5000),  # value in cents
+)
+
+
+@st.composite
+def _replays(draw):
+    """Events in arrival order, cut into 1..4 non-empty files: every order
+    is possible, so files carry out-of-order and late rows."""
+    events = draw(st.lists(_EVENT, min_size=1, max_size=12))
+    cuts = draw(st.sets(st.integers(1, len(events) - 1), max_size=3)) if len(events) > 1 else set()
+    bounds = [0, *sorted(cuts), len(events)]
+    rows = [(i, _T0_S + t, kind, user, cents) for i, (t, kind, user, cents) in enumerate(events)]
+    return [rows[a:b] for a, b in zip(bounds, bounds[1:])]
+
+
+def _model_watermarks(files, sides, delay_s):
+    """The watermark each batch evicts with, as streaming/watermarks.py
+    documents Spark's rule, plus the final one a trailing no-data batch
+    uses (None: still at its start). After a batch, every watermark node
+    stands at the max event time it has seen minus the delay, and a node
+    that has seen no row holds the global watermark at its start; the
+    global watermark is the minimum over the nodes and never moves back; a
+    batch sees only what its predecessors set."""
+    seen, wm, out = {side: [] for side in sides}, None, []
+    for rows in files:
+        out.append(wm)
+        for side, keep in sides.items():
+            seen[side] += [r[1] for r in rows if keep(r)]
+        if all(seen.values()):
+            low = min(max(ts) for ts in seen.values()) - delay_s
+            wm = low if wm is None else max(wm, low)
+    return out + [wm]
+
+
+def _late(wms, j, ts) -> bool:
+    """Batch j drops a row (or a window's copy of it) whose event time is at
+    or before the previous batch's watermark."""
+    return j > 0 and wms[j - 1] is not None and ts <= wms[j - 1]
+
+
+def _flagship_model(files, delay_s):
+    """Rows the flagship emits in append mode and the window copies it drops."""
+    wms = _model_watermarks(files, {"events": lambda r: True}, delay_s)
+    windows, dropped = {}, 0
+    for j, rows in enumerate(files):
+        late = set()
+        for _, ts, kind, _, cents in rows:
+            first = ts // 20 * 20
+            for start in (first - 40, first - 20, first):  # sliding 60s / 20s
+                if _late(wms, j, start + 60):
+                    late.add((start, kind))
+                else:
+                    windows.setdefault((start, kind), []).append(cents)
+        dropped += len(late)  # counted per dropped (window, key) group
+    final = wms[-1]
+    out = sorted(
+        (s * 1000, (s + 60) * 1000, kind, sum(c) / 100.0, max(c) / 100.0, min(c) / 100.0, len(c))
+        for (s, kind), c in windows.items()
+        if final is not None and s + 60 <= final
+    )
+    return out, dropped
+
+
+def _join_model(files, delay_s):
+    """Rows the inner interval join emits and the input rows it drops."""
+    sides = {k: (lambda r, k=k: r[2] == k) for k in ("click", "purchase")}
+    wms = _model_watermarks(files, sides, delay_s)
+    kept, dropped = {"click": [], "purchase": []}, 0
+    for j, rows in enumerate(files):
+        for r in rows:
+            if r[2] not in kept:
+                continue
+            if _late(wms, j, r[1]):
+                dropped += 1
+            else:
+                kept[r[2]].append(r)
+    out = sorted(
+        (c[3], c[0], p[0], c[1] * 1000, p[1] * 1000, (p[1] - c[1]) * 1000)
+        for c in kept["click"]
+        for p in kept["purchase"]
+        if c[3] == p[3] and c[1] <= p[1] <= c[1] + _WITHIN_S
+    )
+    return out, dropped
+
+
+def _stage_replay(files) -> str:
+    """One parquet file per batch under <dir>/staged, replayed in order, and
+    all rows in <dir>/events.parquet, the schema fixture."""
+    import os
+    import tempfile
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pa.schema([
+        ("event_id", pa.int64()), ("ts", pa.timestamp("us")), ("event_type", pa.string()),
+        ("user_id", pa.int64()), ("value", pa.float64()),
+    ])
+
+    def table(rows):
+        cols = list(zip(*rows)) or [[]] * 5
+        return pa.table([
+            pa.array(cols[0], pa.int64()),
+            pa.array([t * 1_000_000 for t in cols[1]], pa.int64()).cast(pa.timestamp("us")),
+            pa.array(cols[2], pa.string()),
+            pa.array(cols[3], pa.int64()),
+            pa.array([c / 100.0 for c in cols[4]], pa.float64()),
+        ], schema=schema)
+
+    root = tempfile.mkdtemp(prefix="rlink_wm_model_")
+    pq.write_table(table([r for rows in files for r in rows]), os.path.join(root, "events.parquet"))
+    staged = os.path.join(root, "staged")
+    os.mkdir(staged)
+    now = time.time()
+    for i, rows in enumerate(files):
+        p = os.path.join(staged, f"chunk_{i:05d}.parquet")
+        pq.write_table(table(rows), p)
+        os.utime(p, (now + i, now + i))  # replay order = file order
+    return root
+
+
+@pytest.mark.parametrize("stores", [1, 4])
+# no shrink phase: each shrinking step would run both queries again
+@settings(
+    max_examples=4, deadline=None, derandomize=True,
+    phases=[Phase.explicit, Phase.generate],
+)
+@given(files=_replays(), delay_s=st.integers(0, 8).map(lambda k: 5 * k))
+@example(  # rows just inside and on the delay, a window end and the join bound
+    files=[
+        [(0, _T0_S + 100, "click", 1, 10), (1, _T0_S + 100, "purchase", 1, 20)],
+        [(2, _T0_S, "view", 2, 30)],
+        [(3, _T0_S + 90, "click", 1, 40), (4, _T0_S + 95, "purchase", 1, 50),
+         (5, _T0_S + 60, "click", 1, 60), (6, _T0_S + 80, "purchase", 1, 70),
+         (7, _T0_S + 130, "purchase", 1, 80)],
+    ],
+    delay_s=20,
+)
+def test_watermark_model(spark, stores, files, delay_s):
+    """The flagship window aggregate (run_to_memory) and the inner interval
+    join (run_to_parquet) over a replay cut into 1..4 files emit exactly
+    the model's rows and drop exactly its late rows, at 1 and 4 state
+    stores."""
+    import os
+    import shutil
+
+    from rlink_rs_spark.queries.streams import click_purchase_join, flagship_window_agg
+    from rlink_rs_spark.streaming import runner
+    from rlink_rs_spark.streaming.metrics import ProgressCollector
+    from rlink_rs_spark.streaming.sources import stream_from_staged
+
+    root = _stage_replay(files)
+
+    def src():
+        return stream_from_staged(
+            spark, os.path.join(root, "staged"), root, "events", max_files_per_trigger=1
+        )
+
+    prev, per_store = spark.conf.get("spark.sql.shuffle.partitions"), runner._BYTES_PER_STORE
+    spark.conf.set("spark.sql.shuffle.partitions", str(stores))
+    runner._BYTES_PER_STORE = 1 if stores > 1 else per_store  # tiny files: 1 store, else the ceiling
+    try:
+        agg, agg_log = flagship_window_agg(src(), delay_s), ProgressCollector()
+        assert runner.state_partitions(agg) == stores
+        got_agg = sorted(tuple(r) for r in runner.run_to_memory(agg, listener=agg_log).collect())
+        join_log = ProgressCollector()
+        joined = click_purchase_join(src(), src(), f"{delay_s} seconds", f"{_WITHIN_S} seconds")
+        got_join = sorted(tuple(r) for r in runner.run_to_parquet(joined, listener=join_log).collect())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        runner._BYTES_PER_STORE = per_store
+        shutil.rmtree(root, ignore_errors=True)
+
+    def dropped(log):
+        return sum(p.get("droppedByWatermark", 0) for p in log.progress)
+
+    assert (got_agg, dropped(agg_log)) == _flagship_model(files, delay_s)
+    assert (got_join, dropped(join_log)) == _join_model(files, delay_s)
