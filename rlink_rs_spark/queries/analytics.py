@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from rlink_rs_spark.queries.base import register
+from rlink_rs_spark.session import scratch_dir
 from rlink_rs_spark.tables import load_table
 from rlink_rs_spark.streaming.runner import drain
 
@@ -779,19 +780,16 @@ def streaming_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay in 4 ts-ordered chunks; each epoch's work is one combinable
     aggregate over the BATCH plus a tiny-view merge -- the stream never
     rescans history (streaming/rollup.py)."""
-    import tempfile
-
     from rlink_rs_spark.streaming.rollup import read_rollup_view, streaming_rollup_sink
     from rlink_rs_spark.streaming.sources import file_stream
 
     src = file_stream(
         spark, sf_dir, "events", max_files_per_trigger=1, chunks=2, order_col="ts"
     )
-    work_dir = tempfile.mkdtemp(prefix="rlink_rollup_")
+    work_dir = scratch_dir("rlink_rollup_")
     q = streaming_rollup_sink(
         src.select("ts", "event_type", "value"),
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_rollup_ck_"),
     )
     drain(q, what="streaming_daily_rollup")
     return read_rollup_view(spark, work_dir)

@@ -26,6 +26,7 @@ from rlink_rs_spark.operators.dedup import (
 )
 from rlink_rs_spark.operators.repartition import fan_out
 from rlink_rs_spark.queries.base import register
+from rlink_rs_spark.session import scratch_dir
 from rlink_rs_spark.tables import load_table
 
 # Shared DuckDB fragment: distinct (doc_id, shingle) postings, k=3
@@ -481,8 +482,6 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id" for ANY doc_id-ordered chunking), so the shared batch-twin
     oracle is untouched. Deeper epoch chains stay exercised by the
     kill/resume and compaction suites."""
-    import tempfile
-
     from rlink_rs_spark.streaming.dedup import (
         read_verdicts,
         streaming_incremental_dedup_sink,
@@ -495,7 +494,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = file_stream(
         spark, sf_dir, "documents", max_files_per_trigger=1, chunks=2, order_col="doc_id"
     ).where(F.col("doc_id") % 4 == 0)
-    work_dir = tempfile.mkdtemp(prefix="rlink_sdedup_")
+    work_dir = scratch_dir("rlink_sdedup_")
     statics: list = []
     q = streaming_incremental_dedup_sink(
         src,
@@ -503,7 +502,6 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist_banded,
         shingle_sets(docs),
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_sdedup_ck_"),
         threshold=_INCR_THR,
         n_hashes=_N_HASHES,
         bands=_BANDS,

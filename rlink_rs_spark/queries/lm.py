@@ -16,6 +16,7 @@ from rlink_rs_spark.operators.lm import (
     bigram_rows,
 )
 from rlink_rs_spark.queries.base import register
+from rlink_rs_spark.session import scratch_dir
 from rlink_rs_spark.tables import load_table
 
 _NORM = NORMALIZE_SQL.format(col="text")
@@ -292,7 +293,6 @@ def streaming_intake_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     restarts. Composition of streaming_quality_gate's scorer and
     streaming_incremental_dedup's sink (score_fn seam)."""
     import os
-    import tempfile
 
     from rlink_rs_spark.operators.dedup import shingle_sets
     from rlink_rs_spark.operators.lm import (
@@ -340,7 +340,7 @@ def streaming_intake_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = file_stream(
         spark, sf_dir, "documents", max_files_per_trigger=1, chunks=2, order_col="doc_id"
     ).where(F.col("doc_id") % 4 == 0)
-    work_dir = tempfile.mkdtemp(prefix="rlink_intake_")
+    work_dir = scratch_dir("rlink_intake_")
     statics: list = []
     q = streaming_incremental_dedup_sink(
         src,
@@ -348,7 +348,6 @@ def streaming_intake_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         hist_banded,
         shingle_sets(docs),
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_intake_ck_"),
         threshold=_INCR_THR,
         n_hashes=_N_HASHES,
         bands=_BANDS,

@@ -20,6 +20,7 @@ from rlink_rs_spark.operators.dedup import (
     with_shingles,
 )
 from rlink_rs_spark.queries.base import register
+from rlink_rs_spark.session import scratch_dir
 from rlink_rs_spark.tables import load_table
 from rlink_rs_spark.streaming.runner import drain
 
@@ -994,8 +995,6 @@ def streaming_intake_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay documents in 2 doc_id-ordered chunks; return clean UNION dlq -- equality
     with the shared oracle proves both completeness and disjointness
     (any row routed twice would double, any dropped row would miss)."""
-    import tempfile
-
     from rlink_rs_spark.streaming.dlq import (
         read_clean,
         read_dlq,
@@ -1007,11 +1006,10 @@ def streaming_intake_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "documents", max_files_per_trigger=1, chunks=2,
         order_col="doc_id",
     )
-    work_dir = tempfile.mkdtemp(prefix="rlink_dlq_")
+    work_dir = scratch_dir("rlink_dlq_")
     q = streaming_dlq_sink(
         src.select("doc_id", "lang", "source", "n_chars"),
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_dlq_ck_"),
     )
     drain(q, what="streaming_intake_dlq")
     return read_clean(spark, work_dir).unionByName(read_dlq(spark, work_dir))
@@ -1033,8 +1031,6 @@ def streaming_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the corpus side in 2 chunks through the generic delta sink
     (streaming/deltas.py); the eval index is built once before the
     stream starts and broadcast per epoch."""
-    import tempfile
-
     from rlink_rs_spark.streaming.deltas import delta_sink, read_deltas
     from rlink_rs_spark.streaming.sources import file_stream
 
@@ -1061,12 +1057,11 @@ def streaming_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "documents", max_files_per_trigger=1, chunks=2,
         order_col="doc_id",
     )
-    state_dir = tempfile.mkdtemp(prefix="rlink_decon_")
+    state_dir = scratch_dir("rlink_decon_")
     q = delta_sink(
         src.select("doc_id", "text"),
         transform=screen,
         state_dir=state_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_decon_ck_"),
     )
     drain(q, what="streaming_decontamination")
     return read_deltas(
@@ -1089,8 +1084,6 @@ def streaming_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay documents in 2 doc_id-ordered chunks through the carrier
     sink (streaming/packing.py): deltas first, per-lang totals last as
     the epoch's commit record."""
-    import tempfile
-
     from rlink_rs_spark.streaming.packing import (
         read_packed_bins,
         streaming_pack_sink,
@@ -1101,11 +1094,10 @@ def streaming_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "documents", max_files_per_trigger=1, chunks=2,
         order_col="doc_id",
     )
-    work_dir = tempfile.mkdtemp(prefix="rlink_pack_")
+    work_dir = scratch_dir("rlink_pack_")
     q = streaming_pack_sink(
         src.select("doc_id", "lang", "text"),
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_pack_ck_"),
         ctx_len=_CTX_LEN,
     )
     drain(q, what="streaming_pack_sequences")

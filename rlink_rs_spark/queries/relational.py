@@ -20,6 +20,7 @@ from pyspark.sql.window import Window
 from rlink_rs_spark.operators.aggregations import sum_exact
 from rlink_rs_spark.operators.joins import broadcast_enrich, union_aligned
 from rlink_rs_spark.queries.base import SUM_EXACT_SQL, register
+from rlink_rs_spark.session import scratch_dir
 from rlink_rs_spark.tables import load_table
 from rlink_rs_spark.streaming.runner import drain
 
@@ -979,8 +980,6 @@ _LB_SEEK_DUCK = " OR ".join(
     "reproduces the partitioner, offset ranks, and seek filter.",
 )
 def kafka_loopback_seek(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import types as T
 
     from rlink_rs_spark.sources.loopback import publish, subscribe, to_envelope
@@ -996,7 +995,7 @@ def kafka_loopback_seek(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_col="ts",
         order_col="event_id",
     )
-    topic_dir = tempfile.mkdtemp(prefix="rlink_loopback_")
+    topic_dir = scratch_dir("rlink_loopback_")
     publish(envelope, topic_dir)
     stream = subscribe(spark, topic_dir, starting_offsets=_LB_SEEK)
     payload_schema = T.StructType(
@@ -1056,7 +1055,6 @@ _PYDS_SEEK_DUCK = " OR ".join(
 )
 def kafka_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
-    import tempfile
 
     from pyspark.sql import types as T
 
@@ -1074,7 +1072,7 @@ def kafka_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_col="ts",
         order_col="event_id",
     )
-    topic_dir = tempfile.mkdtemp(prefix="rlink_pyds_")
+    topic_dir = scratch_dir("rlink_pyds_")
     publish(envelope, topic_dir)
     register_kafka_source(spark)
     stream = (
@@ -1129,8 +1127,6 @@ def kafka_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pytest-pinned instead.",
 )
 def kafka_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import types as T
 
     from rlink_rs_spark.sources.kafka_datasource import register_kafka_source
@@ -1149,8 +1145,8 @@ def kafka_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         assign_offset=False,
     ).drop("__ord")
     register_kafka_source(spark)
-    topic_dir = tempfile.mkdtemp(prefix="rlink_pyds_sink_")
-    ck = tempfile.mkdtemp(prefix="rlink_pyds_sink_ck_")
+    topic_dir = scratch_dir("rlink_pyds_sink_")
+    ck = scratch_dir("rlink_pyds_sink_ck_")
     q = (
         envelope.writeStream.format("rlink_kafka")
         .option("topicdir", topic_dir)
@@ -1624,8 +1620,6 @@ def streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk's change events and merges them into the carried snapshot,
     touching only changed buckets (streaming/cdc.py). The snapshot never
     fully rewrites -- per-epoch cost is O(changed buckets), not O(corpus)."""
-    import tempfile
-
     from rlink_rs_spark.streaming.cdc import (
         read_merged_snapshot,
         streaming_merge_sink,
@@ -1633,7 +1627,7 @@ def streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from rlink_rs_spark.streaming.sources import file_stream
 
-    work_dir = tempfile.mkdtemp(prefix="rlink_cdc_")
+    work_dir = scratch_dir("rlink_cdc_")
     write_base_snapshot(load_table(spark, sf_dir, "documents"), work_dir)
     src = file_stream(
         spark, sf_dir, "documents", max_files_per_trigger=1, chunks=2,
@@ -1642,7 +1636,6 @@ def streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = streaming_merge_sink(
         src.select("doc_id", "text", "lang", "source", "n_chars"),
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_cdc_ck_"),
         # staged chunks are contiguous doc_id slices -> closed-form epoch
         # change keys (streaming/cdc.py, r16 guide §8)
         contiguous_keys=True,
@@ -1672,13 +1665,13 @@ def _cdc_snapshot_artifact(
     warmup-dir and sf-dir snapshots coexist."""
     import os
     import shutil
-    import tempfile
 
     from rlink_rs_spark.queries.dedup import _documents_fingerprint
     from rlink_rs_spark.streaming.cdc import (
         streaming_merge_sink,
         write_base_snapshot,
     )
+    from rlink_rs_spark.streaming.epochs import checkpoint
     from rlink_rs_spark.streaming.sources import file_stream
 
     repo_root = os.path.dirname(
@@ -1704,11 +1697,12 @@ def _cdc_snapshot_artifact(
     q = streaming_merge_sink(
         src.select("doc_id", "text", "lang", "source", "n_chars"),
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_cdc_art_ck_"),
         retain=retain,
         contiguous_keys=True,
     )
     drain(q, what="cdc snapshot artifact build")
+    # the cache holds the drained snapshot only, not the query that built it
+    shutil.rmtree(checkpoint(work_dir))
     with open(os.path.join(work_dir, "_STREAM_DONE"), "w"):
         pass
     return work_dir
@@ -1834,7 +1828,6 @@ def cdc_optimize_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (crash-mid-OPTIMIZE invisibility is pytest-pinned)."""
     import os
     import shutil
-    import tempfile
 
     from rlink_rs_spark.streaming.cdc import (
         optimize_snapshot,
@@ -1842,7 +1835,7 @@ def cdc_optimize_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src_dir = _cdc_snapshot_artifact(spark, sf_dir, retain=8)
-    work_dir = tempfile.mkdtemp(prefix="rlink_cdc_opt_")
+    work_dir = scratch_dir("rlink_cdc_opt_")
     shutil.copytree(
         os.path.join(src_dir, "snap"), os.path.join(work_dir, "snap")
     )
@@ -2300,8 +2293,6 @@ def cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     evolve_rev_from=2 (streaming/cdc.py); the drained wide read proves
     v1 buckets surface rev=NULL without rewrite while v2 buckets carry
     their stamped revision."""
-    import tempfile
-
     from rlink_rs_spark.streaming.cdc import (
         _SNAP_SCHEMA_V2,
         read_snapshot,
@@ -2310,7 +2301,7 @@ def cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from rlink_rs_spark.streaming.sources import file_stream
 
-    work_dir = tempfile.mkdtemp(prefix="rlink_cdc_evo_")
+    work_dir = scratch_dir("rlink_cdc_evo_")
     write_base_snapshot(load_table(spark, sf_dir, "documents"), work_dir)
     # chunks=4 is SEMANTIC here (unlike the fixture-scale 2-chunk replays):
     # evolve_rev_from=2 needs epochs on both sides of the evolution
@@ -2322,7 +2313,6 @@ def cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = streaming_merge_sink(
         src.select("doc_id", "text", "lang", "source", "n_chars"),
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_cdc_evo_ck_"),
         evolve_rev_from=2,
         contiguous_keys=True,
     )
@@ -2518,12 +2508,10 @@ def streaming_constraint_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined over the batch only -- monitoring cost scales with
     ingest rate, not table size, which is why this shape (not a nightly
     full-table scan) is how production expectation suites watch streams."""
-    import tempfile
-
     from rlink_rs_spark.streaming.deltas import delta_sink, read_deltas
     from rlink_rs_spark.streaming.sources import file_stream
 
-    state = tempfile.mkdtemp(prefix="rlink_cmon_")
+    state = scratch_dir("rlink_cmon_")
     src = file_stream(
         spark, sf_dir, "events", max_files_per_trigger=1, chunks=3, order_col="ts"
     ).select("event_type", "user_id")
@@ -2531,7 +2519,6 @@ def streaming_constraint_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         src,
         _events_constraint_rows,
         state,
-        tempfile.mkdtemp(prefix="rlink_cmon_ck_"),
     )
     drain(q, what="streaming_constraint_monitor")
     rep = (

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from rlink_rs_spark.queries.base import register
+from rlink_rs_spark.session import scratch_dir
 from rlink_rs_spark.tables import load_table
 from rlink_rs_spark.streaming.runner import drain
 
@@ -320,8 +321,6 @@ def streaming_bm25_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/search_index.py), then score the fixed query set against
     the drained posting table with the SAME bm25_score_tf the batch
     query uses."""
-    import tempfile
-
     from rlink_rs_spark.streaming.search_index import (
         read_posting_table,
         streaming_bm25_index_sink,
@@ -332,11 +331,10 @@ def streaming_bm25_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "documents", max_files_per_trigger=1, chunks=3,
         order_col="doc_id",
     )
-    state_dir = tempfile.mkdtemp(prefix="rlink_bm25_idx_")
+    state_dir = scratch_dir("rlink_bm25_idx_")
     q = streaming_bm25_index_sink(
         src.select("doc_id", "text"),
         state_dir=state_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_bm25_idx_ck_"),
     )
     drain(q, what="streaming_bm25_index_add")
     tf = read_posting_table(spark, state_dir).cache()
@@ -586,8 +584,6 @@ def streaming_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     most 2 * list_n candidates per query. Per-epoch index cost is
     O(batch) at any index size (the delta-sink contract proven by the
     two index-maintenance queries this composes)."""
-    import tempfile
-
     from rlink_rs_spark.operators import similarity as sim_ops
     from rlink_rs_spark.queries.similarity import (
         _artifact_dir,
@@ -604,14 +600,13 @@ def streaming_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from rlink_rs_spark.streaming.sources import file_stream
 
-    bm_state = tempfile.mkdtemp(prefix="rlink_hyb_bm25_")
+    bm_state = scratch_dir("rlink_hyb_bm25_")
     q_bm = streaming_bm25_index_sink(
         file_stream(
             spark, sf_dir, "documents", max_files_per_trigger=1, chunks=3,
             order_col="doc_id",
         ).select("doc_id", "text"),
         state_dir=bm_state,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_hyb_bm25_ck_"),
     )
     emb = load_table(spark, sf_dir, "embeddings")
     codebook = sim_ops.load_or_train_ivf_codebook(
@@ -623,7 +618,7 @@ def streaming_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_cells=_IVF_CELLS,
         iters=_IVF_ITERS,
     )
-    ivf_state = tempfile.mkdtemp(prefix="rlink_hyb_ivf_")
+    ivf_state = scratch_dir("rlink_hyb_ivf_")
     q_ivf = streaming_index_add_sink(
         file_stream(
             spark, sf_dir, "embeddings", max_files_per_trigger=1, chunks=3,
@@ -631,7 +626,6 @@ def streaming_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select("vec_id", "embedding"),
         codebook=codebook,
         state_dir=ivf_state,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_hyb_ivf_ck_"),
         dims=_DIMS,
     )
     drain(q_bm, q_ivf, what="streaming_hybrid_search")

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from rlink_rs_spark.operators import similarity as sim_ops
 from rlink_rs_spark.operators.similarity import bucket_expr, cosine_expr, hyperplanes
 from rlink_rs_spark.queries.base import register
+from rlink_rs_spark.session import scratch_dir
 from rlink_rs_spark.tables import load_table
 
 _DIMS = 64
@@ -954,8 +955,6 @@ def _label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-epoch overwrite commits make replays exactly-once.",
 )
 def streaming_outlier_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from rlink_rs_spark.streaming.ann import (
         read_outlier_results,
         streaming_outlier_sink,
@@ -967,12 +966,11 @@ def streaming_outlier_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "embeddings", max_files_per_trigger=1, chunks=2,
         order_col="vec_id",
     )
-    out_dir = tempfile.mkdtemp(prefix="rlink_outlier_")
+    out_dir = scratch_dir("rlink_outlier_")
     q = streaming_outlier_sink(
         src.select("vec_id", "label", "embedding"),
         cents=cents,
         out_dir=out_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_outlier_ck_"),
         dims=_DIMS,
         threshold=_OUTLIER_THR,
     )
@@ -1111,8 +1109,6 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     pays the full probe-plan constant at fixture scale, so the chunk
     count is kept at the minimum that still proves cross-epoch union);
     empty batches commit nothing."""
-    import tempfile
-
     from rlink_rs_spark.streaming.ann import (
         read_probe_results,
         streaming_ann_probe_sink,
@@ -1123,14 +1119,13 @@ def streaming_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = file_stream(
         spark, sf_dir, "embeddings", max_files_per_trigger=1, chunks=2, order_col="label"
     ).where(F.col("vec_id") < _N_QUERIES)
-    out_dir = tempfile.mkdtemp(prefix="rlink_ann_probe_")
+    out_dir = scratch_dir("rlink_ann_probe_")
     q = streaming_ann_probe_sink(
         src.select("vec_id", "embedding"),
         corpus=emb,
         codebook=codebook,
         assignment=assignment,
         out_dir=out_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_ann_probe_ck_"),
         dims=_DIMS,
         k=_K,
         n_cells=_IVF_CELLS,
@@ -1171,8 +1166,6 @@ def streaming_ivf_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings replay in 3 vec_id-ordered chunks against the train-once
     codebook artifact (streaming/ann.py streaming_index_add_sink); each
     epoch's delta commits by overwrite, so replays are exactly-once."""
-    import tempfile
-
     from rlink_rs_spark.streaming.ann import (
         read_inverted_file,
         streaming_index_add_sink,
@@ -1194,12 +1187,11 @@ def streaming_ivf_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "embeddings", max_files_per_trigger=1, chunks=3,
         order_col="vec_id",
     )
-    state_dir = tempfile.mkdtemp(prefix="rlink_ivf_add_")
+    state_dir = scratch_dir("rlink_ivf_add_")
     q = streaming_index_add_sink(
         src.select("vec_id", "embedding"),
         codebook=codebook,
         state_dir=state_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_ivf_add_ck_"),
         dims=_DIMS,
     )
     drain(q, what="streaming_ivf_index_add")

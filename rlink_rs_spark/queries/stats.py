@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rlink_rs_spark.queries.base import register
+from rlink_rs_spark.session import scratch_dir
 from rlink_rs_spark.tables import load_table
 from rlink_rs_spark.streaming.runner import drain
 
@@ -206,8 +207,6 @@ def streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch one map-side-combined groupBy over the batch, a distinct
     union with the <= K kept hashes, and one rank window over at most
     |groups| * (K + batch) rows. The standing corpus is never rescanned."""
-    import tempfile
-
     from rlink_rs_spark.streaming.sketches import (
         read_kmv_estimate,
         streaming_kmv_sink,
@@ -217,13 +216,12 @@ def streaming_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = file_stream(
         spark, sf_dir, "events", max_files_per_trigger=1, chunks=2, order_col="event_id"
     )
-    work_dir = tempfile.mkdtemp(prefix="rlink_kmv_")
+    work_dir = scratch_dir("rlink_kmv_")
     q = streaming_kmv_sink(
         src.select("event_type", "user_id"),
         group_col="event_type",
         value_col="user_id",
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_kmv_ck_"),
         k=_KMV_K,
     )
     drain(q, what="streaming_kmv_distinct")
@@ -489,21 +487,18 @@ GROUP BY 1, 2
 def streaming_cms_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per micro-batch: one map-side-combined fold of the BATCH into d x w
     counters, then a <= d*w-row merge with the carried table."""
-    import tempfile
-
     from rlink_rs_spark.streaming.sketches import read_cms_counters, streaming_cms_sink
     from rlink_rs_spark.streaming.sources import file_stream
 
     src = file_stream(
         spark, sf_dir, "events", max_files_per_trigger=1, chunks=2, order_col="event_id"
     )
-    work_dir = tempfile.mkdtemp(prefix="rlink_cms_")
+    work_dir = scratch_dir("rlink_cms_")
     q = streaming_cms_sink(
         src.select("user_id"),
         bucket_expr=_CMS_B_SPARK,
         d=_CMS_D,
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_cms_ck_"),
     )
     drain(q, what="streaming_cms_counters")
     return read_cms_counters(spark, work_dir)

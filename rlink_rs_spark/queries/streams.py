@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rlink_rs_spark.queries.base import SUM_EXACT_SQL, register
+from rlink_rs_spark.session import scratch_dir
 from rlink_rs_spark.tables import load_table
 
 _DELAY_MS = 1000
@@ -1468,8 +1469,6 @@ def example_kafka_plan(spark: SparkSession, envelope_stream: DataFrame) -> DataF
     "separately by kafka_loopback_seek.",
 )
 def example_kafka_app_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from pyspark.sql import types as T
 
     from rlink_rs_spark.sources.loopback import (
@@ -1501,7 +1500,7 @@ def example_kafka_app_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_col="ts",
         order_col="event_id",
     )
-    topic_dir = tempfile.mkdtemp(prefix="rlink_ekafka_in_")
+    topic_dir = scratch_dir("rlink_ekafka_in_")
     publish(in_env, topic_dir)
 
     # KafkaReplayAppStream half: Direct offset-range seek -> app plan ->
@@ -1510,8 +1509,8 @@ def example_kafka_app_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, topic_dir, starting_offsets=_KAFKA_BEGIN, ending_offsets=_KAFKA_END
     )
     out_env = example_kafka_plan(spark, src)
-    out_dir = tempfile.mkdtemp(prefix="rlink_ekafka_out_")
-    ck = tempfile.mkdtemp(prefix="rlink_ekafka_ck_")
+    out_dir = scratch_dir("rlink_ekafka_out_")
+    ck = scratch_dir("rlink_ekafka_ck_")
     with pinned_state_partitions(out_env):
         drain(publish_stream(out_env, out_dir, ck), what="example-kafka replay")
 

@@ -17,6 +17,7 @@ from rlink_rs_spark.operators.text import (
     quality_score_sql,
 )
 from rlink_rs_spark.queries.base import register
+from rlink_rs_spark.session import scratch_dir
 from rlink_rs_spark.tables import load_table
 from rlink_rs_spark.streaming.runner import drain
 
@@ -1136,8 +1137,6 @@ def streaming_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     irrelevant -- the property that makes A-ES the streaming-native
     sampler (vs seeded rand(), which changes under repartitioning).
     Replayed in 2 chunks; exactly-once via overwrite-per-epoch state."""
-    import tempfile
-
     from rlink_rs_spark.streaming.sampling import (
         read_reservoir,
         streaming_weighted_reservoir_sink,
@@ -1147,12 +1146,11 @@ def streaming_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = file_stream(
         spark, sf_dir, "documents", max_files_per_trigger=1, chunks=2, order_col="doc_id"
     )
-    work_dir = tempfile.mkdtemp(prefix="rlink_reservoir_")
+    work_dir = scratch_dir("rlink_reservoir_")
     q = streaming_weighted_reservoir_sink(
         src.select("lang", "doc_id", "n_chars"),
         key_expr=_WS_KEY.format(h=_WS_H_SPARK),
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_reservoir_ck_"),
         top_k=_WS_TOP_K,
     )
     drain(q, what="streaming_weighted_reservoir")

@@ -10,11 +10,29 @@ for the Python boundary, UTC so results are oracle-comparable.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+_scratch_root: str | None = None
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory under this process's scratch root, the one owner of
+    every dir a bounded run makes (staged replays, sink roots, checkpoints,
+    parquet outputs). The root is one ``rlink_*`` dir in the temp dir, made
+    on first use and removed when the process exits, so a lazily read
+    result stays valid for the process's lifetime and nothing outlives it."""
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix="rlink_")
+        atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root)
 
 
 def get_spark(

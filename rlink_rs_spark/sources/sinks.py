@@ -26,8 +26,6 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from rlink_rs_spark.streaming.epochs import start
-
 
 def console_sink(stream_df: DataFrame, checkpoint: str, num_rows: int = 20) -> StreamingQuery:
     """print_sink analogue; window struct columns render their bounds like
@@ -67,7 +65,8 @@ def foreach_batch_sink(
     """ES/ClickHouse-shaped bulk sink: per micro-batch, hand row-dict chunks
     plus the epoch id to `bulk_write` (which targets the external system;
     idempotence keyed on epoch_id gives exactly-once -- stronger than the
-    reference's at-least-once channel+writer task).
+    reference's at-least-once channel+writer task). The target is
+    external, so the caller owns `checkpoint`.
 
     The reference buffers rows until batch_size/batch_timeout
     (clickhouse_sink.rs:27-102); here the micro-batch is the buffer and
@@ -86,7 +85,13 @@ def foreach_batch_sink(
 
         batch_df.foreachPartition(write_partition)
 
-    return start(stream_df, handle, checkpoint, output_mode)
+    return (
+        stream_df.writeStream.outputMode(output_mode)
+        .foreachBatch(handle)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def kafka_sink_options(topic: str, brokers: str) -> dict[str, str]:

@@ -36,7 +36,6 @@ def streaming_ann_probe_sink(
     codebook: DataFrame,
     assignment: DataFrame,
     out_dir: str,
-    checkpoint: str,
     dims: int,
     k: int,
     n_cells: int,
@@ -61,7 +60,7 @@ def streaming_ann_probe_sink(
         ).select("query_id", "neighbor_id", "cosine", "rank")
         res.write.mode("overwrite").parquet(path(out_dir, epoch_id))
 
-    return start(query_stream, handle, checkpoint, "append")
+    return start(query_stream, handle, out_dir, "append")
 
 
 def read_probe_results(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -79,7 +78,6 @@ def streaming_index_add_sink(
     emb_stream: DataFrame,
     codebook: DataFrame,
     state_dir: str,
-    checkpoint: str,
     dims: int,
     compact_every: int = 8,
 ):
@@ -101,7 +99,6 @@ def streaming_index_add_sink(
         emb_stream,
         lambda batch: ivf_assign(batch, codebook, dims),
         state_dir,
-        checkpoint,
         schema=_INVERTED_SCHEMA,
         compact_every=compact_every,
     )
@@ -123,7 +120,6 @@ def streaming_outlier_sink(
     vec_stream: DataFrame,
     cents: DataFrame,
     out_dir: str,
-    checkpoint: str,
     dims: int,
     threshold: float,
 ):
@@ -144,7 +140,7 @@ def streaming_outlier_sink(
         )
         res.write.mode("overwrite").parquet(path(out_dir, epoch_id))
 
-    return start(vec_stream, handle, checkpoint, "append")
+    return start(vec_stream, handle, out_dir, "append")
 
 
 def read_outlier_results(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -9,6 +9,7 @@ Hudi) rely on, expressed as a directory protocol:
 
     <work>/snap/batch_id=-1/bucket=B/...   the base snapshot (all buckets)
     <work>/snap/batch_id=N/bucket=B/...    buckets rewritten by epoch N
+    <work>/_checkpoint                     the merge stream's checkpoint
 
 The CURRENT version of bucket B is its newest committed ``batch_id``
 dir; reading the snapshot is one union over the per-bucket newest
@@ -300,7 +301,6 @@ def apply_merge_epoch(
 def streaming_merge_sink(
     doc_stream: DataFrame,
     work_dir: str,
-    checkpoint: str,
     retain: int = 0,
     evolve_rev_from: int | None = None,
     contiguous_keys: bool = False,
@@ -332,7 +332,7 @@ def streaming_merge_sink(
             contiguous_keys=contiguous_keys,
         )
 
-    return start(doc_stream, handle, checkpoint, "update")
+    return start(doc_stream, handle, work_dir, "update")
 
 
 def read_merged_snapshot(spark: SparkSession, work_dir: str) -> DataFrame:

@@ -122,7 +122,6 @@ def streaming_incremental_dedup_sink(
     hist_banded: DataFrame,
     corpus_sets: DataFrame,
     work_dir: str,
-    checkpoint: str,
     threshold: float = 0.7,
     n_hashes: int = 16,
     bands: int = 4,
@@ -135,7 +134,8 @@ def streaming_incremental_dedup_sink(
     (load_or_build_band_index) and `corpus_sets` the (doc_id, sh) shingle
     sets (operators.dedup.shingle_sets) of every doc a candidate can name.
     Returns the started StreamingQuery; verdicts accumulate under
-    `<work_dir>/out`.
+    `<work_dir>/out`, next to the state roots and the query's
+    `<work_dir>/_checkpoint`.
 
     `score_fn` (optional) turns this into the FULL intake pipeline: a
     callable mapping the raw micro-batch to (doc_id, passes boolean) --
@@ -275,7 +275,7 @@ def streaming_incremental_dedup_sink(
         batch.unpersist()
         batch_banded.unpersist()
 
-    return start(doc_stream, handle, checkpoint, "update")
+    return start(doc_stream, handle, work_dir, "update")
 
 
 def read_verdicts(spark: SparkSession, work_dir: str, with_quality: bool = False) -> DataFrame:

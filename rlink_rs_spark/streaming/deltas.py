@@ -98,11 +98,11 @@ def delta_sink(
     stream: DataFrame,
     transform: Callable[[DataFrame], DataFrame],
     state_dir: str,
-    checkpoint: str,
     schema: str | None = None,
     compact_every: int | None = None,
 ):
-    """foreachBatch sink writing transform(batch) as the epoch's delta.
+    """foreachBatch sink writing transform(batch) as the epoch's delta
+    under `state_dir`, which also holds the query's checkpoint.
     `transform` must be deterministic and batch-local (it sees only the
     epoch's rows). Returns the started StreamingQuery.
 
@@ -122,7 +122,7 @@ def delta_sink(
         if compact_every is not None:
             compact(spark, state_dir, schema, epoch_id + 1, compact_every)
 
-    return start(stream, handle, checkpoint, "append")
+    return start(stream, handle, state_dir, "append")
 
 
 def read_deltas(spark: SparkSession, state_dir: str, schema: str) -> DataFrame:

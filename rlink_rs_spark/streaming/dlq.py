@@ -70,7 +70,7 @@ def classify_intake(docs: DataFrame) -> DataFrame:
     )
 
 
-def streaming_dlq_sink(doc_stream: DataFrame, work_dir: str, checkpoint: str):
+def streaming_dlq_sink(doc_stream: DataFrame, work_dir: str):
     """foreachBatch handler writing the epoch's clean rows and DLQ rows to
     their own per-epoch dirs; the epoch is visible once both are
     committed. Returns the StreamingQuery."""
@@ -85,7 +85,7 @@ def streaming_dlq_sink(doc_stream: DataFrame, work_dir: str, checkpoint: str):
             path(clean_dir, epoch_id)
         )
 
-    return start(doc_stream, handle, checkpoint, "append")
+    return start(doc_stream, handle, work_dir, "append")
 
 
 def _read_sink(spark: SparkSession, work_dir: str, sink: str) -> DataFrame:

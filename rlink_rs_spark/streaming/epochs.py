@@ -15,6 +15,13 @@ committed in EVERY root (``latest(a, b)``), so a crash between the writes
 hides it as a unit. A sink whose epoch is more than one Spark write passes
 its own marker (CDC's ``_COMMITTED``); the LSM fold's bases use the prefix
 ``base_upto``.
+
+Root layout: a sink's root holds its epoch dirs (directly or in named
+sub-roots) and its query's checkpoint, ``<root>/_checkpoint``. The epoch
+dirs and Spark's offset/commit log that says which epochs are done are one
+piece of state, so the root is copied, resumed or deleted as a unit.
+Nothing here mistakes the checkpoint for an epoch: ``ids`` parses only
+``<prefix>=N`` names, and Spark's readers skip paths starting with ``_``.
 """
 
 from __future__ import annotations
@@ -74,13 +81,19 @@ def read(spark: SparkSession, paths: list[str], schema: str) -> DataFrame:
     return spark.read.schema(schema).parquet(*paths)
 
 
-def start(stream: DataFrame, handle, checkpoint: str, mode: str):
+def checkpoint(root: str) -> str:
+    """The checkpoint of the query that writes the sink root `root`."""
+    return os.path.join(root, "_checkpoint")
+
+
+def start(stream: DataFrame, handle, root: str, mode: str):
     """Start `handle` as the stream's foreachBatch sink over the available
-    input; callers end it with runner.drain."""
+    input, checkpointed in ``checkpoint(root)``; callers end it with
+    runner.drain, and a resume starts it again over the same root."""
     return (
         stream.writeStream.outputMode(mode)
         .foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
+        .option("checkpointLocation", checkpoint(root))
         .trigger(availableNow=True)
         .start()
     )

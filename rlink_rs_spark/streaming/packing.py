@@ -33,7 +33,7 @@ _DELTA_SCHEMA = "doc_id bigint, lang string, n bigint, bin bigint"
 
 
 def streaming_pack_sink(
-    doc_stream: DataFrame, work_dir: str, checkpoint: str, ctx_len: int
+    doc_stream: DataFrame, work_dir: str, ctx_len: int
 ):
     """foreachBatch sink assigning each arriving doc its training-context
     bin from the carried per-lang token totals. Returns the started
@@ -74,7 +74,7 @@ def streaming_pack_sink(
         )
         new_state.write.mode("overwrite").parquet(path(state_dir, epoch_id))
 
-    return start(doc_stream, handle, checkpoint, "update")
+    return start(doc_stream, handle, work_dir, "update")
 
 
 def read_packed_bins(spark: SparkSession, work_dir: str) -> DataFrame:

@@ -42,7 +42,7 @@ def _batch_rollup(df: DataFrame) -> DataFrame:
     )
 
 
-def streaming_rollup_sink(stream: DataFrame, work_dir: str, checkpoint: str):
+def streaming_rollup_sink(stream: DataFrame, work_dir: str):
     """foreachBatch sink folding each micro-batch's daily rollup into the
     carried view. Returns the started StreamingQuery."""
     spark = stream.sparkSession
@@ -63,7 +63,7 @@ def streaming_rollup_sink(stream: DataFrame, work_dir: str, checkpoint: str):
         )
         merged.write.mode("overwrite").parquet(path(view_dir, epoch_id))
 
-    return start(stream, handle, checkpoint, "update")
+    return start(stream, handle, work_dir, "update")
 
 
 def read_rollup_view(spark: SparkSession, work_dir: str) -> DataFrame:

@@ -41,8 +41,8 @@ at first run, whatever the policy says later.
 run_to_memory and run_to_parquet drive a streaming DataFrame to completion
 synchronously and return the materialized result -- the bridges that let
 streaming pipelines flow through the batch correctness gate. Sinks built
-on foreachBatch start their query with ``streaming.epochs.start`` and end
-it with ``drain``.
+on foreachBatch start their query with ``streaming.epochs.start``, which
+checkpoints it inside the sink's own root, and end it with ``drain``.
 
 No-data batches. After the last data batch of an availableNow run Spark
 runs one more, watermark-only batch whenever the final watermark passed a
@@ -62,7 +62,8 @@ transformWithState families, any node not named here, and stateless plans
 un-evicted state in the checkpoint, so that checkpoint must never be
 resumed -- run_to_* create it and delete it when the run ends, also when
 the query fails. Queries started elsewhere (``streaming.epochs.start``,
-the Kafka replay, resumable tests) keep Spark's default.
+whose checkpoint lives and is resumed with its sink root, the Kafka
+replay, resumable tests) keep Spark's default.
 """
 
 from __future__ import annotations
@@ -70,12 +71,13 @@ from __future__ import annotations
 import math
 import os
 import shutil
-import tempfile
 import time
 import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+
+from rlink_rs_spark.session import scratch_dir
 
 _PARTS = "spark.sql.shuffle.partitions"
 _NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -231,7 +233,7 @@ def _run(stream_df: DataFrame, writer, listener, what: str) -> None:
     with _pinned(spark, confs):
         if listener is not None:
             spark.streams.addListener(listener)
-        checkpoint = tempfile.mkdtemp(prefix="rlink_ck_")
+        checkpoint = scratch_dir("rlink_ck_")
         try:
             q = (
                 writer.option("checkpointLocation", checkpoint)
@@ -272,7 +274,9 @@ def run_to_memory(
 def run_to_parquet(stream_df: DataFrame, listener=None) -> DataFrame:
     """Execute an append-mode streaming DataFrame with availableNow into a
     parquet sink; block until completion; return a (batch) reader over the
-    written files.
+    written files. The files live under the process's scratch root
+    (``session.scratch_dir``), so the reader stays valid until the process
+    exits.
 
     The memory-sink bridge (run_to_memory) collects every emitted row onto
     the driver -- fine for bounded aggregates, a scale-killer for O(matches)
@@ -285,7 +289,7 @@ def run_to_parquet(stream_df: DataFrame, listener=None) -> DataFrame:
     stream-stream joins.
     """
     spark: SparkSession = stream_df.sparkSession
-    out_dir = tempfile.mkdtemp(prefix="rlink_pq_out_")
+    out_dir = scratch_dir("rlink_pq_out_")
     writer = stream_df.writeStream.outputMode("append").format("parquet").option("path", out_dir)
     _run(stream_df, writer, listener, what="parquet sink")
     # explicit schema: a zero-row drain writes only _spark_metadata and an

@@ -34,7 +34,6 @@ def streaming_weighted_reservoir_sink(
     doc_stream: DataFrame,
     key_expr: str,
     work_dir: str,
-    checkpoint: str,
     top_k: int = 20,
 ):
     """foreachBatch sink maintaining the per-language A-ES reservoir.
@@ -66,7 +65,7 @@ def streaming_weighted_reservoir_sink(
         )
         merged.write.mode("overwrite").parquet(path(state_dir, epoch_id))
 
-    return start(doc_stream, handle, checkpoint, "update")
+    return start(doc_stream, handle, work_dir, "update")
 
 
 def read_reservoir(spark: SparkSession, work_dir: str, top_k: int = 20) -> DataFrame:

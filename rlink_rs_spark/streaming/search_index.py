@@ -33,7 +33,6 @@ _TF_SCHEMA = "doc_id bigint, term string, tf bigint"
 def streaming_bm25_index_sink(
     doc_stream: DataFrame,
     state_dir: str,
-    checkpoint: str,
     compact_every: int = 8,
 ):
     """foreachBatch sink appending per-epoch (doc_id, term, tf) deltas,
@@ -45,7 +44,6 @@ def streaming_bm25_index_sink(
         doc_stream,
         corpus_tf,
         state_dir,
-        checkpoint,
         schema=_TF_SCHEMA,
         compact_every=compact_every,
     )

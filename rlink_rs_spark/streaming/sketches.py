@@ -54,7 +54,6 @@ def streaming_kmv_sink(
     group_col: str,
     value_col: str,
     work_dir: str,
-    checkpoint: str,
     k: int = 1024,
 ):
     """foreachBatch sink maintaining the per-group KMV sketch across
@@ -97,7 +96,7 @@ def streaming_kmv_sink(
         batch_counts.write.mode("overwrite").parquet(path(count_dir, epoch_id))
         merged.write.mode("overwrite").parquet(path(hash_dir, epoch_id))
 
-    return start(stream, handle, checkpoint, "update")
+    return start(stream, handle, work_dir, "update")
 
 
 def read_kmv_estimate(spark: SparkSession, work_dir: str, k: int = 1024) -> DataFrame:
@@ -136,7 +135,6 @@ def streaming_cms_sink(
     bucket_expr: str,
     d: int,
     work_dir: str,
-    checkpoint: str,
 ):
     """foreachBatch sink maintaining count-min counters across micro-batches.
     The CMS merge is counter ADDITION -- exactly associative BIGINT sums --
@@ -162,7 +160,7 @@ def streaming_cms_sink(
         merged = delta.groupBy("r", "b").agg(F.sum("c").cast("bigint").alias("c"))
         merged.write.mode("overwrite").parquet(path(cdir, epoch_id))
 
-    return start(stream, handle, checkpoint, "update")
+    return start(stream, handle, work_dir, "update")
 
 
 def read_cms_counters(spark: SparkSession, work_dir: str) -> DataFrame:

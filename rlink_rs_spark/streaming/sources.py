@@ -17,27 +17,28 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rlink_rs_spark.session import scratch_dir
 from rlink_rs_spark.tables import read_fixture
 
 
 def stage_stream_dir(
     sf_dir: str, name: str, chunks: int = 1, order_col: str | None = None
 ) -> str:
-    """Stage a fixture parquet file into a temp directory for the file
-    stream source (which requires a directory). chunks > 1 splits the rows
-    into time-ordered part files with increasing mtimes so
-    maxFilesPerTrigger=1 replays them as separate micro-batches -- the
-    replay harness for watermark/late-data/checkpoint tests."""
+    """Stage a fixture parquet file into a fresh scratch directory
+    (``session.scratch_dir``) for the file stream source (which requires a
+    directory). chunks > 1 splits the rows into time-ordered part files
+    with increasing mtimes so maxFilesPerTrigger=1 replays them as separate
+    micro-batches -- the replay harness for watermark/late-data/checkpoint
+    tests."""
     import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, f"{name}.parquet")
-    out = tempfile.mkdtemp(prefix=f"rlink_stream_{name}_")
+    out = scratch_dir(f"rlink_stream_{name}_")
     if chunks <= 1:
         os.symlink(src, os.path.join(out, f"{name}.parquet"))
         return out
@@ -124,7 +125,7 @@ def stage_stream_dir_with_late(
     import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, f"{name}.parquet")
-    out = tempfile.mkdtemp(prefix=f"rlink_stream_late_{name}_")
+    out = scratch_dir(f"rlink_stream_late_{name}_")
     table = pq.read_table(src)
     sort_keys = [(order_col, "ascending")]
     if id_col in table.column_names and order_col != id_col:
@@ -172,7 +173,7 @@ def heartbeat_stream(
 
     src = os.path.join(sf_dir, f"{name}.parquet")
     template = pq.read_schema(src)
-    out = tempfile.mkdtemp(prefix=f"rlink_stream_hb_{name}_")
+    out = scratch_dir(f"rlink_stream_hb_{name}_")
     arrays = []
     n = len(ts_ms)
     for field in template:

@@ -161,7 +161,7 @@ def incremental_dedup_replay(spark, sf_dir: str, chunks: int):
     doc_id % 4 != 0 are the history (its band index is the committed
     artifacts/lsh_band_index entry), the rest arrive as a doc_id-ordered
     replay of `chunks` staged files. Returns (start, staged dir):
-    start(work_dir, checkpoint, **sink_kwargs) starts the sink, and every
+    start(work_dir, **sink_kwargs) starts the sink, and every
     start reuses the one staged dir, as a resume must."""
     from pyspark.sql import functions as F
 
@@ -176,13 +176,13 @@ def incremental_dedup_replay(spark, sf_dir: str, chunks: int):
     hist_banded = _history_band_index(spark, sf_dir, history)
     staged = stage_stream_dir(sf_dir, "documents", chunks=chunks, order_col="doc_id")
 
-    def start(work_dir: str, checkpoint: str, **sink_kwargs):
+    def start(work_dir: str, **sink_kwargs):
         src = stream_from_staged(
             spark, staged, sf_dir, "documents", max_files_per_trigger=1
         ).where(F.col("doc_id") % 4 == 0)
         return streaming_incremental_dedup_sink(
             src, history, hist_banded, shingle_sets(docs),
-            work_dir=work_dir, checkpoint=checkpoint,
+            work_dir=work_dir,
             threshold=_INCR_THR, n_hashes=_N_HASHES, bands=_BANDS,
             **sink_kwargs,
         )

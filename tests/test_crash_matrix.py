@@ -5,11 +5,11 @@ protocol under test).
 Each sink first runs once without a crash; the injector's per-epoch hook
 records the sink's reader output at every epoch boundary. That run stops
 once the epochs before the crash epoch are committed (the later chunks are
-held back), and every cell resumes a copy of its work dir and checkpoint
-from there, so a cell pays for the crash epoch only. Each cell crashes the
-copy at one point of the chosen epoch -- before its k-th write, with its
-k-th write torn (landed, ``_SUCCESS`` removed), or after its last write --
-and asserts:
+held back), and every cell resumes a copy of its work dir (the sink's
+checkpoint included) from there, so a cell pays for the crash epoch only.
+Each cell crashes the copy at one point of the chosen epoch -- before its
+k-th write, with its k-th write torn (landed, ``_SUCCESS`` removed), or
+after its last write -- and asserts:
 
 1. before any resume, the reader returns the reference rows as of the
    crash epoch's start or as of its end, never a mix;
@@ -44,7 +44,7 @@ def _rows(df) -> Counter:
 
 @dataclass(frozen=True)
 class Run:
-    """How one sink is driven: start(work_dir, checkpoint) starts it over
+    """How one sink is driven: start(work_dir) starts it over
     the chunk files in `staged`, read(work_dir) is its reader output,
     init(work_dir) prepares a fresh work dir."""
 
@@ -67,9 +67,9 @@ def _ann_probe(spark, sf_dir) -> Run:
     staged, src = _stream(spark, sf_dir, "embeddings", 2, "label", "vec_id", "embedding")
     return Run(
         staged,
-        lambda work, ck: streaming_ann_probe_sink(
+        lambda work: streaming_ann_probe_sink(
             src().where(F.col("vec_id") < q._N_QUERIES), emb, codebook, assignment,
-            work, ck, dims=q._DIMS, k=q._K, n_cells=q._IVF_CELLS, n_probe=q._IVF_PROBE,
+            work, dims=q._DIMS, k=q._K, n_cells=q._IVF_CELLS, n_probe=q._IVF_PROBE,
         ),
         lambda work: _rows(read_probe_results(spark, work)),
     )
@@ -83,8 +83,8 @@ def _outlier(spark, sf_dir) -> Run:
     staged, src = _stream(spark, sf_dir, "embeddings", 2, "vec_id", "vec_id", "label", "embedding")
     return Run(
         staged,
-        lambda work, ck: streaming_outlier_sink(
-            src(), cents, work, ck, dims=q._DIMS, threshold=q._OUTLIER_THR
+        lambda work: streaming_outlier_sink(
+            src(), cents, work, dims=q._DIMS, threshold=q._OUTLIER_THR
         ),
         lambda work: _rows(read_outlier_results(spark, work)),
     )
@@ -101,7 +101,7 @@ def _delta_sink(spark, sf_dir) -> Run:
     staged, src = _stream(spark, sf_dir, "documents", 2, "doc_id", "doc_id", "text")
     return Run(
         staged,
-        lambda work, ck: streaming_bm25_index_sink(src(), work, ck, compact_every=2),
+        lambda work: streaming_bm25_index_sink(src(), work, compact_every=2),
         lambda work: _rows(read_posting_table(spark, work)),
     )
 
@@ -112,7 +112,7 @@ def _dlq(spark, sf_dir) -> Run:
     staged, src = _stream(spark, sf_dir, "documents", 2, "doc_id", "doc_id", "lang", "source", "n_chars")
     return Run(
         staged,
-        lambda work, ck: streaming_dlq_sink(src(), work, ck),
+        lambda work: streaming_dlq_sink(src(), work),
         lambda work: (_rows(read_clean(spark, work)), _rows(read_dlq(spark, work))),
     )
 
@@ -124,7 +124,7 @@ def _packing(spark, sf_dir) -> Run:
     staged, src = _stream(spark, sf_dir, "documents", 2, "doc_id", "doc_id", "lang", "text")
     return Run(
         staged,
-        lambda work, ck: streaming_pack_sink(src(), work, ck, ctx_len=_CTX_LEN),
+        lambda work: streaming_pack_sink(src(), work, ctx_len=_CTX_LEN),
         lambda work: _rows(read_packed_bins(spark, work)),
     )
 
@@ -135,7 +135,7 @@ def _rollup(spark, sf_dir) -> Run:
     staged, src = _stream(spark, sf_dir, "events", 2, "ts", "ts", "event_type", "value")
     return Run(
         staged,
-        lambda work, ck: streaming_rollup_sink(src(), work, ck),
+        lambda work: streaming_rollup_sink(src(), work),
         lambda work: _rows(read_rollup_view(spark, work)),
     )
 
@@ -150,8 +150,8 @@ def _reservoir(spark, sf_dir) -> Run:
     staged, src = _stream(spark, sf_dir, "documents", 2, "doc_id", "lang", "doc_id", "n_chars")
     return Run(
         staged,
-        lambda work, ck: streaming_weighted_reservoir_sink(
-            src(), _WS_KEY.format(h=_WS_H_SPARK), work, ck, top_k=_WS_TOP_K
+        lambda work: streaming_weighted_reservoir_sink(
+            src(), _WS_KEY.format(h=_WS_H_SPARK), work, top_k=_WS_TOP_K
         ),
         lambda work: _rows(read_reservoir(spark, work, _WS_TOP_K)),
     )
@@ -164,7 +164,7 @@ def _kmv(spark, sf_dir) -> Run:
     staged, src = _stream(spark, sf_dir, "events", 2, "event_id", "event_type", "user_id")
     return Run(
         staged,
-        lambda work, ck: streaming_kmv_sink(src(), "event_type", "user_id", work, ck, k=_KMV_K),
+        lambda work: streaming_kmv_sink(src(), "event_type", "user_id", work, k=_KMV_K),
         lambda work: _rows(read_kmv_estimate(spark, work, _KMV_K)),
     )
 
@@ -176,7 +176,7 @@ def _cms(spark, sf_dir) -> Run:
     staged, src = _stream(spark, sf_dir, "events", 2, "event_id", "user_id")
     return Run(
         staged,
-        lambda work, ck: streaming_cms_sink(src(), _CMS_B_SPARK, _CMS_D, work, ck),
+        lambda work: streaming_cms_sink(src(), _CMS_B_SPARK, _CMS_D, work),
         lambda work: _rows(read_cms_counters(spark, work)),
     )
 
@@ -195,7 +195,7 @@ def _cdc(spark, sf_dir) -> Run:
     )
     return Run(
         staged,
-        lambda work, ck: streaming_merge_sink(src(), work, ck, contiguous_keys=True),
+        lambda work: streaming_merge_sink(src(), work, contiguous_keys=True),
         lambda work: _rows(read_merged_snapshot(spark, work)),
         lambda work: write_base_snapshot(docs, work),
     )
@@ -209,7 +209,7 @@ def _dedup(spark, sf_dir) -> Run:
     start, staged = incremental_dedup_replay(spark, sf_dir, chunks=3)
     return Run(
         staged,
-        lambda work, ck: start(work, ck, compact_every=2),
+        lambda work: start(work, compact_every=2),
         lambda work: _rows(read_verdicts(spark, work)),
     )
 
@@ -246,24 +246,22 @@ def _points(writes: int) -> list[tuple]:
 
 CELLS = [(name, p) for name, sink in SINKS.items() for p in _points(sink.writes)]
 
-def _fresh(run: Run, tag: str) -> tuple[str, str]:
+def _fresh(run: Run, tag: str) -> str:
     work = tempfile.mkdtemp(prefix=f"rlink_matrix_{tag}_")
     run.init(work)
-    return work, tempfile.mkdtemp(prefix=f"rlink_matrix_{tag}_ck_")
+    return work
 
 
-def _copy(dirs: tuple[str, str], tag: str) -> tuple[str, str]:
-    """A private copy of a (work dir, checkpoint) pair to resume from."""
-    out = tuple(tempfile.mkdtemp(prefix=f"rlink_matrix_{tag}_") for _ in dirs)
-    for src, dst in zip(dirs, out):
-        shutil.copytree(src, dst, dirs_exist_ok=True)
+def _copy(work: str, tag: str) -> str:
+    """A private copy of a work dir, checkpoint included, to resume from."""
+    out = tempfile.mkdtemp(prefix=f"rlink_matrix_{tag}_")
+    shutil.copytree(work, out, dirs_exist_ok=True)
     return out
 
 
-def _drain_recording(run: Run, dirs: tuple[str, str], states: dict, what: str) -> CrashInjector:
-    work, ck = dirs
+def _drain_recording(run: Run, work: str, states: dict, what: str) -> CrashInjector:
     with CrashInjector(on_epoch=lambda e: states.__setitem__(e, run.read(work))) as inj:
-        drain(run.start(work, ck), what=what)
+        drain(run.start(work), what=what)
     return inj
 
 
@@ -274,7 +272,7 @@ def _reference(spark, sf_dir, name: str):
     sink = SINKS[name]
     run = sink.build(spark, sf_dir)
     prefix = _fresh(run, name)
-    states = {-1: run.read(prefix[0])}
+    states = {-1: run.read(prefix)}
     held = tempfile.mkdtemp(prefix=f"rlink_matrix_{name}_held_")
     later = sorted(os.listdir(run.staged))[sink.epoch:]
     for f in later:  # chunk files keep their mtimes, so replay order holds
@@ -308,17 +306,17 @@ def references(spark, sf_dir):
 def test_sink_survives_a_crash_at_every_write(references, name, point):
     sink = SINKS[name]
     run, prefix, states = references(name)
-    work, ck = _copy(prefix, name)
+    work = _copy(prefix, name)
     with CrashInjector(sink.epoch, point) as inj:
         with pytest.raises(StreamingQueryException, match="injected crash"):
-            drain(run.start(work, ck), what=f"{name} crashing run")
+            drain(run.start(work), what=f"{name} crashing run")
         assert inj.fired
         torn = run.read(work)
         assert torn in (states[sink.epoch - 1], states[sink.epoch]), (
             f"{name} at epoch {sink.epoch} {point}: reader shows neither the "
             "epoch's start nor its end"
         )
-        drain(run.start(work, ck), what=f"{name} resumed run")
+        drain(run.start(work), what=f"{name} resumed run")
     assert run.read(work) == states[max(states)]
 
 

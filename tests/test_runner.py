@@ -267,7 +267,7 @@ def _run_dedup_sink(spark, sf_dir, tag: str):
 
     start, _ = incremental_dedup_replay(spark, sf_dir, chunks=2)
     work_dir = tempfile.mkdtemp(prefix=f"rlink_sdedup_{tag}_")
-    q = start(work_dir, tempfile.mkdtemp(prefix=f"rlink_sdedup_{tag}_ck_"))
+    q = start(work_dir)
     drain(q, what=f"{tag} dedup sink")
     verdicts = sdedup.read_verdicts(spark, work_dir)
     docs = load_table(spark, sf_dir, "documents")

@@ -69,7 +69,6 @@ def test_soak_intake_dedup_100_epochs(spark, sf_dir):
     )
     staged = stage_stream_dir(sf_dir, "documents", chunks=_EPOCHS, order_col="doc_id")
     work_dir = tempfile.mkdtemp(prefix="rlink_soak_dedup_")
-    ck = tempfile.mkdtemp(prefix="rlink_soak_dedup_ck_")
     src = stream_from_staged(
         spark, staged, sf_dir, "documents", max_files_per_trigger=1
     ).where(F.col("doc_id") % 4 == 0)
@@ -83,7 +82,6 @@ def test_soak_intake_dedup_100_epochs(spark, sf_dir):
             hist_banded,
             shingle_sets(docs),
             work_dir=work_dir,
-            checkpoint=ck,
             threshold=_INCR_THR,
             n_hashes=_N_HASHES,
             bands=_BANDS,
@@ -130,7 +128,6 @@ def test_soak_cdc_merge_100_epochs(spark, sf_dir):
     from rlink_rs_spark.streaming.sources import stage_stream_dir, stream_from_staged
 
     work_dir = tempfile.mkdtemp(prefix="rlink_soak_cdc_")
-    ck = tempfile.mkdtemp(prefix="rlink_soak_cdc_ck_")
     write_base_snapshot(load_table(spark, sf_dir, "documents"), work_dir)
     staged = stage_stream_dir(sf_dir, "documents", chunks=_EPOCHS, order_col="doc_id")
     src = stream_from_staged(
@@ -143,7 +140,6 @@ def test_soak_cdc_merge_100_epochs(spark, sf_dir):
         q = streaming_merge_sink(
             src.select("doc_id", "text", "lang", "source", "n_chars"),
             work_dir=work_dir,
-            checkpoint=ck,
         )
         assert q.awaitTermination(1800), "soak CDC stream did not drain"
         assert q.exception() is None
@@ -209,7 +205,6 @@ def test_soak_ivf_index_add_100_epochs(spark, sf_dir):
     )
     staged = stage_stream_dir(sf_dir, "embeddings", chunks=_EPOCHS, order_col="vec_id")
     state_dir = tempfile.mkdtemp(prefix="rlink_soak_ivf_")
-    ck = tempfile.mkdtemp(prefix="rlink_soak_ivf_ck_")
     src = stream_from_staged(
         spark, staged, sf_dir, "embeddings", max_files_per_trigger=1
     )
@@ -221,7 +216,6 @@ def test_soak_ivf_index_add_100_epochs(spark, sf_dir):
             src.select("vec_id", "embedding"),
             codebook=codebook,
             state_dir=state_dir,
-            checkpoint=ck,
             dims=_DIMS,
             compact_every=8,
         )

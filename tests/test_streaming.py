@@ -1378,12 +1378,11 @@ def test_streaming_incremental_dedup_crash_resume_matches_batch_twin(spark, sf_d
 
     start, _ = incremental_dedup_replay(spark, sf_dir, chunks=4)
     work_dir = tempfile.mkdtemp(prefix="rlink_sdedup_test_")
-    ck = tempfile.mkdtemp(prefix="rlink_sdedup_test_ck_")
     with CrashInjector(2, ("before", 1)) as inj:
         with pytest.raises(StreamingQueryException, match="injected crash"):
-            drain(start(work_dir, ck), what="crashing intake stream")
+            drain(start(work_dir), what="crashing intake stream")
         assert inj.fired
-        drain(start(work_dir, ck), what="resumed intake stream")
+        drain(start(work_dir), what="resumed intake stream")
 
     got = {tuple(r) for r in read_verdicts(spark, work_dir).collect()}
     want = {
@@ -1415,7 +1414,6 @@ def test_streaming_reservoir_bounded_state_and_crash_resume(spark, sf_dir):
         src.select("lang", "doc_id", "n_chars"),
         key_expr=_WS_KEY.format(h=_WS_H_SPARK),
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_res_test_ck_"),
         top_k=_WS_TOP_K,
     )
     drain(q, what="reservoir stream")
@@ -1455,7 +1453,6 @@ def test_streaming_kmv_bounded_state_and_crash_resume(spark, sf_dir):
         group_col="event_type",
         value_col="user_id",
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_kmv_test_ck_"),
         k=_KMV_K,
     )
     drain(q, what="KMV stream")
@@ -1495,12 +1492,11 @@ def test_streaming_intake_score_seam_crash_resume(spark, sf_dir):
 
     start, _ = incremental_dedup_replay(spark, sf_dir, chunks=4)
     work_dir = tempfile.mkdtemp(prefix="rlink_intake_test_")
-    ck = tempfile.mkdtemp(prefix="rlink_intake_test_ck_")
     with CrashInjector(1, ("before", 1)) as inj:
         with pytest.raises(StreamingQueryException, match="injected crash"):
-            drain(start(work_dir, ck, score_fn=gate), what="crashing intake stream")
+            drain(start(work_dir, score_fn=gate), what="crashing intake stream")
         assert inj.fired
-        drain(start(work_dir, ck, score_fn=gate), what="resumed intake stream")
+        drain(start(work_dir, score_fn=gate), what="resumed intake stream")
 
     got = {
         tuple(r) for r in read_verdicts(spark, work_dir, with_quality=True).collect()
@@ -1529,7 +1525,6 @@ def test_streaming_rollup_bounded_state_and_crash_resume(spark, sf_dir):
     q = streaming_rollup_sink(
         src.select("ts", "event_type", "value"),
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_rollup_test_ck_"),
     )
     drain(q, what="rollup stream")
 
@@ -1623,18 +1618,17 @@ def test_streaming_dedup_compaction_crash_resume(spark, sf_dir):
 
     start, _ = incremental_dedup_replay(spark, sf_dir, chunks=8)
     work_dir = tempfile.mkdtemp(prefix="rlink_sdedup_compact_")
-    ck = tempfile.mkdtemp(prefix="rlink_sdedup_compact_ck_")
     hash_dir = os.path.join(work_dir, "state_hashes")
     band_dir = os.path.join(work_dir, "state_bands")
     # first fold at epoch 3 (deltas 0,1,2): hashes first, then bands
     with CrashInjector(3, ("before", 2)) as inj:
         with pytest.raises(StreamingQueryException, match="injected crash"):
-            drain(start(work_dir, ck, compact_every=3), what="crashing intake stream")
+            drain(start(work_dir, compact_every=3), what="crashing intake stream")
         assert inj.fired
         # the crash window's exact state: hashes folded and committed, bands not
         assert newest_base(hash_dir) == (os.path.join(hash_dir, "base_upto=2"), 2)
         assert newest_base(band_dir) == (None, -1)
-        drain(start(work_dir, ck, compact_every=3), what="resumed intake stream")
+        drain(start(work_dir, compact_every=3), what="resumed intake stream")
 
     got = {tuple(r) for r in read_verdicts(spark, work_dir).collect()}
     want = {
@@ -1683,7 +1677,6 @@ def test_streaming_cdc_merge_crash_resume_and_bucket_pruning(spark, sf_dir):
     q = streaming_merge_sink(
         src.select("doc_id", "text", "lang", "source", "n_chars"),
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_cdc_test_ck_"),
     )
     drain(q, what="CDC merge stream")
 
@@ -1799,7 +1792,6 @@ def test_streaming_intake_dlq_crash_resume_two_sink_invariants(spark, sf_dir):
     q = streaming_dlq_sink(
         src.select("doc_id", "lang", "source", "n_chars"),
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_dlq_test_ck_"),
     )
     drain(q, what="DLQ stream")
 
@@ -1853,9 +1845,7 @@ def test_dlq_epoch_atomic_across_both_sinks_and_null_lang_policy(spark):
         "doc_id bigint, lang string, source string, n_chars bigint"
     ).parquet(src_dir)
     work_dir = tempfile.mkdtemp(prefix="rlink_dlq_atomic_")
-    q = streaming_dlq_sink(
-        stream, work_dir, tempfile.mkdtemp(prefix="rlink_dlq_atomic_ck_")
-    )
+    q = streaming_dlq_sink(stream, work_dir)
     try:
         assert q.awaitTermination(120)
     finally:
@@ -1887,7 +1877,7 @@ def test_dlq_replay_torn_dlq_dir_hides_epoch_from_both_sinks(spark):
         "doc_id bigint, lang string, source string, n_chars bigint"
     ).parquet(src_dir)
     work_dir = tempfile.mkdtemp(prefix="rlink_dlq_torn_")
-    q = streaming_dlq_sink(stream, work_dir, tempfile.mkdtemp(prefix="rlink_dlq_torn_ck_"))
+    q = streaming_dlq_sink(stream, work_dir)
     try:
         assert q.awaitTermination(120)
     finally:
@@ -1967,7 +1957,6 @@ def test_cdc_schema_evolution_never_rewrites_v1_buckets(spark, sf_dir):
     q = streaming_merge_sink(
         src.select("doc_id", "text", "lang", "source", "n_chars"),
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_cdc_evo_test_ck_"),
         retain=8,  # keep every version so epoch dirs stay inspectable
         evolve_rev_from=2,
     )
@@ -2031,7 +2020,6 @@ def test_streaming_pack_sequences_crash_resume_and_bounded_state(spark, sf_dir):
     q = streaming_pack_sink(
         src.select("doc_id", "lang", "text"),
         work_dir=work_dir,
-        checkpoint=tempfile.mkdtemp(prefix="rlink_pack_test_ck_"),
         ctx_len=_CTX_LEN,
     )
     drain(q, what="packing stream")
@@ -2210,14 +2198,12 @@ def test_delta_sink_compaction_crash_resume(spark, sf_dir):
 
     staged = stage_stream_dir(sf_dir, "documents", chunks=6, order_col="doc_id")
     state_dir = tempfile.mkdtemp(prefix="rlink_delta_compact_")
-    ckpt = tempfile.mkdtemp(prefix="rlink_delta_compact_ck_")
 
     def run():
         src = stream_from_staged(spark, staged, sf_dir, "documents", 1)
         return streaming_bm25_index_sink(
             src.select("doc_id", "text"),
             state_dir=state_dir,
-            checkpoint=ckpt,
             compact_every=2,
         )
 

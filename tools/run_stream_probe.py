@@ -157,7 +157,6 @@ def cdc_merge_leg(spark, sf_dir: str, chunks: int) -> dict:
     from rlink_rs_spark.tables import load_table
 
     work_dir = tempfile.mkdtemp(prefix="rlink_probe_cdc_")
-    ck = tempfile.mkdtemp(prefix="rlink_probe_cdc_ck_")
     col = ProgressCollector()
     spark.streams.addListener(col)
     t0 = time.time()
@@ -172,7 +171,6 @@ def cdc_merge_leg(spark, sf_dir: str, chunks: int) -> dict:
         q = streaming_merge_sink(
             src.select("doc_id", "text", "lang", "source", "n_chars"),
             work_dir=work_dir,
-            checkpoint=ck,
         )
         timeout = float(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", 7200))
         if not q.awaitTermination(timeout):
@@ -192,7 +190,6 @@ def cdc_merge_leg(spark, sf_dir: str, chunks: int) -> dict:
         "epoch_ms_max": max(durs) if durs else None,
     }
     shutil.rmtree(work_dir, ignore_errors=True)
-    shutil.rmtree(ck, ignore_errors=True)
     return res
 
 
