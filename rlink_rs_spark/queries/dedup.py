@@ -477,7 +477,7 @@ def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     crash at any write of an epoch resumes exactly-once
     (tests/test_crash_matrix.py). Replayed in 2 doc_id-ordered chunks so state
     genuinely carries across micro-batches while the fixture-scale run
-    pays the per-epoch constant (state reads + 3 commits) only twice;
+    pays the per-epoch constant (state reads + 1 commit) only twice;
     verdicts are chunk-count-invariant ("previously processed" == "smaller
     doc_id" for ANY doc_id-ordered chunking), so the shared batch-twin
     oracle is untouched. Deeper epoch chains stay exercised by the

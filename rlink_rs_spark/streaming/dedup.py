@@ -30,56 +30,44 @@ Per micro-batch (foreachBatch, availableNow):
      (b) the band signatures of all previously processed stream docs
      (epoch state), and (c) itself (id_b < id_a). Candidates verify at
      exact Jaccard >= threshold against the static corpus shingle sets.
-  3. Verdicts land in `out_dir/batch_id=N`, and the batch's hashes + band
-     signatures land in the state dirs under `batch_id=N` -- OVERWRITE per
+  3. The epoch commits ONE dir, `<work_dir>/state/batch_id=N`: one row per
+     streamed doc, (doc_id, h, sigs, exact_dup, near_dup_of, admit), where
+     h is the doc's md5 and sigs[b] its band-b signature. That dir is both
+     the epoch's verdicts and the state later epochs read (prior hashes
+     from h, prior bands by posexplode(sigs)). It is an OVERWRITE per
      epoch, so a replayed micro-batch after a crash rewrites byte-identical
-     output instead of duplicating state: exactly-once, the same epoch-
-     idempotence contract as sources/sinks.py's bulk sinks.
+     rows instead of duplicating state: exactly-once, the same
+     epoch-idempotence contract as sources/sinks.py's bulk sinks.
 
 Because the stream replays chunks in doc_id order, "previously processed"
 equals "smaller doc_id", and the drained result is row-identical to the
 batch twin `incremental_batch_dedup` -- which is exactly what lets the
 registry entry share its DuckDB oracle.
 
-At 100 TB: state dirs become the metastore-tracked signature/hash tables of
-admitted batches (bounded by corpus size / 4 bands, not by stream length);
+At 100 TB: the state root becomes the metastore-tracked signature/hash table
+of admitted batches (bounded by corpus size / 4 bands, not by stream length);
 the static corpus contributes only band-index reads and shingle lookups for
 verified candidates.
 
-Compaction (LSM level-0 fold, crashed at every write of a folding
-epoch by tests/test_crash_matrix.py):
-each epoch reads the union of earlier state dirs, so a long-lived stream
-accumulates O(epochs) small dirs. When the committed delta count reaches
-`compact_every`, the epoch folds base + deltas into a new
-`base_upto=<max folded epoch>` dir -- a DETERMINISTIC union keyed by the
-max folded epoch, so a crash mid-fold replays it idempotently (overwrite
-of the same dir name, torn dirs have no _SUCCESS and are invisible).
-Folded delta dirs and superseded bases are dropped by a GC pass at the
-START of the NEXT epoch, never inside the epoch that wrote the base, so a
-crash anywhere leaves at least one complete representation on disk.
-Readers take the newest committed base plus the deltas above its
-watermark; state content is identical before and after a fold.
+Compaction (streaming/deltas.py's LSM level-0 fold, crashed at every
+write of a folding epoch by tests/test_crash_matrix.py): each epoch reads
+the union of earlier epoch dirs, so once `compact_every` committed deltas
+have piled up since the last base, the epoch first folds them into a
+`base_upto=<max folded epoch>` dir, then writes its own delta.
 """
 
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from rlink_rs_spark.operators.dedup import (
-    _BAND_SCHEMA,
-    minhash_bands,
-    shingle_sets,
-    verify_jaccard,
-)
+from rlink_rs_spark.operators.dedup import minhash_bands, shingle_sets, verify_jaccard
 from rlink_rs_spark.operators.repartition import fan_out
 from rlink_rs_spark.streaming.deltas import compact, gc_folded, read_state
-from rlink_rs_spark.streaming.epochs import committed, path, read, start
+from rlink_rs_spark.streaming.epochs import path, start
 
 
 def dedup_stream(
@@ -99,21 +87,16 @@ def dedup_stream(
     return df.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(keys)
 
 
-_HASH_SCHEMA = "doc_id bigint, h string"
+_STATE_SCHEMA = (
+    "doc_id bigint, h string, sigs array<string>, "
+    "exact_dup boolean, near_dup_of bigint, admit boolean"
+)
+_QUALITY = ", passes_quality boolean"
 _OUT_SCHEMA = "doc_id bigint, exact_dup boolean, near_dup_of bigint, admit boolean"
 _OUT_SCHEMA_Q = (
     "doc_id bigint, passes_quality boolean, exact_dup boolean, "
     "near_dup_of bigint, admit boolean"
 )
-
-
-def _thread_target(spark: SparkSession, fn):
-    """`fn` carrying the session's local properties and tags into a worker
-    thread. With pinned-thread mode off, inheritable_thread_target(spark)
-    returns the session itself rather than a decorator; `fn` then runs
-    as is, which is what pinned-off threads do anyway."""
-    wrap = inheritable_thread_target(spark)
-    return fn if wrap is spark else wrap(fn)
 
 
 def streaming_incremental_dedup_sink(
@@ -133,9 +116,8 @@ def streaming_incremental_dedup_sink(
     (columns doc_id, text, ...). `hist_banded` is the history band index
     (load_or_build_band_index) and `corpus_sets` the (doc_id, sh) shingle
     sets (operators.dedup.shingle_sets) of every doc a candidate can name.
-    Returns the started StreamingQuery; verdicts accumulate under
-    `<work_dir>/out`, next to the state roots and the query's
-    `<work_dir>/_checkpoint`.
+    Returns the started StreamingQuery; verdicts and state accumulate
+    under `<work_dir>/state`, next to the query's `<work_dir>/_checkpoint`.
 
     `score_fn` (optional) turns this into the FULL intake pipeline: a
     callable mapping the raw micro-batch to (doc_id, passes boolean) --
@@ -150,9 +132,8 @@ def streaming_incremental_dedup_sink(
     the old base) into a new `base_upto=` dir; folded dirs are GC'd at
     the start of the NEXT epoch."""
     spark = doc_stream.sparkSession
-    out_dir = os.path.join(work_dir, "out")
-    hash_dir = os.path.join(work_dir, "state_hashes")
-    band_dir = os.path.join(work_dir, "state_bands")
+    state_dir = os.path.join(work_dir, "state")
+    schema = _STATE_SCHEMA + (_QUALITY if score_fn is not None else "")
 
     # Static frames every epoch re-reads: cache them ONCE for the stream
     # (epoch 0 materializes them) instead of re-aggregating the standing
@@ -177,19 +158,17 @@ def streaming_incremental_dedup_sink(
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         # deferred GC of dirs a PRIOR epoch's fold superseded, then this
         # epoch's fold if the committed-delta count reached the trigger
-        gc_folded(hash_dir)
-        gc_folded(band_dir)
-        compact(spark, hash_dir, _HASH_SCHEMA, epoch_id, compact_every)
-        compact(spark, band_dir, _BAND_SCHEMA, epoch_id, compact_every)
+        gc_folded(state_dir)
+        compact(spark, state_dir, schema, epoch_id, compact_every)
 
         # fan_out the micro-batch before caching: the per-epoch md5 kernel
         # otherwise runs at the file chunk's scan parallelism -- one task
         # per trigger file.
         batch = fan_out(batch_df.select("doc_id", "text")).cache()
+        prior = read_state(spark, state_dir, schema, epoch_id)
 
         # --- exact stage
-        prior_hashes = read_state(spark, hash_dir, _HASH_SCHEMA, epoch_id).select("h").distinct()
-        known = hist_hashes.unionByName(prior_hashes).distinct()
+        known = hist_hashes.unionByName(prior.select("h")).distinct()
         w = Window.partitionBy("h")
         bh = batch.select("doc_id", F.md5("text").alias("h")).withColumn(
             "min_id", F.min("doc_id").over(w)
@@ -204,7 +183,7 @@ def streaming_incremental_dedup_sink(
 
         # --- near stage
         batch_banded = minhash_bands(shingle_sets(batch), n_hashes, bands).cache()
-        prior_bands = read_state(spark, band_dir, _BAND_SCHEMA, epoch_id)
+        prior_bands = prior.select("doc_id", F.posexplode("sigs").alias("band", "sig"))
         bb = batch_banded.select(F.col("doc_id").alias("id_a"), "band", "sig")
         earlier = hist_banded.unionByName(prior_bands).select(
             F.col("doc_id").alias("id_b"), "band", "sig"
@@ -219,59 +198,41 @@ def streaming_incremental_dedup_sink(
             .select("id_a", "id_b")
         )
         cands = cands_prior.unionByName(cands_self).distinct()
-        near = (
-            verify_jaccard(cands, corpus_sets, threshold=threshold)
-            .groupBy(F.col("id_a").alias("doc_id"))
-            .agg(F.min("id_b").alias("near_dup_of"))
+        near = verify_jaccard(cands, corpus_sets, threshold=threshold).select(
+            F.col("id_a").alias("doc_id"), F.col("id_b").alias("near_dup_of")
         )
 
-        verdict = ex.join(near, "doc_id", "left").select(
-            "doc_id",
-            "exact_dup",
-            "near_dup_of",
-            (~F.col("exact_dup") & F.col("near_dup_of").isNull()).alias("admit"),
-        )
+        # --- one row per doc: a single groupBy gathers the exact verdict,
+        # the verified pairs and the band signatures (sigs[b] is band b's;
+        # a doc without shingles has none) where joins would each add an
+        # exchange or broadcast job
+        parts = [
+            ex,
+            near,
+            batch_banded.select("doc_id", F.struct("band", "sig").alias("bs")),
+        ]
+        aggs = [
+            F.max("h").alias("h"),
+            F.sort_array(F.collect_list("bs")).getField("sig").alias("sigs"),
+            F.max("exact_dup").alias("exact_dup"),
+            F.min("near_dup_of").alias("near_dup_of"),
+        ]
+        admit = ~F.col("exact_dup") & F.col("near_dup_of").isNull()
         if score_fn is not None:
             # score off the CACHED (doc_id, text) projection -- the gate
             # and the dedup stages share one scan of the micro-batch
-            qual = score_fn(batch).select(
-                "doc_id", F.col("passes").alias("passes_quality")
+            parts.append(
+                score_fn(batch).select("doc_id", F.col("passes").alias("passes_quality"))
             )
-            pq = F.coalesce(F.col("passes_quality"), F.lit(False))
-            verdict = verdict.join(qual, "doc_id", "left").select(
-                "doc_id",
-                pq.alias("passes_quality"),
-                "exact_dup",
-                "near_dup_of",
-                (pq & F.col("admit")).alias("admit"),
-            )
+            aggs.append(F.coalesce(F.max("passes_quality"), F.lit(False)).alias("passes_quality"))
+            admit = admit & F.col("passes_quality")
+        rows = parts[0]
+        for part in parts[1:]:
+            rows = rows.unionByName(part, allowMissingColumns=True)
+        state = rows.groupBy("doc_id").agg(*aggs).withColumn("admit", admit)
 
-        # --- epoch-idempotent commits (overwrite THIS epoch's dirs only),
-        # submitted CONCURRENTLY (guide §2.6): the three writes share no
-        # data dependency -- verdict reads (batch, batch_banded) caches,
-        # hash state reads batch, band state reads batch_banded -- and each
-        # is a tiny scheduling-bound driver job, so overlapping them hides
-        # the two cheap commits under the verdict job. Cache races are safe
-        # (BlockManager per-block write locks: one task computes, the other
-        # blocks then reads); crash semantics are unchanged because all
-        # three are per-epoch overwrites and a replayed epoch rewrites
-        # byte-identical dirs whichever subset a crash left behind.
-        # Hash-state commit writes bh's (doc_id, h) directly (r16, guide
-        # §1.2): `ex` is bh LEFT-joined against the DISTINCT known set, so
-        # its (doc_id, h) projection is row-identical to bh's -- routing the
-        # state write through `ex` re-evaluated the whole exact stage
-        # (hist-union-distinct + membership join) a second time per epoch
-        # just to throw the verdict column away. bh reads the cached batch.
-        hash_frame = bh.select("doc_id", "h")
-        commits = (
-            lambda: verdict.write.mode("overwrite").parquet(path(out_dir, epoch_id)),
-            lambda: hash_frame.write.mode("overwrite").parquet(path(hash_dir, epoch_id)),
-            lambda: batch_banded.write.mode("overwrite").parquet(path(band_dir, epoch_id)),
-        )
-        with ThreadPoolExecutor(max_workers=len(commits)) as pool:
-            futures = [pool.submit(_thread_target(spark, c)) for c in commits]
-            for fut in futures:
-                fut.result()
+        # --- the epoch's one commit (overwrite THIS epoch's dir only)
+        state.write.mode("overwrite").parquet(path(state_dir, epoch_id))
         batch.unpersist()
         batch_banded.unpersist()
 
@@ -281,5 +242,4 @@ def streaming_incremental_dedup_sink(
 def read_verdicts(spark: SparkSession, work_dir: str, with_quality: bool = False) -> DataFrame:
     """All committed verdict rows (one per streamed doc)."""
     schema = _OUT_SCHEMA_Q if with_quality else _OUT_SCHEMA
-    out_dir = os.path.join(work_dir, "out")
-    return read(spark, [path(out_dir, e) for e in committed(out_dir)], schema)
+    return read_state(spark, os.path.join(work_dir, "state"), schema, None)

@@ -3,19 +3,18 @@ production ingest runs: each micro-batch's rows are classified once and
 routed to EITHER the clean sink or the quarantine (DLQ) sink with a
 reason code, never both, never neither.
 
-Epoch protocol: streaming/epochs.py, over TWO roots. Both sinks commit
-epoch N inside ONE foreachBatch handler, and the epoch is VISIBLE only
-while it is committed in both `dlq` and `clean` -- so a drain reader can
-never observe a state where the DLQ rows landed but the clean rows
-didn't (ADVICE r9: the disjoint-and-complete invariant), whether the
-drain falls between the writes, after an unresumed crash, or while a
-replay's overwrite has torn one of the dirs. Replay rewrites both dirs
-byte-identically (classification is deterministic) -- exactly-once
-across a MULTI-sink epoch.
+Epoch protocol: streaming/epochs.py, over ONE root. Epoch N's routed
+rows, clean and quarantined alike, are one write into
+`routed/batch_id=N`, and the clean and DLQ readers filter that dir on its
+`quarantined` column. So a drain reader can never observe an epoch's DLQ
+rows without its clean rows (ADVICE r9: the disjoint-and-complete
+invariant): a crash or a replay's overwrite tears the one dir, which
+hides the epoch from both readers. Replay rewrites the dir
+byte-identically (classification is deterministic) -- exactly-once.
 
 At 100 TB: classification is row-local expressions plus one broadcast
 of the (tiny, config-sized) source blocklist -- the corpus never
-shuffles; each sink write is partition-local. The DLQ stays queryable
+shuffles; the epoch write is partition-local. The DLQ stays queryable
 by reason for pipeline triage.
 
 Reference parity: the reference routes rejected rows to logs
@@ -71,34 +70,24 @@ def classify_intake(docs: DataFrame) -> DataFrame:
 
 
 def streaming_dlq_sink(doc_stream: DataFrame, work_dir: str):
-    """foreachBatch handler writing the epoch's clean rows and DLQ rows to
-    their own per-epoch dirs; the epoch is visible once both are
-    committed. Returns the StreamingQuery."""
-    dlq_dir, clean_dir = os.path.join(work_dir, "dlq"), os.path.join(work_dir, "clean")
+    """foreachBatch handler writing the epoch's routed rows as one dir.
+    Returns the StreamingQuery."""
+    root = os.path.join(work_dir, "routed")
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        routed = classify_intake(batch_df)
-        routed.where(F.col("quarantined")).write.mode("overwrite").parquet(
-            path(dlq_dir, epoch_id)
-        )
-        routed.where(~F.col("quarantined")).write.mode("overwrite").parquet(
-            path(clean_dir, epoch_id)
-        )
+        classify_intake(batch_df).write.mode("overwrite").parquet(path(root, epoch_id))
 
     return start(doc_stream, handle, work_dir, "append")
 
 
-def _read_sink(spark: SparkSession, work_dir: str, sink: str) -> DataFrame:
-    """One sink's rows of the epochs committed in BOTH sinks."""
-    roots = [os.path.join(work_dir, s) for s in ("dlq", "clean")]
-    visible = set(committed(roots[0])).intersection(committed(roots[1]))
-    root = os.path.join(work_dir, sink)
-    return read(spark, [path(root, e) for e in sorted(visible)], _ROUTED_SCHEMA)
+def _read_routed(spark: SparkSession, work_dir: str) -> DataFrame:
+    root = os.path.join(work_dir, "routed")
+    return read(spark, [path(root, e) for e in committed(root)], _ROUTED_SCHEMA)
 
 
 def read_clean(spark: SparkSession, work_dir: str) -> DataFrame:
-    return _read_sink(spark, work_dir, "clean")
+    return _read_routed(spark, work_dir).where(~F.col("quarantined"))
 
 
 def read_dlq(spark: SparkSession, work_dir: str) -> DataFrame:
-    return _read_sink(spark, work_dir, "dlq")
+    return _read_routed(spark, work_dir).where(F.col("quarantined"))

@@ -10,11 +10,10 @@ deterministic, so a replay rewrites byte-identical dirs: exactly-once on
 top of Spark's at-least-once replay (the reference's "completed
 checkpoint id").
 
-A sink writing several roots per epoch counts the epoch only when it is
-committed in EVERY root (``latest(a, b)``), so a crash between the writes
-hides it as a unit. A sink whose epoch is more than one Spark write passes
-its own marker (CDC's ``_COMMITTED``); the LSM fold's bases use the prefix
-``base_upto``.
+Only streaming/packing.py writes two dirs per epoch: its state dir goes
+last, so that write is its commit record, and no reader joins the two. A
+sink whose epoch is more than one Spark write passes its own marker (CDC's
+``_COMMITTED``); the LSM fold's bases use the prefix ``base_upto``.
 
 Root layout: a sink's root holds its epoch dirs (directly or in named
 sub-roots) and its query's checkpoint, ``<root>/_checkpoint``. The epoch
@@ -66,12 +65,9 @@ def committed(
     ]
 
 
-def latest(*roots: str, before: int | None = None) -> int | None:
-    """Newest id below `before` that is committed in every root."""
-    common = set(committed(roots[0], before))
-    for root in roots[1:]:
-        common &= set(committed(root, before))
-    return max(common, default=None)
+def latest(root: str, before: int | None = None) -> int | None:
+    """Newest committed id below `before`."""
+    return max(committed(root, before), default=None)
 
 
 def read(spark: SparkSession, paths: list[str], schema: str) -> DataFrame:

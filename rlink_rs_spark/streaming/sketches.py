@@ -13,8 +13,8 @@ md5-derived hashes). This is the property HLL shares in principle but not
 in any engine-portable way; KMV's merge is plain distinct-union + top-K.
 
 Epoch protocol: streaming/epochs.py; epoch N carries the newest committed
-sketch forward as its own state dirs, and a KMV epoch counts only once both
-its `hashes` and `counts` dirs are committed.
+sketch forward as its own dir of (group, h, cnt) rows: the group's <= K
+smallest hashes, each carrying the group's running row count.
 
 Reference parity: the reference's only approx aggregate is the histogram
 pct (functions/percentile/mod.rs:1-222); a distinct sketch would live in
@@ -37,8 +37,7 @@ from pyspark.sql.window import Window
 
 from rlink_rs_spark.streaming.epochs import latest, path, read, start
 
-_HASH_SCHEMA = "event_type string, h bigint"
-_COUNT_SCHEMA = "event_type string, cnt bigint"
+_SKETCH_SCHEMA = "event_type string, h bigint, cnt bigint"
 
 
 def _kmv_hash(col: str) -> F.Column:
@@ -57,44 +56,39 @@ def streaming_kmv_sink(
     k: int = 1024,
 ):
     """foreachBatch sink maintaining the per-group KMV sketch across
-    micro-batches. State per epoch: `hashes` (<= K smallest distinct
-    hashes per group) and `counts` (one running row count per group).
+    micro-batches. State per epoch: one dir of the <= K smallest distinct
+    hashes per group, each row carrying the group's running row count.
     Returns the started StreamingQuery."""
     spark = stream.sparkSession
-    hash_dir = os.path.join(work_dir, "hashes")
-    count_dir = os.path.join(work_dir, "counts")
+    root = os.path.join(work_dir, "sketch")
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        batch = batch_df.select(
-            F.col(group_col).alias("event_type"), _kmv_hash(value_col).alias("h")
+        # batch rows count 1 each (n); carried rows count 0 and bring the
+        # prior running count (cnt)
+        rows = batch_df.select(
+            F.col(group_col).alias("event_type"),
+            _kmv_hash(value_col).alias("h"),
+            F.lit(1).cast("bigint").alias("n"),
+            F.lit(0).cast("bigint").alias("cnt"),
         )
-        batch_counts = batch.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("bigint").alias("cnt")
-        )
-        batch_hashes = batch.distinct()
-
-        # a replay can tear either dir while its twin stays committed from
-        # the prior attempt, so the pair is resolved together
-        prev = latest(hash_dir, count_dir, before=epoch_id)
+        prev = latest(root, before=epoch_id)
         if prev is not None:
-            prev_hashes = spark.read.schema(_HASH_SCHEMA).parquet(path(hash_dir, prev))
-            batch_hashes = batch_hashes.unionByName(prev_hashes).distinct()
-            prev_counts = spark.read.schema(_COUNT_SCHEMA).parquet(path(count_dir, prev))
-            batch_counts = (
-                batch_counts.unionByName(prev_counts)
-                .groupBy("event_type")
-                .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-            )
-        w = Window.partitionBy("event_type").orderBy("h")
+            carried = spark.read.schema(_SKETCH_SCHEMA).parquet(path(root, prev))
+            rows = rows.unionByName(carried.withColumn("n", F.lit(0).cast("bigint")))
+        g = Window.partitionBy("event_type")
         merged = (
-            batch_hashes.withColumn("rn", F.row_number().over(w))
+            rows.groupBy("event_type", "h")
+            .agg(F.sum("n").alias("n"), F.max("cnt").alias("cnt"))
+            .select(
+                "event_type",
+                "h",
+                (F.sum("n").over(g) + F.max("cnt").over(g)).alias("cnt"),
+                F.row_number().over(g.orderBy("h")).alias("rn"),
+            )
             .where(F.col("rn") <= k)
             .drop("rn")
         )
-        # a crash between the two writes leaves the epoch committed in one
-        # root only, so readers and replay fall back to the previous pair
-        batch_counts.write.mode("overwrite").parquet(path(count_dir, epoch_id))
-        merged.write.mode("overwrite").parquet(path(hash_dir, epoch_id))
+        merged.write.mode("overwrite").parquet(path(root, epoch_id))
 
     return start(stream, handle, work_dir, "update")
 
@@ -102,28 +96,29 @@ def streaming_kmv_sink(
 def read_kmv_estimate(spark: SparkSession, work_dir: str, k: int = 1024) -> DataFrame:
     """Drain the newest committed sketch into the batch twin's output shape
     (event_type, approx_users, cnt)."""
-    hash_dir = os.path.join(work_dir, "hashes")
-    count_dir = os.path.join(work_dir, "counts")
-    last = latest(hash_dir, count_dir)
-    if last is None:
-        return spark.createDataFrame(
-            [], "event_type string, approx_users bigint, cnt bigint"
-        )
-    hashes = spark.read.schema(_HASH_SCHEMA).parquet(path(hash_dir, last))
-    counts = spark.read.schema(_COUNT_SCHEMA).parquet(path(count_dir, last))
+    root = os.path.join(work_dir, "sketch")
+    last = latest(root)
+    sketch = read(spark, [] if last is None else [path(root, last)], _SKETCH_SCHEMA)
     two60 = 1 << 60
-    sk = hashes.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_small"), F.max("h").alias("kth")
-    )
     est = F.floor(
         F.lit(float(k - 1)) * F.lit(float(two60)) / F.col("kth").cast("double")
     ).cast("long")
-    return sk.join(counts, "event_type").select(
-        "event_type",
-        F.when(F.col("n_small") < k, F.col("n_small").cast("bigint"))
-        .otherwise(est)
-        .alias("approx_users"),
-        "cnt",
+    # a null group drops out, as in the batch twin's join on the group
+    return (
+        sketch.where(F.col("event_type").isNotNull())
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_small"),
+            F.max("h").alias("kth"),
+            F.max("cnt").alias("cnt"),
+        )
+        .select(
+            "event_type",
+            F.when(F.col("n_small") < k, F.col("n_small").cast("bigint"))
+            .otherwise(est)
+            .alias("approx_users"),
+            "cnt",
+        )
     )
 
 

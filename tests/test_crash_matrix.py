@@ -202,8 +202,8 @@ def _cdc(spark, sf_dir) -> Run:
 
 
 def _dedup(spark, sf_dir) -> Run:
-    """Epoch 2 folds both state roots (hashes, then bands) before its three
-    concurrent commits (verdicts, hashes, bands)."""
+    """Epoch 2 folds the state root (deltas 0-1), then writes its one
+    epoch dir (verdicts, hashes and band signatures)."""
     from rlink_rs_spark.streaming.dedup import read_verdicts
 
     start, staged = incremental_dedup_replay(spark, sf_dir, chunks=3)
@@ -225,14 +225,14 @@ SINKS = {
     "ann_probe": Sink(_ann_probe, 1),
     "outlier": Sink(_outlier, 1),
     "delta_sink": Sink(_delta_sink, 2),
-    "dlq": Sink(_dlq, 2),
+    "dlq": Sink(_dlq, 1),
     "packing": Sink(_packing, 2),
     "rollup": Sink(_rollup, 1),
     "reservoir": Sink(_reservoir, 1),
-    "kmv": Sink(_kmv, 2),
+    "kmv": Sink(_kmv, 1),
     "cms": Sink(_cms, 1),
     "cdc_merge": Sink(_cdc, 2),
-    "dedup": Sink(_dedup, 5, epoch=2),
+    "dedup": Sink(_dedup, 2, epoch=2),
 }
 
 

@@ -256,29 +256,3 @@ def test_state_partitions_policy(spark, source_bytes, ceiling, want):
         assert state_partitions(stream.groupBy("value").count()) == want
     finally:
         spark.conf.set(_PARTS, prev)
-
-
-def _run_dedup_sink(spark, sf_dir, tag: str):
-    """Drain the incremental dedup sink over a two-chunk sf documents replay
-    and check every streamed doc got one verdict."""
-    import rlink_rs_spark.streaming.dedup as sdedup
-    from rlink_rs_spark.tables import load_table
-    from tests.helpers import incremental_dedup_replay
-
-    start, _ = incremental_dedup_replay(spark, sf_dir, chunks=2)
-    work_dir = tempfile.mkdtemp(prefix=f"rlink_sdedup_{tag}_")
-    q = start(work_dir)
-    drain(q, what=f"{tag} dedup sink")
-    verdicts = sdedup.read_verdicts(spark, work_dir)
-    docs = load_table(spark, sf_dir, "documents")
-    assert verdicts.count() == docs.where(F.col("doc_id") % 4 == 0).count() > 0
-
-
-def test_dedup_sink_runs_with_pinned_thread_mode_off(spark, sf_dir, monkeypatch):
-    """With pinned-thread mode off, inheritable_thread_target(session)
-    returns the session, not a decorator; the dedup sink's commit threads
-    must still run."""
-    import rlink_rs_spark.streaming.dedup as sdedup
-
-    monkeypatch.setattr(sdedup, "inheritable_thread_target", lambda f=None: f)
-    _run_dedup_sink(spark, sf_dir, "unpinned")

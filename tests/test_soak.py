@@ -99,13 +99,12 @@ def test_soak_intake_dedup_100_epochs(spark, sf_dir):
     # state term would push Q4 well past Q2 (observed ratio ~1.02)
     assert q4 <= 2.0 * q2, f"per-epoch wall grew across the soak: Q2={q2} Q4={q4}"
 
-    # state dirs bounded by the fold cadence, not the epoch count
-    for d in ("state_hashes", "state_bands"):
-        names = os.listdir(os.path.join(work_dir, d))
-        deltas = [x for x in names if x.startswith("batch_id=")]
-        bases = [x for x in names if x.startswith("base_upto=")]
-        assert len(deltas) <= 8 + 1, (d, sorted(deltas))
-        assert len(bases) <= 2, (d, sorted(bases))
+    # the state root is bounded by the fold cadence, not the epoch count
+    names = os.listdir(os.path.join(work_dir, "state"))
+    deltas = [x for x in names if x.startswith("batch_id=")]
+    bases = [x for x in names if x.startswith("base_upto=")]
+    assert len(deltas) <= 8 + 1, sorted(deltas)
+    assert len(bases) <= 2, sorted(bases)
 
     # 100-chunk replay drains to exactly the batch twin
     got = {tuple(r) for r in read_verdicts(spark, work_dir).collect()}

@@ -1457,17 +1457,17 @@ def test_streaming_kmv_bounded_state_and_crash_resume(spark, sf_dir):
     )
     drain(q, what="KMV stream")
 
-    # bounded state: every committed epoch holds <= K hash rows per group
+    # bounded state: every committed epoch holds <= K hash rows per group,
+    # and each group's rows carry one running count
     events = load_table(spark, sf_dir, "events")
     n_groups = events.select("event_type").distinct().count()
-    hash_dir = os.path.join(work_dir, "hashes")
-    for d in os.listdir(hash_dir):
-        n = spark.read.parquet(os.path.join(hash_dir, d)).count()
+    root = os.path.join(work_dir, "sketch")
+    for d in os.listdir(root):
+        state = spark.read.parquet(os.path.join(root, d))
+        n = state.count()
         assert n <= _KMV_K * n_groups, f"{d} holds {n} rows"
-    count_dir = os.path.join(work_dir, "counts")
-    for d in os.listdir(count_dir):
-        n = spark.read.parquet(os.path.join(count_dir, d)).count()
-        assert n <= n_groups, f"{d} holds {n} count rows"
+        per_group = state.groupBy("event_type").agg(F.countDistinct("cnt").alias("c"))
+        assert per_group.where(F.col("c") != 1).count() == 0, f"{d} mixes counts"
 
     got = {tuple(r) for r in read_kmv_estimate(spark, work_dir, _KMV_K).collect()}
     want = {
@@ -1604,11 +1604,11 @@ def test_streaming_cms_counters_equal_batch_fold(spark, sf_dir):
 def test_streaming_dedup_compaction_crash_resume(spark, sf_dir):
     """Epoch-state compaction (VERDICT r8 #3): run the intake stream over 8
     micro-batches with an LSM fold every 3 committed deltas, kill it
-    MID-COMPACTION (before epoch 3's second write: the hashes fold
-    committed, the bands fold not started), resume, and require (a) the
-    drained verdicts row-identical to incremental_batch_dedup, and (b) the
-    state dirs actually folded -- a committed base_upto dir present and
-    the covered deltas GC'd."""
+    MID-COMPACTION (before epoch 3's second write: the fold committed, the
+    epoch's own dir not started), resume, and require (a) the drained
+    verdicts row-identical to incremental_batch_dedup, and (b) the state
+    root actually folded -- a committed base_upto dir present and the
+    covered deltas GC'd."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from rlink_rs_spark.queries import REGISTRY
@@ -1618,16 +1618,15 @@ def test_streaming_dedup_compaction_crash_resume(spark, sf_dir):
 
     start, _ = incremental_dedup_replay(spark, sf_dir, chunks=8)
     work_dir = tempfile.mkdtemp(prefix="rlink_sdedup_compact_")
-    hash_dir = os.path.join(work_dir, "state_hashes")
-    band_dir = os.path.join(work_dir, "state_bands")
-    # first fold at epoch 3 (deltas 0,1,2): hashes first, then bands
+    state_dir = os.path.join(work_dir, "state")
+    # first fold at epoch 3 (deltas 0,1,2), then the epoch's own write
     with CrashInjector(3, ("before", 2)) as inj:
         with pytest.raises(StreamingQueryException, match="injected crash"):
             drain(start(work_dir, compact_every=3), what="crashing intake stream")
         assert inj.fired
-        # the crash window's exact state: hashes folded and committed, bands not
-        assert newest_base(hash_dir) == (os.path.join(hash_dir, "base_upto=2"), 2)
-        assert newest_base(band_dir) == (None, -1)
+        # the crash window's exact state: the fold committed, epoch 3 not
+        assert newest_base(state_dir) == (os.path.join(state_dir, "base_upto=2"), 2)
+        assert not os.path.exists(os.path.join(state_dir, "batch_id=3"))
         drain(start(work_dir, compact_every=3), what="resumed intake stream")
 
     got = {tuple(r) for r in read_verdicts(spark, work_dir).collect()}
@@ -1637,16 +1636,15 @@ def test_streaming_dedup_compaction_crash_resume(spark, sf_dir):
     }
     assert got == want and got
 
-    # both state dirs folded (second trigger at epoch 6 covers deltas 3-5)
-    # and the GC pass dropped every delta the newest base covers
-    for d in (hash_dir, band_dir):
-        base, upto = newest_base(d)
-        assert base is not None and upto == 5, (d, base, upto)
-        leftover = [
-            x for x in os.listdir(d)
-            if x.startswith("batch_id=") and int(x.split("=", 1)[1]) <= upto
-        ]
-        assert not leftover, (d, leftover)
+    # the state root folded again (second trigger at epoch 6 covers deltas
+    # 3-5) and the GC pass dropped every delta the newest base covers
+    base, upto = newest_base(state_dir)
+    assert base is not None and upto == 5, (base, upto)
+    leftover = [
+        x for x in os.listdir(state_dir)
+        if x.startswith("batch_id=") and int(x.split("=", 1)[1]) <= upto
+    ]
+    assert not leftover, leftover
 
 
 def test_streaming_cdc_merge_crash_resume_and_bucket_pruning(spark, sf_dir):
@@ -1779,9 +1777,9 @@ def test_streaming_ivf_index_add_equals_batch_index(spark, sf_dir):
 def test_streaming_intake_dlq_crash_resume_two_sink_invariants(spark, sf_dir):
     """Clean and DLQ must end up row-DISJOINT by doc_id, their union
     COMPLETE and equal to the batch classification -- the invariant the
-    single-handler multi-sink epoch protocol exists to protect. Its crash
-    points (between and inside the two writes) are test_crash_matrix.py's
-    dlq cells."""
+    one-dir epoch protocol exists to protect. Its crash points (before,
+    inside and after the epoch's one write) are test_crash_matrix.py's dlq
+    cells."""
     from rlink_rs_spark.queries import REGISTRY
     from rlink_rs_spark.streaming.dlq import read_clean, read_dlq, streaming_dlq_sink
 
@@ -1814,13 +1812,11 @@ def test_streaming_intake_dlq_crash_resume_two_sink_invariants(spark, sf_dir):
 
 
 def test_dlq_epoch_atomic_across_both_sinks_and_null_lang_policy(spark):
-    """ADVICE r9: (a) a drain between the two sink writes (or after an
-    unresumed crash that tore the clean write) must NOT show an epoch's
-    DLQ rows without its clean rows -- an epoch is visible in either sink
-    only once it is committed in both; (b) lang IS NULL quarantines explicitly as
-    'lang_missing' instead of falling through NOT-IN to the clean sink."""
-    import shutil
-
+    """ADVICE r9: (a) a torn epoch dir -- a crash mid-write, or a replay's
+    overwrite that tore the first attempt's dir -- must hide the epoch from
+    BOTH readers, never show its DLQ rows without its clean rows; (b) lang
+    IS NULL quarantines explicitly as 'lang_missing' instead of falling
+    through NOT-IN to the clean sink."""
     from rlink_rs_spark.streaming.dlq import (
         classify_intake,
         read_clean,
@@ -1836,9 +1832,7 @@ def test_dlq_epoch_atomic_across_both_sinks_and_null_lang_policy(spark):
     routed = {(r.doc_id, r.reason) for r in classify_intake(docs).collect()}
     assert routed == {(1, "lang_missing"), (2, None), (3, "lang_unsupported")}
 
-    # (a) drive one epoch through the real sink, then simulate the torn
-    # mid-epoch state: keep the DLQ dir, delete the clean dir (the crash
-    # happened between the writes)
+    # (a) drive one epoch through the real sink, then tear its dir
     src_dir = tempfile.mkdtemp(prefix="rlink_dlq_atomic_src_")
     docs.write.mode("overwrite").parquet(src_dir)
     stream = spark.readStream.schema(
@@ -1854,15 +1848,15 @@ def test_dlq_epoch_atomic_across_both_sinks_and_null_lang_policy(spark):
     assert read_clean(spark, work_dir).count() == 1
     assert read_dlq(spark, work_dir).count() == 2
 
-    shutil.rmtree(os.path.join(work_dir, "clean"))
-    # torn epoch: BOTH sinks read empty -- never quarantined-without-clean
+    os.remove(os.path.join(work_dir, "routed", "batch_id=0", "_SUCCESS"))
     assert read_dlq(spark, work_dir).count() == 0
     assert read_clean(spark, work_dir).count() == 0
 
 
 def test_dlq_replay_torn_dlq_dir_hides_epoch_from_both_sinks(spark):
-    """A replayed epoch's overwrite tears `dlq/batch_id=N` while the clean
-    dir is still committed from the first attempt: the epoch must read
+    """A replayed epoch's overwrite first deletes `routed/batch_id=N`, then
+    writes it anew: a crash in between leaves the epoch dir gone, or holding
+    only the replay's partial part files. Either way the epoch must read
     empty from BOTH sinks, not as clean rows without their DLQ twins."""
     import shutil
 
@@ -1886,7 +1880,17 @@ def test_dlq_replay_torn_dlq_dir_hides_epoch_from_both_sinks(spark):
     assert read_clean(spark, work_dir).count() == 1
     assert read_dlq(spark, work_dir).count() == 2
 
-    shutil.rmtree(os.path.join(work_dir, "dlq", "batch_id=0"))
+    epoch_dir = os.path.join(work_dir, "routed", "batch_id=0")
+    parts = [f for f in os.listdir(epoch_dir) if f.startswith("part-")]
+    keep = os.path.join(work_dir, parts[0])
+    shutil.copy(os.path.join(epoch_dir, parts[0]), keep)
+    # the replay's overwrite deleted the dir and crashed before writing
+    shutil.rmtree(epoch_dir)
+    assert read_clean(spark, work_dir).count() == 0
+    assert read_dlq(spark, work_dir).count() == 0
+    # the replay wrote one part file and crashed before its `_SUCCESS`
+    os.makedirs(epoch_dir)
+    shutil.move(keep, os.path.join(epoch_dir, parts[0]))
     assert read_clean(spark, work_dir).count() == 0
     assert read_dlq(spark, work_dir).count() == 0
 
