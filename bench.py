@@ -46,15 +46,17 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from rlink_rs_spark import artifacts
 from rlink_rs_spark.queries import REGISTRY
 from rlink_rs_spark.session import get_spark
 from rlink_rs_spark.tables import load_table
 
 
-# Queries whose first run per corpus content trains a fingerprint-keyed
-# artifact (see module docstring). Run once untimed before the chunks so
-# every timed number is a warm-serving number. Keep in sync with the
-# load_or_* call sites; test_bench_prewarm_covers_artifact_builders pins it.
+# Queries whose first run per corpus content builds an entry of the
+# artifact store (rlink_rs_spark/artifacts.py; see module docstring). Run
+# once untimed before the chunks so every timed number is a warm-serving
+# number. test_bench_prewarm_covers_artifact_builders checks that every
+# family the package builds through the store is mapped here.
 ARTIFACT_PREWARM = [
     "lm_perplexity_filter",      # artifacts/lm_lut (<fp>_full key)
     "streaming_quality_gate",    # artifacts/lm_lut (<fp> key, %4!=0 subset)
@@ -126,37 +128,23 @@ def sweep_stale_artifacts(sf_dir: str) -> list[str]:
     so last round's fingerprint-keyed caches can never be hit again --
     without a sweep the committed artifacts/ tree grows by one dead
     generation per round. An entry is live if any 16-hex token in its
-    name matches the documents/embeddings fingerprint of one of the
-    standard fixture dirs (or sf_dir). Returns the swept paths."""
-    import hashlib
-    import re
+    name matches the fingerprint of a table some entry is keyed by
+    (documents, events, embeddings) in one of the standard fixture dirs
+    (or sf_dir). Returns the swept paths."""
     import shutil
-
-    def fp(path: str) -> str | None:
-        if not os.path.exists(path):
-            return None
-        h = hashlib.md5()
-        with open(path, "rb") as f:
-            for chunk in iter(lambda: f.read(1 << 20), b""):
-                h.update(chunk)
-        return h.hexdigest()[:16]
 
     dirs = {sf_dir} | {
         f"/root/testdata/sf{s}" for s in ("0.001", "0.01", "0.1")
     }
     live = {
-        f
+        artifacts.fingerprint(d, t)
         for d in dirs
-        for f in (
-            fp(os.path.join(d, "documents.parquet")),
-            fp(os.path.join(d, "embeddings.parquet")),
-        )
-        if f
+        for t in ("documents", "events", "embeddings")
+        if os.path.exists(os.path.join(d, f"{t}.parquet"))
     }
-    repo = os.path.dirname(os.path.abspath(__file__))
     swept = []
-    for cache in sorted(os.listdir(os.path.join(repo, "artifacts"))):
-        cdir = os.path.join(repo, "artifacts", cache)
+    for cache in sorted(os.listdir(artifacts.ROOT)):
+        cdir = os.path.join(artifacts.ROOT, cache)
         if not os.path.isdir(cdir):
             continue
         for entry in sorted(os.listdir(cdir)):

@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import hashlib
 import math
-import os
 import sys
 
 import numpy as np
@@ -40,6 +39,8 @@ import pyarrow.compute as pc
 from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from rlink_rs_spark import artifacts
 
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
@@ -273,7 +274,6 @@ def auto_salt_buckets(
 def load_or_build_band_index(
     spark: SparkSession,
     history_sets: DataFrame,
-    cache_dir: str,
     fingerprint: str,
     n_hashes: int = 16,
     bands: int = 4,
@@ -290,11 +290,10 @@ def load_or_build_band_index(
     At 100 TB the index is (bands) rows of a few bytes per historical doc,
     partitioned by (band, sig) on write -- candidate joins then prune to
     matching partitions."""
-    path = os.path.join(cache_dir, f"lsh_bands_h{n_hashes}_b{bands}_{fingerprint}")
-    if os.path.exists(os.path.join(path, "_SUCCESS")):  # committed write only
-        return spark.read.parquet(path)
-    minhash_bands(history_sets, n_hashes, bands).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    key = f"lsh_bands_h{n_hashes}_b{bands}_{fingerprint}"
+    return artifacts.parquet(spark, "lsh_band_index", key, lambda: minhash_bands(
+        history_sets, n_hashes, bands
+    ))
 
 
 def lsh_candidate_pairs(

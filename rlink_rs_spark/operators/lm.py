@@ -41,6 +41,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rlink_rs_spark import artifacts
+
 # Normalized alphabet: 26 letters + space + '_' (the OOV catch-all).
 LM_ALPHABET_SIZE = 28
 LM_SCALE = 1_000_000  # micro-nats
@@ -152,28 +154,19 @@ def score_documents(
 def load_or_train_lm_lut(
     spark,
     train_bigrams: DataFrame,
-    cache_dir: str,
     fingerprint: str,
 ) -> tuple[DataFrame, DataFrame]:
     """Train-once / score-many for the bigram LM: persist (lut, pre_lut)
     as parquet artifacts keyed by a content fingerprint of the training
     corpus -- the same contract as the IVF codebook and LSH band index
-    (operators/similarity.load_or_train_ivf_codebook; local-FS probe, see
-    that docstring's cache-probe caveat). The LUT is a pure function of the
+    (rlink_rs_spark/artifacts.py). The LUT is a pure function of the
     training content (integer micro-nat rounding, no RNG), so reload is
     bit-safe."""
-    import os
+    def entry(name: str, i: int) -> DataFrame:
+        key = f"{name}_{fingerprint}"
+        return artifacts.parquet(spark, "lm_lut", key, lambda: train_bigram_lut(train_bigrams)[i])
 
-    lut_path = os.path.join(cache_dir, f"lm_lut_{fingerprint}")
-    pre_path = os.path.join(cache_dir, f"lm_prelut_{fingerprint}")
-    if os.path.exists(os.path.join(lut_path, "_SUCCESS")) and os.path.exists(
-        os.path.join(pre_path, "_SUCCESS")
-    ):
-        return spark.read.parquet(lut_path), spark.read.parquet(pre_path)
-    lut, pre_lut = train_bigram_lut(train_bigrams)
-    lut.write.mode("overwrite").parquet(lut_path)
-    pre_lut.write.mode("overwrite").parquet(pre_path)
-    return spark.read.parquet(lut_path), spark.read.parquet(pre_path)
+    return entry("lm_lut", 0), entry("lm_prelut", 1)
 
 
 def score_stream_columns(

@@ -23,7 +23,6 @@ pairs scored per query.
 from __future__ import annotations
 
 import hashlib
-import os
 
 import numpy as np
 import pyarrow as pa
@@ -32,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from rlink_rs_spark import artifacts
 from rlink_rs_spark.operators import vector_kernel as vk
 
 
@@ -177,7 +177,6 @@ def load_or_build_ivf_assignment(
     vectors: DataFrame,
     codebook: DataFrame,
     dims: int,
-    cache_dir: str,
     key: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -195,7 +194,7 @@ def load_or_build_ivf_assignment(
     At 100 TB this is the difference between an index SCAN per query batch
     and an index BUILD per query batch; production would additionally
     partition the parquet by cell_id so probes prune to probed cells."""
-    return _persisted(vectors.sparkSession, os.path.join(cache_dir, key), lambda: _cell_assign(
+    return artifacts.parquet(vectors.sparkSession, "ivf_inverted", key, lambda: _cell_assign(
         vectors, codebook, dims, n_cells, id_col, vec_col
     ))
 
@@ -358,14 +357,6 @@ def _centroids(assign: DataFrame, vecs: DataFrame, on: list[str], dims: int) -> 
     return sums.select(*keys, F.array(*[F.expr(mean_expr(f"s{d}")) for d in range(dims)]).alias("cv"))
 
 
-def _persisted(spark: SparkSession, path: str, build) -> DataFrame:
-    """The artifact at ``path``: read if committed, else built, written and
-    read back."""
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):  # committed write only
-        build().write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
 def train_ivf_codebook(
     vectors: DataFrame,
     dims: int,
@@ -415,7 +406,6 @@ def load_or_train_ivf_codebook(
     spark: SparkSession,
     vectors: DataFrame,
     dims: int,
-    cache_dir: str,
     fingerprint: str,
     n_cells: int = 16,
     iters: int = 2,
@@ -431,16 +421,9 @@ def load_or_train_ivf_codebook(
 
     At 100 TB the `vectors` argument would be a hash-sample
     (``F.crc32(...) % rate == 0``) of the corpus; training cost is then
-    bounded by the sample while probing scans the inverted file.
-
-    Cache-probe caveat (ADVICE r6): the ``_SUCCESS`` check below (and in the
-    other ``load_or_*`` helpers) uses driver-local ``os.path``, which only
-    sees local-filesystem cache_dirs. On HDFS/S3 the probe would always miss
-    and rewrite; a cluster deployment should route it through the Hadoop
-    FileSystem API (``jvm.org.apache.hadoop.fs.FileSystem``) so the check
-    matches the write path's filesystem. Local FS is the contract here."""
-    path = os.path.join(cache_dir, f"ivf_codebook_c{n_cells}_i{iters}_{fingerprint}")
-    return _persisted(spark, path, lambda: train_ivf_codebook(
+    bounded by the sample while probing scans the inverted file."""
+    key = f"ivf_codebook_c{n_cells}_i{iters}_{fingerprint}"
+    return artifacts.parquet(spark, "ivf_codebooks", key, lambda: train_ivf_codebook(
         vectors, dims, n_cells=n_cells, iters=iters, id_col=id_col, vec_col=vec_col
     ))
 
@@ -603,12 +586,11 @@ def _subvectors(df: DataFrame, vec: str, m_sub: int, dsub: int, *keep: str) -> D
 
 def _pq_codebook(sv, dsub, ksub, iters, pq_cache, key) -> DataFrame:
     """Trained PQ codebook, reused by codes AND the LUT: persisted under
-    ``pq_cache`` = (cache_dir, fingerprint) when given, else cached."""
+    the fingerprint ``pq_cache`` when given, else cached."""
     if pq_cache is None:
         return train_pq_codebook(sv, dsub, ksub=ksub, iters=iters).cache()
-    cache_dir, fingerprint = pq_cache
     return load_or_train_pq_codebook(
-        sv, dsub, cache_dir, f"{key}_k{ksub}_i{iters}_{fingerprint}", ksub=ksub, iters=iters
+        sv, dsub, f"{key}_k{ksub}_i{iters}_{pq_cache}", ksub=ksub, iters=iters
     )
 
 
@@ -659,7 +641,6 @@ def train_pq_codebook(
 def load_or_train_pq_codebook(
     sv: DataFrame,
     dsub: int,
-    cache_dir: str,
     key: str,
     ksub: int = 16,
     iters: int = 1,
@@ -671,7 +652,7 @@ def load_or_train_pq_codebook(
     to encoding + ADC. The caller's key must encode every training input
     (source fingerprint, m/ksub/iters, and -- for residual PQ -- the coarse
     quantizer's params)."""
-    return _persisted(sv.sparkSession, os.path.join(cache_dir, key), lambda: train_pq_codebook(
+    return artifacts.parquet(sv.sparkSession, "pq_codebooks", key, lambda: train_pq_codebook(
         sv, dsub, ksub=ksub, iters=iters
     ))
 
@@ -686,7 +667,7 @@ def pq_adc_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    pq_cache: tuple[str, str] | None = None,
+    pq_cache: str | None = None,
 ) -> DataFrame:
     """Product-quantization ANN (FAISS IndexPQ shape), completing the ANN
     family next to IVF (coarse cells), SQ8 (scalar codes), and GEMM (exact
@@ -739,7 +720,7 @@ def ivfpq_adc_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    pq_cache: tuple[str, str] | None = None,
+    pq_cache: str | None = None,
     assignment: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-PQ with residual encoding (the FAISS IndexIVFPQ shape) -- the

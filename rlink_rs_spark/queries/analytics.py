@@ -6,13 +6,17 @@ built-in expressions (no UDFs), exact-integer sums under every ratio.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from rlink_rs_spark import artifacts
 from rlink_rs_spark.queries.base import register
 from rlink_rs_spark.session import scratch_dir
 from rlink_rs_spark.tables import load_table
+from rlink_rs_spark.streaming import rollup
 from rlink_rs_spark.streaming.runner import drain
 
 # --- funnel ------------------------------------------------------------------
@@ -617,10 +621,8 @@ def time_to_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- incremental materialized-view maintenance ------------------------------
 
-_ROLL_DAY_MS = 86_400_000
-
 _ROLL_ORACLE = f"""
-SELECT (epoch_ms(ts) // {_ROLL_DAY_MS}) * {_ROLL_DAY_MS} AS day_start_ms, event_type,
+SELECT (epoch_ms(ts) // {rollup.DAY_MS}) * {rollup.DAY_MS} AS day_start_ms, event_type,
        CAST(COUNT(*) AS BIGINT) AS cnt,
        SUM(CAST(ROUND(value * 100) AS BIGINT)) / 100.0 AS sum_value,
        MAX(value) AS max_value, MIN(value) AS min_value
@@ -628,30 +630,30 @@ FROM events GROUP BY 1, 2
 """
 
 
-def _events_fingerprint(sf_dir: str) -> str:
-    """Content cache key for the persisted rollup (same contract as the
-    LSH band index / IVF codebook fingerprints)."""
-    import os
+def _max_view_day(view: DataFrame, path: str) -> int | None:
+    """max(day) of the committed view at ``path``, read from its parquet
+    footer statistics without a Spark job (~0.4 s of scheduling per
+    serving run at any scale); a row group without day statistics falls
+    back to the bounded-scalar collect over the tiny summary table."""
+    import glob
 
-    from rlink_rs_spark.tables import content_fingerprint
+    import pyarrow.parquet as pq
 
-    return content_fingerprint(os.path.join(sf_dir, "events.parquet"))
-
-
-def _daily_rollup(df: DataFrame) -> DataFrame:
-    """Distributive daily rollup in MERGEABLE form: count/sum-cents/max/min
-    re-aggregate losslessly, which is what makes the view incrementally
-    maintainable (avg or distinct would need their own mergeable carriers
-    -- n+sum and the KMV sketch respectively)."""
-    return df.groupBy(
-        F.expr(f"CAST(unix_millis(ts) div {_ROLL_DAY_MS} AS BIGINT)").alias("day"),
-        "event_type",
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.expr("CAST(ROUND(value*100) AS BIGINT)")).cast("bigint").alias("sc"),
-        F.max("value").alias("mx"),
-        F.min("value").alias("mn"),
-    )
+    days = []
+    for part in glob.glob(os.path.join(path, "part-*.parquet")):
+        md = pq.ParquetFile(part).metadata
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            if rg.num_rows == 0:
+                continue
+            col = next(
+                rg.column(i) for i in range(rg.num_columns)
+                if rg.column(i).path_in_schema == "day"
+            )
+            if col.statistics is None or not col.statistics.has_min_max:
+                return view.agg(F.max("day")).collect()[0][0]
+            days.append(col.statistics.max)
+    return max(days, default=None)
 
 
 @register(
@@ -659,7 +661,7 @@ def _daily_rollup(df: DataFrame) -> DataFrame:
     _ROLL_ORACLE,
     "Incremental materialized-view maintenance (the Delta/Iceberg rollup "
     "shape): the standing corpus' daily rollup is a persisted, content-"
-    "fingerprinted artifact (artifacts/daily_rollup/); an arriving "
+    "fingerprinted artifact (the daily_rollup family); an arriving "
     "day-partition aggregates ONLY ITSELF and merges into the view by "
     "re-aggregating the mergeable carriers (count/sum-cents/max/min) on "
     "the <= days x types summary table. Warm runs scan one day, never "
@@ -679,89 +681,28 @@ def incremental_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     avoided the driver scalar but cost a second full events scan AND lost
     scan pruning on the delta side -- strictly worse at 100 TB. The eager
     events scalar remains only on the once-per-corpus cold build.)"""
-    import os
-
     events = load_table(spark, sf_dir, "events")
-    day_expr = F.expr(f"CAST(unix_millis(ts) div {_ROLL_DAY_MS} AS BIGINT)")
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    cache_dir = os.path.join(repo_root, "artifacts", "daily_rollup")
-    path = os.path.join(cache_dir, f"rollup_{_events_fingerprint(sf_dir)}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):  # committed write only
-        # temp dir + atomic rename: concurrent sessions sharing the repo-root
-        # artifact path each build into their own staging dir and the first
-        # rename wins (the content fingerprint makes all builds identical)
-        max_day = events.agg(F.max(day_expr)).collect()[0][0]
-        history = events.where(day_expr < max_day)
-        staging = f"{path}.tmp.{os.getpid()}"
-        _daily_rollup(history).write.mode("overwrite").parquet(staging)
-        try:
-            os.rename(staging, path)
-        except OSError:  # another session committed first -- use theirs
-            import shutil
 
-            shutil.rmtree(staging, ignore_errors=True)
-    # pinned schema (mirrors streaming/rollup._VIEW_SCHEMA): a single-day
-    # corpus has an EMPTY history, whose part-file-less artifact dir cannot
-    # be schema-inferred
-    view = spark.read.schema(
-        "day bigint, event_type string, n bigint, sc bigint, mx double, mn double"
-    ).parquet(path)
+    def build(stage: str) -> None:
+        max_day = events.agg(F.max(rollup.day())).collect()[0][0]
+        rollup.batch_rollup(events.where(rollup.day() < max_day)).write.parquet(stage)
+
+    key = f"rollup_{artifacts.fingerprint(sf_dir, 'events')}"
+    path = artifacts.commit(os.path.join(artifacts.ROOT, "daily_rollup", key), build)
+    view = spark.read.schema(rollup.VIEW_SCHEMA).parquet(path)
     # delta = all days after the view's newest (== the newest events day:
-    # the view is built over days < max). max(view.day) is a bounded
-    # scalar over the tiny summary table; the resulting LITERAL converts
+    # the view is built over days < max). The resulting LITERAL converts
     # to a ts bound that pushes into the parquet scan. Fixture days are
     # what they are -- derive the bound from view coverage, so view+delta
     # stay disjoint and complete even with gaps.
-    try:
-        # local fast path: the view is a tiny driver-owned summary artifact;
-        # its parquet footer statistics carry max(day) without a Spark job
-        # (~0.4s scheduling constant per serving run at any scale). Remote
-        # artifact stores fall back to the bounded-scalar Spark collect.
-        import glob as _glob
-
-        import pyarrow.parquet as _pq
-
-        parts = _glob.glob(os.path.join(path, "part-*.parquet"))
-        vals = []
-        for p in parts:
-            md = _pq.ParquetFile(p).metadata
-            day_i = next(
-                i for i in range(md.num_columns)
-                if md.row_group(0).column(i).path_in_schema == "day"
-            ) if md.num_row_groups else None
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(day_i).statistics
-                if st is not None and st.has_min_max:
-                    vals.append(st.max)
-        if parts and not vals:  # files but no usable stats: use the Spark path
-            raise ValueError("no footer statistics for day column")
-        max_view_day = max(vals) if vals else None
-    except Exception:
-        max_view_day = view.agg(F.max("day")).collect()[0][0]
+    max_view_day = _max_view_day(view, path)
     if max_view_day is None:  # empty history (single-day corpus): delta = all
         delta = events
     else:
-        bound_ms = (max_view_day + 1) * _ROLL_DAY_MS
+        bound_ms = (max_view_day + 1) * rollup.DAY_MS
         # unix_millis(ts) div DAY >= d+1  <=>  ts >= timestamp of (d+1)*DAY
         delta = events.where(F.col("ts") >= F.timestamp_millis(F.lit(bound_ms)))
-    merged = (
-        view.unionByName(_daily_rollup(delta))
-        .groupBy("day", "event_type")
-        .agg(
-            F.sum("n").cast("bigint").alias("cnt"),
-            F.sum("sc").cast("bigint").alias("sc"),
-            F.max("mx").alias("max_value"),
-            F.min("mn").alias("min_value"),
-        )
-    )
-    return merged.select(
-        (F.col("day") * _ROLL_DAY_MS).alias("day_start_ms"),
-        "event_type",
-        "cnt",
-        (F.col("sc") / 100.0).alias("sum_value"),
-        "max_value",
-        "min_value",
-    )
+    return rollup.view_rows(rollup.merge(view.unionByName(rollup.batch_rollup(delta))))
 
 
 @register(
@@ -780,19 +721,18 @@ def streaming_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay in 4 ts-ordered chunks; each epoch's work is one combinable
     aggregate over the BATCH plus a tiny-view merge -- the stream never
     rescans history (streaming/rollup.py)."""
-    from rlink_rs_spark.streaming.rollup import read_rollup_view, streaming_rollup_sink
     from rlink_rs_spark.streaming.sources import file_stream
 
     src = file_stream(
         spark, sf_dir, "events", max_files_per_trigger=1, chunks=2, order_col="ts"
     )
     work_dir = scratch_dir("rlink_rollup_")
-    q = streaming_rollup_sink(
+    q = rollup.streaming_rollup_sink(
         src.select("ts", "event_type", "value"),
         work_dir=work_dir,
     )
     drain(q, what="streaming_daily_rollup")
-    return read_rollup_view(spark, work_dir)
+    return rollup.read_rollup_view(spark, work_dir)
 
 
 # --- composed quality-ensemble gate -----------------------------------------

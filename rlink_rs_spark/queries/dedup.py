@@ -4,11 +4,10 @@ oracle (all hashing is md5-based and engine-neutral -- see operators/dedup).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rlink_rs_spark import artifacts
 from rlink_rs_spark.operators.dedup import (
     connected_components,
     exact_dedup_groups,
@@ -307,26 +306,14 @@ _INCR_THR = 0.7
 
 def _history_band_index(spark: SparkSession, sf_dir: str, history: DataFrame) -> DataFrame:
     """The persisted LSH band index of the fixture's history docs
-    (artifacts/lsh_band_index, keyed by the documents fingerprint)."""
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    (the lsh_band_index family, keyed by the documents fingerprint)."""
     return load_or_build_band_index(
         spark,
         shingle_sets(history),
-        cache_dir=os.path.join(repo_root, "artifacts", "lsh_band_index"),
-        fingerprint=_documents_fingerprint(sf_dir),
+        fingerprint=artifacts.fingerprint(sf_dir, "documents"),
         n_hashes=_N_HASHES,
         bands=_BANDS,
     )
-
-
-def _documents_fingerprint(sf_dir: str) -> str:
-    """Cache key for the persisted band index: md5 of the documents parquet
-    bytes (content-based, same contract as the IVF codebook fingerprint --
-    a regenerated-but-identical fixture reuses the artifact, any content
-    change rebuilds it)."""
-    from rlink_rs_spark.tables import content_fingerprint
-
-    return content_fingerprint(os.path.join(sf_dir, "documents.parquet"))
 
 
 @register(

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rlink_rs_spark import artifacts
 from rlink_rs_spark.operators.ranking import ntile_expr, with_global_rank
 from rlink_rs_spark.operators.lm import (
     LM_ALPHABET_SIZE,
@@ -93,25 +94,20 @@ def lm_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Log-probs live as integer micro-nats inside the LUT (rounded before
     any reassociative sum), and BIGINT addition is exactly associative,
     so the fold is bit-identical to the oracle's explode+join+SUM."""
-    import os
-
     from rlink_rs_spark.operators.lm import (
         load_or_train_lm_lut,
         normalize_expr,
         score_stream_columns,
     )
-    from rlink_rs_spark.queries.dedup import _documents_fingerprint
 
     docs = load_table(spark, sf_dir, "documents")
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     # "_full" suffix: streaming_quality_gate's artifact under the same
     # fingerprint trains on the doc_id % 4 != 0 subset; this one trains on
     # ALL en docs, so the two cache keys must differ
     lut, pre_lut = load_or_train_lm_lut(
         spark,
         bigram_rows(docs.where(F.col("lang") == "en")),
-        cache_dir=os.path.join(repo_root, "artifacts", "lm_lut"),
-        fingerprint=_documents_fingerprint(sf_dir) + "_full",
+        fingerprint=artifacts.fingerprint(sf_dir, "documents") + "_full",
     )
     lut_pairs = [(r.bg, r.lp) for r in lut.collect()]  # <=784 rows, bounded
     pre_pairs = [(r.pre, r.lp) for r in pre_lut.collect()]  # <=28 rows
@@ -224,25 +220,18 @@ def streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
       * integer micro-nat folds keep the stream score bit-identical to the
         batch twin's explode+join+SUM, so the DuckDB oracle hash-matches;
       * exactly-once via the parquet sink's _spark_metadata manifest."""
-    import os
-
     from rlink_rs_spark.operators.lm import (
         load_or_train_lm_lut,
         normalize_expr,
         score_stream_columns,
     )
-    from rlink_rs_spark.queries.dedup import _documents_fingerprint
     from rlink_rs_spark.streaming.runner import run_to_parquet
     from rlink_rs_spark.streaming.sources import file_stream
 
     docs = load_table(spark, sf_dir, "documents")
     train = bigram_rows(docs.where((F.col("lang") == "en") & (F.col("doc_id") % 4 != 0)))
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     lut, pre_lut = load_or_train_lm_lut(
-        spark,
-        train,
-        cache_dir=os.path.join(repo_root, "artifacts", "lm_lut"),
-        fingerprint=_documents_fingerprint(sf_dir),
+        spark, train, fingerprint=artifacts.fingerprint(sf_dir, "documents")
     )
     lut_pairs = [(r.bg, r.lp) for r in lut.collect()]  # <=784 rows, bounded
     pre_pairs = [(r.pre, r.lp) for r in pre_lut.collect()]  # <=28 rows
@@ -292,8 +281,6 @@ def streaming_intake_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     state), in ONE pass over the micro-batch, exactly-once across
     restarts. Composition of streaming_quality_gate's scorer and
     streaming_incremental_dedup's sink (score_fn seam)."""
-    import os
-
     from rlink_rs_spark.operators.dedup import shingle_sets
     from rlink_rs_spark.operators.lm import (
         load_or_train_lm_lut,
@@ -304,7 +291,6 @@ def streaming_intake_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         _BANDS,
         _INCR_THR,
         _N_HASHES,
-        _documents_fingerprint,
         _history_band_index,
     )
     from rlink_rs_spark.streaming.dedup import (
@@ -315,14 +301,11 @@ def streaming_intake_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     history = docs.where(F.col("doc_id") % 4 != 0)
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    fp = _documents_fingerprint(sf_dir)
     hist_banded = _history_band_index(spark, sf_dir, history)
     lut, pre_lut = load_or_train_lm_lut(
         spark,
         bigram_rows(docs.where((F.col("lang") == "en") & (F.col("doc_id") % 4 != 0))),
-        cache_dir=os.path.join(repo_root, "artifacts", "lm_lut"),
-        fingerprint=fp,
+        fingerprint=artifacts.fingerprint(sf_dir, "documents"),
     )
     lut_pairs = [(r.bg, r.lp) for r in lut.collect()]  # <=784 rows, bounded
     pre_pairs = [(r.pre, r.lp) for r in pre_lut.collect()]

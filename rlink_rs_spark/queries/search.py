@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from rlink_rs_spark import artifacts
 from rlink_rs_spark.queries.base import register
 from rlink_rs_spark.session import scratch_dir
 from rlink_rs_spark.tables import load_table
@@ -585,11 +586,7 @@ def streaming_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(batch) at any index size (the delta-sink contract proven by the
     two index-maintenance queries this composes)."""
     from rlink_rs_spark.operators import similarity as sim_ops
-    from rlink_rs_spark.queries.similarity import (
-        _artifact_dir,
-        _DIMS,
-        _embeddings_fingerprint,
-    )
+    from rlink_rs_spark.queries.similarity import _DIMS
     from rlink_rs_spark.streaming.ann import (
         read_inverted_file,
         streaming_index_add_sink,
@@ -613,8 +610,7 @@ def streaming_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         emb,
         dims=_DIMS,
-        cache_dir=_artifact_dir("ivf_codebooks"),
-        fingerprint=_embeddings_fingerprint(sf_dir),
+        fingerprint=artifacts.fingerprint(sf_dir, "embeddings"),
         n_cells=_IVF_CELLS,
         iters=_IVF_ITERS,
     )

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rlink_rs_spark import artifacts
 from rlink_rs_spark.operators import similarity as sim_ops
 from rlink_rs_spark.operators.similarity import bucket_expr, cosine_expr, hyperplanes
 from rlink_rs_spark.queries.base import register
@@ -270,28 +271,17 @@ SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= {_K}
 """
 
 
-def _artifact_dir(name: str) -> str:
-    import os
-
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "artifacts",
-        name,
-    )
-
-
 def _ivf_artifacts(spark: SparkSession, sf_dir: str):
     """The two persisted halves of the IVF index every consumer shares:
     the trained codebook AND the inverted file (corpus cell assignment).
     Probe-only runs read both; any fixture change rebuilds both (content
     fingerprint in the key)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    fp = _embeddings_fingerprint(sf_dir)
+    fp = artifacts.fingerprint(sf_dir, "embeddings")
     codebook = sim_ops.load_or_train_ivf_codebook(
         spark,
         emb,
         dims=_DIMS,
-        cache_dir=_artifact_dir("ivf_codebooks"),
         fingerprint=fp,
         n_cells=_IVF_CELLS,
         iters=_IVF_ITERS,
@@ -300,23 +290,9 @@ def _ivf_artifacts(spark: SparkSession, sf_dir: str):
         emb,
         codebook,
         dims=_DIMS,
-        cache_dir=_artifact_dir("ivf_inverted"),
         key=f"c{_IVF_CELLS}_i{_IVF_ITERS}_{fp}",
     )
     return emb, codebook, assignment
-
-
-def _embeddings_fingerprint(sf_dir: str) -> str:
-    """Cache key for the trained codebook: md5 of the source parquet bytes.
-    Content-based, not mtime-based, so a byte-identical regenerated fixture
-    (the driver rewrites testdata between rounds) still hits the persisted
-    codebook, while any actual data change forces a retrain. The file is a
-    few MB at bench scale; one streamed md5 is ~ms against a 15 s train."""
-    import os
-
-    from rlink_rs_spark.tables import content_fingerprint
-
-    return content_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
 
 
 @register(
@@ -446,12 +422,11 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     if cells == _IVF_CELLS:
         emb, codebook, assignment = _ivf_artifacts(spark, sf_dir)
     else:
-        fp = _embeddings_fingerprint(sf_dir)
+        fp = artifacts.fingerprint(sf_dir, "embeddings")
         codebook = sim_ops.load_or_train_ivf_codebook(
             spark,
             emb,
             dims=_DIMS,
-            cache_dir=_artifact_dir("ivf_codebooks"),
             fingerprint=fp,
             n_cells=cells,
             iters=_IVF_ITERS,
@@ -460,7 +435,6 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb,
             codebook,
             dims=_DIMS,
-            cache_dir=_artifact_dir("ivf_inverted"),
             key=f"c{cells}_i{_IVF_ITERS}_{fp}",
             n_cells=cells,  # > GEMM_ASSIGN_MIN_CELLS routes build via GEMM
         )
@@ -647,8 +621,6 @@ def _pq_oracle() -> str:
     "broadcasts, the corpus never shuffles.",
 )
 def cosine_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < _N_QUERIES)
     return sim_ops.pq_adc_topk(
@@ -660,17 +632,7 @@ def cosine_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         iters=_PQ_ITERS,
         k=_K,
         # train-once/probe-many, same artifact contract as the IVF codebook
-        pq_cache=(_pq_cache_dir(), _embeddings_fingerprint(sf_dir)),
-    )
-
-
-def _pq_cache_dir() -> str:
-    import os
-
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "artifacts",
-        "pq_codebooks",
+        pq_cache=artifacts.fingerprint(sf_dir, "embeddings"),
     )
 
 
@@ -807,10 +769,7 @@ def cosine_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=_K,
         # residual-PQ codebook persists too; the key encodes the IVF config
         # (residuals are a function of the coarse quantizer)
-        pq_cache=(
-            _pq_cache_dir(),
-            f"c{_IVF_CELLS}i{_IVF_ITERS}_{_embeddings_fingerprint(sf_dir)}",
-        ),
+        pq_cache=f"c{_IVF_CELLS}i{_IVF_ITERS}_{artifacts.fingerprint(sf_dir, 'embeddings')}",
         assignment=assignment,
     )
 
@@ -1173,13 +1132,11 @@ def streaming_ivf_index_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rlink_rs_spark.streaming.sources import file_stream
 
     emb = load_table(spark, sf_dir, "embeddings")
-    fp = _embeddings_fingerprint(sf_dir)
     codebook = sim_ops.load_or_train_ivf_codebook(
         spark,
         emb,
         dims=_DIMS,
-        cache_dir=_artifact_dir("ivf_codebooks"),
-        fingerprint=fp,
+        fingerprint=artifacts.fingerprint(sf_dir, "embeddings"),
         n_cells=_IVF_CELLS,
         iters=_IVF_ITERS,
     )

@@ -14,9 +14,8 @@ breaks the read-back hashes). The timestamp column is serialized as epoch
 MICROS (BIGINT): the lossless text encoding of a timestamp -- default text
 timestamp formats truncate to millis, which is exactly the silent-corruption
 class the parity queries exist to catch. Doubles round-trip via Java's
-shortest-roundtrip Double.toString. The `_SUCCESS`-gated local-FS cache probe
-follows the same contract as the load_or_* artifact helpers
-(operators/similarity.py load_or_train_ivf_codebook docstring).
+shortest-roundtrip Double.toString. The copy commits by the artifact
+store's rule (rlink_rs_spark/artifacts.py).
 """
 
 from __future__ import annotations
@@ -27,7 +26,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rlink_rs_spark.tables import content_fingerprint, load_table
+from rlink_rs_spark import artifacts
+from rlink_rs_spark.tables import load_table
 
 # ts serialized as epoch micros; re-cast on read. Column order is the
 # events table order so the read-back select is positionally stable too.
@@ -53,20 +53,17 @@ def staged_events(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
     """Return the events table read back through a staged CSV or NDJSON
     copy (schema-pinned, ts restored to TimestampType). fmt: 'csv'|'json'.
 
-    Staging is ATOMIC: Spark writes to a unique temp dir, which is then
-    rename(2)'d to the cache path -- concurrent stagers race on the rename
-    and the loser discards its copy, so a reader can never observe a
-    half-written (or overwrite-deleted) directory."""
+    The copy is committed by artifacts.commit on its own temp-dir path:
+    Spark writes a unique sibling dir that is renamed into place, so a
+    reader never observes a half-written (or overwrite-deleted) copy."""
     if fmt not in ("csv", "json"):
         raise ValueError(f"unsupported text format: {fmt!r}")
-    fp = content_fingerprint(os.path.join(sf_dir, "events.parquet"))
+    fp = artifacts.fingerprint(sf_dir, "events")
     path = os.path.join(
         tempfile.gettempdir(), f"rlink_srcfmt_{fmt}_{_STAGE_TOKEN}_{fp}"
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        import shutil
-        import uuid
 
+    def write(stage: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
             F.unix_micros("ts").alias("ts_us"),
@@ -75,23 +72,12 @@ def staged_events(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
             "value",
             "props",
         )
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        try:
-            writer = ev.write.mode("overwrite")
-            if fmt == "csv":
-                writer.options(**_CSV_OPTS).csv(tmp)
-            else:
-                writer.json(tmp)
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                # a concurrent stager published first; its copy is complete
-                pass
-        finally:
-            # failed write OR lost rename race: never leak the staging dir
-            # in gettempdir() (ADVICE r13)
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp, ignore_errors=True)
+        if fmt == "csv":
+            ev.write.options(**_CSV_OPTS).csv(stage)
+        else:
+            ev.write.json(stage)
+
+    artifacts.commit(path, write)
     reader = spark.read.schema(_EVENTS_TEXT_SCHEMA)
     scan = (
         reader.options(**_CSV_OPTS).csv(path)

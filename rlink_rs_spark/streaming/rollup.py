@@ -21,24 +21,54 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rlink_rs_spark.streaming.epochs import latest, path, start
 
-_VIEW_SCHEMA = "day bigint, event_type string, n bigint, sc bigint, mx double, mn double"
-_DAY_MS = 86_400_000
+# The view's one schema: pinned on every read, because an empty view (a
+# single-day corpus' history) has no part file to infer it from.
+VIEW_SCHEMA = "day bigint, event_type string, n bigint, sc bigint, mx double, mn double"
+DAY_MS = 86_400_000
 
 
-def _batch_rollup(df: DataFrame) -> DataFrame:
-    return df.groupBy(
-        F.expr(f"CAST(unix_millis(ts) div {_DAY_MS} AS BIGINT)").alias("day"),
-        "event_type",
-    ).agg(
+def day() -> Column:
+    """The UTC day index of the event timestamp ``ts``."""
+    return F.expr(f"CAST(unix_millis(ts) div {DAY_MS} AS BIGINT)")
+
+
+def batch_rollup(df: DataFrame) -> DataFrame:
+    """Distributive daily rollup in MERGEABLE form: count/sum-cents/max/min
+    re-aggregate losslessly, which is what makes the view incrementally
+    maintainable (avg or distinct would need their own mergeable carriers
+    -- n+sum and the KMV sketch respectively)."""
+    return df.groupBy(day().alias("day"), "event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.expr("CAST(ROUND(value*100) AS BIGINT)")).cast("bigint").alias("sc"),
         F.max("value").alias("mx"),
         F.min("value").alias("mn"),
+    )
+
+
+def merge(views: DataFrame) -> DataFrame:
+    """Fold stacked views (carrier rows) into one view."""
+    return views.groupBy("day", "event_type").agg(
+        F.sum("n").cast("bigint").alias("n"),
+        F.sum("sc").cast("bigint").alias("sc"),
+        F.max("mx").alias("mx"),
+        F.min("mn").alias("mn"),
+    )
+
+
+def view_rows(view: DataFrame) -> DataFrame:
+    """A view in the rollup's output shape (the shared oracle's columns)."""
+    return view.select(
+        (F.col("day") * DAY_MS).alias("day_start_ms"),
+        "event_type",
+        F.col("n").alias("cnt"),
+        (F.col("sc") / 100.0).alias("sum_value"),
+        F.col("mx").alias("max_value"),
+        F.col("mn").alias("min_value"),
     )
 
 
@@ -49,19 +79,13 @@ def streaming_rollup_sink(stream: DataFrame, work_dir: str):
     view_dir = os.path.join(work_dir, "view")
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = _batch_rollup(batch_df)
+        delta = batch_rollup(batch_df)
         prev = latest(view_dir, before=epoch_id)
         if prev is not None:
             delta = delta.unionByName(
-                spark.read.schema(_VIEW_SCHEMA).parquet(path(view_dir, prev))
+                spark.read.schema(VIEW_SCHEMA).parquet(path(view_dir, prev))
             )
-        merged = delta.groupBy("day", "event_type").agg(
-            F.sum("n").cast("bigint").alias("n"),
-            F.sum("sc").cast("bigint").alias("sc"),
-            F.max("mx").alias("mx"),
-            F.min("mn").alias("mn"),
-        )
-        merged.write.mode("overwrite").parquet(path(view_dir, epoch_id))
+        merge(delta).write.mode("overwrite").parquet(path(view_dir, epoch_id))
 
     return start(stream, handle, work_dir, "update")
 
@@ -71,17 +95,5 @@ def read_rollup_view(spark: SparkSession, work_dir: str) -> DataFrame:
     view_dir = os.path.join(work_dir, "view")
     last = latest(view_dir)
     if last is None:
-        return spark.createDataFrame(
-            [],
-            "day_start_ms bigint, event_type string, cnt bigint, "
-            "sum_value double, max_value double, min_value double",
-        )
-    view = spark.read.schema(_VIEW_SCHEMA).parquet(path(view_dir, last))
-    return view.select(
-        (F.col("day") * _DAY_MS).alias("day_start_ms"),
-        "event_type",
-        F.col("n").alias("cnt"),
-        (F.col("sc") / 100.0).alias("sum_value"),
-        F.col("mx").alias("max_value"),
-        F.col("mn").alias("min_value"),
-    )
+        return view_rows(spark.createDataFrame([], VIEW_SCHEMA))
+    return view_rows(spark.read.schema(VIEW_SCHEMA).parquet(path(view_dir, last)))

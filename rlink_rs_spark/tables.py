@@ -72,30 +72,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table; scans stay pushdown-friendly (no caching here)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     return read_fixture(spark, path, lambda schema: spark.read.schema(schema).parquet(path))
-
-
-@lru_cache(maxsize=256)
-def _content_fingerprint_cached(path: str, size: int, mtime_ns: int) -> str:
-    import hashlib
-
-    h = hashlib.md5()
-    with open(path, "rb") as f:
-        for chunk in iter(lambda: f.read(1 << 20), b""):
-            h.update(chunk)
-    return h.hexdigest()[:16]
-
-
-def content_fingerprint(path: str) -> str:
-    """Content cache key for fingerprint-keyed artifacts (LSH band index,
-    IVF/PQ codebooks, LM LUT, CDC snapshot, rollup view): md5 of the file
-    bytes, truncated to 16 hex. Content-based, not mtime-based, so a
-    byte-identical regenerated fixture still hits the persisted artifact
-    while any actual data change forces a rebuild. Memoized per
-    (path, size, mtime): artifact-keyed queries each hash their source
-    fixture at plan time, and a bench run makes 10+ such calls against
-    the same unchanged file -- the memo collapses them to one streamed
-    read per process without weakening the contract (a rewritten file
-    changes mtime/size and re-hashes; same stat signature within one
-    process implies same bytes for the driver-managed fixtures)."""
-    st = os.stat(path)
-    return _content_fingerprint_cached(path, st.st_size, st.st_mtime_ns)

@@ -641,14 +641,38 @@ def test_bench_prewarm_covers_artifact_builders():
     for name in ARTIFACT_PREWARM:
         assert name in REGISTRY, name
         assert REGISTRY[name].bench, f"{name} is bench=False; prewarm noops"
-    # one prewarm entry per cache family (comment in bench.py maps them)
-    families = {"lm_lut", "lsh_band_index", "ivf_codebooks", "pq_codebooks",
-                "cdc_snapshots", "daily_rollup"}
+    # every family the package builds through the store (the literal family
+    # of each artifacts.parquet(spark, "<family>", ...) call and of each
+    # os.path.join(artifacts.ROOT, "<family>", ...) path it commits) is
+    # mapped by a comment of the ARTIFACT_PREWARM list
+    import ast
     import inspect
 
+    def literal_family(call: ast.Call) -> str | None:
+        fn = ast.unparse(call.func)
+        if fn == "artifacts.parquet" or (
+            fn == "os.path.join" and call.args and ast.unparse(call.args[0]) == "artifacts.ROOT"
+        ):
+            arg = call.args[1] if len(call.args) > 1 else None
+            return arg.value if isinstance(arg, ast.Constant) else None
+        return None
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "rlink_rs_spark")
+    families = set()
+    for d, _, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                with open(os.path.join(d, f)) as fh:
+                    tree = ast.parse(fh.read())
+                families |= {
+                    literal_family(n) for n in ast.walk(tree) if isinstance(n, ast.Call)
+                } - {None}
+    assert {"lm_lut", "ivf_inverted", "cdc_snapshots", "daily_rollup"} <= families, families
     src = inspect.getsource(__import__("bench"))
+    prewarm = src[src.index("ARTIFACT_PREWARM = ["):]
+    prewarm = prewarm[: prewarm.index("]")]
     for fam in families:
-        assert fam in src, f"artifact family {fam} not mapped in ARTIFACT_PREWARM"
+        assert fam in prewarm, f"artifact family {fam} not mapped in ARTIFACT_PREWARM"
 
 
 def test_bench_chunking_is_deterministic_and_total():

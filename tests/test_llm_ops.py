@@ -1359,60 +1359,45 @@ def test_cdc_snapshot_cache_keeps_sibling_corpora(tmp_path, monkeypatch):
     """ADVICE r10 (high): the CDC snapshot cache must hold one entry PER
     (retain, corpus), not per retain -- bench warmup at sf0.001 used to
     evict the prewarmed sf0.1 artifact, billing a full replay inside every
-    timed CDC query. A completed sibling entry must survive a build for a
-    different corpus; a torn build of the SAME key must be cleared."""
+    timed CDC query. A committed sibling entry must survive a build for a
+    different corpus; a torn dir (no _SUCCESS) at the SAME key must be
+    cleared, never built into, and a failed build must leave nothing."""
     import os
 
+    from rlink_rs_spark import artifacts
     import rlink_rs_spark.queries.relational as rel
+    import rlink_rs_spark.streaming.cdc as cdc
 
-    cache_root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "artifacts",
-        "cdc_snapshots",
-    )
-    os.makedirs(cache_root, exist_ok=True)
+    monkeypatch.setattr(artifacts, "ROOT", str(tmp_path))
+    cache_root = os.path.join(str(tmp_path), "cdc_snapshots")
     sibling = os.path.join(cache_root, "r8_feedfeedfeedfeed")
-    os.makedirs(sibling, exist_ok=True)
-    open(os.path.join(sibling, "_STREAM_DONE"), "w").close()
+    os.makedirs(sibling)
+    open(os.path.join(sibling, "_SUCCESS"), "w").close()
     torn = os.path.join(cache_root, "r8_0123456789abcdef")
-    os.makedirs(torn, exist_ok=True)  # no sentinel: torn build
+    os.makedirs(torn)  # no marker: torn build
     open(os.path.join(torn, "leftover"), "w").close()
-    try:
-        # a build for the torn key must clear it and NOT touch the sibling;
-        # stub the expensive replay (this test pins cache policy, not MERGE)
-        monkeypatch.setattr(rel, "load_table", lambda spark, sf_dir, name: None)
-        calls = {}
+    # stub the expensive replay (this test pins cache policy, not MERGE)
+    monkeypatch.setattr(rel, "load_table", lambda spark, sf_dir, name: None)
+    monkeypatch.setattr(artifacts, "fingerprint", lambda sf_dir, table: "0123456789abcdef")
+    calls = {}
 
-        def fake_fingerprint(sf_dir):
-            return "0123456789abcdef"
+    class _Boom(Exception):
+        pass
 
-        import rlink_rs_spark.queries.dedup as ded
+    def fake_base(df, work_dir):
+        calls["cleared"] = not os.path.exists(torn)
+        calls["work_dir"] = work_dir
+        raise _Boom  # stop before the streaming replay
 
-        monkeypatch.setattr(ded, "_documents_fingerprint", fake_fingerprint)
-
-        class _Boom(Exception):
-            pass
-
-        def fake_base(df, work_dir):
-            calls["cleared"] = not os.path.exists(os.path.join(torn, "leftover"))
-            raise _Boom  # stop before the streaming replay
-
-        import rlink_rs_spark.streaming.cdc as cdc
-
-        monkeypatch.setattr(cdc, "write_base_snapshot", fake_base)
-        try:
-            rel._cdc_snapshot_artifact(None, "/root/testdata/sf0.001", retain=8)
-        except _Boom:
-            pass
-        assert calls["cleared"], "torn same-key build was not cleared"
-        assert os.path.exists(os.path.join(sibling, "_STREAM_DONE")), (
-            "completed sibling corpus entry was evicted"
-        )
-    finally:
-        import shutil
-
-        shutil.rmtree(sibling, ignore_errors=True)
-        shutil.rmtree(torn, ignore_errors=True)
+    monkeypatch.setattr(cdc, "write_base_snapshot", fake_base)
+    with pytest.raises(_Boom):
+        rel._cdc_snapshot_artifact(None, "/root/testdata/sf0.001", retain=8)
+    assert calls["cleared"], "torn same-key dir was not cleared"
+    assert os.path.dirname(calls["work_dir"]) == cache_root
+    assert calls["work_dir"] != torn, "the build wrote into the final path"
+    assert os.listdir(cache_root) == ["r8_feedfeedfeedfeed"], (
+        "completed sibling corpus entry was evicted, or the failed build left a dir"
+    )
 
 
 def test_drain_timeout_env_override(monkeypatch):

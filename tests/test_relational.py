@@ -445,12 +445,12 @@ def test_incremental_rollup_artifact_is_history_only_and_warm_path_exact(spark, 
 
     from pyspark.sql import functions as F
 
+    from rlink_rs_spark import artifacts
     from rlink_rs_spark.queries import REGISTRY
-    from rlink_rs_spark.queries.analytics import _ROLL_DAY_MS, _events_fingerprint
+    from rlink_rs_spark.streaming.rollup import DAY_MS
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     path = os.path.join(
-        repo_root, "artifacts", "daily_rollup", f"rollup_{_events_fingerprint(sf_dir)}"
+        artifacts.ROOT, "daily_rollup", f"rollup_{artifacts.fingerprint(sf_dir, 'events')}"
     )
     shutil.rmtree(path, ignore_errors=True)
 
@@ -461,7 +461,7 @@ def test_incremental_rollup_artifact_is_history_only_and_warm_path_exact(spark, 
 
     ev = load_table(spark, sf_dir, "events")
     max_day = ev.agg(
-        F.max(F.expr(f"CAST(unix_millis(ts) div {_ROLL_DAY_MS} AS BIGINT)"))
+        F.max(F.expr(f"CAST(unix_millis(ts) div {DAY_MS} AS BIGINT)"))
     ).collect()[0][0]
     art_days = {r.day for r in spark.read.parquet(path).select("day").distinct().collect()}
     assert art_days and max(art_days) < max_day

@@ -49,13 +49,13 @@ def test_registry_sinks_make_nothing_outside_the_scratch_root(spark, duck, sf_di
 
 def test_cdc_snapshot_artifact_holds_only_the_snapshot(spark, sf_dir):
     """The artifacts/cdc_snapshots cache keeps the drained snapshot and its
-    done sentinel, not the checkpoint of the stream that built it."""
+    commit marker, not the checkpoint of the stream that built it."""
     from rlink_rs_spark.queries.relational import _cdc_snapshot_artifact
 
     work = _cdc_snapshot_artifact(spark, sf_dir, retain=8)
-    os.remove(os.path.join(work, "_STREAM_DONE"))  # force a rebuild
+    os.remove(os.path.join(work, "_SUCCESS"))  # force a rebuild
     assert _cdc_snapshot_artifact(spark, sf_dir, retain=8) == work
-    assert sorted(os.listdir(work)) == ["_STREAM_DONE", "snap"]
+    assert sorted(os.listdir(work)) == ["_SUCCESS", "snap"]
 
 
 def _functions(tree: ast.AST):

@@ -26,6 +26,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from rlink_rs_spark import artifacts
 from rlink_rs_spark.tables import load_table
 
 pytestmark = pytest.mark.slow
@@ -47,7 +48,6 @@ def test_soak_intake_dedup_100_epochs(spark, sf_dir):
         _BANDS,
         _INCR_THR,
         _N_HASHES,
-        _documents_fingerprint,
     )
     from rlink_rs_spark.streaming.dedup import (
         read_verdicts,
@@ -58,12 +58,10 @@ def test_soak_intake_dedup_100_epochs(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     history = docs.where(F.col("doc_id") % 4 != 0)
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     hist_banded = load_or_build_band_index(
         spark,
         shingle_sets(history),
-        cache_dir=os.path.join(repo_root, "artifacts", "lsh_band_index"),
-        fingerprint=_documents_fingerprint(sf_dir),
+        fingerprint=artifacts.fingerprint(sf_dir, "documents"),
         n_hashes=_N_HASHES,
         bands=_BANDS,
     )
@@ -182,8 +180,6 @@ def test_soak_ivf_index_add_100_epochs(spark, sf_dir):
         _DIMS,
         _IVF_CELLS,
         _IVF_ITERS,
-        _artifact_dir,
-        _embeddings_fingerprint,
     )
     from rlink_rs_spark.streaming.ann import (
         read_inverted_file,
@@ -197,8 +193,7 @@ def test_soak_ivf_index_add_100_epochs(spark, sf_dir):
         spark,
         emb,
         dims=_DIMS,
-        cache_dir=_artifact_dir("ivf_codebooks"),
-        fingerprint=_embeddings_fingerprint(sf_dir),
+        fingerprint=artifacts.fingerprint(sf_dir, "embeddings"),
         n_cells=_IVF_CELLS,
         iters=_IVF_ITERS,
     )

@@ -12,6 +12,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from rlink_rs_spark import artifacts
 from rlink_rs_spark.operators.aggregations import count, max_, min_, sum_
 from rlink_rs_spark.plans.pipeline import Pipeline, SlidingEventTimeWindows
 from rlink_rs_spark.streaming.runner import drain, run_to_memory
@@ -1756,14 +1757,11 @@ def test_streaming_ivf_index_add_equals_batch_index(spark, sf_dir):
         _DIMS,
         _IVF_CELLS,
         _IVF_ITERS,
-        _artifact_dir,
-        _embeddings_fingerprint,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     codebook = sim_ops.load_or_train_ivf_codebook(
-        spark, emb, dims=_DIMS, cache_dir=_artifact_dir("ivf_codebooks"),
-        fingerprint=_embeddings_fingerprint(sf_dir),
+        spark, emb, dims=_DIMS, fingerprint=artifacts.fingerprint(sf_dir, "embeddings"),
         n_cells=_IVF_CELLS, iters=_IVF_ITERS,
     )
     got = {
@@ -2334,8 +2332,6 @@ def test_streaming_hybrid_search_equals_batch_served(spark, sf_dir):
     from rlink_rs_spark.queries import REGISTRY
     from rlink_rs_spark.queries.search import corpus_tf, serve_hybrid
     from rlink_rs_spark.queries.similarity import (
-        _artifact_dir,
-        _embeddings_fingerprint,
         _DIMS,
         _IVF_CELLS,
         _IVF_ITERS,
@@ -2353,8 +2349,7 @@ def test_streaming_hybrid_search_equals_batch_served(spark, sf_dir):
         spark,
         emb,
         dims=_DIMS,
-        cache_dir=_artifact_dir("ivf_codebooks"),
-        fingerprint=_embeddings_fingerprint(sf_dir),
+        fingerprint=artifacts.fingerprint(sf_dir, "embeddings"),
         n_cells=_IVF_CELLS,
         iters=_IVF_ITERS,
     )

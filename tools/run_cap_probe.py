@@ -39,9 +39,11 @@ QUERIES = ("ngram_containment_pairs", "minhash_lsh_near_dup", "cosine_topk_ivf")
 
 
 def _artifact_snapshot() -> set[str]:
+    from rlink_rs_spark.artifacts import ROOT
+
     out = set()
     for fam in ("ivf_codebooks", "ivf_inverted", "lsh_band_index"):
-        d = os.path.join(REPO, "artifacts", fam)
+        d = os.path.join(ROOT, fam)
         if os.path.isdir(d):
             out |= {os.path.join(d, e) for e in os.listdir(d)}
     return out
